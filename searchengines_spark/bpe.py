@@ -9,15 +9,13 @@ table only. Per iteration: one doc-local pair explode + one groupBy sum
 (map-side partial agg) + a 2-row-bounded orderBy-limit collect for the
 argmax, then one Arrow-batched numpy kernel applies the winning merge to
 the symbol sequences. Iteration i caches its vocab so i+1 never replays
-the chain (same discipline as analytic.pagerank / dup_clusters).
+the chain (same discipline as links.pagerank).
 
 Determinism: ties on pair count break lexicographically (left asc, right
 asc), so the merge list is a pure function of the corpus — the pytest gate
 (tests/test_bpe.py) checks the distributed merge list is IDENTICAL to a
-sequential pure-Python reference implementation. The step-0 pair counts
-are additionally DuckDB-hash-gated (`bpe_pairs` in __spark_entry__); the
-merge loop itself is iterative-argmax and deliberately carries the
-weaker rows-only driver check (non-SQL-expressible, like the WAND kernel).
+sequential pure-Python reference implementation, and that the first merge
+is the top step-0 pair.
 
 Reference anchor: the reference engine ships a fixed Lucene analyzer
 (QryParser.java:40-49) and never trains a tokenizer; this module is part

@@ -112,8 +112,7 @@ def _write_snippets(reader: IndexReader, params: dict,
                     queries: dict[str, str], lines: list[str]) -> list[str]:
     """Snippet sidecar for a param-file run: for each query's top
     ``snippets:length`` TREC results, the best-window highlighted passage
-    (Engine.snippets — window rule shared with the DuckDB-gated
-    analytic.q_snippet) as ``qid url rank snippet`` lines written to
+    (Engine.snippets) as ``qid url rank snippet`` lines written to
     ``snippets:outputPath`` (default: trecEvalOutputPath + '.snippets').
 
     ``snippets:pagesPath`` names the raw pages parquet (the index stores
@@ -265,8 +264,10 @@ def run_batch(reader: IndexReader, params: dict, queries: dict[str, str],
         init_urls = {qid: ranked.get(qid, [])[:num_docs] for qid in queries}
     else:
         init_df = eng.search_batch_df(wrapped, model, num_docs, **kw)
-        rows = init_df.collect()
-        eng.release_held_caches(init_df)
+        try:
+            rows = init_df.collect()
+        finally:
+            eng.release_held_caches(init_df)
         init_urls = {qid: [] for qid in queries}
         for r in sorted(rows, key=lambda r: (r["qid"], r["rank"])):
             init_urls[r["qid"]].append((r["url"], r["score"]))
@@ -345,11 +346,13 @@ def _run_diversity(eng: Engine, params, queries, run_id, k, model, kw) -> list[s
             for i, text in intents.get(qid, []):
                 batch[f"{qid}\x00{i}"] = text
         base_df = eng.search_batch_df(batch, model, max_in, **kw)
-        res = base_df.join(url_ids, "url")
-        for r in res.collect():
+        try:
+            res = base_df.join(url_ids, "url").collect()
+        finally:
+            eng.release_held_caches(base_df)
+        for r in res:
             qid, _, i = r["qid"].partition("\x00")
             rows.append((qid, int(i), int(r["docid"]), float(r["score"])))
-        eng.release_held_caches(base_df)
     if rdf is None:
         rdf = spark.createDataFrame(rows, ["qid", "intent", "docid", "score"])
     out = diversify_df(rdf, algo, lam, max_in, max_out).join(url_ids, "docid")
@@ -438,10 +441,12 @@ def run_ltr(reader: IndexReader, params: dict,
                                     k1=fkw["k1"], b=fkw["b"])
     init = init_base.join(url_ids, "url")
     cand_test = init.select("qid", "docid", F.lit(0).alias("rel")).cache()
-    cand_test.count()
-    # cand_test is materialized; the batch frame's shared decode cache is
-    # no longer needed by anything downstream
-    eng.release_held_caches(init_base)
+    try:
+        cand_test.count()
+    finally:
+        # cand_test is materialized; the batch frame's shared decode cache
+        # is no longer needed by anything downstream
+        eng.release_held_caches(init_base)
     tfeats = minmax_normalize(apply_feature_disable(
         extract_features(reader, cand_test, test_queries, **fkw), disable))
     if "ltr:testingFeatureVectorsFile" in params:

@@ -386,56 +386,16 @@ class Engine:
             raise ValueError(f"doc has no discriminative terms: {url}")
         return self.search(" ".join(terms), model, k, **kw)
 
-    def suggest(self, terms: list[str], field: str = "body",
-                max_d: int = 2, top: int = 3) -> DataFrame:
-        """Did-you-mean suggestions against the INDEX vocabulary (the term
-        stats table — vocab-sized, one narrow scan), ranked by (edit
-        distance, collection frequency, term). SymSpell delete-key join +
-        exact levenshtein verify — see analytic.spell_suggest. Raw input
-        terms are matched as typed (no stemming: a misspelling's stem is
-        meaningless); suggestions come back as indexed (stemmed) terms,
-        directly usable in a follow-up query.
-
-        Serving path: the build/compact-materialized delete-key sidecar
-        (index/spellkeys.py) when it is fresh — a row-group-pruned point
-        read keyed by the batch's driver-computed delete keys, no
-        vocab-sized explode per call. After an append/upsert the sidecar
-        is stale (term_stats moved on); then this falls back to the
-        on-the-fly delete join until the next compact(), exactly like a
-        Lucene suggester rebuilt at segment-merge time."""
-        from .analytic import spell_suggest, spell_suggest_keys
-        from .index.spellkeys import read_spell_keys
-
-        qs = [t.lower() for t in terms]
-        # read_spell_keys re-walks the term_stats tree to verify the
-        # sidecar's freshness signature — a per-call filesystem sweep an
-        # interactive suggest path shouldn't pay. Readers are
-        # per-index-version objects (the _ts_memo discipline), so the
-        # verified handle is memoized on the reader.
-        r = self.reader
-        if not hasattr(r, "_spell_memo"):
-            r._spell_memo = read_spell_keys(r.spark, r.index_dir)
-        side = r._spell_memo
-        if side is not None:
-            vkeys = (side.filter(F.col("field") == field)
-                     .select("k", "term",
-                             F.col("ctf").cast("long").alias("ctf")))
-            return spell_suggest_keys(vkeys, qs, max_d=max_d, top=top)
-        vocab = (self.reader.term_stats_df()
-                 .filter(F.col("field") == field)
-                 .select("term", F.col("ctf").cast("long").alias("ctf")))
-        return spell_suggest(vocab, qs, max_d=max_d, top=top)
-
     def snippets(self, results: DataFrame, pages: DataFrame, query: str,
                  width: int = 30, field: str = "body") -> DataFrame:
         """Highlighted best-window snippets for a (url, score) result frame
-        — the user-facing passage under each hit. Window rule (shared with
-        analytic.q_snippet and its DuckDB oracle): the `width`-token window
-        covering the most DISTINCT query terms, tie -> leftmost, candidate
-        starts = match positions; no match -> the leading passage. Matching
-        runs on the frozen tokenizer (stem/stop identical to the index), so
-        what highlights is exactly what scored; the snippet text itself is
-        the ORIGINAL field text with matched tokens wrapped in **..**.
+        — the user-facing passage under each hit. Window rule: the
+        `width`-token window covering the most DISTINCT query terms, tie ->
+        leftmost, candidate starts = match positions; no match -> the
+        leading passage. Matching runs on the frozen tokenizer (stem/stop
+        identical to the index), so what highlights is exactly what scored;
+        the snippet text itself is the ORIGINAL field text with matched
+        tokens wrapped in **..**.
 
         Scale shape: `results` is k-bounded -> broadcast to the pages scan
         (the classic doc-store point fetch; with the pages table bucketed

@@ -165,6 +165,8 @@ SALT_MIN_DF = 8 * codec.BLOCK_SIZE  # only terms with df >= this get striped
 # cold-block memo bound: entries are <= SALT_MIN_DF compressed postings
 # (few KB each), so 16k entries caps the memo at ~100 MB driver-side
 COLD_MEMO_CAP = 16384
+# on-disk block bytes per serve-cache task (IndexReader.serve_blocks)
+SERVE_TASK_BYTES = 2 << 20
 
 
 def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
@@ -656,16 +658,8 @@ def build_index(
             [("__docs__", int(n_docs), 0)], ["field", "doc_count", "sum_len"]
         )
         field_stats.unionByName(meta_row).write.mode("overwrite").parquet(field_stats_path)
-        _lap("stats")
-        # spell sidecar: materialize the SymSpell delete-key table once per
-        # build/compact so Engine.suggest is a pruned point read, never a
-        # vocab-sized explode per call (index/spellkeys.py). Own lap so
-        # stage timings stay comparable with pre-sidecar bench records.
-        from .spellkeys import write_spell_keys
-
-        write_spell_keys(spark, index_dir)
         _mark_stage(index_dir, "stats")
-        _lap("spell_keys")
+        _lap("stats")
 
     term_stats = spark.read.parquet(term_stats_path)
     field_stats = spark.read.parquet(field_stats_path)
@@ -913,12 +907,6 @@ class IndexReader:
     def doc_count(self, field: str) -> int:
         return self.field_stats[field][0]
 
-    def term_stats_df(self) -> DataFrame:
-        """The full (field, term, df, ctf, bucket) stats table — the index
-        vocabulary (one row per term per field, vocab-sized not
-        corpus-sized). Consumers: spell suggestion, inspection dumps."""
-        return self._term_stats
-
     def term_stats(self, terms: list[tuple[str, str]]) -> dict[tuple[str, str], tuple[int, int]]:
         """(field, term) -> (df, ctf); missing terms absent. Memoized, so a
         query whose terms were all seen before costs zero Spark jobs here."""
@@ -1022,12 +1010,16 @@ class IndexReader:
         releases it)."""
         df = self._serve_blocks
         if df is not None:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped
-            self._SERVE_CACHE_REGISTRY.pop(
-                os.path.realpath(self.index_dir), None)
+            # only the registered frame owns a cache: a superseded or
+            # evicted one was released already, and a newer reader over
+            # unchanged files shares this frame's cache entry
+            reg, key = self._SERVE_CACHE_REGISTRY, os.path.realpath(self.index_dir)
+            if reg.get(key) is df:
+                reg.pop(key)
+                try:
+                    df.unpersist()
+                except Exception:
+                    pass  # session already stopped
             self._serve_blocks = None
 
     @property
@@ -1056,15 +1048,14 @@ class IndexReader:
         serving DRAM. Readers are per-index-version (appends/compactions
         build a new reader), so the cache can never serve stale blocks.
         First touch pays the scan+shuffle the uncached path pays per
-        query; SPARK_GRAFT_SERVE_CACHE=0 disables materialization (the
-        frame still computes, uncached) for memory-constrained runs.
+        query.
 
         Partition count: one task per stripe is right when stripes carry
         real decode work, but at small corpora the ~10 ms/task dispatch
         floor dominates the ~tens-of-ms kernels, so stripes PACK — several
         salt groups per task (groupBy still splits them per salt inside) —
-        sized so each task holds ~SPARK_GRAFT_SERVE_TASK_BYTES (default
-        2 MB) of on-disk block bytes, capped at n_stripes. Measured at
+        sized so each task holds ~SERVE_TASK_BYTES (2 MiB) of on-disk
+        block bytes, capped at n_stripes. Measured at
         100k pages / 32 stripes on local[32]: 32 tasks 0.54 s warm query,
         16 tasks 0.45 s, 8 tasks 0.51 s (packing too far serializes the
         kernel) — the byte heuristic lands at ~18 there and at the full
@@ -1084,14 +1075,12 @@ class IndexReader:
                 F.lit(0).cast("int").alias("min_doclen"),
                 F.lit(b"").alias("docids_z"), F.lit(b"").alias("tfs_z"),
             )
-            task_bytes = int(os.environ.get(
-                "SPARK_GRAFT_SERVE_TASK_BYTES", str(2 << 20)))
             blocks_bytes = sum(
                 os.path.getsize(os.path.join(dp, fn))
                 for dp, _, fns in os.walk(os.path.join(self.index_dir, "blocks"))
                 for fn in fns if fn.endswith(".parquet"))
             n_part = max(1, min(self.n_stripes,
-                                -(-blocks_bytes // max(1, task_bytes))))
+                                -(-blocks_bytes // SERVE_TASK_BYTES)))
             # Plan + persist + materialize with AQE OFF: an AQE-wrapped
             # cached plan reports UNKNOWN output partitioning, so every
             # query's groupBy(salt) would re-Exchange the filtered rows (a
@@ -1106,10 +1095,9 @@ class IndexReader:
                 spark.conf.set(aqe_key, "false")
                 hot = (self._blocks.filter(F.col("striped")).select(*sel)
                        .unionByName(skeleton)
-                       .repartition(n_part, "salt"))
-                if os.environ.get("SPARK_GRAFT_SERVE_CACHE", "1") != "0":
-                    hot = hot.persist(StorageLevel.MEMORY_AND_DISK)
-                    hot.count()  # materialize under the non-adaptive plan
+                       .repartition(n_part, "salt")
+                       .persist(StorageLevel.MEMORY_AND_DISK))
+                hot.count()  # materialize under the non-adaptive plan
             finally:
                 spark.conf.set(aqe_key, old_aqe)
             # registry upkeep: a prior reader's cache for the SAME dir is
@@ -1118,7 +1106,8 @@ class IndexReader:
             reg = self._SERVE_CACHE_REGISTRY
             key = os.path.realpath(self.index_dir)
             old = reg.pop(key, None)
-            if old is not None and old is not hot:
+            # same plan (unchanged files): one cache entry serves both
+            if old is not None and old is not hot and not old.sameSemantics(hot):
                 try:
                     old.unpersist()
                 except Exception:

@@ -593,12 +593,6 @@ def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
     for name in ("blocks_segments_old", "blocks_old"):
         shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
 
-    # refresh the spell-suggest delete-key sidecar against the compacted
-    # term_stats (appends leave it stale on purpose — see index/spellkeys.py)
-    from .spellkeys import write_spell_keys
-
-    write_spell_keys(spark, index_dir)
-
     manifest["salt_range"] = salt_range
     manifest["n_salts"] = n_salts
     manifest["bm25_k1"] = bm25_k1

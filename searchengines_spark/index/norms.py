@@ -31,9 +31,15 @@ _cache: OrderedDict = OrderedDict()
 
 
 def _signature(path: str) -> tuple:
-    from ..fsutil import parquet_tree_sig
-
-    return tuple(parquet_tree_sig(path))
+    """Sorted (path, size, mtime_ns) over every .parquet file under path."""
+    out = []
+    for r, _dirs, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                p = os.path.join(r, f)
+                st = os.stat(p)
+                out.append((p, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 def stripe_doclens(norms_dir: str, field: str, lo: int, hi: int) -> np.ndarray:

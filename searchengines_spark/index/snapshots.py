@@ -46,10 +46,6 @@ _TABLES = (
     "blocks",
     "lineage",
     "deletes",  # merge-on-read tombstones (empty/absent between delete and compact)
-    # spell-suggest delete-key sidecar: its _TS_SIGNATURE stamp is
-    # path-relative, so the hard-linked copy verifies fresh under the
-    # snapshot root (time travel keeps the fast suggest path)
-    "spell_keys",
 )
 
 

@@ -4,8 +4,8 @@ IVF-PQ composition — the canonical 100 TB similarity-search layout
 Search"; the FAISS IVFPQ index shape).
 
 The reference engine has no vector search; this extends the
-training-data-pipeline layer beyond the exact baseline (analytic.cosine_topk)
-and the coarse-only IVF (ann.py):
+training-data-pipeline layer beyond the exact top-k scan
+(ann.exact_topk_local) and the coarse-only IVF (ann.py):
 
 - **train**: split the D-dim space into ``m`` subspaces of D/m dims and run
   k-means per subspace on a bounded deterministic SAMPLE collected to the

@@ -94,10 +94,9 @@ def stream_event_window_stats(spark: SparkSession, src_dir: str, out_dir: str,
     """Watermarked tumbling-window aggregation over an event stream:
     counts + value sums per (event-time window, event_type), append mode —
     a window is emitted exactly once, after the watermark passes its end,
-    with late events inside the lateness bound folded in. The batch twin is
-    analytic.q_events_window; the streaming state store holds only open
-    windows (bounded by lateness), which is what survives at firehose
-    scale. Returns the StreamingQuery."""
+    with late events inside the lateness bound folded in. The streaming
+    state store holds only open windows (bounded by lateness), which is
+    what survives at firehose scale. Returns the StreamingQuery."""
     from pyspark.sql import functions as F
 
     ev = spark.readStream.schema(EVENTS_DDL).parquet(src_dir)
@@ -127,10 +126,9 @@ DEDUP_STATE_DDL = "seen int"
 def stream_dedup_exact(spark: SparkSession, src_dir: str, out_dir: str,
                        checkpoint_dir: str, available_now: bool = True):
     """Stateful streaming exact dedup: emit each document the FIRST time its
-    content hash is seen, drop every later arrival — the continuous-ingest
-    twin of analytic.q_dedup_exact. Per-hash state is one bit in the state
-    store (keyed groupBy md5(text)); within a micro-batch the smallest
-    doc_id wins deterministically, across batches/restarts the state store
+    content hash is seen, drop every later arrival. Per-hash state is one
+    bit in the state store (keyed groupBy md5(text)); within a micro-batch
+    the smallest doc_id wins deterministically, across batches/restarts the state store
     (checkpointed per epoch) suppresses re-emits. At firehose scale state is
     O(distinct hashes) — the same footprint a Bloom-gated batch dedup pays,
     but incremental. Returns the StreamingQuery."""
@@ -180,12 +178,11 @@ def stream_sessionize(spark: SparkSession, src_dir: str, out_dir: str,
     sessionization per user. Per-key state = the OPEN session (start, last
     event, count); an event later than ``gap_sec`` after the last closes the
     session and emits it. Open sessions stay in the state store across
-    micro-batches (the streaming analog of analytic.q_events_sessions —
-    closed sessions match it exactly; each user's final open session emits
-    only when a later batch closes it). Events are sorted WITHIN a
-    micro-batch; cross-batch order relies on the source delivering files in
-    event-time order (true for crawl-style drops). Returns the
-    StreamingQuery."""
+    micro-batches (closed sessions match a batch gap sessionization
+    exactly; each user's final open session emits only when a later batch
+    closes it). Events are sorted WITHIN a micro-batch; cross-batch order
+    relies on the source delivering files in event-time order (true for
+    crawl-style drops). Returns the StreamingQuery."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -224,191 +221,6 @@ def stream_sessionize(spark: SparkSession, src_dir: str, out_dir: str,
         sess.writeStream.outputMode("append").format("parquet")
         .option("path", out_dir).option("checkpointLocation", checkpoint_dir)
     )
-    writer = writer.trigger(availableNow=True) if available_now else writer.trigger(
-        processingTime="30 seconds")
-    return writer.start()
-
-
-# ------------------------------------------------------- streaming near-dup
-NEAR_OUT_DDL = "doc_id long, keep boolean, canon long, sim double"
-
-
-def stream_dedup_near(spark: SparkSession, src_dir: str, out_dir: str,
-                      checkpoint_dir: str, state_dir: str,
-                      sim_threshold: float = 0.5, available_now: bool = True):
-    """Streaming near-dup suppression — the continuous-ingest twin of the
-    batch LSH pipeline (analytic.q_lsh_dup_pairs_scaled + dedup_keep):
-    each arriving document is admitted only if no sufficiently similar
-    document was admitted before it, across micro-batches and restarts.
-
-    Per micro-batch (foreachBatch — the natural Spark shape when the state
-    is a TABLE the next epoch joins against, not a per-key scalar):
-
-    1. 64-perm MinHash signature per doc (same kernel as the batch path)
-       and the same 16x4 band-bucket hashes (analytic.band_hash_arr), so
-       stream and batch collide identically;
-    2. candidates = batch buckets equi-joined against the persistent
-       bucket store (admitted docs only) + batch-internal band self-join;
-    3. verify by SIGNATURE similarity (fraction of the 64 components equal,
-       a zip_with/aggregate Catalyst expression) >= sim_threshold. The
-       batch path verifies with exact shingle Jaccard; storing shingle
-       sets in stream state is unbounded, so the stream uses the unbiased
-       MinHash estimate of the same quantity — the documented tradeoff
-       (E[sim] = Jaccard);
-    4. resolve: union-find over the verified matches (store canons are
-       nodes too) — a component containing a store canon drops all its
-       batch docs with that canon; otherwise min doc_id is admitted and
-       the rest drop onto it. The union-find runs driver-side over the
-       VERIFIED PAIRS ONLY (dup-pairs-per-micro-batch — tiny; a
-       burst-heavy deployment would swap in q_dup_clusters' distributed
-       min-label rounds, same semantics);
-    5. admitted docs register (canon, band, bh) + (canon, mh) into the
-       store; output rows (doc_id, keep, canon, sim) land in out_dir.
-       Both writes go to an epoch=<id> partition via dynamic partition
-       overwrite, so a replayed epoch after a crash overwrites itself —
-       idempotent, exactly-once per the streaming checkpoint.
-
-    State footprint is O(admitted docs x (16 buckets + 64-long signature))
-    — the same index a batch LSH dedup builds, accreted incrementally;
-    compact by rewriting the store without the epoch column. Returns the
-    StreamingQuery."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from . import analytic as A
-
-    docs = spark.readStream.schema(DOCS_DDL).parquet(src_dir)
-    buckets_dir = os.path.join(state_dir, "buckets")
-    sigs_dir = os.path.join(state_dir, "sigs")
-
-    sim_expr = (
-        F.aggregate(
-            F.zip_with("a_mh", "b_mh",
-                       lambda x, y: F.when(x == y, 1).otherwise(0)),
-            F.lit(0), lambda acc, x: acc + x,
-        ).cast("double") / F.lit(64.0)
-    ).alias("sim")
-
-    def sink(batch_df, epoch_id):
-        if batch_df.isEmpty():
-            return
-        # foreachBatch hands the frame to an ISOLATED session clone: conf
-        # changes and createDataFrame must go through it, not the outer
-        # session, or the dynamic-partition-overwrite conf never reaches
-        # the write, and every epoch write wipes the whole directory.
-        bs = batch_df.sparkSession
-        sig = A._minhash64_arr(A._shingles(batch_df)).cache()
-        buckets = sig.select(
-            "doc_id", F.posexplode(A.band_hash_arr()).alias("band", "bh"))
-
-        # store-side candidates (admitted canon docs from prior epochs)
-        matches = []
-        if os.path.exists(buckets_dir):
-            st_b = bs.read.parquet(buckets_dir).select("canon", "band", "bh")
-            st_s = bs.read.parquet(sigs_dir).select(
-                "canon", F.col("mh").alias("b_mh"))
-            cand = (buckets.join(st_b, ["band", "bh"])
-                    .select("doc_id", "canon").distinct())
-            store_pairs = (
-                cand.join(sig.select("doc_id", F.col("mh").alias("a_mh")), "doc_id")
-                .join(st_s, "canon")
-                .select("doc_id", "canon", sim_expr)
-                .filter(F.col("sim") >= sim_threshold)
-            )
-            matches = store_pairs.collect()
-
-        # batch-internal candidates (band self-join, a < b)
-        ba = buckets.select(F.col("doc_id").alias("a_id"), "band", "bh")
-        bb = buckets.select(F.col("doc_id").alias("b_id"), "band", "bh")
-        internal = (
-            ba.join(bb, ["band", "bh"]).filter(F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id").distinct()
-            .join(sig.select(F.col("doc_id").alias("a_id"),
-                             F.col("mh").alias("a_mh")), "a_id")
-            .join(sig.select(F.col("doc_id").alias("b_id"),
-                             F.col("mh").alias("b_mh")), "b_id")
-            .select("a_id", "b_id", sim_expr)
-            .filter(F.col("sim") >= sim_threshold)
-        ).collect()
-
-        # union-find over VERIFIED PAIRS ONLY (docs with no match are
-        # trivially admitted without touching the driver). Nodes are
-        # (0, store_canon) / (1, batch_doc_id): tuple-min makes store
-        # canons beat any batch doc, and min id wins within a tag.
-        parent: dict = {}
-
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        def union(x, y):
-            rx, ry = find(x), find(y)
-            if rx != ry:
-                parent[max(rx, ry)] = min(rx, ry)
-
-        best_sim: dict = {}
-        touched: set = set()
-        for r in matches:
-            d, c, s = int(r["doc_id"]), int(r["canon"]), float(r["sim"])
-            union((0, c), (1, d))
-            touched.add(d)
-            best_sim[d] = max(best_sim.get(d, 0.0), s)
-        for r in internal:
-            a, b, s = int(r["a_id"]), int(r["b_id"]), float(r["sim"])
-            union((1, a), (1, b))
-            touched.update((a, b))
-            best_sim[a] = max(best_sim.get(a, 0.0), s)
-            best_sim[b] = max(best_sim.get(b, 0.0), s)
-
-        dup_decisions = []
-        for d in sorted(touched):
-            tag, root = find((1, d))
-            if tag == 0 or root != d:
-                dup_decisions.append((d, False, root, best_sim[d]))
-            else:
-                dup_decisions.append((d, True, d, 1.0))
-        dup_df = bs.createDataFrame(dup_decisions, NEAR_OUT_DDL) \
-            if dup_decisions else bs.createDataFrame([], NEAR_OUT_DDL)
-
-        # unmatched docs admit themselves; matched docs take the resolved row
-        out = (
-            sig.select("doc_id")
-            .join(F.broadcast(dup_df), "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("keep", F.lit(True)).alias("keep"),
-                F.coalesce("canon", F.col("doc_id")).alias("canon"),
-                F.coalesce("sim", F.lit(1.0)).alias("sim"),
-            )
-        )
-        dropped = [d for d, keep, _, _ in dup_decisions if not keep]
-        drop_df = (bs.createDataFrame([(d,) for d in dropped], "doc_id long")
-                   if dropped else bs.createDataFrame([], "doc_id long"))
-        kept_df = sig.join(F.broadcast(drop_df), "doc_id", "left_anti")
-
-        prev = bs.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        bs.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            ep = F.lit(int(epoch_id))
-            (out.withColumn("epoch", ep).write.mode("overwrite")
-             .partitionBy("epoch").parquet(out_dir))
-            if not kept_df.isEmpty():
-                (kept_df.select(F.col("doc_id").alias("canon"),
-                                F.posexplode(A.band_hash_arr()).alias("band", "bh"))
-                 .withColumn("epoch", ep).write.mode("overwrite")
-                 .partitionBy("epoch").parquet(buckets_dir))
-                (kept_df.select(F.col("doc_id").alias("canon"), "mh")
-                 .withColumn("epoch", ep).write.mode("overwrite")
-                 .partitionBy("epoch").parquet(sigs_dir))
-        finally:
-            bs.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        sig.unpersist()
-
-    writer = docs.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir)
     writer = writer.trigger(availableNow=True) if available_now else writer.trigger(
         processingTime="30 seconds")
     return writer.start()

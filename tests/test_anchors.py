@@ -19,7 +19,8 @@ import pytest
 from searchengines_spark.corpus import (FIELDS, extract_fields, generate_pages,
                                         make_page)
 from searchengines_spark.engine import Engine
-from searchengines_spark.links import anchor_texts, extract_links, host_graph
+from searchengines_spark.links import (anchor_texts, extract_links,
+                                       host_graph, pagerank)
 from searchengines_spark.oracle import OracleIndex, search as oracle_search
 from searchengines_spark.tokenizer import tokenize_full
 
@@ -444,7 +445,6 @@ def test_url_priors_url_granularity_hand_solved(spark):
     power iteration on a 3-node url graph with a dangling node, duplicate
     (src, dst) links collapsing to w=1, TOTAL coverage (a page outside the
     graph gets the teleport floor), and mass conservation."""
-    from searchengines_spark.analytic import pagerank
     from searchengines_spark.links import url_graph, url_priors
 
     a, b, c = ("http://h1.org/a", "http://h1.org/b", "http://h2.org/c")
@@ -507,7 +507,6 @@ def test_url_priors_url_granularity_real_corpus(linked_pages, spark_links):
 
 
 def test_host_graph_feeds_pagerank(spark_links):
-    from searchengines_spark.analytic import pagerank
 
     hg = host_graph(spark_links)
     edges = hg.collect()
@@ -522,3 +521,4 @@ def test_host_graph_feeds_pagerank(spark_links):
     assert {(e["src"], e["dst"]): int(e["w"]) for e in edges} == dict(want)
     pr = pagerank(hg, iters=3).collect()
     assert sum(r["pr"] for r in pr) == pytest.approx(1.0, abs=1e-9)
+

@@ -1,11 +1,9 @@
 """Distributed BPE training vs the sequential Sennrich-style replica:
-the merge list must be IDENTICAL (same pairs, same order, same freqs) —
-this is the value-level gate for the iterative half that the DuckDB
-rows-only check can't express (bpe_pairs covers step 0 by hash)."""
+the merge list must be IDENTICAL (same pairs, same order, same freqs)."""
 
 import pytest
+from pyspark.sql import functions as F
 
-from searchengines_spark import analytic as A
 from searchengines_spark import bpe
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -13,7 +11,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return A.load(spark, SF_DIR, "documents").cache()
+    return spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
 
 
 def test_train_bpe_matches_sequential_replica(spark, docs):
@@ -29,7 +27,9 @@ def test_train_bpe_matches_sequential_replica(spark, docs):
 
 
 def test_first_merge_is_top_initial_pair(spark, docs):
-    top = A.q_bpe_pairs(spark, SF_DIR).limit(1).collect()[0]
+    top = (bpe._pair_counts(bpe._init_vocab(bpe.word_freq(docs)))
+           .orderBy(F.desc("freq"), F.asc("left"), F.asc("right"))
+           .limit(1).collect()[0])
     first = bpe.train_bpe(docs, n_merges=1).collect()[0]
     assert (first.left, first.right, first.freq) == (top.left, top.right, top.freq)
 

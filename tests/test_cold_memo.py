@@ -8,13 +8,17 @@
 - appends void the df inference (a term can cross the threshold leaving
   older unstriped blocks behind), so an appended index still scans —
   and serves the crossed term from BOTH its old cold and new striped
-  blocks, score-identical to the exhaustive planner path.
+  blocks, score-identical to the exhaustive planner path;
+- closing a superseded reader leaves the newer reader's serve cache
+  registered and persisted.
 """
 
 import math
+import os
 
 import pandas as pd
 import pytest
+from pyspark import StorageLevel
 
 from searchengines_spark.corpus import PAGES_SCHEMA
 from searchengines_spark.engine import Engine
@@ -159,3 +163,20 @@ def test_cold_memo_lru_eviction(spark, tmp_path, monkeypatch):
     # most-recent pair is still a 0-job memo hit
     got2, n2 = _jobs(spark, lambda: reader.cold_blocks([pairs[2]]))
     assert n2 == 0 and got2[pairs[2]] == first[pairs[2]]
+
+
+def test_close_keeps_newer_readers_serve_cache(spark, cold_index):
+    a = IndexReader(spark, cold_index)
+    b = IndexReader(spark, cold_index)
+    a.serve_blocks()
+    b_df = b.serve_blocks()  # supersedes a's registry entry
+    a.close()
+    key = os.path.realpath(cold_index)
+    reg = IndexReader._SERVE_CACHE_REGISTRY
+    assert reg.get(key) is b_df
+    assert b.serve_blocks() is b_df
+    # storageLevel asks the cache manager, not the frame's persist flag
+    assert b_df.storageLevel == StorageLevel.MEMORY_AND_DISK
+    b.close()
+    assert key not in reg
+    assert b_df.storageLevel == StorageLevel.NONE

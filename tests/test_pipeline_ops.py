@@ -1,286 +1,10 @@
-"""Property tests for the training-data pipeline filter/split operators
-(analytic.q_repetition / q_token_bpe / q_source_stats / q_lang_mix /
-q_quality_filter / q_split_assign). Value-level identity vs DuckDB is the
-driver gate (tools/check_oracle.py); these assert the semantic invariants
-the SQL comparison can't express."""
+"""PageRank (links.pagerank, the power iteration behind the LTR url prior):
+hand-solvable graphs, a numpy power-iteration replica, the reliable
+checkpoint setting and the empty edge set."""
 
-import pyspark.sql.functions as F
 import pytest
 
-from searchengines_spark import analytic as A
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return A.load(spark, SF_DIR, "documents").cache()
-
-
-def test_repetition_bounds(spark, docs):
-    rows = A.q_repetition(spark, SF_DIR).collect()
-    assert len(rows) == docs.filter(F.col("text") != "").count()
-    for r in rows:
-        assert 0 < r.top_term_frac <= 1.0
-        assert 0 <= r.top_bigram_frac <= 1.0
-        # a bigram repeats at most as often as its rarer member appears
-        assert r.n_tokens >= 1
-
-
-def test_repetition_known_doc(spark):
-    df = spark.createDataFrame(
-        [(1, "a a a b"), (2, "x y"), (3, "w")], ["doc_id", "text"])
-    out = {r.doc_id: r for r in A._rep_stats(df).collect()}
-    assert out[1].n_tokens == 4
-    assert out[1].top_term_frac == pytest.approx(0.75)
-    assert out[1].top_bigram_frac == pytest.approx(2 / 3, abs=1e-6)
-    assert out[2].top_bigram_frac == pytest.approx(1.0)
-    assert out[3].top_bigram_frac == 0.0  # single token: no bigram
-
-
-def test_token_bpe_counts(spark):
-    df = spark.createDataFrame(
-        [(1, "abc 7 de9f"), (2, "")], ["doc_id", "text"])
-    out = {r.doc_id: r for r in
-           df.select("doc_id",
-                     F.size(F.expr(f"regexp_extract_all(text, '{A.BPE_PAT}', 0)"))
-                     .alias("n")).collect()}
-    # 'abc' + '7' + 'de' + '9' + 'f' = 5 BPE-ish tokens (space not matched)
-    assert out[1].n == 5
-    assert out[2].n == 0
-
-
-def test_source_stats_partition(spark, docs):
-    out = A.q_source_stats(spark, SF_DIR)
-    assert out.agg(F.sum("n_docs")).collect()[0][0] == docs.count()
-    assert out.filter(F.col("n_dup_texts") < 0).count() == 0
-
-
-def test_quality_filter_consistency(spark):
-    rows = A.q_quality_filter(spark, SF_DIR).collect()
-    for r in rows:
-        assert r.keep == (r.len_ok and r.wordlen_ok and r.rep_ok)
-        assert r.len_ok == (A.QF_MIN_TOKENS <= r.n_tokens <= A.QF_MAX_TOKENS)
-    kept = sum(r.keep for r in rows)
-    assert 0 < kept < len(rows)  # thresholds split the corpus non-trivially
-
-
-def test_split_assign_deterministic_and_disjoint(spark, docs):
-    a = {r.doc_id: r.split for r in A.q_split_assign(spark, SF_DIR).collect()}
-    b = {r.doc_id: r.split for r in A.q_split_assign(spark, SF_DIR).collect()}
-    assert a == b  # hash-based: stable across runs (no random())
-    assert len(a) == docs.count()
-    assert set(a.values()) <= {"train", "valid", "test"}
-
-
-def test_lang_mix_totals(spark, docs):
-    out = A.q_lang_mix(spark, SF_DIR)
-    assert out.agg(F.sum("n")).collect()[0][0] == docs.count()
-
-
-def test_lm_score_orders_probability(spark):
-    """Docs made of rarer tokens must score higher nll than common-token docs."""
-    out = {r.doc_id: r.nll for r in A.q_lm_score(spark, SF_DIR).collect()}
-    assert all(v > 0 for v in out.values())
-
-
-def test_tfidf_topterm_properties(spark, docs):
-    rows = A.q_tfidf_topterms(spark, SF_DIR).collect()
-    assert len(rows) == docs.filter(F.col("text") != "").count()
-    texts = {r.doc_id: set(r.text.split()) for r in docs.collect()}
-    for r in rows:
-        assert r.top_term in texts[r.doc_id]  # keyword comes from the doc
-        assert r.tfidf >= 0
-
-
-def test_contamination_semantics(spark, docs):
-    """Brute-force replica on the small fixture: a train doc is contaminated
-    iff its 5-gram set intersects the benchmark slice's 5-gram set."""
-    texts = {r.doc_id: r.text.split() for r in docs.collect()}
-
-    def grams(ts):
-        return {" ".join(ts[i:i + A.CONTAM_N])
-                for i in range(len(ts) - A.CONTAM_N + 1)}
-
-    bench = set()
-    for d, ts in texts.items():
-        if d % A.CONTAM_MOD == 0:
-            bench |= grams(ts)
-    out = {r.doc_id: r for r in A.q_contamination(spark, SF_DIR).collect()}
-    assert set(out) == {d for d in texts if d % A.CONTAM_MOD != 0}
-    for d, r in out.items():
-        expect = len(grams(texts[d]) & bench)
-        assert r.n_shared == expect
-        assert r.contaminated == (expect > 0)
-
-
-def test_doc_entropy_known_values(spark):
-    import math
-
-    df = spark.createDataFrame(
-        [(1, "a a a a"), (2, "a b"), (3, "a a b b c c d d")],
-        ["doc_id", "text"])
-    tok = df.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos0", "term")
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "term")
-    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    g = tf.groupBy("doc_id").agg(
-        F.sum("tf").alias("n"), F.sum(F.col("tf") * F.log2("tf")).alias("s"))
-    out = {r.doc_id: r.e for r in g.select(
-        "doc_id", (F.log2("n") - F.col("s") / F.col("n")).alias("e")).collect()}
-    assert out[1] == pytest.approx(0.0)       # single repeated token
-    assert out[2] == pytest.approx(1.0)       # uniform over 2
-    assert out[3] == pytest.approx(2.0)       # uniform over 4
-    sf_out = A.q_doc_entropy(spark, SF_DIR).collect()
-    for r in sf_out:
-        assert r.entropy >= 0.0
-    assert math.isfinite(max(r.entropy for r in sf_out))
-
-
-def test_ngram_topk_counts(spark, docs):
-    out = A.q_ngram_topk(spark, SF_DIR).collect()
-    assert len(out) <= A.NGRAM_TOPK_K
-    ns = [r.n for r in out]
-    assert ns == sorted(ns, reverse=True)
-    # brute-force top count on the fixture
-    from collections import Counter
-    c = Counter()
-    for r in docs.collect():
-        ts = r.text.split()
-        for i in range(len(ts) - 2):
-            c[" ".join(ts[i:i + 3])] += 1
-    assert out[0].n == max(c.values())
-
-
-def test_length_quantiles_monotone(spark, docs):
-    r = A.q_length_quantiles(spark, SF_DIR).collect()[0]
-    assert r.n_docs == docs.filter(F.col("text") != "").count()
-    assert r.p50 <= r.p90 <= r.p99
-    assert r.mean_len > 0
-
-
-def test_pack_blocks_is_exact_prefix_sum(spark, docs):
-    """The 3-level scan tree must equal the sequential concat: rebuild the
-    global prefix sum in Python (doc_id order) and compare block spans."""
-    rows = {r.doc_id: r for r in A.q_pack_blocks(spark, SF_DIR).collect()}
-    lens = {r.doc_id: r.len for r in
-            A._doclens(A.tokens(docs)).collect()}
-    start, L = 0, A.PACK_SEQ_LEN
-    for doc_id in sorted(lens):
-        r = rows[doc_id]
-        assert r.len == lens[doc_id]
-        assert r.first_block == start // L
-        assert r.last_block == (start + r.len - 1) // L
-        assert r.n_blocks == r.last_block - r.first_block + 1
-        start += r.len
-    assert len(rows) == len(lens)
-
-
-def test_pack_blocks_no_global_doc_sort(spark):
-    """Only the superbucket roll-up may be an unpartitioned window: the
-    per-doc and per-bucket cumsums must be partitioned (parallel)."""
-    plan = A.q_pack_blocks(spark, SF_DIR)._jdf.queryExecution() \
-        .optimizedPlan().toString()
-    import re
-    # every Window either partitions by b1/b2 or runs over the tiny b2 roots
-    for spec in re.findall(r"windowspecdefinition\((.*?)\)", plan):
-        assert ("b1" in spec) or ("b2" in spec), spec
-
-
-def test_sample_weights_mean_one_and_rare_upweighted(spark, docs):
-    out = A.q_sample_weights(spark, SF_DIR)
-    n = docs.count()
-    total_w = out.agg(F.sum("weight")).collect()[0][0]
-    assert abs(total_w - n) / n < 1e-4  # corpus-mean weight == 1
-    per_src = {r.source: r.weight for r in out.select("source", "weight").distinct().collect()}
-    counts = {r.source: r["count"] for r in docs.groupBy("source").count().collect()}
-    rare = min(counts, key=counts.get)
-    common = max(counts, key=counts.get)
-    if counts[rare] < counts[common]:
-        assert per_src[rare] > per_src[common]  # alpha < 1 upweights rare
-
-
-def test_vocab_oov_bounds(spark):
-    rows = A.q_vocab_oov(spark, SF_DIR).collect()
-    assert rows and all(0.0 <= r.oov_rate <= 1.0 for r in rows)
-
-
-def test_prefix_dup_contains_exact_dup_groups(spark):
-    """Identical texts share the prefix, so every exact-dup group must land
-    in some prefix family of at least that size."""
-    exact = [r for r in A.q_dedup_exact(spark, SF_DIR).collect() if r.n > 1]
-    fams = A.q_prefix_dup(spark, SF_DIR).collect()
-    assert all(r.n >= 2 for r in fams)
-    if exact:
-        assert max((r.n for r in fams), default=0) >= max(r.n for r in exact)
-
-
-def test_dedup_keep_consistency(spark, docs):
-    rows = A.q_dedup_keep(spark, SF_DIR).collect()
-    assert len(rows) == docs.count()
-    n_md5 = docs.select(F.md5("text")).distinct().count()
-    assert sum(r.exact_keep for r in rows) == n_md5
-    for r in rows:
-        assert r.keep == (r.exact_keep and r.near_keep)
-
-
-def test_substring_dedup_planted_run(spark):
-    """A verbatim n-token run shared by two docs marks exactly the run's
-    tokens as duplicated in each doc (runs longer than n cover their full
-    extent via overlapping grams); docs without a shared n-run stay clean."""
-    n = 4
-    run = "p q r s t u"          # 6 tokens > n: overlap-union must cover all 6
-    d1 = f"a1 b1 c1 {run} d1 e1 f1 g1"  # 13 tokens, 6 dup
-    d2 = f"{run} x2 y2"                 # 8 tokens, 6 dup
-    d3 = "p q r m t u o2 k2"            # shares only 3-runs with the run: clean
-    df = spark.createDataFrame(
-        [(1, d1), (2, d2), (3, d3)], ["doc_id", "text"])
-    out = {r.doc_id: r for r in A._substring_dedup(df, n=n).collect()}
-    assert out[1].n_tokens == 13 and out[1].dup_tokens == 6
-    assert out[2].n_tokens == 8 and out[2].dup_tokens == 6
-    assert out[3].dup_tokens == 0 and not out[3].drop_doc
-    assert out[2].drop_doc  # 6/8 > 0.5
-    assert not out[1].drop_doc  # 6/13 < 0.5
-    assert out[1].dup_frac == pytest.approx(6 / 13, abs=1e-6)
-
-
-def test_substring_dedup_self_repeat_not_dup(spark):
-    """A doc repeating ITS OWN n-gram is not cross-doc duplicated (the
-    dup set requires >= 2 distinct docs)."""
-    df = spark.createDataFrame(
-        [(1, "z z z z z z z z"), (2, "q w e r t y u i")], ["doc_id", "text"])
-    out = {r.doc_id: r for r in A._substring_dedup(df, n=4).collect()}
-    assert out[1].dup_tokens == 0
-    assert out[2].dup_tokens == 0
-
-
-def test_pii_stats_hand_checked(spark):
-    """PII detection + redaction on hand-written rows: counts per family,
-    the has_pii flag, and the redacted text (checked via its md5, the same
-    value the driver gate hashes)."""
-    import hashlib
-
-    rows = [
-        (1, "write to bob.smith+x@mail.example.org or sue@ex.co today"),
-        (2, "call 555-010-1234 from 10.0.255.7 please"),
-        (3, "clean text with digits 123 and a dash-word only"),
-        (4, "a@b.io 555-111-2222 192.168.1.1 all three"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    got = {r.doc_id: r for r in A.pii_stats(df).collect()}
-    assert (got[1].n_emails, got[1].n_phones, got[1].n_ips) == (2, 0, 0)
-    assert (got[2].n_emails, got[2].n_phones, got[2].n_ips) == (0, 1, 1)
-    assert (got[3].n_emails, got[3].n_phones, got[3].n_ips) == (0, 0, 0)
-    assert (got[4].n_emails, got[4].n_phones, got[4].n_ips) == (1, 1, 1)
-    assert [got[i].has_pii for i in (1, 2, 3, 4)] == [True, True, False, True]
-    want = {
-        1: "write to <EMAIL> or <EMAIL> today",
-        2: "call <PHONE> from <IP> please",
-        3: rows[2][1],
-        4: "<EMAIL> <PHONE> <IP> all three",
-    }
-    for i, red in want.items():
-        assert got[i].redacted_h == hashlib.md5(red.encode()).hexdigest(), i
+from searchengines_spark.links import PR_DAMP, PR_ITERS, pagerank
 
 
 def test_pagerank_hand_computed_and_stochastic(spark):
@@ -291,7 +15,7 @@ def test_pagerank_hand_computed_and_stochastic(spark):
     cyc = spark.createDataFrame(
         [("a", "b", 1.0), ("b", "c", 1.0), ("c", "a", 1.0)],
         ["src", "dst", "w"])
-    out = {r.node: r.pr for r in A.pagerank(cyc).collect()}
+    out = {r.node: r.pr for r in pagerank(cyc).collect()}
     for v in out.values():
         assert v == pytest.approx(1 / 3, abs=1e-12)
 
@@ -299,12 +23,12 @@ def test_pagerank_hand_computed_and_stochastic(spark):
     edges = [("a", "b", 2.0), ("a", "c", 1.0), ("b", "c", 1.0),
              ("c", "a", 1.0), ("a", "d", 1.0), ("b", "d", 3.0)]
     df = spark.createDataFrame(edges, ["src", "dst", "w"])
-    got = {r.node: r.pr for r in A.pagerank(df).collect()}
+    got = {r.node: r.pr for r in pagerank(df).collect()}
 
     import numpy as np
     nodes = ["a", "b", "c", "d"]
     idx = {n: i for i, n in enumerate(nodes)}
-    n, d = len(nodes), A.PR_DAMP
+    n, d = len(nodes), PR_DAMP
     M = np.zeros((n, n))
     outw = {}
     for s, t, w in edges:
@@ -312,7 +36,7 @@ def test_pagerank_hand_computed_and_stochastic(spark):
     for s, t, w in edges:
         M[idx[t], idx[s]] += w / outw[s]
     r = np.full(n, 1.0 / n)
-    for _ in range(A.PR_ITERS):
+    for _ in range(PR_ITERS):
         dang = sum(r[idx[u]] for u in nodes if u not in outw)
         r = (1 - d) / n + d * (M @ r + dang / n)
     for u in nodes:
@@ -327,11 +51,11 @@ def test_pagerank_reliable_checkpoint_identical(spark, tmp_path):
     edges = [("a", "b", 2.0), ("a", "c", 1.0), ("b", "c", 1.0),
              ("c", "a", 1.0), ("a", "d", 1.0), ("b", "d", 3.0)]
     df = spark.createDataFrame(edges, ["src", "dst", "w"])
-    base = {r.node: r.pr for r in A.pagerank(df).collect()}
+    base = {r.node: r.pr for r in pagerank(df).collect()}
     old_dir = spark.sparkContext._jsc.sc().getCheckpointDir()
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
-        rel = A.pagerank(df, reliable_checkpoint=True)
+        rel = pagerank(df, reliable_checkpoint=True)
         got = {r.node: r.pr for r in rel.collect()}
     finally:
         if old_dir.isDefined():
@@ -346,7 +70,7 @@ def test_pagerank_empty_graph(spark):
     still yields a TOTAL frame (every page at the teleport floor)."""
     from searchengines_spark.links import url_priors
     empty = spark.createDataFrame([], "src string, dst string, w double")
-    out = A.pagerank(empty)
+    out = pagerank(empty)
     assert out.count() == 0
     assert out.columns == ["node", "pr"]
     pages = spark.createDataFrame(
@@ -354,21 +78,6 @@ def test_pagerank_empty_graph(spark):
         ["url"])
     pri = {r.url: r.page_rank for r in url_priors(pages, empty).collect()}
     assert len(pri) == 2
-    floor = (1.0 - A.PR_DAMP) * 1000.0
+    floor = (1.0 - PR_DAMP) * 1000.0
     for v in pri.values():
         assert v == pytest.approx(floor, rel=1e-9)
-
-
-def test_domain_cap_invariants(spark, docs):
-    """<= DCAP_N rows per source; every kept doc is at least as large as
-    every dropped doc of the same source (modulo the doc_id tie-break)."""
-    out = A.q_domain_cap(spark, SF_DIR)
-    per = {r.source: r.n for r in
-           out.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    assert all(v <= A.DCAP_N for v in per.values())
-    kept_min = {r.source: r.m for r in
-                out.groupBy("source").agg(F.min("n_chars").alias("m")).collect()}
-    dropped = docs.join(out.select("doc_id"), "doc_id", "left_anti")
-    for r in dropped.groupBy("source").agg(F.max("n_chars").alias("mx")).collect():
-        # a dropped doc may tie kept_min on n_chars (doc_id breaks the tie)
-        assert r.mx <= kept_min[r.source]

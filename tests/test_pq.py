@@ -126,25 +126,3 @@ def test_pq_batch_multi_query(fixture):
         single = [r["vec_id"] for r in pq.pq_topk(codes, books, qv, k=10).collect()]
         assert by_q[q] == single
 
-
-def test_pq_cache_key_tracks_input_files(tmp_path):
-    """q_pq_topk's codebook memo keys on the embeddings files' content
-    signature (size/mtime), so rewriting the data at the same path is a
-    cache miss — never stale codebooks — while an untouched path hits."""
-    import os
-    import time
-
-    from searchengines_spark.analytic import _pq_cache_key
-
-    root = tmp_path / "embeddings.parquet"
-    root.mkdir()
-    f = root / "part-0.parquet"
-    f.write_bytes(b"aaaa")
-    k1 = _pq_cache_key(str(tmp_path), 16, 64, 7)
-    assert _pq_cache_key(str(tmp_path), 16, 64, 7) == k1  # stable
-    time.sleep(0.01)
-    f.write_bytes(b"bbbbbbbb")  # same path, new data
-    k2 = _pq_cache_key(str(tmp_path), 16, 64, 7)
-    assert k2 != k1
-    os.utime(f, ns=(1, 1))
-    assert _pq_cache_key(str(tmp_path), 16, 64, 7) != k2  # mtime-sensitive

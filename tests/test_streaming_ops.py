@@ -137,56 +137,3 @@ def test_stream_dedup_exact_across_restarts(spark, tmp_path):
     assert sorted(got2["doc_id"]) == [0, 1, 3, 11]
     assert got2["h"].nunique() == 4
 
-
-def test_stream_dedup_near_across_restarts(spark, tmp_path):
-    """Streaming near-dup suppression: within-batch near-dups resolve onto
-    the min doc_id; a later drop's near-dups of ADMITTED docs are dropped
-    onto the stored canonical (state table survives restart); fresh docs
-    admit. Planted dups mutate 2 of ~40 tokens (shingle Jaccard >> 0.5);
-    distinct docs share no vocabulary."""
-    from searchengines_spark.streaming import stream_dedup_near
-
-    def words(prefix, n=40):
-        return " ".join(f"{prefix}{i} {prefix}{i}x" for i in range(n // 2))
-
-    base_a, base_b, base_c = words("aa"), words("bb"), words("cc")
-    near_a1 = base_a.replace("aa3x", "zz") # 2-token mutation of A
-    near_a2 = base_a.replace("aa7 ", "qq ")
-    src = tmp_path / "near_src"
-    os.makedirs(src)
-    out = str(tmp_path / "nout")
-    ckpt = str(tmp_path / "nckpt")
-    state = str(tmp_path / "nstate")
-
-    def drop(name, rows):
-        pd.DataFrame({
-            "doc_id": [r[0] for r in rows], "text": [r[1] for r in rows],
-            "lang": "en", "source": "s",
-            "n_chars": [len(r[1]) for r in rows],
-        }).to_parquet(src / name)
-
-    # batch 1: A, near-dup of A (within batch), B
-    drop("d1.parquet", [(1, base_a), (2, near_a1), (3, base_b)])
-    q = stream_dedup_near(spark, str(src), out, ckpt, state)
-    q.awaitTermination(240)
-    got = pd.read_parquet(out).set_index("doc_id").sort_index()
-    assert bool(got.loc[1, "keep"]) and got.loc[1, "canon"] == 1
-    assert not bool(got.loc[2, "keep"]) and got.loc[2, "canon"] == 1
-    assert got.loc[2, "sim"] >= 0.5
-    assert bool(got.loc[3, "keep"])
-
-    # batch 2 (restart, same checkpoint + state): another near-dup of A
-    # (cross-batch, vs the STORE), an exact copy of B, and fresh C
-    drop("d2.parquet", [(11, near_a2), (12, base_b), (13, base_c)])
-    q = stream_dedup_near(spark, str(src), out, ckpt, state)
-    q.awaitTermination(240)
-    got = pd.read_parquet(out).set_index("doc_id").sort_index()
-    assert sorted(got.index) == [1, 2, 3, 11, 12, 13]
-    assert not bool(got.loc[11, "keep"]) and got.loc[11, "canon"] == 1
-    assert not bool(got.loc[12, "keep"]) and got.loc[12, "canon"] == 3
-    assert got.loc[12, "sim"] == 1.0  # identical text -> identical signature
-    assert bool(got.loc[13, "keep"]) and got.loc[13, "canon"] == 13
-
-    # the admitted set's state table holds exactly the 3 canonicals
-    sigs = pd.read_parquet(state + "/sigs")
-    assert sorted(sigs["canon"].unique()) == [1, 3, 13]

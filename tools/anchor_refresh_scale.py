@@ -31,7 +31,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scaling import _host_healthy  # noqa: E402
+from hostcheck import host_healthy  # noqa: E402
 
 N_PAGES_DEFAULT = 1_000_000
 # pmod(xxhash64(url), M) == 0 selects ~1/M of the anchor table
@@ -52,7 +52,7 @@ def main() -> None:
            else f"/tmp/anchor_scale_idx_{n_pages}")
     spark = get_spark("anchor-scale", cores=32, shuffle_partitions=32)
 
-    ok0, mops0 = _host_healthy()
+    ok0, mops0 = host_healthy()
     res: dict = {"n_pages": n_pages, "canary_mops_start": mops0,
                  "canary_healthy_start": ok0}
 
@@ -95,7 +95,7 @@ def main() -> None:
         if r["refreshed"]:
             r["marginal_ms_per_doc"] = round(
                 1000.0 * (r["wall_sec"] - fixed) / r["refreshed"], 2)
-    ok1, mops1 = _host_healthy()
+    ok1, mops1 = host_healthy()
     res["canary_mops_end"] = mops1
     res["canary_healthy_end"] = ok1
     print(json.dumps(res))

@@ -131,86 +131,6 @@ def main() -> None:
         "way no wide exchange of page payloads.",
         fmt(joined)))
 
-    from searchengines_spark import analytic as A
-    contam = A.q_contamination(spark, "/root/testdata/sf0.001")
-    sections.append((
-        "Decontamination (benchmark 5-gram overlap)",
-        "What to look for: the benchmark gram set reaches the training grams "
-        "via `BroadcastHashJoin` (the eval suite is tiny relative to the "
-        "corpus — it ships to every executor; training-side grams never "
-        "shuffle for the probe), and there is NO self-join of the corpus "
-        "gram table anywhere — per-doc gram construction is doc-local "
-        "(`transform` over the token array inside WholeStageCodegen).",
-        fmt(contam)))
-
-    lsh = A.q_lsh_dup_pairs_scaled(spark, "/root/testdata/sf0.001")
-    sections.append((
-        "Scaled LSH dedup (64-perm MinHash, 16x4 banding, candidate-restricted verify)",
-        "What to look for: the shingle table is read back as "
-        "`InMemoryTableScan` (cache-filled once; the verify legs are cache "
-        "reads, not recomputes of the tokenize+distinct lineage), the band "
-        "bucket join is an equi-join on (band, bh) — there is NO shingle "
-        "self-join of the full corpus anywhere — and the Jaccard verify "
-        "joins are candidate-sized. The 64-permutation signature is the "
-        "narrow long form (broadcast 64-row coefficient table + one "
-        "groupBy), not a 64-column aggregate.",
-        fmt(lsh)))
-
-    import numpy as np
-
-    from searchengines_spark import ann
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = ann.train_ivf(emb, n_cells=8, seed=7)
-    ivf_path = "/tmp/plans_ivf_idx"
-    ann.write_ivf(emb, cents, ivf_path)
-    disk_cells, disk_cents = ann.read_ivf(spark, ivf_path)
-    qv = np.asarray(emb.limit(1).collect()[0]["embedding"], dtype=np.float64)
-    probe = ann.ivf_topk(disk_cells, disk_cents, qv, k=10, n_probe=3)
-    sections.append((
-        "IVF ANN probe over a cell-partitioned index (write_ivf layout)",
-        "What to look for: `PartitionFilters: [..., cell IN (...)]` on the "
-        "embeddings scan — write_ivf lays the index out one directory per "
-        "cell, so a 3-of-8-cell probe opens 3/8 of the files (at 4096 cells "
-        "and n_probe=8 the scan touches 0.2% of the data); the scoring "
-        "kernel is one `MapInPandas` matmul per Arrow batch emitting "
-        "per-batch partial top-k, and the global merge is a k-rows-per-"
-        "batch window.",
-        fmt(probe)))
-
-    from searchengines_spark import pq as PQ
-
-    books = PQ.train_pq(emb, m=16, k=64, seed=7)
-    ivfpq_path = "/tmp/plans_ivfpq_idx"
-    PQ.write_ivfpq(emb, cents, books, ivfpq_path)
-    pq_codes, pq_cents, pq_books = PQ.read_ivfpq(spark, ivfpq_path)
-    pq_probe = PQ.ivfpq_topk(pq_codes, pq_cents, pq_books, qv, k=10,
-                             n_probe=3, refine=50, emb=emb)
-    sections.append((
-        "IVF-PQ probe (16-byte codes, ADC scan, exact refine)",
-        "What to look for: the codes scan carries `PartitionFilters: "
-        "[..., cell IN (...)]` (3-of-8 cell directories opened) AND its "
-        "`ReadSchema` is only (vec_id, code) — the probe reads 16-byte "
-        "codes, never the 256-byte float vectors; the exact-refine leg "
-        "joins the ORIGINAL embeddings against the R-row shortlist via "
-        "`BroadcastHashJoin` (candidate-sized — the full embedding column "
-        "never feeds the refine); both kernels are single `MapInPandas` "
-        "nodes (LUT-gather ADC, matmul refine).",
-        fmt(pq_probe)))
-
-    sub = A.q_substring_dedup(spark, "/root/testdata/sf0.001")
-    sections.append((
-        "Exact substring dedup (16-token verbatim runs, Lee et al. 2022 criterion)",
-        "What to look for: gram construction is doc-local (`posexplode` of a "
-        "`transform` over the token array inside WholeStageCodegen — no "
-        "per-doc window sort); the duplicated-gram set comes from ONE "
-        "`HashAggregate` on gram where the partial_count_distinct kills "
-        "singleton grams map-side before the shuffle; the coverage "
-        "expansion join is gram-equi (candidate-restricted — only "
-        "duplicated gram starts explode their <=16 covered offsets); and "
-        "there is NO corpus self-join anywhere.",
-        fmt(sub)))
-
     indri = e.search("#WAND( 0.6 haceba4 0.4 #AND( badiba5 fobaba3 ) )",
                      model="indri", mu=1000.0, lam=0.4, k=10)
     sections.append((
@@ -224,38 +144,6 @@ def main() -> None:
         "scores; stats (ctf, fieldlen) arrive via 1-row broadcast joins; "
         "final `TakeOrderedAndProject`.",
         fmt(indri)))
-
-    pr = A.q_pagerank(spark, "/root/testdata/sf0.001")
-    sections.append((
-        "PageRank over the host graph (one power-iteration step shown)",
-        "What to look for: the edge list and the previous iteration's ranks "
-        "are `InMemoryTableScan`s (edges cached ONCE, ranks cached per "
-        "round — iteration i never recomputes iteration i-1's lineage); "
-        "each step is exactly one rank x edges join plus one "
-        "`HashAggregate` on dst with a map-side partial sum; the dangling "
-        "mass is a 1-row aggregate cross-joined back (`BroadcastNestedLoop"
-        "Join` of a single row), never a driver collect.",
-        fmt(pr)))
-
-    pii = A.q_pii_scrub(spark, "/root/testdata/sf0.001")
-    sections.append((
-        "PII detection + redaction (pii_scrub)",
-        "What to look for: ONE `WholeStageCodegen` span over the scan — "
-        "every regexp_count/regexp_replace is a JVM-side Catalyst "
-        "expression, so there is no shuffle, no Python worker, and no "
-        "exchange anywhere in the plan; the pass is a pure projection "
-        "that scales with input splits.",
-        fmt(pii)))
-
-    dcap = A.q_domain_cap(spark, "/root/testdata/sf0.001")
-    sections.append((
-        "Per-host document cap (domain_cap)",
-        "What to look for: `WindowGroupLimit` BELOW the exchange — Spark "
-        "4's rank-limit pushdown keeps only the per-host top-N on the map "
-        "side, so the shuffle moves <= N rows per (host, input split), not "
-        "the corpus; then one partial sort per host and the rnk <= N "
-        "filter. Parallelism = #hosts.",
-        fmt(dcap)))
 
     from searchengines_spark import links as L
 
@@ -291,52 +179,6 @@ def main() -> None:
         "the changed slice, inside the subsequent upsert); nothing "
         "corpus-sized shuffles.",
         fmt(changed)))
-
-    from searchengines_spark.index.spellkeys import read_spell_keys
-
-    sidecar = read_spell_keys(spark, idx)
-    if sidecar is not None:
-        suggest = e.suggest(["hacebb4", "badbia5"])
-        sections.append((
-            "Engine.suggest over the spell_keys sidecar (point-read path)",
-            "What to look for: the vocab side is the build-materialized "
-            "spell_keys sidecar scan with `PushedFilters: [In(k, ...)]` — "
-            "the batch's driver-computed delete keys prune row groups of "
-            "the (field, k)-sorted parquet, a point read like a norms "
-            "stripe; NO Generate/explode node anywhere (the vocab-sized "
-            "delete explode ran once at build time); `levenshtein` verify "
-            "on the candidate-sized join output only.",
-            fmt(suggest)))
-    else:
-        # pre-sidecar or append-stale /tmp index (read_spell_keys returning
-        # None is the designed fallback) — skip the section rather than
-        # abort the whole capture; a fresh build regenerates it
-        print("NOTE: spell_keys sidecar absent/stale on", idx,
-              "- suggest plan section skipped (rebuild the index to capture)")
-
-    snip = A.q_snippet(spark, "/root/testdata/sf0.001")
-    sections.append((
-        "Snippet best-window selection (batch twin)",
-        "What to look for: the token stream is filtered to the query terms "
-        "BEFORE the self-join (`PushedFilters`/codegen filter under the "
-        "posexplode), so the join input is match-sized, never corpus-sized; "
-        "the per-(doc, start) distinct-term count is one `HashAggregate`; "
-        "the per-doc argmax is a `WindowGroupLimit`-pushed rank; the text "
-        "slice joins back only the winning row per doc.",
-        fmt(snip)))
-
-    spell = A.q_spell(spark, "/root/testdata/sf0.001")
-    sections.append((
-        "Spell correction (SymSpell delete-key join)",
-        "What to look for: candidate generation is an EQUI-join on the "
-        "delete key k with the QUERY-side keys explicitly broadcast "
-        "(`BroadcastHashJoin ... BuildLeft` — bounded by the query batch; "
-        "the vocab delete table, ~16 keys per vocab term built by "
-        "`transform`/`flatten` inside WholeStageCodegen with no UDF, "
-        "streams and never broadcasts); `levenshtein` verify runs only on "
-        "the candidate-sized join output. NO query x vocab cross join "
-        "anywhere in the plan.",
-        fmt(spell)))
 
     out = os.path.join(REPO, "PLANS.md")
     with open(out, "w") as f:

@@ -1,8 +1,8 @@
 """Multi-executor deployment + scaling study: the index build submitted with
 ``spark-submit --py-files engine.zip`` against Spark's local-cluster master
 — separate executor JVMs, real inter-process shuffle, the engine shipped as
-a zip. This is the north rule's literal deployment shape, vs the local[K]
-thread proxy measured by tools/scaling.py.
+a zip. This is the north rule's literal deployment shape, vs a local[K]
+thread proxy.
 
 local-cluster[E, C, M] launches E CoarseGrainedExecutorBackend child JVMs
 with C cores and M MB each; tasks shuffle between processes exactly as on a
@@ -31,12 +31,12 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from scaling import _calibrate, _steal_jiffies  # noqa: E402  (same-dir import)
+from hostcheck import calibrate_tokenize, steal_jiffies  # noqa: E402  (same-dir import)
 
 CORES_PER_EXEC = 4
 EXEC_MEM_MB = 3072
 
-# the same session tuning bench.py's get_spark applies — submit_job builds a
+# the same session tuning session.get_spark applies — submit_job builds a
 # plain SparkSession, so these must come in via spark-submit --conf
 CONF = {
     "spark.sql.shuffle.partitions": "32",
@@ -83,12 +83,12 @@ def _submit_build(execs: int, zpath: str, pages: str, idx: str,
         cmd += ["--conf", f"{k}={v}"]
     cmd += [os.path.join(REPO, "tools", "submit_job.py"),
             "build", "--pages", pages, "--index-dir", idx, "--n-salts", "32"]
-    s0, t0 = _steal_jiffies()
+    s0, t0 = steal_jiffies()
     wall0 = time.time()
     p = subprocess.run(cmd, capture_output=True, text=True, timeout=3600,
                        cwd=REPO)
     wall = time.time() - wall0
-    s1, t1 = _steal_jiffies()
+    s1, t1 = steal_jiffies()
     lines = [ln for ln in p.stdout.strip().splitlines() if ln.startswith("{")]
     if not lines:
         raise RuntimeError(f"submit failed (rc={p.returncode}):\n"
@@ -108,10 +108,10 @@ def main() -> None:
     zpath = _zip_engine(tmp)
     pages = _gen_pages(tmp, n_pages)
 
-    # same no-Spark hardware-ceiling calibration as tools/scaling.py: the
+    # no-Spark hardware-ceiling calibration (hostcheck): the
     # box's own 8->32-process efficiency for the engine's kernel mix
-    eff_tok = (_calibrate(hi_cpus, set(range(hi_cpus)), "tok")
-               / (4.0 * _calibrate(lo_cpus, set(range(lo_cpus)), "tok")))
+    eff_tok = (calibrate_tokenize(hi_cpus, set(range(hi_cpus)))
+               / (4.0 * calibrate_tokenize(lo_cpus, set(range(lo_cpus)))))
 
     def best(execs: int, cpus: int, tag: str) -> dict:
         runs = []

@@ -1,6 +1,6 @@
 """Serve-side two-parallelism scaling evidence (the sandbox proxy for the
 north rule's N vs 4N executors, applied to the QUERY path — the build-side
-study is tools/scaling.py → BENCH/BASELINE.md).
+study is BENCH/BASELINE.md).
 
 Protocol: build the 1M-page index ONCE (untimed, full box), then run the
 SAME serve workload in taskset-pinned subprocesses at an 8-CPU and a
@@ -9,13 +9,13 @@ SAME serve workload in taskset-pinned subprocesses at an 8-CPU and a
 - single BM25 bag-of-words top-k (the stripe-kernel query; 32 docid-range
   stripe tasks run as 4 waves at 8 CPUs, 1 wave at 32 — exactly how an
   8-core vs 32-core cluster would run it),
-- the 12-query batch through the shared-scan path (bench.py's workload).
+- a 12-query batch through the shared-scan path.
 
 Each is warmed (one untimed query for session/JIT/codegen) then best-of-N.
 A no-Spark hardware calibration (the bulk kernel's numpy op mix via
 multiprocessing at both widths) gives the box's own 8→32 ceiling for
 memory-bandwidth-bound work; engine efficiency should be read against it
-(see tools/scaling.py's rationale — a real cluster brings 4× DRAM with
+(a real cluster brings 4× DRAM with
 its 4× cores, the single box does not).
 
 Usage: python tools/scaling_serve.py [index_dir] [n_pages]
@@ -60,7 +60,7 @@ def _ceiling() -> dict:
     on the SAME cpus 0-7 the 8-CPU engine leg is tasksetted to (same
     physical cores / cache domains), or the ceiling is measured under a
     different hardware budget than the thing it normalizes (the pattern
-    tools/scaling.py::_calibrate uses)."""
+    hostcheck.calibrate_tokenize uses)."""
     out = {}
     old = os.sched_getaffinity(0)
     for procs in BUDGETS:

@@ -34,7 +34,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scaling import _host_healthy, _steal_jiffies  # noqa: E402
+from hostcheck import host_healthy, steal_jiffies  # noqa: E402
 from scaling_cluster import CONF, EXEC_MEM_MB, _zip_engine  # noqa: E402
 from scaling_serve import _ceiling  # noqa: E402
 
@@ -59,12 +59,12 @@ def _submit_servebench(execs: int, cores: int, zpath: str, idx: str,
         cmd += ["--conf", f"{k}={v}"]
     cmd += [os.path.join(REPO, "tools", "submit_job.py"),
             "servebench", "--index-dir", idx, "--runs", str(RUNS)]
-    s0, t0 = _steal_jiffies()
+    s0, t0 = steal_jiffies()
     wall0 = time.time()
     p = subprocess.run(cmd, capture_output=True, text=True, timeout=3600,
                        cwd=REPO)
     wall = time.time() - wall0
-    s1, t1 = _steal_jiffies()
+    s1, t1 = steal_jiffies()
     lines = [ln for ln in p.stdout.splitlines() if ln.startswith("RESULT ")]
     if not lines:
         raise RuntimeError(f"servebench submit failed (rc={p.returncode}):\n"
@@ -94,7 +94,7 @@ def main() -> None:
 
     tmp = tempfile.mkdtemp(prefix="ssrvclust_")
     zpath = _zip_engine(tmp)
-    ok, mops0 = _host_healthy()
+    ok, mops0 = host_healthy()
     res: dict = {"n_pages": n_pages, "index": idx, "mode": "local-cluster",
                  "canary_mops_start": mops0, "canary_healthy_start": ok,
                  "hw_ceiling_numpy_mix": _ceiling()}
@@ -126,7 +126,7 @@ def main() -> None:
         for k in [k for k in list(res) if k.endswith("_efficiency")
                   or k.endswith("_eff_floor_adj")]:
             res[k + "_normalized"] = round(res[k] / ceil, 3)
-    ok, mops1 = _host_healthy()
+    ok, mops1 = host_healthy()
     res["canary_mops_end"] = mops1
     res["canary_healthy_end"] = ok
     print(json.dumps(res))

@@ -18,10 +18,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-TERMS = ["cebaba1", "dibaba2", "fobaba3", "gubaba4"]  # bench.py's bm25_bow
+TERMS = ["cebaba1", "dibaba2", "fobaba3", "gubaba4"]
 
 
-from bench import _loop_rate as loop_rate  # the one shared canary definition
+from hostcheck import loop_rate  # noqa: E402
 
 
 def main() -> None:
@@ -53,7 +53,7 @@ def main() -> None:
         build_index(spark, spark.read.parquet(pp), idx, n_salts=32)
         reader = IndexReader(spark, idx)
         eng = Engine(reader)
-        # session warm-up (per-deployment cost, untimed — bench.py protocol)
+        # session warm-up (per-deployment cost, untimed)
         eng.search("hobaba7 jibaba8", model="bm25", k=10).collect()
 
         r: dict = {}

@@ -26,7 +26,7 @@ RUNS = int(os.environ.get("RUNS", "2"))
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
 
-from bench import _cpu_stat, _loop_rate  # the one shared canary definition
+from hostcheck import cpu_stat, loop_rate  # noqa: E402
 
 
 def main() -> None:
@@ -38,8 +38,8 @@ def main() -> None:
                       shuffle_partitions=max(CPUS, 16))
     work = tempfile.mkdtemp(prefix="stembench_")
     out = {"n_pages": N_PAGES, "runs": RUNS, "cpus": CPUS,
-           "canary_mops_start": _loop_rate()}
-    stat0 = _cpu_stat()
+           "canary_mops_start": loop_rate()}
+    stat0 = cpu_stat()
     try:
         pages_dir = os.path.join(work, "pages")
         # materialize once so every build scans identical parquet bytes
@@ -69,10 +69,10 @@ def main() -> None:
     finally:
         shutil.rmtree(work, ignore_errors=True)
         spark.stop()
-    stat1 = _cpu_stat()
+    stat1 = cpu_stat()
     d = [y - x for x, y in zip(stat0, stat1)]
     out["host_steal_pct"] = round(100.0 * d[7] / max(1, sum(d)), 2)
-    out["canary_mops_end"] = _loop_rate()
+    out["canary_mops_end"] = loop_rate()
 
     detail = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "BENCH", "stemmer_detail.json")

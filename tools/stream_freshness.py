@@ -40,7 +40,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scaling import _host_healthy  # noqa: E402
+from hostcheck import host_healthy  # noqa: E402
 
 BASE_PAGES = 100_000
 N_DROPS = 5
@@ -196,7 +196,7 @@ def main() -> None:
             .join(base_urls, "url", "left_anti")
             .orderBy("url"))
     rows = tail.collect()
-    ok0, mops0 = _host_healthy()
+    ok0, mops0 = host_healthy()
     res: dict = {"base_pages": BASE_PAGES, "n_drops": N_DROPS,
                  "canary_mops_start": mops0, "canary_healthy_start": ok0,
                  "per_batch_size": []}
@@ -205,7 +205,7 @@ def main() -> None:
         res["per_batch_size"].append(
             run_batch_size(spark, base_idx, rows, b, off))
         off += b * N_DROPS
-    ok1, mops1 = _host_healthy()
+    ok1, mops1 = host_healthy()
     res["canary_mops_end"] = mops1
     res["canary_healthy_end"] = ok1
     print(json.dumps(res))

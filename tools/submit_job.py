@@ -21,7 +21,6 @@ Commands:
                                            fold deltas + purge tombstones,
                                            re-encode under current stats;
                                            optionally expire old snapshots
-  bench  (delegates to bench.py phases via env)
 
 Package the engine for --py-files with:
   (cd <repo> && zip -qr /tmp/engine.zip searchengines_spark)
