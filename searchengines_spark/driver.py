@@ -263,11 +263,7 @@ def run_batch(reader: IndexReader, params: dict, queries: dict[str, str],
         ranked = parse_ranking(params["prf:initialRankingFile"])
         init_urls = {qid: ranked.get(qid, [])[:num_docs] for qid in queries}
     else:
-        init_df = eng.search_batch_df(wrapped, model, num_docs, **kw)
-        try:
-            rows = init_df.collect()
-        finally:
-            eng.release_held_caches(init_df)
+        rows = eng.search_batch_df(wrapped, model, num_docs, **kw).collect()
         init_urls = {qid: [] for qid in queries}
         for r in sorted(rows, key=lambda r: (r["qid"], r["rank"])):
             init_urls[r["qid"]].append((r["url"], r["score"]))
@@ -345,11 +341,8 @@ def _run_diversity(eng: Engine, params, queries, run_id, k, model, kw) -> list[s
             batch[f"{qid}\x00{0}"] = q
             for i, text in intents.get(qid, []):
                 batch[f"{qid}\x00{i}"] = text
-        base_df = eng.search_batch_df(batch, model, max_in, **kw)
-        try:
-            res = base_df.join(url_ids, "url").collect()
-        finally:
-            eng.release_held_caches(base_df)
+        res = (eng.search_batch_df(batch, model, max_in, **kw)
+               .join(url_ids, "url").collect())
         for r in res:
             qid, _, i = r["qid"].partition("\x00")
             rows.append((qid, int(i), int(r["docid"]), float(r["score"])))
@@ -441,12 +434,7 @@ def run_ltr(reader: IndexReader, params: dict,
                                     k1=fkw["k1"], b=fkw["b"])
     init = init_base.join(url_ids, "url")
     cand_test = init.select("qid", "docid", F.lit(0).alias("rel")).cache()
-    try:
-        cand_test.count()
-    finally:
-        # cand_test is materialized; the batch frame's shared decode cache
-        # is no longer needed by anything downstream
-        eng.release_held_caches(init_base)
+    cand_test.count()
     tfeats = minmax_normalize(apply_feature_disable(
         extract_features(reader, cand_test, test_queries, **fkw), disable))
     if "ltr:testingFeatureVectorsFile" in params:

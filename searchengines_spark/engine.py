@@ -1,293 +1,99 @@
-"""Engine facade: parse -> plan -> top-k, plus TREC-format output.
+"""Engine facade: parse -> compile -> one stripe job -> top-k, plus
+TREC-format output.
 
-Top-k uses the reference's deterministic sort rule — score desc, external id
-(url) asc (ScoreList.java:90-105) — executed as Spark's
-TakeOrderedAndProject (orderBy + limit), which does per-partition heaps and
-a driver merge: exactly the distributed top-k you want at scale.
+Every query class serves through the stripe job of query/wand.py: the
+planner compiles the parsed tree into a per-stripe program, each stripe
+task evaluates it over its docid range and resolves its local top-k urls,
+and the global top-k uses the reference's sort rule — score desc, external
+id (url) asc (ScoreList.java:90-105) — executed as Spark's
+TakeOrderedAndProject (orderBy + limit): per-partition heaps and a driver
+merge.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .index.build import IndexReader
-from .query import ast
-from .query.models import BM25, make_model
+from .query import wand
+from .query.models import make_model
 from .query.parser import QueryParser
-from .query.planner import Planner
-from .query.wand import wand_topk
-
-
-def _flat_bm25_terms(root) -> tuple[list[str], str] | None:
-    """If the tree is a flat bag-of-words #SUM of single same-field terms
-    (the default BM25 shape, RetrievalModelBM25.java:22-24) return (terms in
-    query order, field); else None. Repeated terms fall back to the planner
-    (the WAND kernel keys cursors by term)."""
-    if not isinstance(root, ast.Sum):
-        return None
-    terms, fields = [], set()
-    for a in root.args:
-        if not (isinstance(a, ast.Score) and isinstance(a.arg, ast.Term)):
-            return None
-        terms.append(a.arg.term)
-        fields.add(a.arg.field)
-    if len(fields) != 1 or len(set(terms)) != len(terms):
-        return None
-    return terms, fields.pop()
+from .query.planner import Planner, leaf_pairs
+# ``engine.wand_topk`` stays importable: the benchmark's tracer patches the
+# stripe entry points under this name too.
+from .query.wand import wand_topk  # noqa: F401
 
 
 class Engine:
     def __init__(self, reader: IndexReader):
         self.reader = reader
 
-    def _wand_stale(self, m) -> bool:
-        """Block max_score bounds are trustworthy only if the manifest
-        records the exact (k1, b) they were encoded with and no append has
-        happened since; anything else -> conservative bound recompute. A
-        manifest without recorded encode params is treated as stale rather
-        than assuming defaults."""
-        man = self.reader.manifest
-        return (bool(man.get("stale_block_bounds"))
-                or "bm25_k1" not in man
-                or (m.k1, m.b) != (man["bm25_k1"], man.get("bm25_b", 0.75)))
+    def _programs(self, queries: dict[str, str], m) -> dict:
+        """qid -> compiled Program; queries that parse to nothing (all
+        stopwords) are absent. Leaf stats are fetched for the whole set in
+        one lookup before compiling."""
+        parser = QueryParser(m.name, stemmer=self.reader.stemmer)
+        roots = {qid: r for qid, q in queries.items()
+                 if (r := parser.parse(q)) is not None}
+        self.reader.term_stats(sorted(
+            {p for r in roots.values() for p in leaf_pairs(r)}))
+        planner = Planner(self.reader, m)
+        return {qid: planner.plan(r) for qid, r in roots.items()}
 
     def search(self, query: str, model: str = "bm25", k: int = 100,
-               use_wand: bool = True, **model_kw) -> DataFrame:
-        """Returns (url, score) top-k, reference sort rule. Flat BM25
-        bag-of-words queries serve through the block-max WAND kernel
-        (score-identical to the exhaustive plan; pruning only skips blocks
-        that cannot reach the top k)."""
+               **model_kw) -> DataFrame:
+        """Returns (url, score) top-k, reference sort rule. One stripe job
+        (two when a #SYN/#NEAR/#WINDOW list feeds BM25 idf or Indri
+        smoothing, see query/wand.py wand_topk_batch_local)."""
         m = make_model(model, **model_kw)
-        root = QueryParser(m.name, stemmer=self.reader.stemmer).parse(query)
-        if root is None:  # all stopwords
+        prog = self._programs({"q": query}, m).get("q")
+        if prog is None:  # all stopwords
             return self.reader.docid_url_map().select("url", F.lit(0.0).alias("score")).limit(0)
-        if use_wand and isinstance(m, BM25):
-            flat = _flat_bm25_terms(root)
-            if flat is not None:
-                terms, field = flat
-                return wand_topk(self.reader, terms, field=field, k=k,
-                                 k1=m.k1, b=m.b,
-                                 recompute_bounds=self._wand_stale(m))
-        scores = self._drop_deleted(Planner(self.reader, m).plan(root))
-        urls = self.reader.docid_url_map()
-        top = self._topk_per_segment(scores, k)
-        base = top.hint("broadcast") if top is not None else scores
+        local = wand.wand_topk_batch_local(self.reader, {"q": prog}, k=k,
+                                           deleted=self.reader.deleted_set(),
+                                           resolve_urls=True)
         return (
-            base.join(urls, "docid")
-            .select("url", "score")
+            local.select("url", "score")
             .orderBy(F.desc("score"), F.asc("url"))
             .limit(k)
         )
 
-    def _topk_per_segment(self, scores: DataFrame, k: int,
-                          by: tuple = ()) -> DataFrame | None:
-        """Cut the candidate set to an exact top-k pool BEFORE resolving
-        urls, so the O(corpus) docid↔url table joins against <= k*n_seg
-        rows (broadcast) instead of every candidate.
-
-        The reference tie rule is (score desc, external-id asc)
-        (ScoreList.java:90-105). Docids are url ranks WITHIN each url-rank
-        segment — the base build plus each append delta
-        (IndexReader.segment_cuts) — so a per-partition (score desc, docid
-        asc) cut over partitions that never mix segments keeps every true
-        winner: two-stage window, first by (seg, docid mod P) for an
-        evenly-hashed distributed partial top-k (no single-task sort), then
-        by seg to bound the pool at k per segment. The caller's final
-        (score desc, url asc) sort over the pool restores the exact
-        reference order. Returns None when segment history is unusable —
-        caller falls back to resolving urls for every candidate.
-
-        ``by`` prepends grouping columns (the batch path's qid) to both
-        window partitions."""
-        cuts = self.reader.segment_cuts()
-        if cuts is None:
-            return None
-        if len(cuts) == 1 and not by:
-            # fresh/unappended index: TakeOrderedAndProject (map-side
-            # partial top-k + driver merge, no shuffle at all)
-            return scores.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-        from functools import reduce
-
-        from pyspark.sql import Window
-
-        seg = reduce(
-            lambda a, b: a + b,
-            [(F.col("docid") >= F.lit(c)).cast("int") for c in cuts[1:]],
-            F.lit(0),
-        )
-        n_p = max(self.reader.spark.sparkContext.defaultParallelism, 16)
-        bucket = F.pmod(F.col("docid"), F.lit(n_p))
-        w1 = Window.partitionBy(*by, seg, bucket).orderBy(
-            F.desc("score"), F.asc("docid"))
-        pool = (
-            scores.withColumn("__rn", F.row_number().over(w1))
-            .filter(F.col("__rn") <= k).drop("__rn")
-        )
-        w2 = Window.partitionBy(*by, seg).orderBy(
-            F.desc("score"), F.asc("docid"))
-        return (
-            pool.withColumn("__rn", F.row_number().over(w2))
-            .filter(F.col("__rn") <= k).drop("__rn")
-        )
-
-    def _drop_deleted(self, scores: DataFrame) -> DataFrame:
-        """Merge-on-read tombstone filter for the planner path: a broadcast
-        anti-join on docid (the tombstone table is bounded by deletes since
-        the last compaction). No-op when the index has no deletes."""
-        dels = self.reader.deletes_df()
-        if dels is None:
-            return scores
-        return scores.join(F.broadcast(dels), "docid", "left_anti")
-
     def search_batch_df(self, queries: dict[str, str], model: str = "bm25",
-                        k: int = 100, use_wand: bool = True,
-                        **model_kw) -> DataFrame:
-        """ALL queries compiled into ONE Catalyst plan — an N-query workload
-        is one Spark action, not N (the reference's 57-query runs loop
+                        k: int = 100, **model_kw) -> DataFrame:
+        """ALL queries in ONE stripe job — an N-query workload is one Spark
+        action, not N (the reference's 57-query runs loop
         QryEval.java:1381-1416 sequentially; at cluster scale the per-job
-        overhead dominates that shape).
-
-        Flat BM25 bag-of-words queries route through the MULTI-QUERY
-        block-max WAND kernel: one pruned block scan + one stripe shuffle
-        for the whole flat set, per-term block lists built once, a shared
-        per-stripe decode cache across queries — score-identical to the
-        exhaustive fold. Everything else compiles through the planner over
-        a shared slim postings scan; both result frames union into one
-        window top-k.
+        overhead dominates that shape). Each stripe evaluates every query
+        against block lists and a decode cache shared by the batch, and
+        resolves its local top-k urls; one per-qid window finishes.
 
         Returns (qid, url, score, rank). Queries that parse to nothing (all
         stopwords) are absent."""
-        from functools import reduce
-
-        from pyspark.sql import Window
-
-        from .query.planner import _collect_terms
-        from .query.postings import decode_postings
-        from .query.wand import wand_topk_batch_local
-
         m = make_model(model, **model_kw)
-        roots = {}
-        for qid, q in queries.items():
-            root = QueryParser(m.name, stemmer=self.reader.stemmer).parse(q)
-            if root is not None:
-                roots[qid] = root
-        urls = self.reader.docid_url_map()
-        if not roots:
-            return urls.select(
+        progs = self._programs(queries, m)
+        if not progs:
+            return self.reader.docid_url_map().select(
                 F.lit("").alias("qid"), "url",
                 F.lit(0.0).alias("score"), F.lit(0).alias("rank")).limit(0)
-
-        wand_q: dict[str, tuple[list[str], str]] = {}
-        if use_wand and isinstance(m, BM25):
-            for qid in list(roots):
-                flat = _flat_bm25_terms(roots[qid])
-                if flat is not None:
-                    wand_q[qid] = (flat[0], flat[1])
-                    del roots[qid]
-
-        frames = []
-        held_caches = []
-        if roots:
-            all_terms = sorted({t for r in roots.values() for t in _collect_terms(r)})
-            need_pos = any(Planner(self.reader, m)._needs_positions(r)
-                           for r in roots.values())
-            if need_pos and not getattr(self.reader, "store_positions", True):
-                raise ValueError(
-                    "positional operator in batch on an index built with "
-                    "store_positions=False (DOCS_AND_FREQS)")
-            shared = decode_postings(
-                self.reader.blocks_for(all_terms), with_positions=need_pos,
-                payload_codec=self.reader.payload_codec,
-                norms_dir=self.reader.norms_dir,
-                salt_range=self.reader.salt_range).cache()
-            held_caches.append(shared)
-            # fill the cache before N query legs reference it — concurrent
-            # legs of one lazy action would each recompute the decode
-            # (Spark's cache has no cross-task compute lock)
-            shared.count()
-            stats = self.reader.term_stats(all_terms)
-            # term-leaf-only trees fold into ONE plan for the whole group
-            # (one pivot shuffle + per-qid CASE, float-identical — see
-            # plan_batch_fold); positional queries keep per-query legs.
-            # Chunked so the CASE/pivot width stays codegen-friendly.
-            from .query.planner import fold_eligible, plan_batch_fold
-            foldable = {qid: r for qid, r in roots.items() if fold_eligible(r)}
-            fold_qids = sorted(foldable)
-            for i0 in range(0, len(fold_qids), 256):
-                grp = {q: foldable[q] for q in fold_qids[i0:i0 + 256]}
-                frames.append(self._drop_deleted(
-                    plan_batch_fold(self.reader, m, grp, shared, stats)))
-            for qid, root in roots.items():
-                if qid in foldable:
-                    continue
-                scores = self._drop_deleted(Planner(self.reader, m).plan(
-                    root, shared_postings=shared, shared_stats=stats))
-                frames.append(scores.select(F.lit(qid).alias("qid"), "docid", "score"))
-        if wand_q:
-            # all-flat-BM25 batch (the TREC-run common case): urls resolve
-            # inside the stripe tasks (index/urlmap.py point probes), so
-            # the whole batch is the stripe job + one tiny per-qid window
-            # over <= k*n_stripes*n_queries rows — no url-table join, no
-            # segment-pool stage
-            fused = not frames
-            wframe = wand_topk_batch_local(
-                self.reader, wand_q, k=k, k1=m.k1, b=m.b,
-                recompute_bounds=self._wand_stale(m),
-                deleted=self.reader.deleted_set(), resolve_urls=fused)
-            if fused:
-                w = Window.partitionBy("qid").orderBy(
-                    F.desc("score"), F.asc("url"))
-                return (
-                    wframe.select("qid", "url", "score")
-                    .withColumn("rank", F.row_number().over(w))
-                    .filter(F.col("rank") <= k)
-                    .select("qid", "url", "score", "rank")
-                )
-            frames.append(wframe.select("qid", "docid", "score"))
-        unioned = reduce(lambda a, b: a.unionByName(b), frames)
-        # per-qid exact top-k pool BEFORE the url join (see
-        # _topk_per_segment) — the url map then resolves <= k*n_seg rows
-        # per query (broadcast) instead of every candidate of every query
-        # against the O(corpus) docid↔url table.
-        top = self._topk_per_segment(unioned, k, by=("qid",))
-        base = top.hint("broadcast") if top is not None else unioned
+        local = wand.wand_topk_batch_local(self.reader, progs, k=k,
+                                           deleted=self.reader.deleted_set(),
+                                           resolve_urls=True)
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
-        out = (
-            base.join(urls, "docid")
+        return (
+            local.select("qid", "url", "score")
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("qid", "url", "score", "rank")
         )
-        # the shared decode cache must outlive the CALLER's action (the
-        # returned frame is lazy), so it can't unpersist here — hand it to
-        # the caller; search_batch releases it after collecting. A caller
-        # using the DataFrame directly releases via the same attribute or
-        # lets the LRU/storage eviction handle it.
-        out._se_held_caches = held_caches
-        return out
-
-    @staticmethod
-    def release_held_caches(df) -> None:
-        """Unpersist the shared decode cache(s) a search_batch_df frame
-        holds (attribute survives only on the RETURNED frame — capture it
-        before chaining further transformations). Call after the last
-        action that reads the frame's lineage."""
-        for c in getattr(df, "_se_held_caches", []):
-            c.unpersist()
 
     def search_batch(self, queries: dict[str, str], model: str = "bm25",
                      k: int = 100, **model_kw) -> dict[str, list[tuple[str, float]]]:
         """One action for the whole batch; empty/all-stopword queries map to
         empty rankings."""
         out: dict[str, list[tuple[str, float]]] = {qid: [] for qid in queries}
-        df = self.search_batch_df(queries, model, k, **model_kw)
-        try:
-            rows = df.collect()
-        finally:
-            # release the structured-path shared decode cache (one per
-            # batch call; nothing references it after the collect)
-            self.release_held_caches(df)
+        rows = self.search_batch_df(queries, model, k, **model_kw).collect()
         for r in sorted(rows, key=lambda r: (r["qid"], r["rank"])):
             out[r["qid"]].append((r["url"], r["score"]))
         return out
@@ -299,7 +105,7 @@ class Engine:
         query (Metzler & Croft 2005): unigram bag + ordered adjacent
         bigrams (#NEAR/1) + unordered bigram windows (#WINDOW/8), combined
         with #WSUM. Pure query rewriting — the result serves through the
-        existing planner/positional operators, nothing new executes.
+        existing positional operators, nothing new executes.
         Stopwords survive here (the parser drops them and prunes emptied
         operators, same as typed queries)."""
         toks = [t for t in text.split() if t]
@@ -354,7 +160,7 @@ class Engine:
         read the doc's (term, tf) vector from the forward table, rank its
         terms by tf x BM25-idf (ln((N-df+.5)/(df+.5)), floored at 0; tie ->
         term asc), and serve the top `top_terms` as a bag-of-words query
-        through the normal path (WAND-eligible). Driver-side state is one
+        through the normal path. Driver-side state is one
         doc vector (doclen-bounded) + its term stats — never corpus-sized.
         At 10^12 docs the forward table is bucketed by docid so the vector
         fetch is a pruned point read; here it is a filtered scan."""

@@ -163,7 +163,8 @@ def _pinned_meta(index_dir: str, stage: str, manifest: dict,
 
 SALT_MIN_DF = 8 * codec.BLOCK_SIZE  # only terms with df >= this get striped
 # cold-block memo bound: entries are <= SALT_MIN_DF compressed postings
-# (few KB each), so 16k entries caps the memo at ~100 MB driver-side
+# with their position payloads (positions are about half of block bytes,
+# so few KB each), capping the memo at ~200 MB driver-side
 COLD_MEMO_CAP = 16384
 # on-disk block bytes per serve-cache task (IndexReader.serve_blocks)
 SERVE_TASK_BYTES = 2 << 20
@@ -885,19 +886,16 @@ class IndexReader:
         urls; each append's delta docids are ranks of the delta's sorted
         urls, offset past the old max) — the invariant serving tie-breaks
         lean on. Across segments it does not hold, so exact reference
-        tie-breaks need a per-segment cut (Engine's pre-join top-k).
-        Returns None when the history is unusable (a legacy append entry
-        without extents, or so many segments that a per-segment plan would
-        be unwieldy) — callers must then fall back to resolving urls for
-        every candidate."""
+        tie-breaks need a per-segment cut (the stripe kernels' top-k per
+        segment, query/wand.py _segment_cut). Returns None when the history
+        is unusable (a legacy append entry without extents) — the kernels
+        then keep every candidate."""
         appends = self.manifest.get("appends", [])
         cuts = [0]
         for e in appends:
             if "docid_lo" not in e:
                 return None
             cuts.append(int(e["docid_lo"]))
-        if len(cuts) > 64:
-            return None
         return sorted(set(cuts))
 
     def avg_doclen(self, field: str) -> float:
@@ -926,8 +924,9 @@ class IndexReader:
                     ) -> dict[tuple[str, str], list[tuple]]:
         """Unstriped (low-df) block rows for the given (field, term) pairs,
         as raw tuples (min_docid, max_docid, max_tf, min_doclen, max_score,
-        docids_z, tfs_z) — callers derive score bounds under their own
-        (k1, b). Memoized per reader like _ts_memo, so a repeat query pays
+        docids_z, tfs_z, positions_z) — callers derive score bounds under
+        their own (k1, b); positions_z is b"" on a store_positions=False
+        index. Memoized per reader like _ts_memo, so a repeat query pays
         zero Spark jobs here, and provably-empty lookups are skipped
         outright:
 
@@ -967,14 +966,15 @@ class IndexReader:
                         .filter(~F.col("striped"))
                         .select("field", "term", "min_docid", "max_docid",
                                 "max_tf", "min_doclen", "max_score",
-                                "docids_z", "tfs_z")
+                                "docids_z", "tfs_z", "positions_z")
                         .collect())
                 for r in rows:
                     got.setdefault((r["field"], r["term"]), []).append(
                         (int(r["min_docid"]), int(r["max_docid"]),
                          int(r["max_tf"]), int(r["min_doclen"]),
                          float(r["max_score"]),
-                         bytes(r["docids_z"]), bytes(r["tfs_z"])))
+                         bytes(r["docids_z"]), bytes(r["tfs_z"]),
+                         bytes(r["positions_z"] or b"")))
             for p in unseen:
                 v = got.get(p, [])
                 found[p] = v

@@ -11,13 +11,10 @@ Two consistency caveats, by design:
 
 1. docid order == url order no longer holds globally after an append (new
    urls may sort before old ones) — it holds WITHIN each url-rank segment
-   (base build, each append delta). The planner path stays exact by
-   cutting top-k per segment before resolving urls (manifest appends
+   (base build, each append delta). Serving stays exact by cutting top-k
+   per segment inside each stripe before resolving urls (manifest appends
    record each segment's docid extent; IndexReader.segment_cuts /
-   Engine._topk_per_segment). The WAND kernel's within-stripe docid
-   tie-break can still keep the "wrong" member of an exact score tie at
-   the k boundary in the one stripe that straddles the append boundary,
-   until the next compaction (a full rebuild restores the invariant).
+   query/wand.py _segment_cut).
 2. BM25 block max_score metadata in OLD blocks was computed under the old
    corpus stats (n_docs, avg doclen, df). After an append those bounds are
    stale, so WAND must recompute conservative bounds from the stored
@@ -297,7 +294,7 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
          # docid extent of this append SEGMENT. Within a segment docid
          # order == url order (delta docids are ranks of the delta's sorted
          # urls); serving uses these cuts for exact per-segment top-k
-         # tie-breaks (IndexReader.segment_cuts / Engine pre-join top-k).
+         # tie-breaks (IndexReader.segment_cuts / wand._segment_cut).
          "docid_lo": int(max_docid) + 1,
          "docid_hi": int(max_docid) + int(n_new)}
     )

@@ -386,15 +386,3 @@ def prf_expansion(idx: OracleIndex, initial: list[tuple[int, float]],
         sum_prev += (mu * score) / (dl + mu)
     out = sorted(seen.items(), key=lambda kv: (-kv[1], kv[0]))
     return out[:num_terms]
-
-
-def bm25_bow_query(idx: OracleIndex, terms: list[str], f: str = "body", k: int = 100,
-                   k1: float = 1.2, b: float = 0.75) -> list[tuple[str, float]]:
-    """#SUM of #SCORE(term): the BM25 bag-of-words path (QrySopSum.java:59-80;
-    k3 factor with qtf=1 is 1). Sum in query-term order (fixed float order)."""
-    acc: dict[int, float] = defaultdict(float)
-    for t in terms:
-        pl = idx.postings.get((f, t), {})
-        for d, s in bm25_term_scores(idx, f, pl, len(pl), k1, b).items():
-            acc[d] += s
-    return topk(acc, idx.ext_ids, k)

@@ -79,7 +79,6 @@ class Wsum(Node):
 
 
 IOP_TYPES = (Term, Syn, Near, Window)
-SOP_TYPES = (Score, And, Or, Sum, Wand, Wsum)
 
 
 def iop_field(node: Node) -> str:

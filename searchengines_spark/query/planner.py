@@ -1,78 +1,276 @@
-"""AST -> DataFrame planner: compiles a structured query tree into a
-Catalyst logical plan producing (docid, score).
+"""Query tree -> per-stripe program, evaluated inside the stripe kernel.
 
-Design (Spark-first, not a port):
+Every query class (bag-of-words, the Indri operators #AND #OR #SUM #WAND
+#WSUM over #SYN #NEAR/n #WINDOW/n, all four retrieval models) serves through
+the one stripe job of query/wand.py: ``Planner.plan`` compiles the parsed
+tree into a :class:`Program`, and each stripe task evaluates the whole tree
+over its docid range with dense numpy accumulators — one score array, one
+match mask and (Indri) one default-score array per node.
 
-- ONE pruned index scan fetches the posting blocks for every term in the
-  query (bucket partition filter + term filter), decoded in one vectorized
-  pass. Each Term leaf is then a cheap filter on that cached DataFrame.
-- IOP operators (#SYN #NEAR #WINDOW) are DataFrame compositions: conjunctive
-  docid inner-joins followed by an Arrow-batched positional kernel
-  (positional.py). Their df/ctf stats are computed from the derived list —
-  same semantics as the reference's eager QryIop.evaluate()
-  (QryIop.java:186-212).
-- SOP operators join their children's score DataFrames ON docid (inner join
-  for match-ALL, full outer for match-MIN — the set-at-a-time equivalents of
-  docIteratorHasMatchAll/Min, Qry.java:247-347) and fold per-child score
-  columns IN QUERY ORDER with exactly the reference's arithmetic shape, so
-  floating-point results are bit-comparable to the single-node oracle.
-- Indri default scores (two-state smoothing, QrySopScore.java:13-26) are
-  column expressions over per-field doclen columns joined from doc_lens;
-  recursion follows QrySop*.getDefaultScore (AND: geo-mean of child
-  defaults; OR/SUM: 0.0; WAND: weighted geo-mean; WSUM: weighted sum).
+Evaluation mirrors oracle.evaluate node by node and folds children in query
+order, so scores match the reference formulas (QrySop*.java) to rel 1e-9:
+
+- IOP nodes (inverted-list producers, QryIop*.java) yield per-stripe
+  (docids, tf[, positions]). #SYN unions its children; #NEAR/#WINDOW run the
+  query/positional.py pointer walks over the docs holding every argument.
+  Positions are decoded only under positional operators.
+- A SCORE node scores its list. Its df/ctf come from the term stats for a
+  term, and for a derived list (#SYN/#NEAR/#WINDOW under BM25's idf or
+  Indri's smoothing) from a pre-pass over the same stripes: each stripe
+  counts the list's docs and occurrences, tombstoned docs included, as
+  term_stats counts them until a compaction (QryIop.java:186-212).
+- SOP nodes match ALL children (#AND under the boolean models and BM25) or
+  ANY child (everything else, Qry.java:247-347); Indri scores an unmatched
+  child with its default score (QrySop*.getDefaultScore).
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
 from functools import reduce
 
 import numpy as np
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..index.build import IndexReader
 from . import ast
 from .models import BM25, Indri, RankedBoolean, UnrankedBoolean
-from .positional import batch_positions
-from .postings import decode_postings
+from .positional import match_flat
+# The serve path no longer decodes postings into DataFrames (inspect.py
+# still does); this import keeps ``planner.decode_postings`` as an alias
+# because the benchmark's tracer patches the function under both names.
+from .postings import decode_postings  # noqa: F401
 
 
-@dataclass
-class Scored:
-    """A compiled SOP node: docs it matches (docid, score) + its Indri
-    default-score column (a function of len_<field> columns)."""
-
-    matches: DataFrame
-    default_col: Column
-
-
-@dataclass
-class IopResult:
-    df: DataFrame  # (docid, tf, doclen[, positions])
-    field: str
-    df_stat: int | None = None   # literal stats (Term leaves / Indri)
-    ctf_stat: int | None = None
-    stats_df: DataFrame | None = None  # lazy 1-row (df, ctf) for derived lists
+def _iops(node: ast.Node):
+    """IOP nodes of an IOP subtree, preorder."""
+    yield node
+    if not isinstance(node, ast.Term):
+        for a in node.args:
+            yield from _iops(a)
 
 
-def _collect_terms(node: ast.Node) -> list[tuple[str, str]]:
-    if isinstance(node, ast.Term):
-        return [(node.field, node.term)]
+def _scores(node: ast.Node):
+    """SCORE nodes of a query tree, preorder (= child evaluation order)."""
     if isinstance(node, ast.Score):
-        return _collect_terms(node.arg)
-    out: list[tuple[str, str]] = []
-    for a in node.args:
-        out.extend(_collect_terms(a))
-    return out
+        yield node
+    else:
+        for a in node.args:
+            yield from _scores(a)
 
 
-def _collect_fields(node: ast.Node) -> set[str]:
-    return {f for f, _ in _collect_terms(node)}
+def leaf_pairs(root: ast.Node) -> list[tuple[str, str]]:
+    """(field, term) of every term leaf of a query tree, sorted."""
+    return sorted({(n.field, n.term) for s in _scores(root)
+                   for n in _iops(s.arg) if isinstance(n, ast.Term)})
+
+
+_libm_pow = np.frompyfunc(math.pow, 2, 1)
+
+
+def _pow(base: np.ndarray, exponent: float) -> np.ndarray:
+    """Elementwise C-library pow, the function Python's ``**`` (and so
+    oracle.py) calls. numpy's vectorized power may pick a SIMD routine by
+    CPU that differs in the last bit, which would make scores depend on
+    the host."""
+    return _libm_pow(base, exponent).astype(np.float64)
+
+
+def _take_rows(pos: np.ndarray, offs: np.ndarray, rows: np.ndarray
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """Positions of the given rows of a flat (pos, offs) list, as a new
+    flat list."""
+    lens = offs[rows + 1] - offs[rows]
+    new = np.zeros(len(rows) + 1, np.int64)
+    np.cumsum(lens, out=new[1:])
+    idx = np.repeat(offs[rows] - new[:-1], lens) + np.arange(new[-1])
+    return pos[idx], new
+
+
+class Program:
+    """One compiled query: the parsed tree plus every constant its stripe
+    evaluation needs. Plain data, shipped to the stripe tasks."""
+
+    def __init__(self, root: ast.Node, model, reader: IndexReader,
+                 stats: dict):
+        self.root = root
+        self.model = model
+        self.n_docs = reader.n_docs
+        self.stats = stats  # (field, term) -> (df, ctf) of the term leaves
+        scores = list(_scores(root))
+        self.scores = scores
+        # (doc_count, sum_len) per scored field; a field no doc has
+        # averages 1.0, as oracle.OracleIndex.avg_len does
+        fs = {f: reader.field_stats.get(f, (0, 0))
+              for f in {ast.iop_field(s.arg) for s in scores}}
+        self.avg = {f: s_ / c if c else 1.0 for f, (c, s_) in fs.items()}
+        self.sum_len = {f: s_ for f, (_, s_) in fs.items()}
+        # SCORE nodes over a derived list whose df/ctf the model reads
+        self.derived = tuple(
+            i for i, s in enumerate(scores)
+            if not isinstance(s.arg, ast.Term)
+            and isinstance(model, BM25 | Indri))
+        self.pairs = frozenset(leaf_pairs(root))
+        # every leaf under a positional operator needs its positions (a
+        # bare #SYN only sums its children's tf)
+        self.pos_pairs = frozenset(
+            (t.field, t.term) for s in scores for n in _iops(s.arg)
+            if isinstance(n, ast.Near | ast.Window)
+            for t in _iops(n) if isinstance(t, ast.Term))
+
+    # ------------------------------------------------------------ pre-pass
+    def derived_stats(self, stripe) -> list[tuple[int, int, int]]:
+        """(score index, df, ctf) of this stripe's part of every derived
+        list in ``self.derived``; the caller sums them over stripes."""
+        out = []
+        for i in self.derived:
+            _, tf, _, _ = self._iop(self.scores[i].arg, stripe, False)
+            out.append((i, int(tf.size), int(tf.sum())))
+        return out
+
+    # ---------------------------------------------------------- evaluation
+    def evaluate(self, stripe, dstats: dict) -> tuple[np.ndarray, np.ndarray]:
+        """(score, match mask) over the stripe's docid span.
+        dstats: score index -> global (df, ctf) of a derived list."""
+        score, mask, _ = self._sop(self.root, stripe, dstats)
+        return score, mask
+
+    def _iop(self, node, stripe, need_pos: bool):
+        """-> (docids, tf, positions, offsets) of an IOP node within the
+        stripe; positions/offsets are None unless need_pos."""
+        if isinstance(node, ast.Term):
+            pair = (node.field, node.term)
+            if need_pos:
+                return stripe.positions(pair)
+            d, t = stripe.postings(pair)
+            return d, t, None, None
+        if isinstance(node, ast.Syn):
+            kids = [self._iop(a, stripe, need_pos) for a in node.args]
+            if not need_pos:
+                docs, inv = np.unique(np.concatenate([k[0] for k in kids]),
+                                      return_inverse=True)
+                tf = np.zeros(docs.size, np.int64)
+                np.add.at(tf, inv, np.concatenate([k[1] for k in kids]))
+                return docs, tf, None, None
+            # union of the children's positions per doc, sorted
+            # (QryIopSyn.java:17-71)
+            rep = np.concatenate([np.repeat(k[0], np.diff(k[3])) for k in kids])
+            pos = np.concatenate([k[2] for k in kids])
+            order = np.lexsort((pos, rep))
+            docs, tf = np.unique(rep[order], return_counts=True)
+            offs = np.zeros(docs.size + 1, np.int64)
+            np.cumsum(tf, out=offs[1:])
+            return docs, tf, pos[order], offs
+        kids = [self._iop(a, stripe, True) for a in node.args]
+        common = reduce(np.intersect1d, [k[0] for k in kids])
+        flats = [_take_rows(k[2], k[3], np.searchsorted(k[0], common))
+                 for k in kids]
+        rows, vals = match_flat(flats, node.n, isinstance(node, ast.Near))
+        hit, tf = np.unique(rows, return_counts=True)
+        offs = np.zeros(hit.size + 1, np.int64)
+        np.cumsum(tf, out=offs[1:])
+        return common[hit], tf, vals, offs
+
+    def _score(self, node: ast.Score, stripe, dstats: dict):
+        m = self.model
+        field = ast.iop_field(node.arg)
+        docids, tf, _, _ = self._iop(node.arg, stripe, False)
+        if isinstance(node.arg, ast.Term):
+            df_, ctf_ = self.stats.get((field, node.arg.term), (0, 0))
+        else:
+            i = next(i for i, s in enumerate(self.scores) if s is node)
+            df_, ctf_ = dstats.get(i, (0, 0))
+        span, lo = stripe.span, stripe.lo
+        ix = docids - lo
+        mask = np.zeros(span, bool)
+        mask[ix] = True
+        score = np.zeros(span)
+        tf = tf.astype(np.float64)
+        default = None
+        if isinstance(m, BM25):
+            # QrySopScore.java:78-90
+            idf = max(0.0, math.log((self.n_docs - df_ + 0.5) / (df_ + 0.5)))
+            dl = stripe.norms(field)[ix].astype(np.float64)
+            score[ix] = idf * tf / (tf + m.k1 * ((1.0 - m.b)
+                                                + m.b * dl / self.avg[field]))
+        elif isinstance(m, Indri):
+            # two-state smoothing and its tf=0 default (QrySopScore.java:13-26),
+            # associated as ((1-lam)(tf+mu*pqc))/(dl+mu): the engine's
+            # recorded outputs (tests/golden/prf.qryOut) carry this rounding
+            pqc = (ctf_ if ctf_ != 0 else 0.5) / self.sum_len[field]
+            dl = stripe.norms(field).astype(np.float64)
+            score[ix] = ((1.0 - m.lam) * (tf + m.mu * pqc) / (dl[ix] + m.mu)
+                         + m.lam * pqc)
+            default = (1.0 - m.lam) * (m.mu * pqc) / (dl + m.mu) + m.lam * pqc
+        elif isinstance(m, RankedBoolean):
+            score[ix] = tf
+        else:
+            score[ix] = 1.0
+        return score, mask, default
+
+    def _sop(self, node, stripe, dstats: dict):
+        """-> (score, mask, default) dense over the stripe span; default is
+        None outside Indri. Folds follow oracle.evaluate's order."""
+        if isinstance(node, ast.Score):
+            return self._score(node, stripe, dstats)
+        m = self.model
+        kids = [self._sop(a, stripe, dstats) for a in node.args]
+        n = len(kids)
+        w = getattr(node, "weights", None)
+        W = sum(w) if w else None
+        indri = isinstance(m, Indri)
+        masks = [k[1] for k in kids]
+        if isinstance(node, ast.And) and not indri:
+            mask = reduce(np.logical_and, masks)
+        else:
+            mask = reduce(np.logical_or, masks)
+        if indri:
+            vals = [np.where(mk, s, d) for s, mk, d in kids]
+            defs = [k[2] for k in kids]
+        default = None
+        if isinstance(m, UnrankedBoolean) and not isinstance(node, ast.Wand | ast.Wsum):
+            score = np.ones(stripe.span)
+        elif isinstance(node, ast.And):
+            if indri:  # QrySopAnd.java:83-118
+                score = _pow(reduce(np.multiply, vals), 1.0 / n)
+                default = _pow(reduce(np.multiply, defs), 1.0 / n)
+            else:  # min over children (QrySopAnd.java:121-169)
+                score = reduce(np.minimum, [k[0] for k in kids])
+        elif isinstance(node, ast.Or):
+            if indri:  # QrySopOr.java:46-79
+                score = 1.0 - reduce(np.multiply, [1.0 - v for v in vals])
+            else:  # max over matching children (QrySopOr.java:81-151)
+                score = reduce(np.maximum,
+                               [np.where(mk, s, -np.inf) for s, mk, _ in kids])
+        elif isinstance(node, ast.Sum):
+            # QrySopSum.java:47-129; BM25's k3 factor with qtf=1 is 1
+            parts = vals if indri else [np.where(mk, s, 0.0) for s, mk, _ in kids]
+            score = reduce(np.add, parts, 0.0)
+        elif isinstance(node, ast.Wand):
+            # QrySopWAnd.java:86-121; outside Indri the weighted geo-mean
+            # over matching children (the reference's BM25 branch starts
+            # from MAX_VALUE, QrySopWAnd.java:123-147)
+            parts = vals if indri else [np.where(mk, s, 1.0) for s, mk, _ in kids]
+            score = reduce(np.multiply, [_pow(p, w[i] / W) for i, p in enumerate(parts)])
+            if indri:
+                default = reduce(np.multiply,
+                                 [_pow(d, w[i] / W) for i, d in enumerate(defs)])
+        elif isinstance(node, ast.Wsum):
+            # QrySopWSum.java:78-128
+            if indri:
+                score = reduce(np.add, [v * (w[i] / W) for i, v in enumerate(vals)], 0.0)
+                default = reduce(np.add, [d * (w[i] / W) for i, d in enumerate(defs)], 0)
+            elif isinstance(m, BM25):
+                score = reduce(np.add, [
+                    np.where(mk, s, 0.0) * ((m.k3 + 1.0) * w[i] / (m.k3 + w[i]))
+                    for i, (s, mk, _) in enumerate(kids)], 0.0)
+            else:
+                score = reduce(np.add, [np.where(mk, s, 0.0) * (w[i] / W)
+                                        for i, (s, mk, _) in enumerate(kids)], 0.0)
+        else:
+            raise TypeError(f"not a SOP node: {node}")
+        if indri and default is None:
+            default = np.zeros(stripe.span)  # #OR, #SUM (QrySopOr/Sum)
+        return score, mask, default
 
 
 class Planner:
@@ -80,643 +278,16 @@ class Planner:
         self.reader = reader
         self.model = model
 
-    # ------------------------------------------------------------------ api
-    def plan(self, root: ast.Node, shared_postings: DataFrame | None = None,
-             shared_stats: dict | None = None) -> DataFrame:
-        """Compile to a DataFrame (docid, score). Caller applies top-k.
-
-        ``shared_postings``/``shared_stats``: a batch driver compiling MANY
-        queries passes one decoded postings frame covering the union of all
-        their terms (plus the matching stats dict), so N queries share ONE
-        pruned index scan instead of issuing N."""
-        terms = sorted(set(_collect_terms(root)))
-        need_pos = self._needs_positions(root)
-        self._blocks = self.reader.blocks_for(terms) if terms else None
-        self._pos_full = None  # lazy full-position decode (fallback path)
-        if shared_postings is not None:
-            self._postings = shared_postings
-            self._stats = shared_stats or {}
-        elif terms:
-            self._stats = self.reader.term_stats(terms)
-            # decode positions inline ONLY when some positional node will
-            # need the full decode anyway (cost-based: two decode passes on
-            # a cold query cost more than carrying positions once); when
-            # every positional node qualifies for the candidate-filtered
-            # path, or none exists, the slim decode feeds Score leaves and
-            # conjunctive joins
-            if need_pos and not getattr(self.reader, "store_positions", True):
-                raise ValueError(
-                    "positional operator (#NEAR/#WINDOW/#SYN) on an index "
-                    "built with store_positions=False (DOCS_AND_FREQS); "
-                    "rebuild or compact() with store_positions=True")
-            inline_pos = need_pos and self._needs_fallback_positions(root)
-            self._postings = decode_postings(
-                self.reader.blocks_for(terms), with_positions=inline_pos,
-                payload_codec=self.reader.payload_codec,
-                norms_dir=self.reader.norms_dir,
-                salt_range=self.reader.salt_range,
-            ).cache()
-            if inline_pos:
-                self._pos_full = self._postings
-        else:
-            self._postings = None
-            self._stats = {}
-        self._doclens = None
-        if isinstance(self.model, Indri):
-            fields = sorted(_collect_fields(root))
-            # build-time wide artifact: no per-query scan+pivot shuffle
-            self._doclens = self.reader.doc_lens_wide().select(
-                "docid", *[f"len_{f}" for f in fields])
-        scored = self._sop(root)
-        return scored.matches.select("docid", "score")
-
-    # ------------------------------------------------------------- helpers
-    def _needs_positions(self, node: ast.Node) -> bool:
-        if isinstance(node, ast.Near | ast.Window | ast.Syn):
-            return True
-        if isinstance(node, ast.Term):
-            return False
-        kids = [node.arg] if isinstance(node, ast.Score) else node.args
-        return any(self._needs_positions(a) for a in kids)
-
-    def _len_col(self, field: str) -> Column:
-        return F.coalesce(F.col(f"len_{field}").cast("double"), F.lit(0.0))
-
-    # ----------------------------------------------------------------- IOP
-    # Candidate-filtered positional decode is a cost-based choice, measured
-    # (bench A/B at 100k docs): the extra candidate-collect jobs cost ~0.5-1s
-    # of fixed latency, while full-position decode of a 100k-posting term is
-    # subsecond AND its cached frame amortizes across queries — so at small
-    # absolute sizes the one-job path always wins. The filter pays off when
-    # the hot side's position payload is genuinely heavy (df in the
-    # millions, decode in the tens of seconds) and the conjunction is
-    # bounded tight by a rare arg. Engage iff BOTH hold:
-    #   min(df of args) <= MAX_POS_CANDIDATES  (collect stays small)
-    #   max(df of args) >= HEAVY_POS_DF        (decode worth skipping)
-    MAX_POS_CANDIDATES = 20_000
-    HEAVY_POS_DF = 2_000_000
-
-    def _pos_gate_open(self, node: ast.Node) -> bool:
-        """True if this flat NEAR/WINDOW qualifies for the candidate-filtered
-        decode (see the cost rationale above MAX_POS_CANDIDATES)."""
-        dfs = [self._stats.get((a.field, a.term), (0, 0))[0] for a in node.args]
-        return (min(dfs) <= self.MAX_POS_CANDIDATES
-                and max(dfs) >= self.HEAVY_POS_DF)
-
-    def _needs_fallback_positions(self, node: ast.Node) -> bool:
-        """Does any positional node in the tree need the FULL position
-        decode? (#SYN always; NEAR/WINDOW with non-Term children; flat
-        NEAR/WINDOW whose stats fail the candidate-filter gate.)"""
-        if isinstance(node, ast.Syn):
-            return True
-        if isinstance(node, ast.Near | ast.Window):
-            if not all(isinstance(a, ast.Term) for a in node.args):
-                return True
-            return not self._pos_gate_open(node)
-        if isinstance(node, ast.Term):
-            return False
-        kids = [node.arg] if isinstance(node, ast.Score) else node.args
-        return any(self._needs_fallback_positions(a) for a in kids)
-
-    def _pos_postings(self) -> DataFrame:
-        """Full-position decode of every query term — the fallback for
-        positional nodes with non-Term children. Shared-scan batch plans may
-        already carry positions; reuse them."""
-        if self._pos_full is None:
-            if self._postings is not None and "positions" in self._postings.columns:
-                self._pos_full = self._postings
-            else:
-                self._pos_full = decode_postings(
-                    self._blocks, with_positions=True,
-                    payload_codec=self.reader.payload_codec,
-                    norms_dir=self.reader.norms_dir,
-                    salt_range=self.reader.salt_range).cache()
-                # Materialize NOW (one small job): every positional operator
-                # references this frame from >= 2 plan legs (one per arg),
-                # and Spark's cache has no cross-task compute lock — inside
-                # a single lazy action the legs race and each re-runs the
-                # whole position decode (measured 3x the query latency on
-                # high-df NEAR). An explicit fill makes every leg a cache
-                # read.
-                self._pos_full.count()
-        return self._pos_full
-
-    def _positional_candidates(self, node: ast.Node) -> np.ndarray | None:
-        """Conjunctive candidate docids for a flat NEAR/WINDOW, from the slim
-        (position-free) postings. Only called when min(df) of the args bounds
-        the set under MAX_POS_CANDIDATES, so the Arrow collect is small."""
-        slims = [
-            self._postings.filter(
-                (F.col("field") == a.field) & (F.col("term") == a.term)
-            ).select("docid")
-            for a in node.args
-        ]
-        cand = reduce(lambda x, y: x.join(y, "docid"), slims)
-        ids = cand.toPandas()["docid"].to_numpy()
-        return np.sort(ids.astype(np.int64))
-
-    def _iop(self, node: ast.Node, need_pos: bool = True) -> IopResult:
-        if isinstance(node, ast.Term):
-            df_, ctf_ = self._stats.get((node.field, node.term), (0, 0))
-            src = self._pos_postings() if need_pos else self._postings
-            pdf = src.filter(
-                (F.col("field") == node.field) & (F.col("term") == node.term)
-            ).drop("field", "term")
-            return IopResult(pdf, node.field, df_, ctf_)
-
-        if (isinstance(node, ast.Near | ast.Window)
-                and all(isinstance(a, ast.Term) for a in node.args)):
-            # two-phase positional evaluation: cheap conjunctive join on the
-            # slim postings finds candidate docs, then positions decode ONLY
-            # for candidates — blocks with no candidate skip entirely via
-            # their [min_docid, max_docid] metadata. On high-df terms this
-            # cuts both the position decode and the join shuffle from
-            # every-posting to candidates-only.
-            cands = (self._positional_candidates(node)
-                     if self._pos_gate_open(node) else None)
-            if cands is not None:
-                fblocks = self._blocks.filter(
-                    F.struct("field", "term").isin(
-                        [F.struct(F.lit(a.field), F.lit(a.term)) for a in node.args]))
-                if cands.size == 0:
-                    fdf = decode_postings(fblocks.limit(0), with_positions=True,
-                                          payload_codec=self.reader.payload_codec,
-                                          norms_dir=self.reader.norms_dir,
-                                          salt_range=self.reader.salt_range)
-                else:
-                    fdf = decode_postings(fblocks, with_positions=True,
-                                          docid_filter=cands,
-                                          payload_codec=self.reader.payload_codec,
-                                          norms_dir=self.reader.norms_dir,
-                                          salt_range=self.reader.salt_range)
-                children = [
-                    IopResult(
-                        fdf.filter((F.col("field") == a.field)
-                                   & (F.col("term") == a.term)).drop("field", "term"),
-                        a.field,
-                        *self._stats.get((a.field, a.term), (0, 0)),
-                    )
-                    for a in node.args
-                ]
-            else:
-                children = [self._iop(a, need_pos=True) for a in node.args]
-        else:
-            children = [self._iop(a, need_pos=True) for a in node.args]
-        field = children[0].field
-        if isinstance(node, ast.Syn):
-            merged = reduce(
-                lambda a, b: a.unionByName(b),
-                [c.df.select("docid", "doclen", "positions") for c in children],
-            )
-            out = merged.groupBy("docid").agg(
-                F.first("doclen").alias("doclen"),
-                F.array_sort(F.flatten(F.collect_list("positions"))).alias("positions"),
-            ).withColumn("tf", F.size("positions"))
-        else:
-            n = node.n
-            ordered = isinstance(node, ast.Near)
-            # Repartition the PROBE side only, before the join: the explicit
-            # partition count is AQE-coalescing-exempt (the CPU-bound Python
-            # match kernel must not serialize onto one task) and the join
-            # output inherits it, so no post-join shuffle of the heavy
-            # joined position arrays is needed. Build sides are left alone —
-            # Catalyst broadcasts them when small, and when it falls back to
-            # a shuffle join they land on the same hash(docid) partitioning
-            # anyway.
-            par = children[0].df.sparkSession.sparkContext.defaultParallelism
-            joined = children[0].df.select(
-                "docid", "doclen", F.col("positions").alias("p0")
-            ).repartition(par, "docid")
-            for i, c in enumerate(children[1:], start=1):
-                joined = joined.join(
-                    c.df.select("docid", F.col("positions").alias(f"p{i}")), "docid"
-                )
-            n_args = len(children)
-
-            @F.pandas_udf(T.ArrayType(T.IntegerType()))
-            def match_udf(plists: pd.Series) -> pd.Series:
-                rows = plists.to_numpy()
-                cols = [np.empty(len(rows), dtype=object) for _ in range(n_args)]
-                for r, pls in enumerate(rows):
-                    for i in range(n_args):
-                        cols[i][r] = pls[i]
-                return pd.Series(batch_positions(cols, n, ordered))
-
-            # asNondeterministic is an optimizer fence, not a semantics
-            # change (the kernel is a pure function): without it Catalyst
-            # pushes the tf>0 filter below the projection and plans TWO
-            # ArrowEvalPython nodes, running the match kernel twice over
-            # every candidate row (measured ~2x kernel cost on high-df
-            # NEAR).
-            match_udf = match_udf.asNondeterministic()
-            out = (
-                joined.withColumn(
-                    "positions",
-                    match_udf(F.array(*[f"p{i}" for i in range(len(children))])),
-                )
-                .withColumn("tf", F.size("positions"))
-                .filter(F.col("tf") > 0)
-                .select("docid", "tf", "doclen", "positions")
-            )
-        if not need_pos:
-            # parent is a SCORE leaf — don't materialize positions in the cache
-            out = out.select("docid", "tf", "doclen")
-        out = out.cache()
-        # derived-list stats, same semantics as eager QryIop evaluation
-        # (QryIop.java:186-212). Indri needs the literals driver-side (ctf
-        # feeds the smoothing default-score column, which must be evaluable
-        # in ancestor frames) -> eager collect; BM25/boolean defer them as a
-        # broadcast 1-row frame so the whole query stays ONE Spark job.
-        if isinstance(self.model, Indri):
-            row = out.agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("ctf")).collect()[0]
-            return IopResult(out, field, int(row["df"] or 0), int(row["ctf"] or 0))
-        # materialize the cache NOW: the deferred stats frame below and the
-        # score leg both reference `out` inside the final action, and
-        # without a fill the two legs race the unpopulated cache and each
-        # re-run the positional kernel (measured ~2x NEAR latency). One
-        # small count() job makes both legs cache reads; the stats stay a
-        # lazily-joined 1-row frame so score expressions are unchanged
-        # (float-identical to before).
-        out.count()
-        stats_df = out.agg(F.count(F.lit(1)).cast("long").alias("__iop_df"),
-                           F.sum("tf").cast("long").alias("__iop_ctf"))
-        return IopResult(out, field, stats_df=stats_df)
-
-    # ----------------------------------------------------------------- SOP
-    def _sop(self, node: ast.Node) -> Scored:
-        m = self.model
-        if isinstance(node, ast.Score):
-            return self._score_leaf(node)
-
-        children = [self._sop(a) for a in node.args]
-        k = len(children)
-        weights = getattr(node, "weights", None)
-        total_w = sum(weights) if weights else None
-
-        # join type: match-ALL (#AND under unranked/ranked/bm25,
-        # Qry.java:247-294) vs match-MIN (everything else, Qry.java:324-347)
-        inner = isinstance(node, ast.And) and not isinstance(m, Indri)
-        flat = k > 1 and all(isinstance(a, ast.Score) for a in node.args)
-        if flat:
-            # flat operator over SCORE leaves (the common shape): ONE
-            # union + groupBy-pivot shuffle instead of k-1 chained
-            # full-outer/inner shuffle joins. Same per-child score columns,
-            # same fold expressions below -> float-identical results.
-            tagged = [
-                c.matches.select(
-                    "docid", F.col("score").alias("s"), F.lit(i).alias("__i"))
-                for i, c in enumerate(children)
-            ]
-            unioned = reduce(lambda a, b: a.unionByName(b), tagged)
-            joined = unioned.groupBy("docid").pivot("__i", list(range(k))).agg(F.first("s"))
-            for i in range(k):
-                joined = joined.withColumnRenamed(str(i), f"s{i}")
-            if inner:
-                joined = joined.filter(
-                    reduce(lambda a, b: a & b,
-                           [F.col(f"s{i}").isNotNull() for i in range(k)]))
-        else:
-            how = "inner" if inner else "full"
-            dfs = [c.matches.withColumnRenamed("score", f"s{i}") for i, c in enumerate(children)]
-            joined = reduce(lambda a, b: a.join(b, "docid", how), dfs)
-        if isinstance(m, Indri) and self._doclens is not None:
-            joined = joined.join(self._doclens, "docid", "left")
-
-        s = [F.col(f"s{i}") for i in range(k)]
-        d = [c.default_col for c in children]
-        sv = [F.coalesce(s[i], d[i]) for i in range(k)]  # score-or-default
-
-        if isinstance(node, ast.And):
-            if isinstance(m, UnrankedBoolean):
-                score = F.lit(1.0)
-                default = F.lit(0.0)
-            elif isinstance(m, Indri):
-                # (prod s_i)^(1/n): QrySopAnd.java:83-118
-                prod = reduce(lambda a, b: a * b, sv)
-                score = F.pow(prod, F.lit(1.0 / k))
-                dprod = reduce(lambda a, b: a * b, d)
-                default = F.pow(dprod, F.lit(1.0 / k))
-            else:  # ranked boolean & bm25: min (QrySopAnd.java:121-169)
-                score = F.least(*s) if k > 1 else s[0]
-                default = F.lit(0.0)
-        elif isinstance(node, ast.Or):
-            if isinstance(m, UnrankedBoolean):
-                score = F.lit(1.0)
-            elif isinstance(m, Indri):
-                # 1 - prod(1 - s_i) with defaults (QrySopOr.java:46-79)
-                prod = reduce(lambda a, b: a * b, [F.lit(1.0) - x for x in sv])
-                score = F.lit(1.0) - prod
-            else:
-                # max over matching children (QrySopOr.java:81-151);
-                # greatest() skips NULLs = non-matching children
-                score = F.greatest(*s) if k > 1 else s[0]
-            default = F.lit(0.0)  # QrySopOr.java:12-14
-        elif isinstance(node, ast.Sum):
-            if isinstance(m, UnrankedBoolean):
-                score = F.lit(1.0)
-            elif isinstance(m, Indri):
-                score = reduce(lambda a, b: a + b, sv)
-            else:
-                # BM25: k3 factor with qtf=1 is exactly 1.0
-                # (QrySopSum.java:59-80); ranked: sum of matching
-                score = reduce(lambda a, b: a + b, [F.coalesce(x, F.lit(0.0)) for x in s])
-            default = F.lit(0.0)  # QrySopSum.java:13-15
-        elif isinstance(node, ast.Wand):
-            if isinstance(m, Indri):
-                # prod s_i^(w_i/W) (QrySopWAnd.java:86-121)
-                parts = [F.pow(sv[i], F.lit(weights[i] / total_w)) for i in range(k)]
-                score = reduce(lambda a, b: a * b, parts)
-                dparts = [F.pow(d[i], F.lit(weights[i] / total_w)) for i in range(k)]
-                default = reduce(lambda a, b: a * b, dparts)
-            else:
-                # reference's BM25 branch is broken (inits at MAX_VALUE,
-                # QrySopWAnd.java:123-147); we use the sane weighted
-                # geo-mean over matching children
-                parts = [
-                    F.pow(F.coalesce(s[i], F.lit(1.0)), F.lit(weights[i] / total_w))
-                    for i in range(k)
-                ]
-                score = reduce(lambda a, b: a * b, parts)
-                default = F.lit(0.0)
-        elif isinstance(node, ast.Wsum):
-            if isinstance(m, Indri):
-                parts = [sv[i] * F.lit(weights[i] / total_w) for i in range(k)]
-                score = reduce(lambda a, b: a + b, parts)
-                dparts = [d[i] * F.lit(weights[i] / total_w) for i in range(k)]
-                default = reduce(lambda a, b: a + b, dparts)
-            elif isinstance(m, BM25):
-                # sum s_i * (k3+1)w_i/(k3+w_i) over matching
-                # (QrySopWSum.java:107-128)
-                parts = [
-                    F.coalesce(s[i], F.lit(0.0))
-                    * F.lit((m.k3 + 1.0) * weights[i] / (m.k3 + weights[i]))
-                    for i in range(k)
-                ]
-                score = reduce(lambda a, b: a + b, parts)
-                default = F.lit(0.0)
-            else:
-                parts = [F.coalesce(s[i], F.lit(0.0)) * F.lit(weights[i] / total_w) for i in range(k)]
-                score = reduce(lambda a, b: a + b, parts)
-                default = F.lit(0.0)
-        else:
-            raise TypeError(f"not a SOP node: {node}")
-
-        matches = joined.select("docid", score.alias("score"))
-        return Scored(matches, default)
-
-    def _score_leaf(self, node: ast.Score) -> Scored:
-        m = self.model
-        iop = self._iop(node.arg, need_pos=False)
-        pdf = iop.df
-        tf = F.col("tf").cast("double")
-        dl = F.col("doclen").cast("double")
-
-        if isinstance(m, BM25):
-            n_docs = self.reader.n_docs
-            avg = self.reader.avg_doclen(iop.field)
-            if iop.stats_df is not None:
-                # derived list: idf from the lazily-joined 1-row stats —
-                # same expression shape as the literal branch below
-                pdf = pdf.crossJoin(F.broadcast(iop.stats_df))
-                dfc = F.col("__iop_df").cast("double")
-                idf_col = F.greatest(
-                    F.lit(0.0),
-                    F.log((F.lit(float(n_docs)) - dfc + F.lit(0.5)) / (dfc + F.lit(0.5))),
-                )
-            else:
-                idf_col = F.lit(max(0.0, math.log(
-                    (n_docs - iop.df_stat + 0.5) / (iop.df_stat + 0.5))))
-            score = idf_col * tf / (
-                tf + F.lit(m.k1) * (F.lit(1.0 - m.b) + F.lit(m.b) * dl / F.lit(avg))
-            )
-            default = F.lit(0.0)
-        elif isinstance(m, Indri):
-            ctf = iop.ctf_stat if iop.ctf_stat != 0 else 0.5
-            pqc = ctf / self.reader.field_stats[iop.field][1]
-            score = (
-                F.lit(1.0 - m.lam) * (tf + F.lit(m.mu * pqc)) / (dl + F.lit(m.mu))
-                + F.lit(m.lam * pqc)
-            )
-            # default: same with tf=0 over the doc's field length
-            # (QrySopScore.java:13-26)
-            dlen = self._len_col(iop.field)
-            default = (
-                F.lit(1.0 - m.lam) * F.lit(m.mu * pqc) / (dlen + F.lit(m.mu))
-                + F.lit(m.lam * pqc)
-            )
-        elif isinstance(m, RankedBoolean):
-            score = tf
-            default = F.lit(0.0)
-        else:
-            score = F.lit(1.0)
-            default = F.lit(0.0)
-
-        return Scored(pdf.select("docid", score.alias("score")), default)
-
-
-# ------------------------------------------------------------- batch fold
-#
-# N structured queries -> ONE Catalyst plan. The per-query planner compiles
-# each query into its own subtree of joins (one union+pivot per query), so a
-# batched workload of N queries unions N plan legs — and every leg carries
-# its own shuffle, which AQE materializes as its own job. At the reference's
-# 40-57-query workloads that is 40-57 shuffles where one would do; at a
-# 10^4-query offline scoring workload it is a scheduler bottleneck.
-#
-# The fold rests on one observation: for a query tree whose IOP leaves are
-# all plain TERMs, every SOP node is a PURE EXPRESSION over its leaf score
-# columns — the per-query full-outer/inner joins only exist to line up leaf
-# columns per docid, and "child unmatched" is representable as NULL. So the
-# whole batch evaluates as:
-#
-#   postings (shared pruned scan, union of all terms)
-#     JOIN broadcast leaf-param table (field, term, idf/smoothing literals)
-#     JOIN broadcast (qid, field, term, slot) occurrence table
-#     -> groupBy(qid, docid).pivot(slot)          [the ONE shuffle]
-#     -> per-qid CASE WHEN over the reference fold expressions
-#
-# Expressions reproduce _sop/_score_leaf arithmetic shape exactly (same
-# literal doubles, same operation order), so results are float-identical to
-# the per-query path — gated by tests/test_batch_fold.py. Queries containing
-# positional IOPs (#NEAR/#WINDOW/#SYN) are not foldable (their leaves are
-# derived frames, not term columns) and fall back to per-query legs.
-
-_FOLD_SOPS = (ast.And, ast.Or, ast.Sum, ast.Wand, ast.Wsum)
-
-
-def fold_eligible(node: ast.Node) -> bool:
-    """True iff every IOP leaf under node is a plain Term (no positional /
-    synonym derived lists), i.e. the query folds to column expressions."""
-    if isinstance(node, ast.Score):
-        return isinstance(node.arg, ast.Term)
-    if isinstance(node, _FOLD_SOPS):
-        return bool(node.args) and all(fold_eligible(a) for a in node.args)
-    return False
-
-
-def _fold_slots(node: ast.Node, out: list) -> None:
-    """Depth-first leaf enumeration — slot order IS query order, so fold
-    expressions consume children in the same order as _sop."""
-    if isinstance(node, ast.Score):
-        out.append((node.arg.field, node.arg.term))
-        return
-    for a in node.args:
-        _fold_slots(a, out)
-
-
-def _fold_expr(node: ast.Node, m, slot_iter, stats, reader) -> tuple[Column, Column]:
-    """Compile node -> (score_expr, default_expr) over pivoted leaf columns
-    s<i>. score_expr is NULL exactly when the node does not match the doc —
-    the expression image of the per-query path's full-outer-join NULLs."""
-    if isinstance(node, ast.Score):
-        i = next(slot_iter)
-        field, term = node.arg.field, node.arg.term
-        s = F.col(f"s{i}")
-        if isinstance(m, Indri):
-            _, ctf_ = stats.get((field, term), (0, 0))
-            ctf = ctf_ if ctf_ != 0 else 0.5
-            pqc = ctf / reader.field_stats[field][1]
-            dlen = F.coalesce(F.col(f"len_{field}").cast("double"), F.lit(0.0))
-            default = (F.lit(1.0 - m.lam) * F.lit(m.mu * pqc)
-                       / (dlen + F.lit(m.mu)) + F.lit(m.lam * pqc))
-        else:
-            default = F.lit(0.0)
-        return s, default
-
-    children = [_fold_expr(a, m, slot_iter, stats, reader) for a in node.args]
-    k = len(children)
-    s = [c[0] for c in children]
-    d = [c[1] for c in children]
-    sv = [F.coalesce(s[i], d[i]) for i in range(k)]
-    any_m = reduce(lambda a, b: a | b, [x.isNotNull() for x in s])
-    all_m = reduce(lambda a, b: a & b, [x.isNotNull() for x in s])
-    weights = getattr(node, "weights", None)
-    total_w = sum(weights) if weights else None
-
-    if isinstance(node, ast.And):
-        if isinstance(m, UnrankedBoolean):
-            return F.when(all_m, F.lit(1.0)), F.lit(0.0)
-        if isinstance(m, Indri):
-            prod = reduce(lambda a, b: a * b, sv)
-            dprod = reduce(lambda a, b: a * b, d)
-            return (F.when(any_m, F.pow(prod, F.lit(1.0 / k))),
-                    F.pow(dprod, F.lit(1.0 / k)))
-        val = F.least(*s) if k > 1 else s[0]
-        return F.when(all_m, val), F.lit(0.0)
-    if isinstance(node, ast.Or):
-        if isinstance(m, UnrankedBoolean):
-            return F.when(any_m, F.lit(1.0)), F.lit(0.0)
-        if isinstance(m, Indri):
-            prod = reduce(lambda a, b: a * b, [F.lit(1.0) - x for x in sv])
-            return F.when(any_m, F.lit(1.0) - prod), F.lit(0.0)
-        val = F.greatest(*s) if k > 1 else s[0]
-        return F.when(any_m, val), F.lit(0.0)
-    if isinstance(node, ast.Sum):
-        if isinstance(m, UnrankedBoolean):
-            return F.when(any_m, F.lit(1.0)), F.lit(0.0)
-        if isinstance(m, Indri):
-            return F.when(any_m, reduce(lambda a, b: a + b, sv)), F.lit(0.0)
-        val = reduce(lambda a, b: a + b, [F.coalesce(x, F.lit(0.0)) for x in s])
-        return F.when(any_m, val), F.lit(0.0)
-    if isinstance(node, ast.Wand):
-        if isinstance(m, Indri):
-            parts = [F.pow(sv[i], F.lit(weights[i] / total_w)) for i in range(k)]
-            dparts = [F.pow(d[i], F.lit(weights[i] / total_w)) for i in range(k)]
-            return (F.when(any_m, reduce(lambda a, b: a * b, parts)),
-                    reduce(lambda a, b: a * b, dparts))
-        parts = [F.pow(F.coalesce(s[i], F.lit(1.0)), F.lit(weights[i] / total_w))
-                 for i in range(k)]
-        return F.when(any_m, reduce(lambda a, b: a * b, parts)), F.lit(0.0)
-    if isinstance(node, ast.Wsum):
-        if isinstance(m, Indri):
-            parts = [sv[i] * F.lit(weights[i] / total_w) for i in range(k)]
-            dparts = [d[i] * F.lit(weights[i] / total_w) for i in range(k)]
-            return (F.when(any_m, reduce(lambda a, b: a + b, parts)),
-                    reduce(lambda a, b: a + b, dparts))
-        if isinstance(m, BM25):
-            parts = [F.coalesce(s[i], F.lit(0.0))
-                     * F.lit((m.k3 + 1.0) * weights[i] / (m.k3 + weights[i]))
-                     for i in range(k)]
-            return F.when(any_m, reduce(lambda a, b: a + b, parts)), F.lit(0.0)
-        parts = [F.coalesce(s[i], F.lit(0.0)) * F.lit(weights[i] / total_w)
-                 for i in range(k)]
-        return F.when(any_m, reduce(lambda a, b: a + b, parts)), F.lit(0.0)
-    raise TypeError(f"not foldable: {node}")
-
-
-def plan_batch_fold(reader: IndexReader, model,
-                    roots: dict[str, ast.Node],
-                    shared_postings: DataFrame,
-                    shared_stats: dict) -> DataFrame:
-    """Compile a dict of fold_eligible query trees into ONE DataFrame
-    (qid, docid, score) — one shuffle for the whole group, float-identical
-    to the per-query planner (see module comment above)."""
-    m = model
-    spark = shared_postings.sparkSession
-
-    # leaf occurrence table: (qid, field, term, slot), slot local to qid
-    occ_rows, max_slots = [], 0
-    for qid, root in roots.items():
-        leaves: list[tuple[str, str]] = []
-        _fold_slots(root, leaves)
-        max_slots = max(max_slots, len(leaves))
-        occ_rows.extend((qid, f, t, i) for i, (f, t) in enumerate(leaves))
-    occ = spark.createDataFrame(occ_rows, ["qid", "field", "term", "slot"])
-
-    # leaf-param table: per distinct (field, term), the model's literal
-    # constants — the SAME doubles _score_leaf would F.lit()
-    tf = F.col("tf").cast("double")
-    dl = F.col("doclen").cast("double")
-    pairs = sorted({(f, t) for _, f, t, _ in occ_rows})
-    if isinstance(m, BM25):
-        n_docs = reader.n_docs
-        prm = [(f, t, max(0.0, math.log(
-            (n_docs - shared_stats.get((f, t), (0, 0))[0] + 0.5)
-            / (shared_stats.get((f, t), (0, 0))[0] + 0.5))),
-            reader.avg_doclen(f)) for f, t in pairs]
-        leaf_s = (F.col("c1") * tf
-                  / (tf + F.lit(m.k1) * (F.lit(1.0 - m.b)
-                                         + F.lit(m.b) * dl / F.col("c2"))))
-    elif isinstance(m, Indri):
-        prm = []
-        for f, t in pairs:
-            ctf_ = shared_stats.get((f, t), (0, 0))[1]
-            pqc = (ctf_ if ctf_ != 0 else 0.5) / reader.field_stats[f][1]
-            prm.append((f, t, m.mu * pqc, m.lam * pqc))
-        leaf_s = (F.lit(1.0 - m.lam) * (tf + F.col("c1"))
-                  / (dl + F.lit(m.mu)) + F.col("c2"))
-    elif isinstance(m, RankedBoolean):
-        prm = [(f, t, 0.0, 0.0) for f, t in pairs]
-        leaf_s = tf
-    else:
-        prm = [(f, t, 0.0, 0.0) for f, t in pairs]
-        leaf_s = F.lit(1.0)
-    params = spark.createDataFrame(prm, ["field", "term", "c1", "c2"])
-
-    scored = (
-        shared_postings
-        .join(F.broadcast(params), ["field", "term"])
-        .join(F.broadcast(occ), ["field", "term"])
-        .select("qid", "docid", "slot", leaf_s.alias("s"))
-    )
-    pivoted = (scored.groupBy("qid", "docid")
-               .pivot("slot", list(range(max_slots))).agg(F.first("s")))
-    for i in range(max_slots):
-        pivoted = pivoted.withColumnRenamed(str(i), f"s{i}")
-
-    if isinstance(m, Indri):
-        fields = sorted({f for _, f, _, _ in occ_rows})
-        pivoted = pivoted.join(
-            reader.doc_lens_wide().select(
-                "docid", *[f"len_{f}" for f in fields]),
-            "docid", "left")
-
-    score_case = None
-    for qid, root in roots.items():
-        expr, _ = _fold_expr(root, m, iter(range(10 ** 9)), shared_stats, reader)
-        cond = F.col("qid") == qid
-        score_case = (F.when(cond, expr) if score_case is None
-                      else score_case.when(cond, expr))
-    return (pivoted.withColumn("score", score_case)
-            .filter(F.col("score").isNotNull())
-            .select("qid", "docid", "score"))
+    def plan(self, root: ast.Node) -> Program:
+        """Compile a parsed query tree into a stripe Program. Looks up the
+        leaf terms' (df, ctf) (memoized per reader); the derived-list
+        pre-pass runs inside the query's stripe action (query/wand.py)."""
+        if (not self.reader.store_positions
+                and any(isinstance(n, ast.Syn | ast.Near | ast.Window)
+                        for s in _scores(root) for n in _iops(s.arg))):
+            raise ValueError(
+                "positional operator (#NEAR/#WINDOW/#SYN) on an index "
+                "built with store_positions=False (DOCS_AND_FREQS); "
+                "rebuild or compact() with store_positions=True")
+        return Program(root, self.model, self.reader,
+                       self.reader.term_stats(leaf_pairs(root)))

@@ -2,9 +2,8 @@
 
 Pointer-walk algorithms mirroring the reference's location iterators
 (QryIopNear.java:60-110 for ordered proximity, QryIopWindow.java:64-166 for
-unordered windows). These run inside Arrow-batched pandas UDFs over candidate
-docs that already passed the conjunctive docid join — so the per-doc Python
-cost is paid only on docs containing ALL argument terms.
+unordered windows). The stripe kernel (query/planner.py) runs them over the
+docs of one stripe that contain ALL argument lists, in flat numpy form.
 """
 
 from __future__ import annotations
@@ -50,57 +49,68 @@ def _pair_any(A: np.ndarray, offsA: np.ndarray, B: np.ndarray,
     return res
 
 
-def batch_positions(arg_cols: list[np.ndarray], n: int, ordered: bool) -> np.ndarray:
-    """Vectorized driver for NEAR (ordered) / WINDOW (unordered) over a batch
-    of candidate docs: numpy adjacent-pair prefilter kills the (vast
-    majority of) docs with no possible match, the exact pointer walk runs
-    only on survivors. Returns an object array of Python int lists."""
-    m = len(arg_cols[0])
-    k = len(arg_cols)
-    flats = [_flat(c) for c in arg_cols]
+def match_flat(flats: list[tuple[np.ndarray, np.ndarray]], n: int,
+               ordered: bool) -> tuple[np.ndarray, np.ndarray]:
+    """NEAR (ordered) / WINDOW (unordered) matches over aligned rows.
+
+    flats: one (flat positions, row offsets) pair per argument, every
+    argument holding the same rows (docs that contain all arguments). A
+    numpy adjacent-pair prefilter drops the rows with no possible match,
+    the exact pointer walk runs only on the survivors. Returns (row,
+    emitted position) pairs, each row's positions in emission order."""
+    m = len(flats[0][1]) - 1
     cand = np.ones(m, dtype=bool)
     # the prefilter's row-shift packing needs every position + n < _BIG; a
     # pathological >16M-token field would break searchsorted's global
     # sortedness and silently drop matches — bypass to the exact walk instead
     lim = int(_BIG) - int(n) - 1
     safe = all(f[0].size == 0 or int(f[0].max()) <= lim for f in flats)
-    for i in range(k - 1):
-        if not safe:
-            break
+    if not safe:
+        # >16M-token field: row-shift packing unsound -> exact scalar walk
+        fn = near_positions if ordered else window_positions
+        rows: list[int] = []
+        vals: list[int] = []
+        for r in range(m):
+            res = fn([f[0][f[1][r]:f[1][r + 1]].tolist() for f in flats], n)
+            rows.extend([r] * len(res))
+            vals.extend(int(x) for x in res)
+        return np.asarray(rows, np.int64), np.asarray(vals, np.int64)
+    for i in range(len(flats) - 1):
         A, offsA = flats[i]
         B, offsB = flats[i + 1]
         if ordered:
             cand &= _pair_any(A, offsA, B, offsB, 1, n)
         else:
             cand &= _pair_any(A, offsA, B, offsB, -(n - 1), n - 1)
+    # vectorized pointer walk over ALL surviving docs at once: per round,
+    # every active doc advances its pointers with numpy gathers /
+    # searchsorted — rounds are bounded by the max occurrence count of a
+    # doc, so the Python-interpreter cost is O(rounds), not O(survivor docs)
+    surv = np.flatnonzero(cand)
+    if not surv.size:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    walk = _near_walk_batch if ordered else _window_walk_batch
+    rows, vals = walk(flats, surv, n)
+    # rounds interleave rows; a stable sort groups them, keeping each row's
+    # emission order
+    order = np.argsort(rows, kind="stable")
+    return rows[order], vals[order]
+
+
+def batch_positions(arg_cols: list[np.ndarray], n: int, ordered: bool) -> np.ndarray:
+    """match_flat over object arrays of per-doc position arrays. Returns an
+    object array of Python int lists, one per row."""
+    m = len(arg_cols[0])
+    rows, vals = match_flat([_flat(c) for c in arg_cols], n, ordered)
     out = np.empty(m, dtype=object)
     empty: list[int] = []
     out[:] = [empty] * m
-    if safe:
-        # vectorized pointer walk over ALL surviving docs at once: per
-        # round, every active doc advances its pointers with numpy gathers
-        # / searchsorted — rounds are bounded by the max occurrence count
-        # of a doc, so the Python-interpreter cost is O(rounds), not
-        # O(survivor docs)
-        surv = np.flatnonzero(cand)
-        if surv.size:
-            walk = _near_walk_batch if ordered else _window_walk_batch
-            rows, vals = walk(flats, surv, n)
-            if rows.size:
-                order = np.argsort(rows, kind="stable")
-                rows, vals = rows[order], vals[order]
-                bounds = np.flatnonzero(np.diff(rows)) + 1
-                starts = np.append(0, bounds)
-                stops = np.append(bounds, rows.size)
-                uniq = rows[starts]
-                for u, s, e in zip(uniq.tolist(), starts.tolist(), stops.tolist()):
-                    out[u] = vals[s:e].tolist()
-    else:
-        # >16M-token field: row-shift packing unsound -> exact scalar walk
-        fn = near_positions if ordered else window_positions
-        for r in range(m):
-            res = fn([c[r] for c in arg_cols], n)
-            out[r] = [int(x) for x in res]
+    if rows.size:
+        bounds = np.flatnonzero(np.diff(rows)) + 1
+        starts = np.append(0, bounds)
+        stops = np.append(bounds, rows.size)
+        for u, s, e in zip(rows[starts].tolist(), starts.tolist(), stops.tolist()):
+            out[u] = vals[s:e].tolist()
     return out
 
 
@@ -251,11 +261,3 @@ def window_positions(pls: list[list[int]], n: int) -> list[int]:
         else:
             ptrs[cur.index(lo)] += 1
     return out
-
-
-def syn_positions(pls: list[list[int]]) -> list[int]:
-    """Union of positions, sorted (QryIopSyn.java:17-71)."""
-    out: list[int] = []
-    for p in pls:
-        out.extend(p)
-    return sorted(out)

@@ -1,8 +1,9 @@
 """Decode compressed posting blocks back into DataFrames.
 
-The decode kernel is a single Arrow-batched ``mapInPandas`` pass over the
-pruned block scan — numpy varint decode, no per-row Python. Everything after
-(scoring, joins, top-k) is pure Catalyst.
+The decode kernel is a single Arrow-batched ``mapInArrow`` pass over the
+pruned block scan — numpy varint decode, no per-row Python. Query serving
+decodes inside the stripe kernel instead (query/wand.py); this DataFrame
+form serves index inspection (inspect.py).
 """
 
 from __future__ import annotations
@@ -10,7 +11,6 @@ from __future__ import annotations
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..index import codec
@@ -29,7 +29,6 @@ POSTINGS_POS_SCHEMA = T.StructType(
 
 
 def decode_postings(blocks: DataFrame, with_positions: bool = False,
-                    docid_filter: np.ndarray | None = None,
                     payload_codec: str = "varint",
                     norms_dir: str | None = None,
                     salt_range: int = 1) -> DataFrame:
@@ -39,13 +38,6 @@ def decode_postings(blocks: DataFrame, with_positions: bool = False,
     arrays (positions as one ListArray from (offsets, values)) — no per-
     posting Python objects, which dominated positional-query latency on
     high-df terms.
-
-    ``docid_filter``: sorted int64 array of candidate docids (broadcast).
-    Blocks whose [min_docid, max_docid] range contains no candidate are
-    skipped WITHOUT any decode (the positional analog of block-max
-    skipping); surviving blocks emit only candidate rows, so the expensive
-    position decode + downstream join touch candidates, not every posting
-    of a high-df term.
 
     ``norms_dir``: path to the docid-sorted doc_lens_wide norms sidecar.
     Blocks no longer carry doclens; the kernel resolves each surviving
@@ -59,13 +51,7 @@ def decode_postings(blocks: DataFrame, with_positions: bool = False,
     if norms_dir is None:
         raise ValueError("decode_postings requires norms_dir (doc_lens_wide)")
     schema = POSTINGS_POS_SCHEMA if with_positions else POSTINGS_SCHEMA
-    cand_b = None
-    if docid_filter is not None:
-        cand_b = blocks.sparkSession.sparkContext.broadcast(
-            np.asarray(docid_filter, dtype=np.int64))
-
     def decode(batches):
-        carr = cand_b.value if cand_b is not None else None
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -75,45 +61,19 @@ def decode_postings(blocks: DataFrame, with_positions: bool = False,
             b_dz = rb.column(ix["docids_z"]).to_pylist()
             b_tz = rb.column(ix["tfs_z"]).to_pylist()
             b_pz = rb.column(ix["positions_z"]).to_pylist() if with_positions else None
-            if carr is not None:
-                bmin = rb.column(ix["min_docid"]).to_numpy()
-                bmax = rb.column(ix["max_docid"]).to_numpy()
-                has_cand = (np.searchsorted(carr, bmax, "right")
-                            > np.searchsorted(carr, bmin, "left"))
             docids, tfs, doclens, sizes = [], [], [], []
-            keep_blk = []
             pvals, pcounts = [], []
             for bi in range(rb.num_rows):
-                if carr is not None and not has_cand[bi]:
-                    continue  # whole block skipped, zero decode
                 d, t = codec.decode_block(b_dz[bi], b_tz[bi], payload_codec)
-                if carr is not None:
-                    idx = np.searchsorted(carr, d.astype(np.int64))
-                    np.clip(idx, 0, carr.size - 1, out=idx)
-                    mask = carr[idx] == d.astype(np.int64)
-                    if not mask.any():
-                        continue
-                else:
-                    mask = None
                 if with_positions:
                     v, c = codec.decode_positions_flat(b_pz[bi], len(d))
-                    if mask is not None:
-                        v = v[np.repeat(mask, c)]
-                        c = c[mask]
                     pvals.append(v)
                     pcounts.append(c)
-                if mask is not None:
-                    d, t = d[mask], t[mask]
                 dl = norms_mod.doclens_at(norms_dir, b_field[bi], d, salt_range)
                 sizes.append(len(d))
-                keep_blk.append(bi)
                 docids.append(d.astype(np.int64))
                 tfs.append(t.astype(np.int32))
                 doclens.append(dl.astype(np.int32))
-            if not docids:
-                continue
-            b_field = [b_field[i] for i in keep_blk]
-            b_term = [b_term[i] for i in keep_blk]
             sizes = np.asarray(sizes, dtype=np.int64)
             field_np = np.repeat(np.array(b_field, dtype=object), sizes)
             term_np = np.repeat(np.array(b_term, dtype=object), sizes)
@@ -138,13 +98,3 @@ def decode_postings(blocks: DataFrame, with_positions: bool = False,
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return blocks.mapInArrow(decode, schema)
-
-
-def bm25_score_col(tf_col, doclen_col, df: int, n_docs: int, avg_doclen: float,
-                   k1: float = 1.2, b: float = 0.75):
-    """BM25 per-term score as a pure Catalyst column expression — formula is
-    exactly the reference's (QrySopScore.java:78-90): idf is constant-folded,
-    tf weight runs in whole-stage codegen."""
-    idf = max(0.0, float(np.log((n_docs - df + 0.5) / (df + 0.5))))
-    tfd = tf_col.cast("double")
-    return F.lit(idf) * tfd / (tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * doclen_col.cast("double") / F.lit(float(avg_doclen))))

@@ -76,6 +76,19 @@ def _chunked_frames(row_iter, cols: list[str], row_nbytes) -> "Iterator[pd.DataF
     if rows:
         yield pd.DataFrame(rows, columns=cols)
 
+def page_row_nbytes(row: tuple) -> int:
+    """Byte ESTIMATE of one parsed page row, not a re-encode: 4x the html
+    bytes. html counts once (len exact). Extraction decodes html as UTF-8
+    with replacement, so every html byte yields at most one code point of
+    text, and a byte that is not valid UTF-8 — both bytes of a GBK,
+    Shift-JIS or Big5 character — yields a 3-byte U+FFFD: the text's UTF-8
+    is at most 3x the html bytes (measured 2.7x on a GBK page; markup
+    removal and entity decoding only shrink it). url/lang are noise next
+    to it. The chunk bound only shapes in-flight batch size; an early
+    flush costs nothing."""
+    return 4 * len(row[2])
+
+
 # ISO-639-1 <-> the ISO-639-3 codes Common Crawl writes in
 # WARC-Identified-Content-Language. Only the languages the corpus model
 # emits; unknown codes round-trip verbatim.
@@ -236,15 +249,8 @@ def read_warc(spark: SparkSession, path: str,
                 (row for p, data in zip(pdf["path"], pdf["content"])
                  for row in parse_warc_shard(bytes(data),
                                              str(p).endswith(".gz"))),
-                # byte ESTIMATE, not a re-encode: html is bytes (len
-                # exact), and the extracted text's UTF-8 is bounded by the
-                # html bytes it came out of (extraction only removes
-                # markup; entity decoding shrinks), so html + text <=
-                # 2x html-bytes regardless of script. url/lang are noise
-                # next to it. The chunk bound only shapes in-flight batch
-                # size; an early flush costs nothing.
                 ["url", "warc_ts", "html", "text", "lang"],
-                lambda r: 2 * len(r[2]))
+                page_row_nbytes)
 
     return files.mapInPandas(parse, PAGES_SCHEMA)
 

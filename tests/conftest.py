@@ -30,3 +30,20 @@ def tiny_index(spark, tmp_path_factory):
     pages = generate_pages(spark, 300, seed=42, partitions=4)
     build_index(spark, pages, d, n_salts=4)
     return IndexReader(spark, d)
+
+
+@pytest.fixture(scope="session")
+def tiny_oracle():
+    """oracle.py index over tiny_index's corpus (the English pages)."""
+    from searchengines_spark.corpus import FIELDS, extract_fields, make_page
+    from searchengines_spark.oracle import OracleIndex
+    from searchengines_spark.tokenizer import tokenize_full
+
+    docs = []
+    for i in range(300):
+        url, _, html, _, lang = make_page(i, seed=42)
+        if lang != "en":
+            continue
+        f = extract_fields(url, html)
+        docs.append((url, {k: tokenize_full(f[k]) for k in FIELDS}))
+    return OracleIndex.from_docs(docs)

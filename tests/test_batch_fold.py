@@ -1,19 +1,16 @@
-"""Batch fold (planner.plan_batch_fold): N term-leaf query trees compile to
-ONE pivoted plan with per-qid CASE folds. Gates:
+"""Batched search (Engine.search_batch_df): N query trees evaluate in ONE
+stripe job with a qid dimension. Gates:
 
 - float-identity: for every model, batched scores == per-query scores
-  exactly (same literal doubles, same operation order — not just 1e-9);
-- fold routing: term-leaf trees fold, positional trees fall back;
+  exactly (same stripe program, same operation order — not just 1e-9);
+- positional queries in a batch match their solo runs;
 - O(1) jobs: a warm 8-query batch issues no more Spark jobs than a warm
-  2-query batch (the per-leg union compiled one shuffle per query; the fold
-  compiles one pivot shuffle per group).
+  2-query batch.
 """
 
 import pytest
 
 from searchengines_spark.engine import Engine
-from searchengines_spark.query.parser import QueryParser
-from searchengines_spark.query.planner import fold_eligible
 
 QS = {
     "flat_and": "#AND( cebaba1 dibaba2 )",
@@ -32,7 +29,7 @@ MODELS = ["indri", "rankedboolean", "unrankedboolean", "bm25"]
 @pytest.mark.parametrize("model", MODELS)
 def test_fold_scores_identical_to_per_query(spark, tiny_index, model):
     eng = Engine(tiny_index)
-    batch = eng.search_batch_df(QS, model, 50, use_wand=False).collect()
+    batch = eng.search_batch_df(QS, model, 50).collect()
     by_qid = {}
     for r in batch:
         by_qid.setdefault(r["qid"], {})[r["url"]] = r["score"]
@@ -45,22 +42,12 @@ def test_fold_scores_identical_to_per_query(spark, tiny_index, model):
             assert s == got[u], (model, qid, u, s, got[u])
 
 
-def test_fold_eligibility_routing():
-    p = QueryParser("indri")
-    assert fold_eligible(p.parse("#AND( cebaba1 #OR( dibaba2 fobaba3 ) )"))
-    assert fold_eligible(p.parse("gubaba4"))
-    assert not fold_eligible(p.parse("#NEAR/3( cebaba1 dibaba2 )"))
-    assert not fold_eligible(
-        p.parse("#AND( cebaba1 #NEAR/2( dibaba2 fobaba3 ) )"))
-    assert not fold_eligible(p.parse("#SYN( cebaba1 dibaba2 )"))
-
-
 def test_positional_in_batch_still_correct(spark, tiny_index):
-    """A batch mixing foldable and positional queries routes each correctly
-    and the positional result matches its solo run."""
+    """A batch mixing term-leaf and positional queries scores each like
+    its solo run."""
     eng = Engine(tiny_index)
     mixed = {"f": "#AND( cebaba1 dibaba2 )", "p": "#NEAR/4( cebaba1 dibaba2 )"}
-    rows = eng.search_batch_df(mixed, "bm25", 20, use_wand=False).collect()
+    rows = eng.search_batch_df(mixed, "bm25", 20).collect()
     got = {r["qid"]: {r2["url"]: r2["score"] for r2 in rows if r2["qid"] == r["qid"]}
            for r in rows}
     for qid, q in mixed.items():

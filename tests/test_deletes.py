@@ -17,10 +17,10 @@ from searchengines_spark.index.snapshots import list_snapshots
 QUERY = "haceba4 badiba5 dibaba2"  # Zipf-tail terms: nonzero idf
 
 
-def _topk(spark, d, k, use_wand=True, snapshot=None):
+def _topk(spark, d, k, snapshot=None):
     e = Engine(IndexReader(spark, d, snapshot=snapshot))
     return [(r["url"], r["score"])
-            for r in e.search(QUERY, "bm25", k, use_wand=use_wand).collect()]
+            for r in e.search(QUERY, "bm25", k).collect()]
 
 
 @pytest.fixture(scope="module")
@@ -46,11 +46,10 @@ def test_merge_on_read_excludes_tombstones(spark, deleted_index):
     d, _root, pre, deleted, _m = deleted_index
     assert any(u in deleted for u, _ in pre)  # the delete hits the top-100
     expect = [(u, s) for u, s in pre if u not in deleted][:20]
-    for use_wand in (True, False):
-        got = _topk(spark, d, 20, use_wand=use_wand)
-        assert [u for u, _ in got] == [u for u, _ in expect], use_wand
-        for (_, gs), (_, ws) in zip(got, expect):
-            assert math.isclose(gs, ws, rel_tol=1e-9)
+    got = _topk(spark, d, 20)
+    assert [u for u, _ in got] == [u for u, _ in expect]
+    for (_, gs), (_, ws) in zip(got, expect):
+        assert math.isclose(gs, ws, rel_tol=1e-9)
 
 
 def test_delete_is_idempotent_and_snapshotted(spark, deleted_index):
@@ -82,11 +81,10 @@ def test_compact_purges_physically(spark, deleted_index):
     build_index(spark, all_df.filter("url not like 'https://www3%'"),
                 d_fresh, n_salts=4)
     want = _topk(spark, d_fresh, 20)
-    for use_wand in (True, False):
-        got = _topk(spark, d, 20, use_wand=use_wand)
-        assert [u for u, _ in got] == [u for u, _ in want], use_wand
-        for (_, gs), (_, ws) in zip(got, want):
-            assert math.isclose(gs, ws, rel_tol=1e-9)
+    got = _topk(spark, d, 20)
+    assert [u for u, _ in got] == [u for u, _ in want]
+    for (_, gs), (_, ws) in zip(got, want):
+        assert math.isclose(gs, ws, rel_tol=1e-9)
     # forward/stat tables no longer reference any tombstoned doc
     r = IndexReader(spark, d)
     assert r.deletes_df() is None

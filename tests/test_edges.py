@@ -1,27 +1,39 @@
 """Edge cases: absent terms, tiny corpora, empty fields."""
 
+import math
+
 import pyspark.sql.functions as F
 
 from searchengines_spark.engine import Engine
 from searchengines_spark.index import IndexReader, build_index
 
 
-def test_absent_term_in_bow_query(tiny_index):
-    """A term missing from the index contributes nothing — WAND route and
-    exhaustive planner must agree."""
+def test_absent_term_in_bow_query(tiny_index, tiny_oracle):
+    """A term missing from the index contributes nothing — the flat WAND
+    kernel and Engine.search must agree with the query without it, and
+    with the oracle."""
+    from searchengines_spark.oracle import search as oracle_search
+    from searchengines_spark.query.wand import wand_topk
+
     e = Engine(tiny_index)
     q = "haceba4 zzzneverseen badiba5"
-    wand = [(r["url"], round(r["score"], 9)) for r in e.search(q, k=20).collect()]
-    plan = [(r["url"], round(r["score"], 9)) for r in e.search(q, k=20, use_wand=False).collect()]
+    wand = [(r["url"], round(r["score"], 9)) for r in
+            wand_topk(tiny_index, q.split(), k=20).collect()]
+    plan = [(r["url"], round(r["score"], 9)) for r in e.search(q, k=20).collect()]
     base = [(r["url"], round(r["score"], 9)) for r in
-            e.search("haceba4 badiba5", k=20, use_wand=False).collect()]
+            e.search("haceba4 badiba5", k=20).collect()]
     assert wand == plan == base
+    want = [(u, round(sc, 9)) for u, sc in
+            oracle_search(tiny_oracle, "haceba4 badiba5", "bm25", 20)]
+    assert [u for u, _ in plan] == [u for u, _ in want]
+    for (_, gs), (_, ws) in zip(plan, want):
+        assert math.isclose(gs, ws, rel_tol=1e-9, abs_tol=1e-9)
 
 
 def test_all_absent_terms(tiny_index):
     e = Engine(tiny_index)
     assert e.search("zzza zzzb", k=10).collect() == []
-    assert e.search("#AND( zzza zzzb )", k=10, use_wand=False).collect() == []
+    assert e.search("#AND( zzza zzzb )", k=10).collect() == []
 
 
 def test_single_doc_build(spark, tmp_path):
@@ -62,33 +74,5 @@ def test_empty_field_docs(spark, tmp_path):
     assert r.n_docs == 6
     assert r.field_stats["title"][0] == 3  # only docs with a real title
     e = Engine(r)
-    assert len(e.search("alpha", k=10, use_wand=False).collect()) == 6
-    assert len(e.search("tword1.title", k=10, use_wand=False).collect()) == 1
-
-
-def test_candidate_filtered_positional_decode_identical(spark, tiny_index):
-    """Force the cost-based gate open: the candidate-filtered positional
-    path must produce exactly the same ranking as the full-decode path
-    (it is the 100-TB asymptote; the gate keeps it off at small df)."""
-    import math
-
-    from searchengines_spark.engine import Engine
-    from searchengines_spark.query.planner import Planner
-
-    eng = Engine(tiny_index)
-    queries = ["#NEAR/4( cebaba1 dibaba2 )", "#WINDOW/6( haceba4 badiba5 )"]
-    want = {q: [(r["url"], r["score"]) for r in
-                eng.search(q, "bm25", 20).collect()] for q in queries}
-    old_cap, old_heavy = Planner.MAX_POS_CANDIDATES, Planner.HEAVY_POS_DF
-    try:
-        Planner.MAX_POS_CANDIDATES = 10**9
-        Planner.HEAVY_POS_DF = 0
-        for q in queries:
-            got = [(r["url"], r["score"]) for r in
-                   eng.search(q, "bm25", 20).collect()]
-            assert [u for u, _ in got] == [u for u, _ in want[q]], q
-            for (_, gs), (_, ws) in zip(got, want[q]):
-                assert math.isclose(gs, ws, rel_tol=1e-12)
-    finally:
-        Planner.MAX_POS_CANDIDATES = old_cap
-        Planner.HEAVY_POS_DF = old_heavy
+    assert len(e.search("alpha", k=10).collect()) == 6
+    assert len(e.search("tword1.title", k=10).collect()) == 1

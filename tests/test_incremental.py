@@ -172,7 +172,7 @@ def test_compact_after_append(spark, tmp_path):
         r = IndexReader(spark, d)
         e = Engine(r)
         return [(x["url"], round(x["score"], 9))
-                for x in e.search(q, k=50, use_wand=False).collect()]
+                for x in e.search(q, k=50).collect()]
 
     before = results()
     m = compact(spark, d, n_salts=4)

@@ -110,8 +110,8 @@ def varint_index(spark, tmp_path_factory):
 
 
 QUERIES = [
-    ("cebaba1 dibaba2 fobaba3", "bm25", dict(use_wand=True)),
-    ("cebaba1 dibaba2 fobaba3", "bm25", dict(use_wand=False)),
+    ("cebaba1 dibaba2 fobaba3", "bm25", {}),
+    ("cebaba1 dibaba2 fobaba3", "bm25", dict(k1=0.9, b=0.4)),
     ("#NEAR/4( cebaba1 dibaba2 )", "bm25", {}),
     ("#AND( cebaba1 #SYN( dibaba2 fobaba3 ) )", "indri", {}),
 ]
@@ -157,5 +157,5 @@ def test_append_keeps_manifest_codec(spark, varint_index):
     n = r2.blocks_for([("body", "cebaba1")]).count()
     assert n > 0
     from searchengines_spark.engine import Engine
-    res = Engine(r2).search("cebaba1 dibaba2", "bm25", 10, use_wand=True).collect()
+    res = Engine(r2).search("cebaba1 dibaba2", "bm25", 10).collect()
     assert len(res) > 0

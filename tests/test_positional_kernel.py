@@ -73,28 +73,3 @@ def test_batch_walk_huge_positions_fallback():
     assert list(out[1]) == []
     outw = batch_positions([a, b], 4, False)
     assert list(outw[0]) == [base + 7]
-
-
-def test_near_plan_single_kernel_eval(tiny_index):
-    """Plan-shape regression: the NEAR match kernel must appear as exactly
-    ONE ArrowEvalPython node in the executed plan. Without the
-    asNondeterministic optimizer fence, Catalyst pushes the tf>0 filter
-    below the projection and duplicates the kernel (two ArrowEvalPython
-    nodes = the whole position-match pass runs twice per query)."""
-    import inspect as _inspect
-
-    from searchengines_spark.engine import Engine
-    from searchengines_spark.query import planner as planner_mod
-
-    src = _inspect.getsource(planner_mod)
-    assert "asNondeterministic()" in src  # the fence itself
-
-    eng = Engine(tiny_index)
-    df = eng.search("#NEAR/4( cebaba1 dibaba2 )", model="bm25", k=10)
-    df.collect()
-    # the planner eagerly materializes the positional cache, so the cached
-    # kernel subplan prints its AQE-final form inside the InMemoryRelation
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("ArrowEvalPython") == 1, final

@@ -84,3 +84,28 @@ def test_boolean(engine, oracle_idx, qname, query):
 
 def test_all_stopword_query(engine):
     assert engine.search("the of and", "bm25", 10).count() == 0
+
+
+@pytest.fixture(scope="module")
+def striped_engine(spark, tmp_path_factory):
+    """tiny_index's corpus rebuilt with salt_min_df=4: terms with df >= 4
+    are striped (served from the serve cache, positions read in-task from
+    the block files), the rarer ones stay cold blocks."""
+    from searchengines_spark.corpus import generate_pages
+    from searchengines_spark.index import IndexReader, build_index
+
+    d = str(tmp_path_factory.mktemp("striped"))
+    build_index(spark, generate_pages(spark, N_DOCS, seed=42, partitions=4),
+                d, n_salts=4, salt_min_df=4)
+    return Engine(IndexReader(spark, d))
+
+
+def test_rank_identity_striped_blocks(striped_engine, oracle_idx):
+    """Every query x model of this module over striped posting blocks."""
+    reader = striped_engine.reader
+    stats = reader.term_stats([("body", t) for t in
+                               ("cebaba1", "dibaba2", "fobaba3")])
+    assert min(df for df, _ in stats.values()) >= reader.salt_min_df
+    for _, query in QUERIES:
+        for model, kw in MODELS:
+            _check(striped_engine, oracle_idx, query, model, kw)

@@ -172,3 +172,22 @@ def test_unicode_and_invalid_bytes_round_trip():
     bad = b"<p>ok \xff\xfe broken</p>"
     assert extract_text(bad) == extract_text(bad)
     assert "ok" in extract_text(bad) and "broken" in extract_text(bad)
+
+
+def test_chunk_bound_covers_legacy_encoded_pages():
+    """The in-flight chunk estimate must bound html plus UTF-8 text bytes
+    for a GBK page: extraction decodes html as UTF-8 with replacement, so
+    each high byte of a 2-byte GBK character becomes a 3-byte U+FFFD in
+    the text — more than the 2x-html estimate allowed."""
+    from datetime import datetime, timezone
+
+    from searchengines_spark.sources import warc
+
+    html = ("<html><body>" + "中文网页的正文内容" * 50
+            + "</body></html>").encode("gbk")
+    ts = datetime(2026, 1, 2, 3, 4, 5, tzinfo=timezone.utc)
+    rec = warc.encode_response_record("https://ex.cn/p", ts, html, "zh")
+    row, = list(warc.parse_warc_shard(rec, is_gzip=False))
+    actual = len(row[2]) + len(row[3].encode("utf-8"))
+    assert actual > 2 * len(html)
+    assert warc.page_row_nbytes(row) >= actual

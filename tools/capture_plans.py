@@ -79,45 +79,24 @@ def main() -> None:
         "(IndexReader.cold_blocks).",
         fmt(ts_probe)))
 
-    bow = e.search("haceba4 badiba5", k=10, use_wand=False)
-    sections.append((
-        "Exhaustive BM25 bag-of-words (planner path, WAND routing disabled)",
-        "What to look for: one Arrow decode (`MapInArrow`) feeding pure "
-        "Catalyst — the BM25 expression, per-term score union and the final "
-        "`TakeOrderedAndProject` (distributed top-k) all inside "
-        "WholeStageCodegen spans; no per-row Python anywhere after decode.",
-        fmt(bow)))
-
     wand = e.search("haceba4 badiba5", k=10)
     sections.append((
-        "Stripe top-k serving path (default route for flat BM25)",
+        "Stripe top-k serving path (every query class)",
         "What to look for: `InMemoryTableScan` of the per-reader serve "
         "cache (striped blocks + skeleton rows, pre-partitioned by salt — "
         "IndexReader.serve_blocks) feeding `FlatMapGroupsInPandas` with NO "
         "Exchange between them: the groupBy reuses the cached "
         "partitioning, so a warm query is one no-shuffle stage. Each "
-        "docid-range stripe runs an independent top-k kernel (vectorized "
-        "bulk evaluation by default; block-max WAND via strategy='wand' — "
-        "BENCH/SERVE_ANATOMY.md kernel study) and resolves its own urls "
+        "docid-range stripe evaluates the compiled query tree (dense numpy "
+        "accumulators; flat bags of words through wand_topk may use "
+        "block-max WAND via strategy='wand' — BENCH/SERVE_ANATOMY.md "
+        "kernel study), cuts k per url-rank segment and resolves its urls "
         "via row-group-pruned point reads of the docid-sorted url table "
         "(index/urlmap.py) — no corpus-sized join appears anywhere. The "
         "global `TakeOrderedAndProject` merges <= k url-resolved rows per "
         "stripe. Compressed blocks reach the kernel undecoded; under the "
         "WAND strategy pruned blocks never decompress.",
         fmt(wand)))
-
-    near = e.search("#NEAR/3( haceba4 badiba5 )", k=10, use_wand=False)
-    sections.append((
-        "#NEAR/3 positional query",
-        "What to look for: docid join of the two term posting sets with the "
-        "probe side hash-repartitioned BEFORE the join (explicit partition "
-        "count = AQE-coalescing-exempt, so the CPU-bound match kernel keeps "
-        "full parallelism and the heavy joined position arrays are never "
-        "reshuffled), exactly ONE `ArrowEvalPython` match-kernel node in the "
-        "final plan (the nondeterministic fence stops Catalyst duplicating "
-        "the kernel below the pushed tf>0 filter), and the lazily "
-        "cross-joined 1-row derived-list stats (single Spark job).",
-        fmt(near)))
 
     from pyspark.sql import functions as F
     docids = r.docid_url_map()
@@ -134,15 +113,16 @@ def main() -> None:
     indri = e.search("#WAND( 0.6 haceba4 0.4 #AND( badiba5 fobaba3 ) )",
                      model="indri", mu=1000.0, lam=0.4, k=10)
     sections.append((
-        "Indri #WAND (structured query, planner path)",
-        "What to look for: per-term score legs reading ONE shared decoded "
-        "postings scan, full-outer-folded on docid (Indri scores unseen "
-        "terms via the default score, so the candidate set is the UNION of "
-        "the operand posting lists — bounded by sum(df) of the query terms, "
-        "never n_docs: absent docs score background for every term and "
-        "cannot enter the top k); doc_lens_wide joined once for default "
-        "scores; stats (ctf, fieldlen) arrive via 1-row broadcast joins; "
-        "final `TakeOrderedAndProject`.",
+        "Indri #WAND (structured query, stripe path)",
+        "What to look for: the same one-stage plan as the bag-of-words "
+        "query — the serve-cache scan filtered to the query's terms "
+        "feeding `FlatMapGroupsInPandas`, whose stripe task evaluates the "
+        "whole operator tree (query/planner.py Program) with dense numpy "
+        "accumulators, Indri default scores included; then "
+        "`TakeOrderedAndProject`. A #SYN/#NEAR/#WINDOW list feeding BM25 "
+        "idf or Indri smoothing adds a `BroadcastNestedLoopJoin` of the "
+        "derived-list pre-pass onto the skeleton rows; no other join or "
+        "exchange appears.",
         fmt(indri)))
 
     from searchengines_spark import links as L
