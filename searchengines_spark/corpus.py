@@ -208,38 +208,6 @@ def extract_fields(url: str, html_bytes: bytes) -> dict[str, str]:
     return out
 
 
-FIELD_DOCS_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("field", T.StringType(), False),
-    T.StructField("tokens", T.ArrayType(T.StringType(), containsNull=True), False),
-])
-
-
-def pages_to_field_docs(pages: DataFrame, stemmer: str = "s") -> DataFrame:
-    """pages -> long (url, field, tokens) with FULL-mode tokenization.
-    Non-'en' pages are filtered before indexing (engine policy)."""
-    import pandas as pd
-
-    from .tokenizer import get_stemmer, tokenize_full
-
-    get_stemmer(stemmer)  # validate on the driver, not per-task
-
-    def explode_fields(batches):
-        for pdf in batches:
-            recs = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                fields = extract_fields(url, bytes(html))
-                for f in FIELDS:
-                    recs.append((url, f, tokenize_full(fields[f], stemmer=stemmer)))
-            yield pd.DataFrame(recs, columns=["url", "field", "tokens"])
-
-    return (
-        pages.filter(F.col("lang") == "en")
-        .select("url", "html")
-        .mapInPandas(explode_fields, FIELD_DOCS_SCHEMA)
-    )
-
-
 TOKENIZED_SCHEMA = T.StructType([
     T.StructField("docid", T.LongType(), False),
     T.StructField("field", T.StringType(), False),

@@ -44,6 +44,7 @@ import math
 import os
 import time
 from collections import OrderedDict
+from functools import cached_property
 
 import numpy as np
 
@@ -85,6 +86,36 @@ def term_bucket_py(term: str) -> int:
     import hashlib
 
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:8], 16) % N_BUCKETS
+
+
+def read_term_rows(table_dir: str, pairs, columns: list[str],
+                   filters=()) -> dict[tuple[str, str], list[tuple]]:
+    """Rows of the given (field, term) pairs from a bucket-partitioned
+    index table (``blocks/``, ``term_stats/``), read with pyarrow — no
+    Spark job, on the driver or inside a task. Per term bucket, one read
+    of every file in ``bucket=N/`` (an append adds files there) with a
+    ``term IN (...)`` filter that parquet row-group stats prune, plus
+    ``filters``; pyarrow's default ignore_prefixes skip ``_SUCCESS`` and
+    ``.crc`` files. Returns pair -> [tuple of ``columns``] for the exact
+    (field, term) pairs; a pair with no rows is absent."""
+    import pyarrow.parquet as pq
+
+    by_bucket: dict[int, set] = {}
+    for pair in pairs:
+        by_bucket.setdefault(term_bucket_py(pair[1]), set()).add(pair)
+    names = ["field", "term", *columns]
+    out: dict[tuple[str, str], list[tuple]] = {}
+    for bucket, want in sorted(by_bucket.items()):
+        path = os.path.join(table_dir, f"bucket={bucket}")
+        if not os.path.isdir(path):
+            continue
+        tbl = pq.read_table(
+            path, columns=names,
+            filters=[("term", "in", sorted({t for _, t in want})), *filters])
+        for f, t, *vals in zip(*(tbl.column(c).to_pylist() for c in names)):
+            if (f, t) in want:
+                out.setdefault((f, t), []).append(tuple(vals))
+    return out
 
 
 def write_term_stats(term_stats: DataFrame, path: str) -> None:
@@ -801,7 +832,8 @@ def build_index(
 
 
 class IndexReader:
-    """Query-side handle: broadcast stats + pruned block scans."""
+    """Query-side handle: driver-side metadata lookups (field stats, term
+    stats, cold blocks, tombstones) and the cached serve layout."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  snapshot: int | None = None):
@@ -828,13 +860,18 @@ class IndexReader:
                     f"{index_dir}: compaction in progress/crashed and no "
                     "committed snapshot exists — re-run compact() to repair")
             index_dir = snapshot_dir(index_dir, int(snaps[-1]["version"]))
+        import pyarrow.parquet as pq
+
         self.spark = spark
         self.index_dir = index_dir
-        fs = spark.read.parquet(os.path.join(index_dir, "field_stats")).collect()
+        # metadata is read on the driver with pyarrow, so opening a reader
+        # starts no Spark job (the Lucene term-dictionary analog,
+        # Idx.java:60-227); the Spark frames over blocks/ and term_stats/
+        # are built on first use (_blocks, _term_stats)
+        fs = pq.read_table(os.path.join(index_dir, "field_stats"),
+                           columns=["field", "doc_count", "sum_len"]).to_pylist()
         self.field_stats = {r["field"]: (int(r["doc_count"]), int(r["sum_len"])) for r in fs}
         self.n_docs = self.field_stats.pop("__docs__")[0]
-        self._blocks = spark.read.parquet(os.path.join(index_dir, "blocks"))
-        self._term_stats = spark.read.parquet(os.path.join(index_dir, "term_stats"))
         self._docids = None
         self._serve_blocks = None
         try:
@@ -873,6 +910,16 @@ class IndexReader:
         # must not grow driver memory with the distinct-term count.
         self._cold_memo: "OrderedDict[tuple[str, str], list[tuple]]" = OrderedDict()
 
+    @cached_property
+    def _blocks(self) -> DataFrame:
+        """Spark frame over blocks/: the serve-cache fill, blocks_for."""
+        return self.spark.read.parquet(os.path.join(self.index_dir, "blocks"))
+
+    @cached_property
+    def _term_stats(self) -> DataFrame:
+        """Spark frame over term_stats/: the append stats merge."""
+        return self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
+
     @property
     def norms_dir(self) -> str:
         """Docid-sorted doc_lens_wide — the norms sidecar serve kernels
@@ -906,18 +953,17 @@ class IndexReader:
         return self.field_stats[field][0]
 
     def term_stats(self, terms: list[tuple[str, str]]) -> dict[tuple[str, str], tuple[int, int]]:
-        """(field, term) -> (df, ctf); missing terms absent. Memoized, so a
-        query whose terms were all seen before costs zero Spark jobs here."""
+        """(field, term) -> (df, ctf); missing terms absent. Unseen pairs
+        are read from term_stats/ on the driver (read_term_rows, one pyarrow
+        read per term bucket, no Spark job); memoized, so a query whose
+        terms were all seen before reads nothing."""
         missing = sorted({t for t in terms if t not in self._ts_memo})
         if missing:
-            buckets = sorted({term_bucket_py(t) for _, t in missing})
-            conds = F.col("bucket").isin(buckets) & F.struct("field", "term").isin(
-                [F.struct(F.lit(f), F.lit(t)) for f, t in missing]
-            )
-            found = {(r["field"], r["term"]): (int(r["df"]), int(r["ctf"]))
-                     for r in self._term_stats.filter(conds).collect()}
+            found = read_term_rows(os.path.join(self.index_dir, "term_stats"),
+                                   missing, ["df", "ctf"])
             for key in missing:
-                self._ts_memo[key] = found.get(key)
+                rows = found.get(key)
+                self._ts_memo[key] = (int(rows[0][0]), int(rows[0][1])) if rows else None
         return {t: v for t in terms if (v := self._ts_memo[t]) is not None}
 
     def cold_blocks(self, terms: list[tuple[str, str]]
@@ -926,9 +972,10 @@ class IndexReader:
         as raw tuples (min_docid, max_docid, max_tf, min_doclen, max_score,
         docids_z, tfs_z, positions_z) — callers derive score bounds under
         their own (k1, b); positions_z is b"" on a store_positions=False
-        index. Memoized per reader like _ts_memo, so a repeat query pays
-        zero Spark jobs here, and provably-empty lookups are skipped
-        outright:
+        index. Read from blocks/ on the driver (read_term_rows with
+        ``striped == False``, no Spark job) and memoized per reader like
+        _ts_memo, so a repeat query reads nothing, and provably-empty
+        lookups skip the read outright:
 
         - a pair with no stats row has no postings at all (term_stats and
           blocks derive from the same doc_terms table), and
@@ -936,13 +983,13 @@ class IndexReader:
           from the LIVE df at encode time (encode_blocks), so df >=
           salt_min_df means every one of the pair's blocks is striped.
 
-        The common all-hot-terms query therefore never pays the cold scan
-        (measured ~0.5 s/query at 1M pages before this). Appends void the
-        df inference — a term can cross the threshold leaving older
-        unstriped blocks behind — so appended indexes scan every unseen
-        pair that has postings; compact() re-encodes with current stats,
-        but the appends history is retained for segment tie-breaks, so the
-        conservative gate stays off until a fresh build."""
+        The common all-hot-terms query therefore never pays the cold read.
+        Appends void the df inference — a term can cross the threshold
+        leaving older unstriped blocks behind — so appended indexes read
+        every unseen pair that has postings; compact() re-encodes with
+        current stats, but the appends history is retained for segment
+        tie-breaks, so the conservative gate stays off until a fresh
+        build."""
         pairs = sorted(set(terms))
         found: dict[tuple[str, str], list[tuple]] = {}
         unseen = []
@@ -960,23 +1007,15 @@ class IndexReader:
             else:
                 candidates = [p for p in unseen
                               if 0 < stats.get(p, (0, 0))[0] < self.salt_min_df]
-            got: dict[tuple[str, str], list[tuple]] = {}
-            if candidates:
-                rows = (self.blocks_for(candidates)
-                        .filter(~F.col("striped"))
-                        .select("field", "term", "min_docid", "max_docid",
-                                "max_tf", "min_doclen", "max_score",
-                                "docids_z", "tfs_z", "positions_z")
-                        .collect())
-                for r in rows:
-                    got.setdefault((r["field"], r["term"]), []).append(
-                        (int(r["min_docid"]), int(r["max_docid"]),
-                         int(r["max_tf"]), int(r["min_doclen"]),
-                         float(r["max_score"]),
-                         bytes(r["docids_z"]), bytes(r["tfs_z"]),
-                         bytes(r["positions_z"] or b"")))
+            got = read_term_rows(
+                os.path.join(self.index_dir, "blocks"), candidates,
+                ["min_docid", "max_docid", "max_tf", "min_doclen", "max_score",
+                 "docids_z", "tfs_z", "positions_z"],
+                [("striped", "=", False)]) if candidates else {}
             for p in unseen:
-                v = got.get(p, [])
+                v = [(int(mn), int(mx), int(mtf), int(mdl), float(ms),
+                      bytes(dz), bytes(tz), bytes(pz or b""))
+                     for mn, mx, mtf, mdl, ms, dz, tz, pz in got.get(p, ())]
                 found[p] = v
                 self._cold_memo[p] = v
             while len(self._cold_memo) > COLD_MEMO_CAP:
@@ -1146,23 +1185,32 @@ class IndexReader:
             wide = wide.withColumnRenamed(f, f"len_{f}")
         return wide
 
-    def deletes_df(self) -> DataFrame | None:
-        """Tombstoned docids (merge-on-read deletes), or None when the index
-        has none. Bounded by deletes since the last compaction — compaction
-        removes tombstoned docs physically and clears this table."""
+    def _deletes_dir(self) -> str | None:
+        """The deletes/ table, or None when the index has no tombstones.
+        Bounded by deletes since the last compaction — compaction removes
+        tombstoned docs physically and clears this table."""
         p = os.path.join(self.index_dir, "deletes")
         if os.path.isdir(p) and any(f.endswith(".parquet") for f in os.listdir(p)):
-            return self.spark.read.parquet(p).select("docid").distinct()
+            return p
         return None
+
+    def deletes_df(self) -> DataFrame | None:
+        """Tombstoned docids (merge-on-read deletes), or None when the index
+        has none."""
+        p = self._deletes_dir()
+        return self.spark.read.parquet(p).select("docid").distinct() if p else None
 
     def deleted_set(self) -> frozenset | None:
         """Tombstones as a driver-side frozenset for the WAND kernel
-        broadcast. Cached per reader (readers are per-index-version)."""
+        broadcast, read with pyarrow (no Spark job). Cached per reader
+        (readers are per-index-version)."""
         if not hasattr(self, "_deleted_set"):
-            df = self.deletes_df()
+            import pyarrow.parquet as pq
+
+            p = self._deletes_dir()
             self._deleted_set = (
-                frozenset(int(r["docid"]) for r in df.collect()) if df is not None
-                else None)
+                frozenset(pq.read_table(p, columns=["docid"]).column("docid").to_pylist())
+                if p is not None else None)
         return self._deleted_set
 
     def attrs(self) -> DataFrame:

@@ -430,10 +430,10 @@ def delete_pages(spark: SparkSession, index_dir: str, urls: DataFrame) -> dict:
     if prior is not None:  # idempotent: don't re-tombstone
         ids = ids.join(prior, "docid", "left_anti")
     if ids.limit(1).count() == 0:  # nothing new to tombstone
-        return {"n_deleted_total": int(prior.count()) if prior is not None else 0,
+        return {"n_deleted_total": len(reader.deleted_set() or ()),
                 "secs": time.time() - t0, "snapshot": None}
     ids.write.mode("append").parquet(os.path.join(index_dir, "deletes"))
-    n_del = IndexReader(spark, index_dir).deletes_df().count()
+    n_del = len(IndexReader(spark, index_dir).deleted_set())
     with open(os.path.join(index_dir, "MANIFEST.json")) as f:
         manifest = json.load(f)
     manifest["n_deleted"] = int(n_del)

@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from .index.build import IndexReader
 from .tokenizer import tokenize_full
 
-FIELDS4 = ["body", "title", "url", "keywords_no", "inlink"]  # order of f5-f16
 FEATURE_FIELDS = ["body", "title", "url", "inlink"]
 N_FEATURES = 20
 

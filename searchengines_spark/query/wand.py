@@ -72,7 +72,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..index import codec
-from ..index.build import IndexReader
+from ..index.build import IndexReader, read_term_rows
 
 
 class _Inline:
@@ -539,34 +539,20 @@ class _Stripe:
         return self._pos[pair]
 
 
-def _read_striped_positions(blocks_dir: str, pairs: dict, salt: int,
+def _read_striped_positions(blocks_dir: str, pairs, salt: int,
                             pcodec: str) -> dict:
     """Striped blocks of the given (field, term) pairs in one stripe, read
-    from the index files the way index/urlmap.py and index/norms.py read
-    in-task: bucket directory, then parquet filters on term and salt.
-    pairs: (field, term) -> term bucket. Returns pair -> [(docids, tfs,
-    positions, counts)]. The serve cache holds no position payloads."""
-    import pyarrow.parquet as pq
-
-    by_bucket: dict[int, set] = {}
-    for pair, bucket in pairs.items():
-        by_bucket.setdefault(bucket, set()).add(pair)
+    in-task from the index files (read_term_rows with a salt filter).
+    Returns pair -> [(docids, tfs, positions, counts)]. The serve cache
+    holds no position payloads."""
     out: dict = {}
-    for bucket, want in sorted(by_bucket.items()):
-        path = os.path.join(blocks_dir, f"bucket={bucket}")
-        if not os.path.isdir(path):
-            continue
-        tbl = pq.read_table(
-            path, columns=["field", "term", "docids_z", "tfs_z", "positions_z"],
-            filters=[("term", "in", sorted({t for _, t in want})),
-                     ("salt", "=", salt), ("striped", "=", True)])
-        for f, t, dz, tz, pz in zip(*(tbl.column(c).to_pylist() for c in
-                                      ("field", "term", "docids_z", "tfs_z",
-                                       "positions_z"))):
-            if (f, t) in want:
-                d, tf = codec.decode_block(dz, tz, pcodec)
-                v, c = codec.decode_positions_flat(pz, len(d))
-                out.setdefault((f, t), []).append((d, tf, v, c))
+    for pair, rows in read_term_rows(
+            blocks_dir, pairs, ["docids_z", "tfs_z", "positions_z"],
+            [("salt", "=", salt), ("striped", "=", True)]).items():
+        for dz, tz, pz in rows:
+            d, tf = codec.decode_block(dz, tz, pcodec)
+            v, c = codec.decode_positions_flat(pz, len(d))
+            out.setdefault(pair, []).append((d, tf, v, c))
     return out
 
 
@@ -607,8 +593,6 @@ def wand_topk_batch_local(reader: IndexReader,
         raise ValueError(f"unknown stripe strategy {strategy!r}; "
                          f"expected one of {sorted(_STRATEGIES)}")
     kernel = _STRATEGIES[strategy]
-    from ..index.build import term_bucket_py
-
     flat = {q: (list(v[0]), v[1]) for q, v in queries.items()
             if isinstance(v, tuple)}
     progs = {q: v for q, v in queries.items() if not isinstance(v, tuple)}
@@ -630,8 +614,8 @@ def wand_topk_batch_local(reader: IndexReader,
     # cold_blocks inference), so its stripes skip the file read
     all_cold = reader.salt_min_df_known and not reader.manifest.get("appends")
     pos_df = reader.term_stats(sorted(pos_pairs))
-    pos_buckets = {p: term_bucket_py(p[1]) for p in pos_pairs
-                   if not (all_cold and pos_df.get(p, (0, 0))[0] < reader.salt_min_df)}
+    pos_striped = [p for p in sorted(pos_pairs)
+                   if not (all_cold and pos_df.get(p, (0, 0))[0] < reader.salt_min_df)]
     cuts = reader.segment_cuts()
     idf_of: dict[tuple[str, str], float] = {}
     for f, t in flat_pairs:
@@ -649,11 +633,11 @@ def wand_topk_batch_local(reader: IndexReader,
                                                      / avgs[key[0]]))
         return float(row_maxscore)
 
-    # cold (unstriped, low-df) blocks: memoized per reader, and skipped
-    # with ZERO Spark jobs when the stats prove none exist (the common
-    # all-hot-terms query) — see IndexReader.cold_blocks. Bounds are
-    # derived here because they depend on THIS query's (k1, b); position
-    # payloads ship only for positional leaves.
+    # cold (unstriped, low-df) blocks: read on the driver with pyarrow,
+    # memoized per reader, and not read at all when the stats prove none
+    # exist (the common all-hot-terms query) — see IndexReader.cold_blocks.
+    # Bounds are derived here because they depend on THIS query's (k1, b);
+    # position payloads ship only for positional leaves.
     cold: dict[tuple[str, str], list] = {
         key: [(mn, mx, _ub(key, ms, mtf, mdl), dz, tz,
                pz if key in pos_pairs else b"")
@@ -709,8 +693,8 @@ def wand_topk_batch_local(reader: IndexReader,
                     g["min_docid"], g["max_docid"], ubs,
                     g["docids_z"], g["tfs_z"])
             ]
-        pos_parts = (_read_striped_positions(blocks_dir, pos_buckets, salt, pcodec)
-                     if pos_buckets else {})
+        pos_parts = (_read_striped_positions(blocks_dir, pos_striped, salt, pcodec)
+                     if pos_striped else {})
         for ckey, blks in b_cold.value.items():
             for mn, mx, ub, dz, tz, pz in blks:
                 if mx < lo or mn >= hi:
@@ -837,7 +821,7 @@ def wand_topk(reader: IndexReader, terms: list[str], field: str = "body",
     Delegates to the multi-query kernel with a batch of one. The global
     merge over the url-resolved local rows compiles to
     TakeOrderedAndProject (per-partition heap + driver merge, no shuffle),
-    so a warm single query is ONE Spark job end-to-end."""
+    so a single query on a filled serve cache is ONE Spark job end-to-end."""
     local = wand_topk_batch_local(
         reader, {"q": (list(terms), field)}, k=k, k1=k1, b=b,
         require_all=require_all, recompute_bounds=recompute_bounds,

@@ -46,7 +46,6 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..corpus import PAGES_SCHEMA
@@ -299,11 +298,6 @@ def write_warc(pages: DataFrame, out_dir: str, compress: bool = True,
     out = (pages.select("url", "warc_ts", "html", "lang")
            .mapInPandas(dump, _WRITE_RESULT).collect())
     return [r.asDict() for r in out]
-
-
-def pages_from_warc_entry(spark: SparkSession, warc_dir: str) -> DataFrame:
-    """Convenience: read + en-filter, the indexing front door."""
-    return read_warc(spark, warc_dir).filter(F.col("lang") == "en")
 
 
 # --------------------------------------------------------------------------

@@ -13,6 +13,9 @@
   (score desc, url asc);
 - a warm repeat of every benchmark query form starts one Spark job, two
   when a derived list's df/ctf feeds BM25 or Indri;
+- index metadata is read on the driver: opening a reader and reading its
+  tombstones start no Spark job, and a first-touch query of every
+  benchmark form starts only its stripe job (plus the pre-pass);
 - closing a superseded reader leaves the newer reader's serve cache
   registered and persisted.
 """
@@ -27,7 +30,7 @@ from pyspark import StorageLevel
 from searchengines_spark.corpus import FIELDS, PAGES_SCHEMA, extract_fields
 from searchengines_spark.engine import Engine
 from searchengines_spark.index import IndexReader, build_index
-from searchengines_spark.index.incremental import append_pages
+from searchengines_spark.index.incremental import append_pages, delete_pages
 from searchengines_spark.oracle import OracleIndex, search as oracle_search
 from searchengines_spark.query.wand import wand_topk
 from searchengines_spark.tokenizer import tokenize_full
@@ -69,6 +72,22 @@ def _jobs(spark, fn):
     return out, len(tracker().getJobIdsForGroup(None) or []) - before
 
 
+def _reads(monkeypatch) -> list[str]:
+    """Records the table of every read_term_rows call (the driver-side
+    read of a bucket-partitioned index table) from here on."""
+    from searchengines_spark.index import build
+
+    calls: list[str] = []
+    real = build.read_term_rows
+
+    def counting(table_dir, *a, **kw):
+        calls.append(os.path.basename(table_dir))
+        return real(table_dir, *a, **kw)
+
+    monkeypatch.setattr(build, "read_term_rows", counting)
+    return calls
+
+
 @pytest.fixture(scope="module")
 def cold_index(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("coldmemo")
@@ -98,15 +117,18 @@ def test_absent_term_skips_cold_scan(spark, cold_index):
     assert got == {} and n == 0
 
 
-def test_cold_lookup_fetched_once_then_memoized(spark, cold_index):
+def test_cold_lookup_fetched_once_then_memoized(spark, cold_index, monkeypatch):
     reader = IndexReader(spark, cold_index)
     pairs = [("body", "coldtail"), ("body", "hotone")]
     reader.term_stats(pairs)
+    reads = _reads(monkeypatch)
     got, n1 = _jobs(spark, lambda: reader.cold_blocks(pairs))
-    assert n1 >= 1  # the one pruned scan for the genuinely-cold pair
+    # one driver-side read for the genuinely-cold pair, no Spark job
+    assert reads == ["blocks"] and n1 == 0
     assert set(got) == {("body", "coldtail")} and len(got[("body", "coldtail")]) >= 1
     got2, n2 = _jobs(spark, lambda: reader.cold_blocks(pairs))
-    assert got2 == got and n2 == 0  # memo hit: zero jobs on repeat
+    assert got2 == got and n2 == 0  # memo hit: nothing read on repeat
+    assert reads == ["blocks"]
 
 
 def test_wand_identity_with_cold_terms(spark, cold_index):
@@ -165,7 +187,7 @@ def test_cold_memo_lru_eviction(spark, tmp_path, monkeypatch):
     """The cold memo is LRU-bounded (entries hold compressed posting
     bytes): with the cap shrunk to 2, querying 3 distinct cold terms must
     keep the memo at <= 2 entries, and a re-query of the evicted term
-    must refetch (>= 1 job) and return the identical blocks."""
+    must read its blocks again and return the identical blocks."""
     from searchengines_spark.index import build
 
     # 3 cold terms (df 2 each < salt_min_df 4), one hot term
@@ -188,12 +210,14 @@ def test_cold_memo_lru_eviction(spark, tmp_path, monkeypatch):
     assert len(reader._cold_memo) <= 2
     assert pairs[0] not in reader._cold_memo  # oldest evicted
 
-    # evicted pair refetches (jobs > 0) and is block-identical
+    # evicted pair is read again (once, on the driver) and is
+    # block-identical
+    reads = _reads(monkeypatch)
     got, n = _jobs(spark, lambda: reader.cold_blocks([pairs[0]]))
-    assert n >= 1 and got[pairs[0]] == first[pairs[0]]
-    # most-recent pair is still a 0-job memo hit
+    assert reads == ["blocks"] and n == 0 and got[pairs[0]] == first[pairs[0]]
+    # most-recent pair is still a memo hit: nothing read
     got2, n2 = _jobs(spark, lambda: reader.cold_blocks([pairs[2]]))
-    assert n2 == 0 and got2[pairs[2]] == first[pairs[2]]
+    assert reads == ["blocks"] and n2 == 0 and got2[pairs[2]] == first[pairs[2]]
 
 
 def test_close_keeps_newer_readers_serve_cache(spark, cold_index):
@@ -269,3 +293,57 @@ def test_warm_query_forms_start_one_stripe_job(spark, tiny_index):
         derived = model in ("bm25", "indri") and ("#NEAR" in q or "#WINDOW" in q
                                                   or "#SYN" in q)
         assert n == (2 if derived else 1), (q, model, n)
+
+
+def test_reader_open_starts_no_job(spark, tiny_index):
+    """Opening a reader and a term-stats lookup start no Spark job, and
+    both read what a Spark scan of the same tables reads."""
+    d = tiny_index.index_dir
+    reader, n = _jobs(spark, lambda: IndexReader(spark, d))
+    assert n == 0
+    fs = {r["field"]: (r["doc_count"], r["sum_len"])
+          for r in spark.read.parquet(os.path.join(d, "field_stats")).collect()}
+    assert reader.n_docs == fs.pop("__docs__")[0]
+    assert reader.field_stats == fs
+    ts = spark.read.parquet(os.path.join(d, "term_stats"))
+    want = {(r["field"], r["term"]): (r["df"], r["ctf"])
+            for r in ts.filter("term IN ('bababa0', 'haceba4')").collect()}
+    pairs = sorted(want) + [("body", "zzzabsent"), ("nofield", "bababa0")]
+    got, n = _jobs(spark, lambda: reader.term_stats(pairs))
+    assert n == 0 and got == want and len(want) >= 2
+
+
+def test_first_touch_query_forms_start_one_stripe_job(spark, tiny_index,
+                                                      tiny_oracle):
+    """A fresh reader's term stats and cold blocks are read on the driver,
+    so the first query of every benchmark form, with terms this reader
+    never saw, starts only its stripe job — two when a #NEAR/#WINDOW list
+    feeds BM25 idf — and ranks like the oracle."""
+    from searchengines_spark.corpus import VOCAB
+
+    forms, indri_kw = _forms()
+    reader = IndexReader(spark, tiny_index.index_dir)
+    reader.serve_blocks()
+    eng = Engine(reader)
+    for i, (text, model) in enumerate(forms):
+        q = text.format(*VOCAB[30 + 3 * i:33 + 3 * i], w=0.3, v=0.7)
+        kw = indri_kw if model == "indri" else {}
+        got, n = _jobs(spark, lambda: eng.search(q, model, 10, **kw).collect())
+        derived = model in ("bm25", "indri") and ("#NEAR" in q or "#WINDOW" in q
+                                                  or "#SYN" in q)
+        assert n == (2 if derived else 1), (q, model, n)
+        want = oracle_search(tiny_oracle, q, model, 10, **kw)
+        _assert_same([(r["url"], r["score"]) for r in got], want)
+
+
+def test_deleted_set_starts_no_job(spark, tmp_path):
+    bodies = [f"word{i % 3} filler{i}" for i in range(6)]
+    d = str(tmp_path / "idx")
+    pages = _pages(spark, bodies)
+    build_index(spark, pages, d, n_salts=2)
+    delete_pages(spark, d, pages.filter("url < 'https://cm.org/p002'").select("url"))
+    reader = IndexReader(spark, d)
+    got, n = _jobs(spark, reader.deleted_set)
+    assert n == 0
+    assert got == {r["docid"] for r in reader.deletes_df().collect()}
+    assert len(got) == 2

@@ -59,26 +59,6 @@ def main() -> None:
         "selected columns.",
         fmt(scan)))
 
-    from pyspark.sql import functions as F
-
-    from searchengines_spark.index.build import term_bucket_py
-
-    ts_probe = r._term_stats.filter(
-        F.col("bucket").isin([term_bucket_py("haceba4")])
-        & F.struct("field", "term").isin(
-            [F.struct(F.lit("body"), F.lit("haceba4"))]))
-    sections.append((
-        "Vocab (term_stats) point lookup — one query term",
-        "What to look for: `PartitionFilters: [bucket IN (...)]` — the stats "
-        "table is written partitionBy(bucket), one term-sorted file per "
-        "bucket, so a df/ctf probe reads one directory and prunes row "
-        "groups by the term min/max instead of scanning a vocabulary that "
-        "grows with the corpus. First lookup per reader only: results are "
-        "memoized (IndexReader._ts_memo), and cold-block lookups are "
-        "skipped entirely when these stats prove none exist "
-        "(IndexReader.cold_blocks).",
-        fmt(ts_probe)))
-
     wand = e.search("haceba4 badiba5", k=10)
     sections.append((
         "Stripe top-k serving path (every query class)",
