@@ -118,6 +118,17 @@ def read_term_rows(table_dir: str, pairs, columns: list[str],
     return out
 
 
+def read_field_stats(index_dir: str) -> dict[str, tuple[int, int]]:
+    """field -> (doc_count, sum_len) from ``field_stats/``, read with
+    pyarrow on the driver (no Spark job). The ``__docs__`` row carries
+    (n_docs, 0)."""
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(os.path.join(index_dir, "field_stats"),
+                         columns=["field", "doc_count", "sum_len"]).to_pylist()
+    return {r["field"]: (int(r["doc_count"]), int(r["sum_len"])) for r in rows}
+
+
 def write_term_stats(term_stats: DataFrame, path: str) -> None:
     """Lookup-optimized layout for the vocab table: hash-repartition on the
     term bucket (every bucket's rows land in ONE task regardless of session
@@ -202,7 +213,8 @@ SERVE_TASK_BYTES = 2 << 20
 
 
 def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
-                  avg_len: dict[str, float], n_docs: int, salt_range: int,
+                  field_stats: dict[str, tuple[int, int]], n_docs: int,
+                  salt_range: int,
                   k1: float = 1.2, b: float = 0.75,
                   salt_min_df: int = SALT_MIN_DF,
                   payload_codec: str = "varint",
@@ -228,6 +240,8 @@ def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
     concatenation preserves global docid order — merge is concatenation."""
     import pyarrow as pa
 
+    avg_len = {f: (s / c if c else 1.0) for f, (c, s) in field_stats.items()
+               if f != "__docs__"}
     b_avg = spark.sparkContext.broadcast(avg_len)
     b_n_docs = int(n_docs)
 
@@ -694,7 +708,6 @@ def build_index(
         _lap("stats")
 
     term_stats = spark.read.parquet(term_stats_path)
-    field_stats = spark.read.parquet(field_stats_path)
 
     # -- stage 4: salted block encode -> partial segments --------------------
     segments_path = os.path.join(index_dir, "blocks_segments")
@@ -758,9 +771,8 @@ def build_index(
             if k in pinned:
                 metrics[k] = pinned[k]
     else:
-        fs = {r["field"]: (r["doc_count"], r["sum_len"]) for r in field_stats.collect()}
-        avg_len = {f: (s / c if c else 1.0) for f, (c, s) in fs.items() if f != "__docs__"}
-        blocks = encode_blocks(spark, doc_terms, term_stats, avg_len, int(n_docs),
+        blocks = encode_blocks(spark, doc_terms, term_stats,
+                               read_field_stats(index_dir), int(n_docs),
                                salt_range, bm25_k1, bm25_b, salt_min_df,
                                payload_codec=payload_codec,
                                store_positions=store_positions)
@@ -860,17 +872,13 @@ class IndexReader:
                     f"{index_dir}: compaction in progress/crashed and no "
                     "committed snapshot exists — re-run compact() to repair")
             index_dir = snapshot_dir(index_dir, int(snaps[-1]["version"]))
-        import pyarrow.parquet as pq
-
         self.spark = spark
         self.index_dir = index_dir
         # metadata is read on the driver with pyarrow, so opening a reader
         # starts no Spark job (the Lucene term-dictionary analog,
         # Idx.java:60-227); the Spark frames over blocks/ and term_stats/
         # are built on first use (_blocks, _term_stats)
-        fs = pq.read_table(os.path.join(index_dir, "field_stats"),
-                           columns=["field", "doc_count", "sum_len"]).to_pylist()
-        self.field_stats = {r["field"]: (int(r["doc_count"]), int(r["sum_len"])) for r in fs}
+        self.field_stats = read_field_stats(index_dir)
         self.n_docs = self.field_stats.pop("__docs__")[0]
         self._docids = None
         self._serve_blocks = None

@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus import assign_docids, pages_to_tokenized
-from .build import IndexReader, doc_terms_dir, encode_blocks, term_bucket_col
+from .build import (IndexReader, doc_terms_dir, encode_blocks, read_field_stats,
+                    term_bucket_col)
 
 
 
@@ -241,14 +242,12 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
 
     # encode ONLY the delta postings; new docids >= max+1 land in new salt
     # stripes, so appended block files are docid-range disjoint from old ones
-    fs = spark.read.parquet(os.path.join(index_dir, "field_stats")).collect()
-    avg_len = {r["field"]: (r["sum_len"] / r["doc_count"] if r["doc_count"] else 1.0)
-               for r in fs if r["field"] != "__docs__"}
     salt_range = manifest.get("salt_range") or max(1, math.ceil(int(manifest["n_docs"]) / 32))
     new_ts = spark.read.parquet(os.path.join(index_dir, "term_stats"))
     from .build import SALT_MIN_DF
 
-    blocks = encode_blocks(spark, delta_terms, new_ts, avg_len, n_docs,
+    blocks = encode_blocks(spark, delta_terms, new_ts,
+                           {f: (c, s) for f, c, s in merged_fs}, n_docs,
                            salt_range, bm25_k1, bm25_b,
                            salt_min_df=int(manifest.get("salt_min_df", SALT_MIN_DF)),
                            payload_codec=manifest.get("payload_codec", "varint"),
@@ -561,15 +560,13 @@ def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
     manifest["docid_space"] = docid_space
     if salt_range is None:  # explicit override keeps existing stripe cuts
         salt_range = max(1, math.ceil(docid_space / n_salts))
-    fs = spark.read.parquet(os.path.join(index_dir, "field_stats")).collect()
-    avg_len = {r["field"]: (r["sum_len"] / r["doc_count"] if r["doc_count"] else 1.0)
-               for r in fs if r["field"] != "__docs__"}
     doc_terms = spark.read.parquet(doc_terms_dir(index_dir))
     term_stats = spark.read.parquet(os.path.join(index_dir, "term_stats"))
 
     if store_positions is None:
         store_positions = manifest.get("store_positions", True)
-    blocks = encode_blocks(spark, doc_terms, term_stats, avg_len, n_docs,
+    blocks = encode_blocks(spark, doc_terms, term_stats,
+                           read_field_stats(index_dir), n_docs,
                            salt_range, bm25_k1, bm25_b, salt_min_df,
                            payload_codec=manifest.get("payload_codec", "varint"),
                            store_positions=store_positions)
@@ -684,15 +681,13 @@ def compact_buckets(spark: SparkSession, index_dir: str,
     with open(marker, "w") as f:
         f.write(str(t0))
 
-    fs = spark.read.parquet(os.path.join(index_dir, "field_stats")).collect()
-    avg_len = {r["field"]: (r["sum_len"] / r["doc_count"] if r["doc_count"] else 1.0)
-               for r in fs if r["field"] != "__docs__"}
     bucket_filter = term_bucket_col(F.col("term")).isin(buckets)
     doc_terms = spark.read.parquet(doc_terms_dir(index_dir)).filter(bucket_filter)
     term_stats = spark.read.parquet(
         os.path.join(index_dir, "term_stats")).filter(F.col("bucket").isin(buckets))
     blocks = encode_blocks(
-        spark, doc_terms, term_stats, avg_len, n_docs, salt_range, k1, b,
+        spark, doc_terms, term_stats, read_field_stats(index_dir), n_docs,
+        salt_range, k1, b,
         salt_min_df=int(manifest.get("salt_min_df", SALT_MIN_DF)),
         payload_codec=manifest.get("payload_codec", "varint"),
         store_positions=manifest.get("store_positions", True))
@@ -712,19 +707,14 @@ def compact_buckets(spark: SparkSession, index_dir: str,
 
     # serving layout: dynamic partition overwrite swaps ONLY the bucket
     # directories present in `blocks`; untouched bucket dirs keep their files
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            blocks.repartitionByRange(
-                max(spark.sparkContext.defaultParallelism, 16),
-                "bucket", "field", "term", "salt")
-            .sortWithinPartitions("bucket", "field", "term", "salt", "min_docid")
-            .write.mode("overwrite").partitionBy("bucket")
-            .parquet(os.path.join(index_dir, "blocks"))
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    (
+        blocks.repartitionByRange(
+            max(spark.sparkContext.defaultParallelism, 16),
+            "bucket", "field", "term", "salt")
+        .sortWithinPartitions("bucket", "field", "term", "salt", "min_docid")
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket").parquet(os.path.join(index_dir, "blocks"))
+    )
 
     remaining_stale: list[int] = []
     if manifest.get("stale_block_bounds"):

@@ -79,153 +79,6 @@ def stream_deletes(spark: SparkSession, watch_dir: str, index_dir: str,
     return writer.start()
 
 
-# --------------------------------------------------------------------------
-# Event-stream operators: watermarked windowed aggregation + a custom
-# stateful operator (gap sessionization) via applyInPandasWithState.
-# --------------------------------------------------------------------------
-
-EVENTS_DDL = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-
-
-def stream_event_window_stats(spark: SparkSession, src_dir: str, out_dir: str,
-                              checkpoint_dir: str, available_now: bool = True,
-                              window: str = "1 hour", lateness: str = "1 hour"):
-    """Watermarked tumbling-window aggregation over an event stream:
-    counts + value sums per (event-time window, event_type), append mode —
-    a window is emitted exactly once, after the watermark passes its end,
-    with late events inside the lateness bound folded in. The streaming
-    state store holds only open windows (bounded by lateness), which is
-    what survives at firehose scale. Returns the StreamingQuery."""
-    from pyspark.sql import functions as F
-
-    ev = spark.readStream.schema(EVENTS_DDL).parquet(src_dir)
-    # watermarks require TimestampType; session tz is UTC so the NTZ cast is
-    # wall-clock-identical
-    ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = (
-        ev.withWatermark("ts", lateness)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("win_start"), "event_type", "n", "sum_value")
-    )
-    writer = (
-        agg.writeStream.outputMode("append").format("parquet")
-        .option("path", out_dir).option("checkpointLocation", checkpoint_dir)
-    )
-    writer = writer.trigger(availableNow=True) if available_now else writer.trigger(
-        processingTime="30 seconds")
-    return writer.start()
-
-
-DOCS_DDL = "doc_id long, text string, lang string, source string, n_chars long"
-DEDUP_OUT_DDL = "doc_id long, h string"
-DEDUP_STATE_DDL = "seen int"
-
-
-def stream_dedup_exact(spark: SparkSession, src_dir: str, out_dir: str,
-                       checkpoint_dir: str, available_now: bool = True):
-    """Stateful streaming exact dedup: emit each document the FIRST time its
-    content hash is seen, drop every later arrival. Per-hash state is one
-    bit in the state store (keyed groupBy md5(text)); within a micro-batch
-    the smallest doc_id wins deterministically, across batches/restarts the state store
-    (checkpointed per epoch) suppresses re-emits. At firehose scale state is
-    O(distinct hashes) — the same footprint a Bloom-gated batch dedup pays,
-    but incremental. Returns the StreamingQuery."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    docs = spark.readStream.schema(DOCS_DDL).parquet(src_dir)
-    hashed = docs.select("doc_id", F.md5("text").alias("h"))
-
-    def first_seen(key, pdf_iter, state):
-        (h,) = key
-        if state.exists:
-            for _ in pdf_iter:
-                pass
-            yield pd.DataFrame(columns=["doc_id", "h"])
-            return
-        best = None
-        for pdf in pdf_iter:
-            if len(pdf):
-                m = int(pdf["doc_id"].min())
-                best = m if best is None else min(best, m)
-        state.update((1,))
-        yield pd.DataFrame([(best, h)], columns=["doc_id", "h"])
-
-    kept = hashed.groupBy("h").applyInPandasWithState(
-        first_seen, DEDUP_OUT_DDL, DEDUP_STATE_DDL, "append",
-        GroupStateTimeout.NoTimeout)
-    writer = (
-        kept.writeStream.outputMode("append").format("parquet")
-        .option("path", out_dir).option("checkpointLocation", checkpoint_dir)
-    )
-    writer = writer.trigger(availableNow=True) if available_now else writer.trigger(
-        processingTime="30 seconds")
-    return writer.start()
-
-
-SESSION_OUT_DDL = ("user_id long, start_sec double, end_sec double, "
-                   "n_events long")
-SESSION_STATE_DDL = "start_sec double, last_sec double, n_events long"
-
-
-def stream_sessionize(spark: SparkSession, src_dir: str, out_dir: str,
-                      checkpoint_dir: str, gap_sec: float = 1800.0,
-                      available_now: bool = True):
-    """Custom stateful streaming operator (applyInPandasWithState): gap-based
-    sessionization per user. Per-key state = the OPEN session (start, last
-    event, count); an event later than ``gap_sec`` after the last closes the
-    session and emits it. Open sessions stay in the state store across
-    micro-batches (closed sessions match a batch gap sessionization
-    exactly; each user's final open session emits only when a later batch
-    closes it). Events are sorted WITHIN a micro-batch; cross-batch order
-    relies on the source delivering files in event-time order (true for
-    crawl-style drops). Returns the StreamingQuery."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ev = spark.readStream.schema(EVENTS_DDL).parquet(src_dir)
-
-    def sessionize(key, pdf_iter, state):
-        (user_id,) = key
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if not chunks:
-            yield pd.DataFrame(columns=["user_id", "start_sec", "end_sec", "n_events"])
-            return
-        ts = pd.concat(chunks)["ts"].sort_values()
-        # normalize to ns regardless of the arriving datetime64 unit
-        ev_sec = ts.astype("datetime64[ns]").astype("int64") / 1e9
-        if state.exists:
-            start, last, n = state.get
-        else:
-            start, last, n = None, None, 0
-        out = []
-        for s in ev_sec:
-            s = float(s)
-            if start is None:
-                start, last, n = s, s, 1
-            elif s - last > gap_sec:
-                out.append((user_id, start, last, n))
-                start, last, n = s, s, 1
-            else:
-                last, n = s, n + 1
-        state.update((start, last, n))
-        yield pd.DataFrame(out, columns=["user_id", "start_sec", "end_sec", "n_events"])
-
-    sess = ev.groupBy("user_id").applyInPandasWithState(
-        sessionize, SESSION_OUT_DDL, SESSION_STATE_DDL, "append",
-        GroupStateTimeout.NoTimeout)
-    writer = (
-        sess.writeStream.outputMode("append").format("parquet")
-        .option("path", out_dir).option("checkpointLocation", checkpoint_dir)
-    )
-    writer = writer.trigger(availableNow=True) if available_now else writer.trigger(
-        processingTime="30 seconds")
-    return writer.start()
-
-
 LINKS_DDL = "src string, dst string, anchor string"
 
 
@@ -283,21 +136,18 @@ def stream_anchor_votes(spark: SparkSession, src_dir: str, out_dir: str,
         novel = novel.cache()
         affected = novel.select("dst").distinct()
 
-        prev = bs.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        bs.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            ep = F.lit(int(epoch_id))
-            (novel.withColumn("epoch", ep).write.mode("overwrite")
-             .partitionBy("epoch").parquet(votes_dir))
-            full = bs.read.parquet(votes_dir).select(
-                "dst", "src_host", "anchor")
-            delta = aggregate_votes(
-                full.join(affected, "dst", "left_semi"),
-                max_anchors=max_anchors, per_host_cap=per_host_cap)
-            (delta.withColumn("epoch", ep).write.mode("overwrite")
-             .partitionBy("epoch").parquet(out_dir))
-        finally:
-            bs.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        ep = F.lit(int(epoch_id))
+        (novel.withColumn("epoch", ep).write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("epoch").parquet(votes_dir))
+        full = bs.read.parquet(votes_dir).select(
+            "dst", "src_host", "anchor")
+        delta = aggregate_votes(
+            full.join(affected, "dst", "left_semi"),
+            max_anchors=max_anchors, per_host_cap=per_host_cap)
+        (delta.withColumn("epoch", ep).write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("epoch").parquet(out_dir))
         novel.unpersist()
 
     writer = links.writeStream.foreachBatch(sink).option(

@@ -1,5 +1,5 @@
-"""Frozen tokenization spec — shared verbatim by the Spark engine, the pure
-Python oracle (tests), and (for the "simple" mode) the DuckDB oracle SQL.
+"""Frozen tokenization spec — shared verbatim by the Spark engine and the
+pure Python oracle (tests).
 
 Mirrors the reference pipeline *shape* — lowercase -> stopword removal ->
 stemming (reference: Lucene EnglishAnalyzerConfigurable with Krovetz stemming,
@@ -8,26 +8,17 @@ a regex token pass, the classic Lucene English stop set, and a deterministic
 "s-stemmer". The exact linguistics don't matter; what matters is that engine
 and oracle share one frozen pure function so rankings are rank-identical.
 
-Two modes:
-
-- FULL mode (web pages / index build): ``extract_text`` (html bytes -> text,
-  byte-identical per url as required by BASELINE.json input_hint) and
-  ``tokenize_full`` (stopwords occupy positions but emit no postings —
-  reference keeps stopword positions in field length, Idx.java:99-115 and
-  TermVector stems[0], TermVector.java:22-60).
-
-- SIMPLE mode (the driver's ``documents`` test table, whose text is already
-  clean space-separated tokens): split on a single space, drop empties, no
-  stop/stem — exactly DuckDB ``string_split(text, ' ')`` so oracle SQL can
-  reproduce it.
+Web pages / index build: ``extract_text`` (html bytes -> text, byte-identical
+per url as required by BASELINE.json input_hint) and ``tokenize_full``
+(stopwords occupy positions but emit no postings — reference keeps stopword
+positions in field length, Idx.java:99-115 and TermVector stems[0],
+TermVector.java:22-60).
 """
 
 from __future__ import annotations
 
 import html as _htmllib
 import re
-
-import pandas as pd  # module-level so pandas-UDF type hints resolve
 
 # ---------------------------------------------------------------------------
 # Stop set: Lucene's classic English stop words (public domain list).
@@ -192,47 +183,3 @@ def tokenize_query_term(tok: str, stemmer: str = "s") -> str | None:
         if t is not None:
             return t
     return None
-
-
-def simple_tokens(text: str) -> list[str]:
-    """SIMPLE mode: DuckDB-reproducible split. ``string_split(text, ' ')``
-    with empty strings dropped. No lowercase/stop/stem (driver test corpus is
-    already clean)."""
-    if not text:
-        return []
-    return [t for t in text.split(" ") if t]
-
-
-# ---------------------------------------------------------------------------
-# Vectorized (Arrow) UDF factories. Kept as factories so importing this
-# module never requires an active SparkSession.
-# ---------------------------------------------------------------------------
-
-def make_udfs(stemmer: str = "s"):
-    """Returns dict of pandas UDFs: extract_text_udf, tokenize_full_udf,
-    simple_tokens_udf. stemmer selects the frozen stem spec for
-    tokenize_full (pass the index's pinned value when tokenizing alongside
-    an existing index)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    get_stemmer(stemmer)  # validate on the driver, not per-task
-
-    @F.pandas_udf(T.StringType())
-    def extract_text_udf(h: pd.Series) -> pd.Series:
-        return h.map(lambda b: extract_text(b) if b is not None else "")
-
-    @F.pandas_udf(T.ArrayType(T.StringType(), containsNull=True))
-    def tokenize_full_udf(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: tokenize_full(x, stemmer=stemmer)
-                     if x is not None else [])
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def simple_tokens_udf(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: simple_tokens(x) if x is not None else [])
-
-    return {
-        "extract_text": extract_text_udf,
-        "tokenize_full": tokenize_full_udf,
-        "simple_tokens": simple_tokens_udf,
-    }

@@ -22,6 +22,7 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql.conf import RuntimeConfig
 
 from searchengines_spark.corpus import generate_pages
 from searchengines_spark.engine import Engine
@@ -62,6 +63,19 @@ def _bucket_digest(index_dir, bucket):
     return h.hexdigest()
 
 
+def _spy_conf_set(mp):
+    """Record every session-conf key set while ``mp`` is active."""
+    keys = []
+    real = RuntimeConfig.set
+
+    def spy(self, key, value):
+        keys.append(key)
+        return real(self, key, value)
+
+    mp.setattr(RuntimeConfig, "set", spy)
+    return keys
+
+
 def _present_buckets(index_dir):
     root = os.path.join(index_dir, "blocks")
     return sorted(
@@ -88,8 +102,10 @@ def partial_vs_full(spark, tmp_path_factory):
     shutil.copytree(d, d_full)
     compact(spark, d_full, salt_range=int(man["salt_range"]))
 
-    res = compact_buckets(spark, d)
-    return d, d_full, touched, untouched, pre_digests, res
+    with pytest.MonkeyPatch.context() as mp:
+        conf_keys = _spy_conf_set(mp)
+        res = compact_buckets(spark, d)
+    return d, d_full, touched, untouched, pre_digests, {**res, "conf_keys": conf_keys}
 
 
 def test_touched_is_strict_subset(partial_vs_full):
@@ -100,7 +116,9 @@ def test_touched_is_strict_subset(partial_vs_full):
 
 
 def test_untouched_bucket_files_byte_identical(partial_vs_full):
-    d, _, _, untouched, pre_digests, _ = partial_vs_full
+    d, _, _, untouched, pre_digests, res = partial_vs_full
+    # dynamic overwrite is a per-write option, never a session-wide toggle
+    assert not any("partitionOverwriteMode" in k for k in res["conf_keys"])
     for b in untouched:
         assert _bucket_digest(d, b) == pre_digests[b], f"bucket={b} rewritten"
 

@@ -269,27 +269,6 @@ def test_invalid_stemmer_rejected_on_driver(spark, tmp_path):
         build_index(spark, pages, str(tmp_path / "bad"), stemmer="porter")
 
 
-def test_make_udfs_respects_stemmer(spark):
-    """make_udfs(stemmer=...) must bake the pinned stemmer into the
-    vectorized tokenize_full UDF so batch tokenization alongside a
-    kstem index matches the scalar path."""
-    from searchengines_spark.tokenizer import make_udfs
-
-    df = spark.createDataFrame(
-        [("dancers danced while singing",)], ["text"])
-    k = make_udfs(stemmer="kstem")["tokenize_full"]
-    s = make_udfs()["tokenize_full"]
-    row_k = df.select(k("text").alias("t")).collect()[0]["t"]
-    row_s = df.select(s("text").alias("t")).collect()[0]["t"]
-    assert row_k == tokenize_full("dancers danced while singing",
-                                  stemmer="kstem")
-    assert row_s == tokenize_full("dancers danced while singing")
-    assert row_k != row_s
-
-    with pytest.raises(ValueError, match="unknown stemmer"):
-        make_udfs(stemmer="porter")
-
-
 def test_known_divergence_from_lexicon_guarded_kstem_is_pinned():
     """The frozen kstem spec is lexicon-FREE by design (no dictionary in
     the tokenize kernel; index and query sides can never disagree), which

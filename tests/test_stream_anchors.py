@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.conf import RuntimeConfig
 
 from searchengines_spark.streaming import stream_anchor_votes
 
@@ -35,7 +36,15 @@ def _latest_deltas(out: str) -> dict[str, str]:
     return dict(zip(allr["url"], allr["inlink"]))  # last epoch wins
 
 
-def test_stream_anchor_votes(spark, tmp_path):
+def test_stream_anchor_votes(spark, tmp_path, monkeypatch):
+    conf_keys = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        conf_keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
     src = str(tmp_path / "links_in")
     out = str(tmp_path / "deltas")
     ck = str(tmp_path / "ck")
@@ -69,6 +78,9 @@ def test_stream_anchor_votes(spark, tmp_path):
     # vote store: the replayed vote did NOT duplicate
     votes = spark.read.parquet(st + "/votes")
     assert votes.count() == votes.select("dst", "src_host", "anchor").distinct().count() == 4
+    # the epoch sinks' dynamic overwrite is a per-write option, never a
+    # session-wide toggle
+    assert not any("partitionOverwriteMode" in k for k in conf_keys)
 
 
 def test_stream_delta_feeds_refresh(spark, tmp_path):

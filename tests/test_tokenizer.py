@@ -2,7 +2,6 @@ from searchengines_spark.tokenizer import (
     STOPWORDS,
     extract_text,
     s_stem,
-    simple_tokens,
     tokenize_full,
     tokenize_query_term,
 )
@@ -37,11 +36,6 @@ def test_tokenize_full_stopword_positions():
 def test_tokenize_query_term():
     assert tokenize_query_term("Dogs") == "dog"
     assert tokenize_query_term("the") is None
-
-
-def test_simple_tokens_matches_duckdb_split():
-    assert simple_tokens("a b  c") == ["a", "b", "c"]
-    assert simple_tokens("") == []
 
 
 def test_stopwords_frozen():
