@@ -9,12 +9,12 @@ Indri), structured operators (#AND #OR #SUM #WAND #WSUM #NEAR/n #WINDOW/n
 xQuAD/PM2 diversification — plus, new per the north rule, the index *build*
 itself: term-partitioned docid-sorted delta+varint-compressed posting lists
 with per-block max-score metadata, salted repartition for hot-term skew,
-resumable segmented build with per-partition lineage, and a block-max WAND
-top-k serving path.
+resumable segmented build with per-partition lineage, and a top-k serving
+path that evaluates every query per docid stripe.
 
 Architecture is Spark-first: DataFrame/SQL plans for everything set-oriented,
 Arrow-vectorized pandas UDFs only where Spark lacks the primitive (tokenize,
-varint codec, positional NEAR/WINDOW alignment, block-max WAND kernel).
+varint codec, positional NEAR/WINDOW alignment, the stripe evaluator).
 """
 
 __version__ = "0.1.0"

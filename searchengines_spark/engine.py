@@ -52,7 +52,6 @@ class Engine:
         if prog is None:  # all stopwords
             return self.reader.docid_url_map().select("url", F.lit(0.0).alias("score")).limit(0)
         local = wand.wand_topk_batch_local(self.reader, {"q": prog}, k=k,
-                                           deleted=self.reader.deleted_set(),
                                            resolve_urls=True)
         return (
             local.select("url", "score")
@@ -78,7 +77,6 @@ class Engine:
                 F.lit("").alias("qid"), "url",
                 F.lit(0.0).alias("score"), F.lit(0).alias("rank")).limit(0)
         local = wand.wand_topk_batch_local(self.reader, progs, k=k,
-                                           deleted=self.reader.deleted_set(),
                                            resolve_urls=True)
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
         return (

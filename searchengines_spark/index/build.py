@@ -316,8 +316,8 @@ def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
             # time. The forward table keeps positions, so a later compact()
             # with store_positions=True can restore them without re-crawling.
             p_sl = [b""] * len(bstarts)
-        # block metadata, all reduceat: BM25 upper bound (same float shape as
-        # codec.bm25_upper_bound: max of tf-weights, then x idf), max tf, min dl
+        # block metadata, all reduceat: BM25 upper bound (the max of the
+        # block's tf-weights, then x idf), max tf, min dl
         dfs_f = dfs.astype(np.float64)
         idf_r = np.maximum(0.0, np.log((b_n_docs - dfs_f + 0.5) / (dfs_f + 0.5)))
         avg_map = b_avg.value
@@ -713,8 +713,8 @@ def build_index(
     segments_path = os.path.join(index_dir, "blocks_segments")
     if resume and _stage_done(index_dir, "segments"):
         # blocks were NOT re-encoded: the manifest must keep the params the
-        # blocks were actually encoded with, else the engine's stale-bounds
-        # check is defeated and WAND prunes unsoundly
+        # blocks were actually encoded with, else its stale-bounds record
+        # is wrong
         man_path = os.path.join(index_dir, "MANIFEST.json")
         old_man = {}
         if os.path.exists(man_path):
@@ -978,12 +978,11 @@ class IndexReader:
                     ) -> dict[tuple[str, str], list[tuple]]:
         """Unstriped (low-df) block rows for the given (field, term) pairs,
         as raw tuples (min_docid, max_docid, max_tf, min_doclen, max_score,
-        docids_z, tfs_z, positions_z) — callers derive score bounds under
-        their own (k1, b); positions_z is b"" on a store_positions=False
-        index. Read from blocks/ on the driver (read_term_rows with
-        ``striped == False``, no Spark job) and memoized per reader like
-        _ts_memo, so a repeat query reads nothing, and provably-empty
-        lookups skip the read outright:
+        docids_z, tfs_z, positions_z); positions_z is b"" on a
+        store_positions=False index. Read from blocks/ on the driver
+        (read_term_rows with ``striped == False``, no Spark job) and
+        memoized per reader like _ts_memo, so a repeat query reads nothing,
+        and provably-empty lookups skip the read outright:
 
         - a pair with no stats row has no postings at all (term_stats and
           blocks derive from the same doc_terms table), and
@@ -1077,7 +1076,7 @@ class IndexReader:
         return max(1, -(-self.docid_space // self.salt_range))
 
     SERVE_COLS = ("field", "term", "salt", "min_docid", "max_docid",
-                  "max_score", "max_tf", "min_doclen", "docids_z", "tfs_z")
+                  "docids_z", "tfs_z")
 
     def serve_blocks(self) -> DataFrame:
         """Serve-ready block layout, built once per reader and PERSISTED:
@@ -1117,9 +1116,6 @@ class IndexReader:
                 F.col("id").cast("int").alias("salt"),
                 F.lit(0).cast("long").alias("min_docid"),
                 F.lit(-1).cast("long").alias("max_docid"),
-                F.lit(0.0).alias("max_score"),
-                F.lit(0).cast("int").alias("max_tf"),
-                F.lit(0).cast("int").alias("min_doclen"),
                 F.lit(b"").alias("docids_z"), F.lit(b"").alias("tfs_z"),
             )
             blocks_bytes = sum(
@@ -1209,7 +1205,7 @@ class IndexReader:
         return self.spark.read.parquet(p).select("docid").distinct() if p else None
 
     def deleted_set(self) -> frozenset | None:
-        """Tombstones as a driver-side frozenset for the WAND kernel
+        """Tombstones as a driver-side frozenset for the stripe job's
         broadcast, read with pyarrow (no Spark job). Cached per reader
         (readers are per-index-version)."""
         if not hasattr(self, "_deleted_set"):

@@ -3,8 +3,7 @@
 The reference keeps postings as uncompressed boxed ``Vector<Integer>`` in RAM
 (/root/reference/QryEval/InvList.java:44-85). At 10^12-doc scale that is not
 viable; per the north rule we add classic delta + LEB128-varint block
-compression with per-block metadata (max docid for skipping, max-score for
-block-max WAND pruning).
+compression with per-block metadata (max docid, max-score).
 
 Everything here is pure numpy (no Python-per-int loops): encode/decode run a
 small fixed number of vectorized passes (<= 10, one per varint byte width),
@@ -503,13 +502,3 @@ def decode_block(docids_b: bytes, tfs_b: bytes,
         dec(tfs_b),
     )
 
-
-def bm25_upper_bound(tfs: np.ndarray, doclens: np.ndarray, df: int, n_docs: int,
-                     avg_doclen: float, k1: float = 1.2, b: float = 0.75) -> float:
-    """Per-block BM25 max-score (for block-max WAND). Formula matches the
-    reference scorer exactly (QrySopScore.java:78-90)."""
-    idf = max(0.0, np.log((n_docs - df + 0.5) / (df + 0.5)))
-    tfs = tfs.astype(np.float64)
-    dl = doclens.astype(np.float64)
-    tfw = tfs / (tfs + k1 * ((1.0 - b) + b * (dl / avg_doclen)))
-    return float(idf * tfw.max()) if tfs.size else 0.0

@@ -16,10 +16,9 @@ Two consistency caveats, by design:
    record each segment's docid extent; IndexReader.segment_cuts /
    query/wand.py _segment_cut).
 2. BM25 block max_score metadata in OLD blocks was computed under the old
-   corpus stats (n_docs, avg doclen, df). After an append those bounds are
-   stale, so WAND must recompute conservative bounds from the stored
-   (max_tf, min_doclen) pair — wand_topk(..., recompute_bounds=True). The
-   MANIFEST records appends so callers know.
+   corpus stats (n_docs, avg doclen, df), so after an append it is stale.
+   The manifest records that (``stale_block_bounds``); no query path reads
+   the bounds, so serving stays exact either way.
 """
 
 from __future__ import annotations
@@ -417,9 +416,9 @@ def refresh_anchors(spark: SparkSession, index_dir: str, pages: DataFrame,
 def delete_pages(spark: SparkSession, index_dir: str, urls: DataFrame) -> dict:
     """Tombstone documents by url (merge-on-read delete — the Lucene/Iceberg
     delete model). Appends the matching docids to ``deletes/``; serving
-    excludes tombstoned docs immediately (WAND kernel mask + planner
-    anti-join) while corpus statistics stay as-built until ``compact()``
-    removes the documents physically (copy-on-write) and recomputes stats.
+    excludes tombstoned docs immediately (the stripe job skips them) while
+    corpus statistics stay as-built until ``compact()`` removes the
+    documents physically (copy-on-write) and recomputes stats.
     Commits a snapshot, so the pre-delete state stays time-travelable."""
     t0 = time.time()
     reader = IndexReader(spark, index_dir)
@@ -455,7 +454,7 @@ def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
     dominant build stage); restores everything appends left approximate:
 
     - block max_score bounds recomputed under CURRENT corpus stats (clears
-      ``stale_block_bounds``, so WAND runs without conservative recompute);
+      ``stale_block_bounds``);
     - salt stripes re-cut over the full docid range (appends land new docids
       in new stripes; compaction rebalances stripe sizes);
     - one fresh bucket-contiguous file layout (appends accumulate files).
@@ -628,7 +627,7 @@ def compact_buckets(spark: SparkSession, index_dir: str,
     append adds docid-disjoint block files) and block max_score bounds are
     stale. A full compact() re-encodes the whole corpus; this re-encodes the
     postings of the touched buckets only — same codec, same stripe cuts
-    (manifest ``salt_range`` is preserved, because the WAND kernel derives
+    (manifest ``salt_range`` is preserved, because the stripe job derives
     stripe docid windows from ONE global salt_range) and CURRENT corpus
     stats, so for the touched buckets the result is row-identical to a full
     compact run at the same salt_range.
@@ -644,8 +643,8 @@ def compact_buckets(spark: SparkSession, index_dir: str,
     stats); untouched buckets keep bounds from their last encode, which are
     stale whenever stats moved since. The manifest records the still-stale
     set in ``stale_bound_buckets`` and keeps ``stale_block_bounds`` True
-    until it empties, so WAND keeps recomputing conservative bounds —
-    correctness never depends on the partial freshness.
+    until it empties. No query path reads the bounds, so correctness never
+    depends on the partial freshness.
 
     Deletes are copy-on-write across ALL buckets a doc's terms hash into, so
     pending tombstones require the full compact(): this raises if any exist.

@@ -7,7 +7,7 @@ one row per doc in ``doc_lens_wide`` (docid, len_<field>...), docid-range
 sorted so parquet row-group stats prune range reads, and the serve kernels
 look lengths up here:
 
-- the WAND stripe kernel loads its docid range [lo, hi) once per task as a
+- the stripe evaluator loads its docid range [lo, hi) once per task as a
   dense int32 array (``stripe_doclens``) and indexes it per scored posting;
 - the exhaustive decode kernel resolves each block's docids in bulk
   (``doclens_at``).

@@ -38,7 +38,7 @@ def get_spark(
         # embedding rows was a 165 MB-to-multi-GB input batch per task
         # against the JVM's direct-memory pool (see BENCH/STRESS_3M.md).
         # 8192 keeps narrow-row kernels fully vectorized (grouped-map
-        # kernels — WAND stripes, diversify — get their whole group
+        # kernels — query stripes, diversify — get their whole group
         # regardless and are unaffected) while cutting wide-row transfer
         # peaks 8x. A/B at sf0.1 showed no measurable build/serve cost.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",

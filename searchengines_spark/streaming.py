@@ -4,8 +4,7 @@ A file-source stream watches a directory for new page parquet drops (the
 continuous-crawl pattern); each micro-batch appends a segment to the index
 via incremental.append_pages (foreachBatch — the index append is a batch
 job, exactly-once per epoch via the streaming checkpoint). Queries pick up
-new segments on the next IndexReader open; WAND should use
-recompute_bounds=True until the next compaction (see incremental.py).
+new segments on the next IndexReader open.
 
 incremental.compact() (periodic, from the forward table) restores tight
 block bounds, rebalanced stripes and a single file layout, and physically

@@ -43,16 +43,6 @@ def test_positions_roundtrip():
     assert [o.tolist() for o in out] == [p.tolist() for p in pls]
 
 
-def test_bm25_upper_bound_dominates():
-    rng = np.random.default_rng(0)
-    tfs = rng.integers(1, 20, 50).astype(np.uint64)
-    lens = rng.integers(10, 500, 50).astype(np.uint64)
-    ub = codec.bm25_upper_bound(tfs, lens, df=100, n_docs=10_000, avg_doclen=120.0)
-    idf = max(0.0, np.log((10_000 - 100 + 0.5) / (100 + 0.5)))
-    scores = idf * tfs / (tfs + 1.2 * (0.25 + 0.75 * lens / 120.0))
-    assert ub >= scores.max() - 1e-12
-
-
 def test_encode_positions_flat_equivalence():
     import numpy as np
 

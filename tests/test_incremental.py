@@ -50,19 +50,6 @@ def test_append_matches_full_rebuild(spark, appended_and_full):
             assert math.isclose(gs, ws, rel_tol=1e-9)
 
 
-def test_wand_recomputed_bounds_exact(spark, appended_and_full):
-    d_inc, _ = appended_and_full
-    r = IndexReader(spark, d_inc)
-    eng = Engine(r)
-    want = [(x["url"], x["score"]) for x in
-            eng.search(" ".join(QUERY_TERMS), "bm25", 15).collect()]
-    got = [(x["url"], x["score"]) for x in
-           wand_topk(r, QUERY_TERMS, k=15, recompute_bounds=True).collect()]
-    assert [u for u, _ in got] == [u for u, _ in want]
-    for (_, gs), (_, ws) in zip(got, want):
-        assert math.isclose(gs, ws, rel_tol=1e-9)
-
-
 def test_manifest_tracks_appends(spark, appended_and_full):
     import json
 
@@ -185,6 +172,5 @@ def test_compact_after_append(spark, tmp_path):
     # WAND with build-time bounds (no conservative recompute) == exhaustive
     r = IndexReader(spark, d)
     w = [(x["url"], round(x["score"], 9)) for x in
-         wand_topk(r, ["robaba5", "subaba6", "taveba0"], k=50,
-                   recompute_bounds=False).collect()]
+         wand_topk(r, ["robaba5", "subaba6", "taveba0"], k=50).collect()]
     assert w == after

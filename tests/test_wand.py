@@ -1,197 +1,11 @@
-"""Stripe-kernel exactness, both strategies (block-max WAND loop and the
-default vectorized bulk evaluator): top-k must equal exhaustive evaluation
-(scores identical, reference tie rule), WAND pruning only skips non-top-k
-docs, and the two kernels agree bit-for-bit."""
-
-import math
-
-import numpy as np
-import pytest
-
-from searchengines_spark.index import codec
-from searchengines_spark.query.wand import _bulk_stripe, _wand_stripe
-
-K1, B = 1.2, 0.75
-KERNELS = [_wand_stripe, _bulk_stripe]
-
-
-def make_stripe(rng, n_terms=4, n_docs=400, block=16, density=0.3):
-    """Random postings -> block tuples + brute-force data."""
-    avg = 0.0
-    doclens = rng.integers(20, 300, n_docs).astype(np.uint64)
-    avg = float(doclens.mean())
-    term_blocks, postings, idfs = {}, {}, []
-    for t in range(n_terms):
-        mask = rng.random(n_docs) < density * (0.3 + rng.random())
-        docids = np.flatnonzero(mask).astype(np.uint64)
-        tfs = rng.integers(1, 9, len(docids)).astype(np.uint64)
-        df = len(docids)
-        idf = max(0.0, math.log((n_docs - df + 0.5) / (df + 0.5))) if df else 0.0
-        idfs.append(idf)
-        postings[t] = {int(d): int(tf) for d, tf in zip(docids, tfs)}
-        blks = []
-        for s in range(0, len(docids), block):
-            d, tf = docids[s:s + block], tfs[s:s + block]
-            dl = doclens[d.astype(np.int64)]
-            dz, tz = codec.encode_block(d, tf)
-            ms = codec.bm25_upper_bound(tf, dl, df, n_docs, avg, K1, B)
-            blks.append((int(d[-1]), ms, ("varint", dz, tz)))
-        if blks:
-            term_blocks[t] = blks
-    return term_blocks, postings, idfs, doclens, avg, n_docs
-
-
-def brute_force(postings, idfs, doclens, avg, n_docs, k, require_all):
-    n_terms = len(idfs)
-    docs = set()
-    for pl in postings.values():
-        docs |= set(pl)
-    out = []
-    for d in docs:
-        present = [t for t in range(n_terms) if d in postings[t]]
-        if require_all and len(present) < n_terms:
-            continue
-        s = 0.0
-        for t in present:  # query-term order
-            tf = float(postings[t][d])
-            dl = float(doclens[d])
-            s += idfs[t] * tf / (tf + K1 * ((1.0 - B) + B * dl / avg))
-        out.append((d, s))
-    out.sort(key=lambda x: (-x[1], x[0]))
-    return out[:k]
-
-
-@pytest.mark.parametrize("kernel", KERNELS)
-@pytest.mark.parametrize("seed", range(8))
-@pytest.mark.parametrize("require_all", [False, True])
-@pytest.mark.parametrize("k", [3, 10, 1000])
-def test_wand_exact(kernel, seed, require_all, k):
-    rng = np.random.default_rng(seed)
-    tb, postings, idfs, doclens, avg, n_docs = make_stripe(rng)
-    got, decodes = kernel(tb, idfs, k, K1, B, avg, require_all,
-                          doclens.astype(np.int32), 0)
-    want = brute_force(postings, idfs, doclens, avg, n_docs, k, require_all)
-    assert [d for d, _ in got] == [d for d, _ in want], (seed, require_all, k)
-    for (gd, gs), (_, ws) in zip(got, want):
-        assert math.isclose(gs, ws, rel_tol=1e-12), (seed, gd, gs, ws)
-
-
-@pytest.mark.parametrize("seed", range(8))
-@pytest.mark.parametrize("require_all", [False, True])
-def test_bulk_bitwise_identical_to_wand(seed, require_all):
-    """Not just rank-identical: the bulk evaluator's float64 expression
-    tree matches score_cur op-for-op, so scores are EXACTLY equal."""
-    rng = np.random.default_rng(100 + seed)
-    tb, postings, idfs, doclens, avg, n_docs = make_stripe(rng)
-    w, _ = _wand_stripe(tb, idfs, 1000, K1, B, avg, require_all,
-                        doclens.astype(np.int32), 0)
-    bu, _ = _bulk_stripe(tb, idfs, 1000, K1, B, avg, require_all,
-                         doclens.astype(np.int32), 0)
-    assert w == bu  # tuples compare exact: same docids AND same bits
-
-
-@pytest.mark.parametrize("kernel", KERNELS)
-def test_kernel_deleted_docs_excluded(kernel):
-    rng = np.random.default_rng(55)
-    tb, postings, idfs, doclens, avg, n_docs = make_stripe(rng)
-    full, _ = kernel(tb, idfs, 50, K1, B, avg, False,
-                     doclens.astype(np.int32), 0)
-    dead = frozenset(d for d, _ in full[:5])
-    got, _ = kernel(tb, idfs, 50, K1, B, avg, False,
-                    doclens.astype(np.int32), 0, None, deleted=dead)
-    assert not dead & {d for d, _ in got}
-    # survivors keep their scores and order (deletion only removes rows)
-    want = [(d, s) for d, s in full if d not in dead]
-    assert got[: len(want)] == want[:45]
-
-
-@pytest.mark.parametrize("kernel", KERNELS)
-def test_kernel_deleted_as_sorted_array(kernel):
-    """Both kernels accept tombstones as the SORTED int64 array run_stripe
-    slices from the broadcast (no per-query set/array conversion), with
-    results identical to the frozenset form."""
-    rng = np.random.default_rng(56)
-    tb, postings, idfs, doclens, avg, n_docs = make_stripe(rng)
-    full, _ = kernel(tb, idfs, 50, K1, B, avg, False,
-                     doclens.astype(np.int32), 0)
-    dead = sorted(d for d, _ in full[:7])
-    via_set, _ = kernel(tb, idfs, 50, K1, B, avg, False,
-                        doclens.astype(np.int32), 0, {},
-                        deleted=frozenset(dead))
-    via_arr, _ = kernel(tb, idfs, 50, K1, B, avg, False,
-                        doclens.astype(np.int32), 0, {},
-                        deleted=np.asarray(dead, dtype=np.int64))
-    assert via_arr == via_set
-    assert not set(dead) & {d for d, _ in via_arr}
-
-
-def test_bulk_denom_memo_bitwise_stable():
-    """The per-(stripe, field) denominator memo must not change scores:
-    two calls through one shared cache are bitwise equal to the uncached
-    run (same float64 expression tree, just computed once)."""
-    rng = np.random.default_rng(57)
-    tb, postings, idfs, doclens, avg, n_docs = make_stripe(rng)
-    norms = doclens.astype(np.int32)
-    bare, _ = _bulk_stripe(tb, idfs, 100, K1, B, avg, False, norms, 0)
-    cache: dict = {}
-    first, _ = _bulk_stripe(tb, idfs, 100, K1, B, avg, False, norms, 0, cache)
-    again, _ = _bulk_stripe(tb, idfs, 100, K1, B, avg, False, norms, 0, cache)
-    assert any(k[0] == "denom" for k in cache if isinstance(k, tuple))
-    assert bare == first == again
-
-
-@pytest.mark.parametrize("kernel", KERNELS)
-def test_kernel_require_all_missing_term_is_free(kernel):
-    """A conjunctive query with an absent term returns empty WITHOUT
-    decoding anything."""
-    rng = np.random.default_rng(9)
-    tb, postings, idfs, doclens, avg, n_docs = make_stripe(rng, n_terms=3)
-    tb.pop(1, None)
-    got, decodes = kernel(tb, idfs, 10, K1, B, avg, True,
-                          doclens.astype(np.int32), 0)
-    assert got == [] and decodes == 0
-
-
-def test_bulk_shares_decode_cache():
-    """Two queries over the same blocks through one cache: the second
-    pays zero decodes (the batch path's cross-query decode sharing)."""
-    rng = np.random.default_rng(11)
-    tb, postings, idfs, doclens, avg, n_docs = make_stripe(rng)
-    cache: dict = {}
-    _, dec1 = _bulk_stripe(tb, idfs, 10, K1, B, avg, False,
-                           doclens.astype(np.int32), 0, cache)
-    assert dec1 > 0
-    _, dec2 = _bulk_stripe(tb, idfs, 10, K1, B, avg, False,
-                           doclens.astype(np.int32), 0, cache)
-    assert dec2 == 0
-
-
-def test_wand_actually_prunes():
-    """With small k and many blocks, some blocks must never decode."""
-    rng = np.random.default_rng(123)
-    tb, postings, idfs, doclens, avg, n_docs = make_stripe(
-        rng, n_terms=3, n_docs=5000, block=16, density=0.5
-    )
-    total_blocks = sum(len(b) for b in tb.values())
-    _, decodes = _wand_stripe(tb, idfs, 3, K1, B, avg, False,
-                              doclens.astype(np.int32), 0)
-    assert decodes < total_blocks, f"no pruning: {decodes} >= {total_blocks}"
-
-
-def test_wand_missing_term_disjunctive():
-    rng = np.random.default_rng(7)
-    tb, postings, idfs, doclens, avg, n_docs = make_stripe(rng, n_terms=3)
-    tb.pop(1, None)
-    postings[1] = {}
-    idfs = list(idfs)
-    got, _ = _wand_stripe(tb, idfs, 10, K1, B, avg, False,
-                          doclens.astype(np.int32), 0)
-    want = brute_force(postings, idfs, doclens, avg, n_docs, 10, False)
-    assert [d for d, _ in got] == [d for d, _ in want]
+"""``wand_topk``, the flat BM25 bag of words, through the stripe job: the
+same scores as Engine.search, and a true decode count in its debug
+output."""
 
 
 def test_wand_spark_end_to_end(spark, tiny_index):
-    """Distributed WAND == planner #SUM path on the tiny index."""
+    """wand_topk == Engine.search's #SUM on the tiny index, score for
+    score."""
     from searchengines_spark.engine import Engine
     from searchengines_spark.query.wand import wand_topk
 
@@ -201,19 +15,7 @@ def test_wand_spark_end_to_end(spark, tiny_index):
             eng.search(" ".join(terms), "bm25", 20).collect()]
     got = [(r["url"], r["score"]) for r in
            wand_topk(tiny_index, terms, k=20).collect()]
-    assert [u for u, _ in got] == [u for u, _ in want]
-    for (gu, gs), (_, ws) in zip(got, want):
-        assert math.isclose(gs, ws, rel_tol=1e-9)
-
-    # conjunctive: equals #AND doc set scored as sum
-    got_and = [r["url"] for r in wand_topk(tiny_index, terms[:2], k=20, require_all=True).collect()]
-    and_docs = {r["url"] for r in eng.search(f"#AND( {terms[0]} {terms[1]} )", "bm25", 300).collect()}
-    assert set(got_and) <= and_docs and len(got_and) == min(20, len(and_docs))
-
-    # both stripe strategies agree through the full Spark path
-    via_wand = [(r["url"], r["score"]) for r in
-                wand_topk(tiny_index, terms, k=20, strategy="wand").collect()]
-    assert via_wand == got  # default is strategy="bulk"
+    assert got == want
 
 
 def test_debug_decode_total_is_k_invariant(spark, tmp_path):
@@ -237,10 +39,3 @@ def test_debug_decode_total_is_k_invariant(spark, tmp_path):
     small = sum(r["decodes"] for r in
                 wand_topk(reader, terms, k=2, debug=True).collect())
     assert big > 0 and big == small
-
-
-def test_wand_unknown_strategy_raises(spark, tiny_index):
-    from searchengines_spark.query.wand import wand_topk
-
-    with pytest.raises(ValueError, match="strategy"):
-        wand_topk(tiny_index, ["anything"], k=5, strategy="nope")

@@ -68,14 +68,12 @@ def main() -> None:
         "Exchange between them: the groupBy reuses the cached "
         "partitioning, so a warm query is one no-shuffle stage. Each "
         "docid-range stripe evaluates the compiled query tree (dense numpy "
-        "accumulators; flat bags of words through wand_topk may use "
-        "block-max WAND via strategy='wand' — BENCH/SERVE_ANATOMY.md "
-        "kernel study), cuts k per url-rank segment and resolves its urls "
+        "accumulators; wand_topk compiles its flat bag of words to the "
+        "same #SUM program), cuts k per url-rank segment and resolves its urls "
         "via row-group-pruned point reads of the docid-sorted url table "
         "(index/urlmap.py) — no corpus-sized join appears anywhere. The "
         "global `TakeOrderedAndProject` merges <= k url-resolved rows per "
-        "stripe. Compressed blocks reach the kernel undecoded; under the "
-        "WAND strategy pruned blocks never decompress.",
+        "stripe. Compressed blocks reach the stripe task undecoded.",
         fmt(wand)))
 
     from pyspark.sql import functions as F

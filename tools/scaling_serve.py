@@ -12,7 +12,7 @@ SAME serve workload in taskset-pinned subprocesses at an 8-CPU and a
 - a 12-query batch through the shared-scan path.
 
 Each is warmed (one untimed query for session/JIT/codegen) then best-of-N.
-A no-Spark hardware calibration (the bulk kernel's numpy op mix via
+A no-Spark hardware calibration (the stripe evaluator's numpy op mix via
 multiprocessing at both widths) gives the box's own 8→32 ceiling for
 memory-bandwidth-bound work; engine efficiency should be read against it
 (a real cluster brings 4× DRAM with
@@ -40,7 +40,7 @@ RUNS = 3
 
 
 def _numpy_mix(_: int) -> int:
-    """The bulk kernel's op shape: gather + elementwise f64 + fancy += over
+    """The stripe evaluator's op shape: gather + elementwise f64 + fancy += over
     ~100k-posting arrays (memory-bandwidth bound, like the serve kernel)."""
     import numpy as np
 
