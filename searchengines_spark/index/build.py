@@ -941,10 +941,10 @@ class IndexReader:
         urls; each append's delta docids are ranks of the delta's sorted
         urls, offset past the old max) — the invariant serving tie-breaks
         lean on. Across segments it does not hold, so exact reference
-        tie-breaks need a per-segment cut (the stripe kernels' top-k per
+        tie-breaks need a per-segment cut (the stripe task's top-k per
         segment, query/wand.py _segment_cut). Returns None when the history
-        is unusable (a legacy append entry without extents) — the kernels
-        then keep every candidate."""
+        is unusable (a legacy append entry without extents) — the stripe
+        task then keeps every candidate."""
         appends = self.manifest.get("appends", [])
         cuts = [0]
         for e in appends:
