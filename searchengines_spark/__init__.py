@@ -8,7 +8,7 @@ Indri), structured operators (#AND #OR #SUM #WAND #WSUM #NEAR/n #WINDOW/n
 #SYN, term.field), PRF query expansion, LTR feature extraction, and
 xQuAD/PM2 diversification — plus, new per the north rule, the index *build*
 itself: term-partitioned docid-sorted delta+varint-compressed posting lists
-with per-block max-score metadata, salted repartition for hot-term skew,
+with per-block docid ranges, salted repartition for hot-term skew,
 resumable segmented build with per-partition lineage, and a top-k serving
 path that evaluates every query per docid stripe.
 

@@ -1,5 +1,5 @@
 """Inverted-index build: pages -> term-partitioned, docid-sorted,
-delta+varint-compressed posting blocks with per-block max-score metadata.
+delta+varint-compressed posting blocks.
 
 This is the capability the reference *lacks* (it reads a prebuilt Lucene
 index, /root/reference/QryEval/Idx.java:236-259); the north rule mandates we
@@ -15,8 +15,8 @@ Iceberg tables — same layout, plus snapshot metadata):
 - ``tokenized/post={0,1}/`` (docid, field, term, tf, positions_z, doclen) —
                     post=1 IS the doc_terms forward/analytic table; post=0
                     holds one doclen sentinel row per (doc, field)
-- ``blocks/bucket=NN/`` (field, term, salt, blk, n, max_docid, min_docid,
-                    max_score, docids_z, tfs_z, positions_z); doclens are
+- ``blocks/bucket=NN/`` (field, term, salt, blk, n, min_docid, max_docid,
+                    striped, docids_z, tfs_z, positions_z); doclens are
                     NOT duplicated into blocks — they live once per doc in
                     the docid-sorted ``doc_lens_wide`` norms sidecar
 - ``term_stats/``  (field, term, df, ctf, bucket)
@@ -66,14 +66,16 @@ BLOCKS_SCHEMA = T.StructType([
     T.StructField("n", T.IntegerType(), False),
     T.StructField("min_docid", T.LongType(), False),
     T.StructField("max_docid", T.LongType(), False),
-    T.StructField("max_score", T.DoubleType(), False),
-    T.StructField("max_tf", T.IntegerType(), False),
-    T.StructField("min_doclen", T.IntegerType(), False),
     T.StructField("striped", T.BooleanType(), False),
     T.StructField("docids_z", T.BinaryType(), False),
     T.StructField("tfs_z", T.BinaryType(), False),
     T.StructField("positions_z", T.BinaryType(), False),
 ])
+# blocks_segments/ rows: the block row plus its term bucket. Segment reads
+# pass it explicitly, which skips a schema-inference job and ignores
+# columns older indexes still carry in their segment files.
+SEGMENTS_SCHEMA = T.StructType(
+    [*BLOCKS_SCHEMA.fields, T.StructField("bucket", T.IntegerType())])
 
 
 def term_bucket_col(term_col):
@@ -213,9 +215,7 @@ SERVE_TASK_BYTES = 2 << 20
 
 
 def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
-                  field_stats: dict[str, tuple[int, int]], n_docs: int,
                   salt_range: int,
-                  k1: float = 1.2, b: float = 0.75,
                   salt_min_df: int = SALT_MIN_DF,
                   payload_codec: str = "varint",
                   store_positions: bool = True) -> DataFrame:
@@ -240,12 +240,9 @@ def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
     concatenation preserves global docid order — merge is concatenation."""
     import pyarrow as pa
 
-    avg_len = {f: (s / c if c else 1.0) for f, (c, s) in field_stats.items()
-               if f != "__docs__"}
-    b_avg = spark.sparkContext.broadcast(avg_len)
-    b_n_docs = int(n_docs)
-
-    with_df = doc_terms.join(
+    with_df = doc_terms.select(
+        "field", "term", "docid", "tf", "positions_z"
+    ).join(
         F.broadcast(term_stats.select("field", "term", "df")), ["field", "term"]
     ).withColumn(
         "salt",
@@ -263,22 +260,14 @@ def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
         .sortWithinPartitions("field", "term", "salt", "docid")
     )
 
-    out_types = [
-        ("field", pa.string()), ("term", pa.string()), ("salt", pa.int32()),
-        ("blk", pa.int32()), ("n", pa.int32()), ("min_docid", pa.int64()),
-        ("max_docid", pa.int64()), ("max_score", pa.float64()),
-        ("max_tf", pa.int32()), ("min_doclen", pa.int32()),
-        ("striped", pa.bool_()),
-        ("docids_z", pa.binary()), ("tfs_z", pa.binary()),
-        ("positions_z", pa.binary()),
-    ]
+    out_names = BLOCKS_SCHEMA.fieldNames()
 
     def encode_chunk(fields, terms, salts, dfs, run_starts,
-                     docids, tfs, doclens, zdata, zoffs):
+                     docids, tfs, zdata, zoffs):
         # One vectorized pass over a CHUNK of complete runs (runs are
         # contiguous row ranges): fields/terms/salts/dfs are per-RUN arrays,
         # run_starts the chunk-relative row index where each run begins;
-        # docids/tfs/doclens per-row; zdata a byte buffer of pre-encoded
+        # docids/tfs per-row; zdata a byte buffer of pre-encoded
         # position payloads with zoffs[i] the start byte of row i (len
         # rows+1). The tokenize pass already paid the position varint
         # encode, so block payloads are pure byte slices. No per-run or
@@ -316,19 +305,6 @@ def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
             # time. The forward table keeps positions, so a later compact()
             # with store_positions=True can restore them without re-crawling.
             p_sl = [b""] * len(bstarts)
-        # block metadata, all reduceat: BM25 upper bound (the max of the
-        # block's tf-weights, then x idf), max tf, min dl
-        dfs_f = dfs.astype(np.float64)
-        idf_r = np.maximum(0.0, np.log((b_n_docs - dfs_f + 0.5) / (dfs_f + 0.5)))
-        avg_map = b_avg.value
-        avg_r = np.array([avg_map.get(f, 1.0) for f in fields.tolist()],
-                         dtype=np.float64)
-        tfd = tfs.astype(np.float64)
-        dld = doclens.astype(np.float64)
-        tfw = tfd / (tfd + k1 * ((1.0 - b) + b * (dld / avg_r[run_id])))
-        bmax = np.maximum.reduceat(tfw, bstarts) * idf_r[brun]
-        max_tf = np.maximum.reduceat(tfs, bstarts)
-        min_dl = np.minimum.reduceat(doclens, bstarts)
         arrays = [
             pa.array(fields[brun], type=pa.string()),
             pa.array(terms[brun], type=pa.string()),
@@ -338,23 +314,20 @@ def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
             pa.array((bends - bstarts).astype(np.int32), type=pa.int32()),
             pa.array(docids[bstarts].astype(np.int64), type=pa.int64()),
             pa.array(docids[bends - 1].astype(np.int64), type=pa.int64()),
-            pa.array(bmax, type=pa.float64()),
-            pa.array(max_tf.astype(np.int32), type=pa.int32()),
-            pa.array(min_dl.astype(np.int32), type=pa.int32()),
             pa.array(dfs[brun] >= salt_min_df, type=pa.bool_()),
             pa.array(d_sl, type=pa.binary()),
             pa.array(t_sl, type=pa.binary()),
             pa.array(p_sl, type=pa.binary()),
         ]
-        return pa.RecordBatch.from_arrays(arrays, names=[nm for nm, _ in out_types])
+        return pa.RecordBatch.from_arrays(arrays, names=out_names)
 
     def encode_run_chunk(run):
         # a single carried run, encoded through the same vectorized path
-        field, term, salt, df_val, docids, tfs, doclens, pbytes, pboffs = run
+        field, term, salt, df_val, docids, tfs, pbytes, pboffs = run
         return encode_chunk(
             np.array([field], dtype=object), np.array([term], dtype=object),
             np.array([salt], dtype=np.int64), np.array([df_val], dtype=np.int64),
-            np.zeros(1, dtype=np.int64), docids, tfs, doclens, pbytes, pboffs)
+            np.zeros(1, dtype=np.int64), docids, tfs, pbytes, pboffs)
 
     def encode_stream(batches):
         carry = None
@@ -371,7 +344,6 @@ def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
             salt = rb.column(ix["salt"]).to_numpy()
             docid = rb.column(ix["docid"]).to_numpy()
             tf = rb.column(ix["tf"]).to_numpy()
-            doclen = rb.column(ix["doclen"]).to_numpy()
             dfc = rb.column(ix["df"]).to_numpy()
             pz = rb.column(ix["positions_z"])
             # raw (offsets, data) buffers of the binary column; honor any
@@ -390,19 +362,18 @@ def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
 
             def make_run(s, e):
                 return (f_vocab[f_idx[s]], t_vocab[t_idx[s]], int(salt[s]),
-                        int(dfc[s]), docid[s:e], tf[s:e], doclen[s:e],
+                        int(dfc[s]), docid[s:e], tf[s:e],
                         zdata[zoffs[s]:zoffs[e]], zoffs[s:e + 1] - zoffs[s])
 
             first = make_run(starts[0], ends[0])
             if carry is not None:
                 if carry[:3] == first[:3]:
                     merged_offs = np.concatenate(
-                        [carry[8], first[8][1:] + carry[8][-1]])
+                        [carry[7], first[7][1:] + carry[7][-1]])
                     first = carry[:4] + (
                         np.concatenate([carry[4], first[4]]),
                         np.concatenate([carry[5], first[5]]),
                         np.concatenate([carry[6], first[6]]),
-                        np.concatenate([carry[7], first[7]]),
                         merged_offs,
                     )
                 else:
@@ -430,7 +401,7 @@ def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
                     fvoc[f_idx[rs]], tvoc[t_idx[rs]],
                     salt[rs].astype(np.int64), dfc[rs].astype(np.int64),
                     rs - mid_s,
-                    docid[mid_s:mid_e], tf[mid_s:mid_e], doclen[mid_s:mid_e],
+                    docid[mid_s:mid_e], tf[mid_s:mid_e],
                     zdata, zoffs[mid_s:mid_e + 1])
                 if rb_out is not None:
                     yield rb_out
@@ -452,8 +423,6 @@ def build_index(
     n_docs_hint: int | None = None,
     n_salts: int = 32,
     resume: bool = False,
-    bm25_k1: float = 1.2,
-    bm25_b: float = 0.75,
     salt_min_df: int = SALT_MIN_DF,
     payload_codec: str = "pfor",
     store_positions: bool = True,
@@ -540,8 +509,6 @@ def build_index(
     metrics["salt_range"] = salt_range
     metrics["salt_min_df"] = salt_min_df
     metrics["n_salts"] = n_salts
-    metrics["bm25_k1"] = bm25_k1
-    metrics["bm25_b"] = bm25_b
     metrics["payload_codec"] = payload_codec
     metrics["store_positions"] = bool(store_positions)
     metrics["stemmer"] = stemmer  # pinned: query side resolves the same fn
@@ -713,8 +680,7 @@ def build_index(
     segments_path = os.path.join(index_dir, "blocks_segments")
     if resume and _stage_done(index_dir, "segments"):
         # blocks were NOT re-encoded: the manifest must keep the params the
-        # blocks were actually encoded with, else its stale-bounds record
-        # is wrong
+        # blocks were actually encoded with
         man_path = os.path.join(index_dir, "MANIFEST.json")
         old_man = {}
         if os.path.exists(man_path):
@@ -746,20 +712,6 @@ def build_index(
             metrics["salt_min_df"] = pinned["salt_min_df"]
         else:  # encode threshold unknown -> reader must not skip-gate
             metrics["salt_min_df_unknown"] = True
-        if "bm25_k1" in pinned:
-            metrics["bm25_k1"] = pinned["bm25_k1"]
-            metrics["bm25_b"] = pinned["bm25_b"]
-            if (bm25_k1, bm25_b) != (pinned["bm25_k1"], pinned["bm25_b"]):
-                metrics["stale_block_bounds"] = True
-        else:  # encode params unknown -> conservative bounds at serve time
-            metrics["stale_block_bounds"] = True
-        if pinned.get("stale_block_bounds") and pinned.get("appends"):
-            # appended blocks carry bounds under pre-append corpus stats;
-            # only compact()/re-encode clears that, not a resumed build.
-            # (Without appends the flag does NOT persist: the manifest keeps
-            # the encode-time k1/b, so a matching-params resume re-verifies
-            # bounds sound and clears a previous mismatched-call's flag.)
-            metrics["stale_block_bounds"] = True
         # lifecycle state maintained by append/upsert/delete/compact lives
         # only in the manifest — a resumed build (which re-encoded nothing)
         # must carry it forward, not erase it: `appends` drives
@@ -767,21 +719,19 @@ def build_index(
         # holes left by upserts (the dense n_docs recompute above
         # undercounts it), the rest keeps compact_buckets' bookkeeping
         for k in ("appends", "compactions", "docid_space", "n_deleted",
-                  "uncompacted_buckets", "stale_bound_buckets"):
+                  "uncompacted_buckets"):
             if k in pinned:
                 metrics[k] = pinned[k]
     else:
         blocks = encode_blocks(spark, doc_terms, term_stats,
-                               read_field_stats(index_dir), int(n_docs),
-                               salt_range, bm25_k1, bm25_b, salt_min_df,
+                               salt_range, salt_min_df,
                                payload_codec=payload_codec,
                                store_positions=store_positions)
         blocks.write.mode("overwrite").parquet(segments_path)
         _mark_stage(index_dir, "segments", salt_range=int(salt_range),
                     n_salts=int(n_salts), salt_min_df=int(salt_min_df),
                     payload_codec=payload_codec,
-                    store_positions=bool(store_positions),
-                    bm25_k1=float(bm25_k1), bm25_b=float(bm25_b))
+                    store_positions=bool(store_positions))
         _lap("segments")
 
     # -- stage 5: merge segments into the serving layout ---------------------
@@ -795,7 +745,7 @@ def build_index(
     # postings.
     blocks_path = os.path.join(index_dir, "blocks")
     if not (resume and _stage_done(index_dir, "blocks")):
-        seg = spark.read.parquet(segments_path)
+        seg = spark.read.schema(SEGMENTS_SCHEMA).parquet(segments_path)
         (
             seg.repartitionByRange(
                 max(spark.sparkContext.defaultParallelism, 16),
@@ -811,7 +761,7 @@ def build_index(
     if not (resume and _stage_done(index_dir, "lineage")):
         # same rows as the serving layout, but the flat segments table scans
         # without listing the 256 bucket directories the merge just wrote
-        blocks_df = spark.read.parquet(segments_path)
+        blocks_df = spark.read.schema(SEGMENTS_SCHEMA).parquet(segments_path)
         lineage = blocks_df.groupBy("bucket", "field").agg(
             F.count(F.lit(1)).alias("n_blocks"),
             F.sum("n").alias("n_postings"),
@@ -977,8 +927,8 @@ class IndexReader:
     def cold_blocks(self, terms: list[tuple[str, str]]
                     ) -> dict[tuple[str, str], list[tuple]]:
         """Unstriped (low-df) block rows for the given (field, term) pairs,
-        as raw tuples (min_docid, max_docid, max_tf, min_doclen, max_score,
-        docids_z, tfs_z, positions_z); positions_z is b"" on a
+        as raw tuples (min_docid, max_docid, docids_z, tfs_z, positions_z);
+        positions_z is b"" on a
         store_positions=False index. Read from blocks/ on the driver
         (read_term_rows with ``striped == False``, no Spark job) and
         memoized per reader like _ts_memo, so a repeat query reads nothing,
@@ -1016,13 +966,11 @@ class IndexReader:
                               if 0 < stats.get(p, (0, 0))[0] < self.salt_min_df]
             got = read_term_rows(
                 os.path.join(self.index_dir, "blocks"), candidates,
-                ["min_docid", "max_docid", "max_tf", "min_doclen", "max_score",
-                 "docids_z", "tfs_z", "positions_z"],
+                ["min_docid", "max_docid", "docids_z", "tfs_z", "positions_z"],
                 [("striped", "=", False)]) if candidates else {}
             for p in unseen:
-                v = [(int(mn), int(mx), int(mtf), int(mdl), float(ms),
-                      bytes(dz), bytes(tz), bytes(pz or b""))
-                     for mn, mx, mtf, mdl, ms, dz, tz, pz in got.get(p, ())]
+                v = [(int(mn), int(mx), bytes(dz), bytes(tz), bytes(pz or b""))
+                     for mn, mx, dz, tz, pz in got.get(p, ())]
                 found[p] = v
                 self._cold_memo[p] = v
             while len(self._cold_memo) > COLD_MEMO_CAP:

@@ -3,7 +3,7 @@
 The reference keeps postings as uncompressed boxed ``Vector<Integer>`` in RAM
 (/root/reference/QryEval/InvList.java:44-85). At 10^12-doc scale that is not
 viable; per the north rule we add classic delta + LEB128-varint block
-compression with per-block metadata (max docid, max-score).
+compression with per-block metadata (min and max docid).
 
 Everything here is pure numpy (no Python-per-int loops): encode/decode run a
 small fixed number of vectorized passes (<= 10, one per varint byte width),

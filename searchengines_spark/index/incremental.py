@@ -7,18 +7,12 @@ block files stay disjoint by docid range, so appended segments concatenate
 with the existing index — no re-sort, no rewrite of old blocks. Stats tables
 (term_stats, field_stats) are re-merged (old + delta groupBy sum).
 
-Two consistency caveats, by design:
-
-1. docid order == url order no longer holds globally after an append (new
-   urls may sort before old ones) — it holds WITHIN each url-rank segment
-   (base build, each append delta). Serving stays exact by cutting top-k
-   per segment inside each stripe before resolving urls (manifest appends
-   record each segment's docid extent; IndexReader.segment_cuts /
-   query/wand.py _segment_cut).
-2. BM25 block max_score metadata in OLD blocks was computed under the old
-   corpus stats (n_docs, avg doclen, df), so after an append it is stale.
-   The manifest records that (``stale_block_bounds``); no query path reads
-   the bounds, so serving stays exact either way.
+One consistency caveat, by design: docid order == url order no longer
+holds globally after an append (new urls may sort before old ones) — it
+holds WITHIN each url-rank segment (base build, each append delta). Serving
+stays exact by cutting top-k per segment inside each stripe before resolving
+urls (manifest appends record each segment's docid extent;
+IndexReader.segment_cuts / query/wand.py _segment_cut).
 """
 
 from __future__ import annotations
@@ -32,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus import assign_docids, pages_to_tokenized
-from .build import (IndexReader, doc_terms_dir, encode_blocks, read_field_stats,
+from .build import (SEGMENTS_SCHEMA, IndexReader, doc_terms_dir, encode_blocks,
                     term_bucket_col)
 
 
@@ -51,7 +45,6 @@ def _invalidate_path_caches(spark: SparkSession, index_dir: str) -> None:
 
 def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
                  n_salts_hint: int | None = None,
-                 bm25_k1: float = 1.2, bm25_b: float = 0.75,
                  anchors: DataFrame | None = None,
                  page_ranks: DataFrame | None = None) -> dict:
     """Append a batch of pages to an existing index. Returns metrics
@@ -217,7 +210,7 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     # field_stats: old + DELTA (never a rescan of the full doc_lens table —
     # that would make append cost O(index size) instead of O(batch)). The
     # delta aggregates ≤ |fields| rows from the already-cached tokenized
-    # batch; the merge is driver-side arithmetic over the broadcast dict.
+    # batch; the merge adds it to the reader's stats in plain Python.
     n_docs = int(manifest["n_docs"]) + n_new
     delta_fs = {
         r["field"]: (int(r["doc_count"]), int(r["sum_len"]))
@@ -245,9 +238,7 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     new_ts = spark.read.parquet(os.path.join(index_dir, "term_stats"))
     from .build import SALT_MIN_DF
 
-    blocks = encode_blocks(spark, delta_terms, new_ts,
-                           {f: (c, s) for f, c, s in merged_fs}, n_docs,
-                           salt_range, bm25_k1, bm25_b,
+    blocks = encode_blocks(spark, delta_terms, new_ts, salt_range,
                            salt_min_df=int(manifest.get("salt_min_df", SALT_MIN_DF)),
                            payload_codec=manifest.get("payload_codec", "varint"),
                            store_positions=manifest.get("store_positions", True))
@@ -260,12 +251,12 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     seg_path = os.path.join(index_dir, "blocks_segments")
     if os.path.isdir(seg_path):
         blocks.write.mode("append").parquet(seg_path)
-        delta_blocks = spark.read.parquet(seg_path).filter(
+        delta_blocks = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
             F.col("min_docid") > max_docid)  # new docids start past old max
     else:  # pre-segments layout: stage the delta in a scratch dir
         scratch = os.path.join(index_dir, "blocks_delta_tmp")
         blocks.write.mode("overwrite").parquet(scratch)
-        delta_blocks = spark.read.parquet(scratch)
+        delta_blocks = spark.read.schema(SEGMENTS_SCHEMA).parquet(scratch)
     (
         delta_blocks.repartitionByRange(
             max(spark.sparkContext.defaultParallelism, 16),
@@ -298,10 +289,6 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     )
     manifest["uncompacted_buckets"] = sorted(
         set(manifest.get("uncompacted_buckets", [])) | set(touched_buckets))
-    manifest["stale_block_bounds"] = True  # old max_score under old stats
-    # an append changes GLOBAL stats (n_docs, avg doclen), so every bucket's
-    # bounds go stale again — drop any partial-compact freshness record
-    manifest.pop("stale_bound_buckets", None)
     with open(os.path.join(index_dir, "MANIFEST.json"), "w") as f:
         json.dump(manifest, f, indent=2)
     from .snapshots import commit_snapshot
@@ -446,15 +433,12 @@ def delete_pages(spark: SparkSession, index_dir: str, urls: DataFrame) -> dict:
 
 
 def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
-            bm25_k1: float = 1.2, bm25_b: float = 0.75,
             store_positions: bool | None = None,
             salt_range: int | None = None) -> dict:
     """Re-encode the whole posting store from the forward table — the LSM
     compaction that follows a run of appends. Skips tokenization (the
     dominant build stage); restores everything appends left approximate:
 
-    - block max_score bounds recomputed under CURRENT corpus stats (clears
-      ``stale_block_bounds``);
     - salt stripes re-cut over the full docid range (appends land new docids
       in new stripes; compaction rebalances stripe sizes);
     - one fresh bucket-contiguous file layout (appends accumulate files).
@@ -565,15 +549,15 @@ def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
     if store_positions is None:
         store_positions = manifest.get("store_positions", True)
     blocks = encode_blocks(spark, doc_terms, term_stats,
-                           read_field_stats(index_dir), n_docs,
-                           salt_range, bm25_k1, bm25_b, salt_min_df,
+                           salt_range, salt_min_df,
                            payload_codec=manifest.get("payload_codec", "varint"),
                            store_positions=store_positions)
     seg_tmp = os.path.join(index_dir, "blocks_segments_new")
     blocks.write.mode("overwrite").parquet(seg_tmp)
     _swap(index_dir, "blocks_segments")
 
-    seg = spark.read.parquet(os.path.join(index_dir, "blocks_segments"))
+    seg = spark.read.schema(SEGMENTS_SCHEMA).parquet(
+        os.path.join(index_dir, "blocks_segments"))
     blocks_tmp = os.path.join(index_dir, "blocks_new")
     (
         seg.repartitionByRange(
@@ -588,16 +572,12 @@ def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
 
     manifest["salt_range"] = salt_range
     manifest["n_salts"] = n_salts
-    manifest["bm25_k1"] = bm25_k1
-    manifest["bm25_b"] = bm25_b
     # compact re-encoded EVERY block at this threshold, so the manifest can
     # (re)assert it even if the pre-compact value was unknown
     manifest["salt_min_df"] = salt_min_df
     manifest.pop("salt_min_df_unknown", None)
-    manifest["stale_block_bounds"] = False
     manifest["store_positions"] = bool(store_positions)
     manifest["uncompacted_buckets"] = []
-    manifest.pop("stale_bound_buckets", None)
     manifest.setdefault("compactions", []).append(
         {"ts": time.time(), "secs": round(time.time() - t0, 2)})
     with open(os.path.join(index_dir, "MANIFEST.json"), "w") as f:
@@ -616,21 +596,18 @@ def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
 
 
 def compact_buckets(spark: SparkSession, index_dir: str,
-                    buckets: list[int] | None = None,
-                    bm25_k1: float | None = None,
-                    bm25_b: float | None = None) -> dict:
+                    buckets: list[int] | None = None) -> dict:
     """Bucket-scoped compaction — re-encode ONLY the term buckets appends
     touched, leaving every other ``blocks/bucket=N`` directory's files
     physically untouched (byte- and inode-identical).
 
     After a run of appends the posting store is fragmented per bucket (each
-    append adds docid-disjoint block files) and block max_score bounds are
-    stale. A full compact() re-encodes the whole corpus; this re-encodes the
-    postings of the touched buckets only — same codec, same stripe cuts
-    (manifest ``salt_range`` is preserved, because the stripe job derives
-    stripe docid windows from ONE global salt_range) and CURRENT corpus
-    stats, so for the touched buckets the result is row-identical to a full
-    compact run at the same salt_range.
+    append adds docid-disjoint block files). A full compact() re-encodes the
+    whole corpus; this re-encodes the postings of the touched buckets only —
+    same codec, same stripe cuts (manifest ``salt_range`` is preserved,
+    because the stripe job derives stripe docid windows from ONE global
+    salt_range) and CURRENT term dfs, so for the touched buckets the result
+    is row-identical to a full compact run at the same salt_range.
 
     Cost shape at scale: the forward doc_terms scan is still O(corpus)
     (forward files are doc-ordered, every bucket's terms live in every file),
@@ -639,20 +616,11 @@ def compact_buckets(spark: SparkSession, index_dir: str,
     swap in the serving layout uses Spark's dynamic partition overwrite, so
     untouched bucket directories are never listed, read, or rewritten.
 
-    Bounds bookkeeping: touched buckets get fresh max_score bounds (current
-    stats); untouched buckets keep bounds from their last encode, which are
-    stale whenever stats moved since. The manifest records the still-stale
-    set in ``stale_bound_buckets`` and keeps ``stale_block_bounds`` True
-    until it empties. No query path reads the bounds, so correctness never
-    depends on the partial freshness.
-
     Deletes are copy-on-write across ALL buckets a doc's terms hash into, so
     pending tombstones require the full compact(): this raises if any exist.
 
     buckets: explicit bucket list; default = manifest ``uncompacted_buckets``
-    (recorded per-append). bm25 params default to the manifest's encode
-    params — overriding them only makes sense together with a full compact,
-    since untouched buckets would keep the old scoring."""
+    (recorded per-append)."""
     import shutil
 
     from .build import SALT_MIN_DF, doc_terms_dir, encode_blocks
@@ -673,8 +641,6 @@ def compact_buckets(spark: SparkSession, index_dir: str,
 
     n_docs = int(manifest["n_docs"])
     salt_range = int(manifest.get("salt_range") or max(1, -(-n_docs // 32)))
-    k1 = float(manifest.get("bm25_k1", 1.2)) if bm25_k1 is None else bm25_k1
-    b = float(manifest.get("bm25_b", 0.75)) if bm25_b is None else bm25_b
 
     marker = os.path.join(index_dir, "COMPACTING")
     with open(marker, "w") as f:
@@ -685,8 +651,7 @@ def compact_buckets(spark: SparkSession, index_dir: str,
     term_stats = spark.read.parquet(
         os.path.join(index_dir, "term_stats")).filter(F.col("bucket").isin(buckets))
     blocks = encode_blocks(
-        spark, doc_terms, term_stats, read_field_stats(index_dir), n_docs,
-        salt_range, k1, b,
+        spark, doc_terms, term_stats, salt_range,
         salt_min_df=int(manifest.get("salt_min_df", SALT_MIN_DF)),
         payload_codec=manifest.get("payload_codec", "varint"),
         store_positions=manifest.get("store_positions", True))
@@ -697,12 +662,14 @@ def compact_buckets(spark: SparkSession, index_dir: str,
     # path; here the rewrite is IO-only over ~100x-compressed blocks.
     seg_path = os.path.join(index_dir, "blocks_segments")
     if os.path.isdir(seg_path):
-        keep = spark.read.parquet(seg_path).filter(~F.col("bucket").isin(buckets))
+        keep = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
+            ~F.col("bucket").isin(buckets))
         keep.unionByName(blocks).write.mode("overwrite").parquet(seg_path + "_new")
         _swap(index_dir, "blocks_segments")
         shutil.rmtree(os.path.join(index_dir, "blocks_segments_old"),
                       ignore_errors=True)
-        blocks = spark.read.parquet(seg_path).filter(F.col("bucket").isin(buckets))
+        blocks = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
+            F.col("bucket").isin(buckets))
 
     # serving layout: dynamic partition overwrite swaps ONLY the bucket
     # directories present in `blocks`; untouched bucket dirs keep their files
@@ -715,16 +682,6 @@ def compact_buckets(spark: SparkSession, index_dir: str,
         .partitionBy("bucket").parquet(os.path.join(index_dir, "blocks"))
     )
 
-    remaining_stale: list[int] = []
-    if manifest.get("stale_block_bounds"):
-        blocks_root = os.path.join(index_dir, "blocks")
-        present = sorted(
-            int(d.split("=", 1)[1]) for d in os.listdir(blocks_root)
-            if d.startswith("bucket="))
-        prior_stale = set(manifest.get("stale_bound_buckets", present))
-        remaining_stale = sorted(prior_stale - set(buckets))
-    manifest["stale_bound_buckets"] = remaining_stale
-    manifest["stale_block_bounds"] = bool(remaining_stale)
     manifest["uncompacted_buckets"] = sorted(
         set(manifest.get("uncompacted_buckets", [])) - set(buckets))
     manifest.setdefault("partial_compactions", []).append(
@@ -737,8 +694,7 @@ def compact_buckets(spark: SparkSession, index_dir: str,
     snap = commit_snapshot(index_dir, "compact_buckets")
     _invalidate_path_caches(spark, index_dir)
     os.remove(marker)
-    return {"secs": time.time() - t0, "buckets": buckets,
-            "stale_bound_buckets": remaining_stale, "snapshot": snap}
+    return {"secs": time.time() - t0, "buckets": buckets, "snapshot": snap}
 
 
 def _swap(index_dir: str, name: str) -> None:

@@ -5,9 +5,8 @@ program like any other query.
 
 Evaluation is exhaustive and vectorized, as the reference's DAAT loop
 visits every matching doc (QryEval.java:1172-1178): each stripe decodes
-its query terms' blocks and scores them with dense numpy arrays. The
-block-max metadata the build writes (max_score, max_tf, min_doclen) is
-not read here.
+its query terms' blocks and scores them with dense numpy arrays, so the
+index stores no per-block score bounds.
 
 Distribution story (how this runs on 1000 executors): the index's ``salt``
 is a *docid-range stripe* (build.py), so all blocks of one salt cover a
@@ -254,7 +253,7 @@ def wand_topk_batch_local(reader: IndexReader, queries: dict,
     # Position payloads ship only for positional leaves.
     cold: dict[tuple[str, str], list] = {
         key: [(mn, mx, dz, tz, pz if key in pos_pairs else b"")
-              for mn, mx, _, _, _, dz, tz, pz in rows]
+              for mn, mx, dz, tz, pz in rows]
         for key, rows in reader.cold_blocks(sorted(block_pairs | pos_pairs)).items()
     }
     cold_bytes = sum(len(dz) + len(tz) + len(pz)

@@ -6,9 +6,9 @@ via incremental.append_pages (foreachBatch — the index append is a batch
 job, exactly-once per epoch via the streaming checkpoint). Queries pick up
 new segments on the next IndexReader open.
 
-incremental.compact() (periodic, from the forward table) restores tight
-block bounds, rebalanced stripes and a single file layout, and physically
-purges tombstoned deletes.
+incremental.compact() (periodic, from the forward table) restores
+rebalanced stripes and a single file layout, and physically purges
+tombstoned deletes.
 """
 
 from __future__ import annotations

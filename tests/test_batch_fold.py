@@ -8,9 +8,13 @@ stripe job with a qid dimension. Gates:
   2-query batch.
 """
 
+import itertools
+
 import pytest
 
 from searchengines_spark.engine import Engine
+
+_JOB_GROUPS = itertools.count()
 
 QS = {
     "flat_and": "#AND( cebaba1 dibaba2 )",
@@ -69,9 +73,17 @@ def test_fold_jobs_constant_in_query_count(spark, tiny_index):
     eng.search_batch_df(qs, "indri", 5).collect()
 
     def jobs(fn):
-        b = len(sc.statusTracker().getJobIdsForGroup(None) or [])
-        fn()
-        return len(sc.statusTracker().getJobIdsForGroup(None) or []) - b
+        # count a dedicated job group: the status store retains a bounded
+        # number of jobs, so differencing the global id list goes negative
+        # once Spark starts evicting old jobs
+        group = f"fold-jobs-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group) or [])
 
     n2 = jobs(lambda: eng.search_batch_df(two, "indri", 5).collect())
     n8 = jobs(lambda: eng.search_batch_df(qs, "indri", 5).collect())

@@ -1,4 +1,4 @@
-"""Cold (unstriped, low-df) block lookups on the WAND serve path:
+"""Cold (unstriped, low-df) block lookups on the stripe-job serve path:
 
 - provably-empty lookups are SKIPPED (zero Spark jobs) when the stats
   prove no cold blocks can exist — all query terms' df >= salt_min_df on
@@ -144,8 +144,9 @@ def test_cold_lookup_fetched_once_then_memoized(spark, cold_index, monkeypatch):
 
 
 def test_wand_identity_with_cold_terms(spark, cold_index):
-    """Mixed hot+cold query: the flat WAND kernel and Engine.search must
-    both equal the oracle."""
+    """Mixed hot+cold query: wand_topk (the flat BM25 bag of words, run as
+    a compiled #SUM program) and Engine.search must both equal the
+    oracle."""
     reader = IndexReader(spark, cold_index)
     eng = Engine(reader)
     q = "hotone coldtail"

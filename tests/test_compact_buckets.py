@@ -6,9 +6,8 @@ strict subset of the 64 term buckets, compact_buckets() must
 - produce, for the touched buckets, rows identical to a FULL compact() run
   at the same salt_range (same codec, same stripe cuts, current stats);
 - keep serving exact (partial-compacted engine == full-compacted engine);
-- keep conservative-bounds bookkeeping honest: stale_bound_buckets = the
-  buckets whose max_score metadata is still pre-append, and
-  stale_block_bounds stays True until that set empties.
+- record the compacted buckets in the manifest and clear them from
+  ``uncompacted_buckets``.
 
 Deletes are copy-on-write across all buckets, so pending tombstones must
 force the full compact (ValueError).
@@ -21,13 +20,14 @@ import math
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql.conf import RuntimeConfig
 
 from searchengines_spark.corpus import generate_pages
 from searchengines_spark.engine import Engine
 from searchengines_spark.index import IndexReader, build_index
-from searchengines_spark.index.build import N_BUCKETS
+from searchengines_spark.index.build import BLOCKS_SCHEMA, N_BUCKETS
 from searchengines_spark.index.incremental import (
     append_pages,
     compact,
@@ -163,15 +163,17 @@ def test_serving_matches_full_compact(spark, partial_vs_full):
 
 
 def test_manifest_bounds_bookkeeping(partial_vs_full):
-    d, _, touched, untouched, _, res = partial_vs_full
+    d, _, touched, _, _, _ = partial_vs_full
     with open(os.path.join(d, "MANIFEST.json")) as f:
         man = json.load(f)
     assert man["uncompacted_buckets"] == []
-    # untouched buckets still carry pre-append bounds -> conservative WAND
-    assert man["stale_block_bounds"] is True
-    assert man["stale_bound_buckets"] == sorted(untouched)
-    assert res["stale_bound_buckets"] == sorted(untouched)
     assert man["partial_compactions"][-1]["buckets"] == sorted(touched)
+    # blocks hold exactly the block row; no BM25 params or bounds flags
+    files = glob.glob(os.path.join(d, "blocks", "bucket=*", "*.parquet"))
+    assert files
+    for f in files:
+        assert pq.read_schema(f).names == BLOCKS_SCHEMA.fieldNames(), f
+    assert not [k for k in man if k.startswith(("bm25_", "stale_"))]
 
 
 def test_second_partial_compact_is_noop(spark, partial_vs_full):

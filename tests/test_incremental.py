@@ -1,17 +1,23 @@
 """Incremental append + streaming ingestion: an appended index must answer
-planner-path queries identically to a full rebuild over the same corpus, and
-WAND with recomputed bounds must stay exact."""
+queries identically to a full rebuild over the same corpus, compaction must
+leave results unchanged, and indexes written with the older block row
+(which also carried three per-block score-bound columns) must keep working."""
 
+import glob
+import json
 import math
 import os
+import shutil
 
+import pyarrow.parquet as pq
 import pytest
 
 from searchengines_spark.corpus import generate_pages
 from searchengines_spark.engine import Engine
 from searchengines_spark.index import IndexReader, build_index
-from searchengines_spark.index.incremental import append_pages
-from searchengines_spark.query.wand import wand_topk
+from searchengines_spark.index.build import BLOCKS_SCHEMA
+from searchengines_spark.index.incremental import (append_pages, compact,
+                                                   compact_buckets)
 
 QUERY_TERMS = ["cebaba1", "dibaba2", "fobaba3"]
 
@@ -35,6 +41,18 @@ def appended_and_full(spark, tmp_path_factory):
     return d_inc, d_full
 
 
+def _assert_current_format(d):
+    """Every blocks/ file holds exactly the BLOCKS_SCHEMA columns, and the
+    manifest carries no BM25 encode params or stale-bounds flags."""
+    files = glob.glob(os.path.join(d, "blocks", "bucket=*", "*.parquet"))
+    assert files
+    for f in files:
+        assert pq.read_schema(f).names == BLOCKS_SCHEMA.fieldNames(), f
+    with open(os.path.join(d, "MANIFEST.json")) as f:
+        man = json.load(f)
+    assert not [k for k in man if k.startswith(("bm25_", "stale_"))]
+
+
 def test_append_matches_full_rebuild(spark, appended_and_full):
     d_inc, d_full = appended_and_full
     e_inc, e_full = Engine(IndexReader(spark, d_inc)), Engine(IndexReader(spark, d_full))
@@ -51,13 +69,11 @@ def test_append_matches_full_rebuild(spark, appended_and_full):
 
 
 def test_manifest_tracks_appends(spark, appended_and_full):
-    import json
-
     d_inc, _ = appended_and_full
     with open(os.path.join(d_inc, "MANIFEST.json")) as f:
         m = json.load(f)
-    assert m["stale_block_bounds"] is True
     assert len(m["appends"]) == 1 and m["appends"][0]["n_new"] > 0
+    _assert_current_format(d_inc)
 
 
 def test_append_docid_assignment_parallel(spark):
@@ -87,32 +103,6 @@ def test_append_docid_assignment_parallel(spark):
     assert [int(r["docid"]) for r in by_url] == list(range(101, 101 + n))
 
 
-def test_resume_preserves_encode_params(spark, tmp_path):
-    """build_index(resume=True) with different k1/b but a completed segments
-    stage must NOT record the new params as the encode params — it keeps the
-    old ones and flags stale bounds, so WAND pruning stays sound."""
-    import json
-
-    pages = generate_pages(spark, 60, seed=3, partitions=2)
-    d = str(tmp_path / "idx")
-    m1 = build_index(spark, pages, d, n_salts=2, bm25_k1=2.0, bm25_b=0.5)
-    assert (m1["bm25_k1"], m1["bm25_b"]) == (2.0, 0.5)
-    # resume with different params; every stage is done so nothing re-encodes
-    m2 = build_index(spark, pages, d, n_salts=2, resume=True,
-                     bm25_k1=1.2, bm25_b=0.75)
-    assert (m2["bm25_k1"], m2["bm25_b"]) == (2.0, 0.5)
-    assert m2.get("stale_block_bounds") is True
-    with open(os.path.join(d, "MANIFEST.json")) as f:
-        man = json.load(f)
-    assert (man["bm25_k1"], man["bm25_b"]) == (2.0, 0.5)
-    assert man["stale_block_bounds"] is True
-    # same params -> no stale flag
-    m3 = build_index(spark, pages, d, n_salts=2, resume=True,
-                     bm25_k1=2.0, bm25_b=0.5)
-    assert (m3["bm25_k1"], m3["bm25_b"]) == (2.0, 0.5)
-    assert not m3.get("stale_block_bounds")
-
-
 def test_streaming_ingestion(spark, tmp_path):
     from searchengines_spark.streaming import stream_index
 
@@ -135,17 +125,10 @@ def test_streaming_ingestion(spark, tmp_path):
 
 
 def test_compact_after_append(spark, tmp_path):
-    """compact(): fresh bounds (WAND exact without conservative recompute),
-    identical query results, stale flag cleared."""
-    import json
-    import os
-
+    """compact() after an append: identical query results from
+    Engine.search and from wand_topk."""
     import pyspark.sql.functions as F
 
-    from searchengines_spark.corpus import generate_pages
-    from searchengines_spark.engine import Engine
-    from searchengines_spark.index import IndexReader, build_index
-    from searchengines_spark.index.incremental import append_pages, compact
     from searchengines_spark.query.wand import wand_topk
 
     pages = generate_pages(spark, 150, seed=21, partitions=3)
@@ -164,13 +147,81 @@ def test_compact_after_append(spark, tmp_path):
     before = results()
     m = compact(spark, d, n_salts=4)
     assert m["n_docs"] > 150
-    with open(os.path.join(d, "MANIFEST.json")) as f:
-        man = json.load(f)
-    assert man["stale_block_bounds"] is False
+    _assert_current_format(d)
     after = results()
     assert before == after
-    # WAND with build-time bounds (no conservative recompute) == exhaustive
+    # the flat BM25 bag of words over the compacted blocks agrees too
     r = IndexReader(spark, d)
     w = [(x["url"], round(x["score"], 9)) for x in
          wand_topk(r, ["robaba5", "subaba6", "taveba0"], k=50).collect()]
     assert w == after
+
+
+# columns and manifest keys of the block row this format replaced
+LEGACY_BLOCK_COLUMNS = {"max_score": "double", "max_tf": "int",
+                        "min_doclen": "int"}
+LEGACY_MANIFEST_KEYS = {"bm25_k1": 1.2, "bm25_b": 0.75}
+
+
+def _add_legacy_columns(spark, d):
+    """Rewrite blocks_segments/ and blocks/ in the older block row: the
+    three bound columns after max_docid, constant values."""
+    import pyspark.sql.functions as F
+
+    for tbl, part in (("blocks_segments", []), ("blocks", ["bucket"])):
+        path = os.path.join(d, tbl)
+        df = spark.read.parquet(path)
+        cols = []
+        for c in df.columns:
+            cols.append(c)
+            if c == "max_docid":
+                cols += [F.lit(1).cast(t).alias(n)
+                         for n, t in LEGACY_BLOCK_COLUMNS.items()]
+        df.select(*cols).write.partitionBy(*part).parquet(path + "_legacy")
+        shutil.rmtree(path)
+        os.rename(path + "_legacy", path)
+        files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+        assert files and all(set(LEGACY_BLOCK_COLUMNS) <= set(pq.read_schema(f).names)
+                             for f in files)
+    man_path = os.path.join(d, "MANIFEST.json")
+    with open(man_path) as f:
+        man = json.load(f)
+    with open(man_path, "w") as f:
+        json.dump({**man, **LEGACY_MANIFEST_KEYS}, f)
+
+
+@pytest.mark.slow
+def test_legacy_block_format_lifecycle(spark, tmp_path):
+    """An index whose segment and block files still carry the bound
+    columns serves, appends, compacts by bucket and compacts in full, with
+    results after each step equal to those of an untouched copy."""
+    pages = generate_pages(spark, 160, seed=5, partitions=2)
+    pages.write.parquet(str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    d_new = str(tmp_path / "new")
+    # a low striping threshold gives both striped and unstriped blocks
+    build_index(spark, pages.filter("url < 'https://www5'"), d_new,
+                n_salts=4, salt_min_df=16)
+    d_old = str(tmp_path / "old")
+    shutil.copytree(d_new, d_old)
+    _add_legacy_columns(spark, d_old)
+
+    def results(d):
+        e = Engine(IndexReader(spark, d))
+        return [[(r["url"], r["score"]) for r in e.search(q, m, 20).collect()]
+                for q, m in [(" ".join(QUERY_TERMS), "bm25"),
+                             ("#AND( cebaba1 dibaba2 )", "indri"),
+                             ("#NEAR/4( cebaba1 dibaba2 )", "bm25")]]
+
+    assert results(d_old) == results(d_new)
+    steps = [
+        lambda d: append_pages(spark, d, pages.filter("url >= 'https://www5'")),
+        lambda d: compact_buckets(spark, d),
+        lambda d: compact(spark, d, n_salts=4),
+    ]
+    for step in steps:
+        step(d_new)
+        step(d_old)
+        want = results(d_new)
+        assert any(want)
+        assert results(d_old) == want
