@@ -150,11 +150,9 @@ def write_term_stats(term_stats: DataFrame, path: str) -> None:
 
 
 def doc_terms_dir(index_dir: str) -> str:
-    """Postings long table location: the tokenized table's post=1 partition
-    (single-write layout); falls back to a standalone doc_terms/ dir for
-    indexes built before that layout."""
-    p = os.path.join(index_dir, "tokenized", "post=1")
-    return p if os.path.exists(p) else os.path.join(index_dir, "doc_terms")
+    """Postings long table location: the tokenized table's post=1
+    partition."""
+    return os.path.join(index_dir, "tokenized", "post=1")
 
 
 def _write_doc_lens_wide(spark: SparkSession, index_dir: str) -> None:
@@ -420,7 +418,6 @@ def build_index(
     spark: SparkSession,
     pages: DataFrame,
     index_dir: str,
-    n_docs_hint: int | None = None,
     n_salts: int = 32,
     resume: bool = False,
     salt_min_df: int = SALT_MIN_DF,
@@ -501,7 +498,7 @@ def build_index(
         metrics["page_ranks_ignored_on_resume"] = True
     docids = spark.read.parquet(docids_path).select("url", "docid")
 
-    n_docs = n_docs_hint or docids.count()
+    n_docs = docids.count()
     _lap("count_docs")
     salt_range = max(1, math.ceil(n_docs / n_salts))
     metrics["n_docs"] = n_docs
@@ -526,7 +523,7 @@ def build_index(
         # (explicit hint — it can exceed autoBroadcastJoinThreshold); at
         # 10^12 docs neither side broadcasts, and the cluster answer is
         # bucketed/co-partitioned storage of pages and docids on url so the
-        # join is shuffle-free. html bytes never move in either regime.
+        # join is shuffle-free.
         par = spark.sparkContext.defaultParallelism * 2
         en_pages = pages.filter(F.col("lang") == "en")
         # gate the explicit broadcast hint on estimated bytes, not a bare row
@@ -536,29 +533,19 @@ def build_index(
         # broadcasts if runtime stats say it's genuinely small.
         bcast_cap = int(os.environ.get("SE_BROADCAST_CAP_BYTES", 256 << 20))
         bcast_ids = n_docs * 100 <= bcast_cap
-        ids = F.broadcast(docids) if bcast_ids else docids
-        with_ids = en_pages.join(ids, "url")
-        # Above the broadcast cap the join is a sort-merge shuffle of the
-        # FULL html corpus, and its output width = spark.sql.shuffle
-        # .partitions — a FIXED count. The first 10M-page build crossed the
-        # cap with the session's 32 partitions: ~350 MB of html per join
-        # task, and the pipelined join+tokenize+write stage OOM'd the 8 GB
-        # heap (32 concurrent tasks x SMJ sort buffers + 2 partitioned
-        # parquet writers x 32 MB row groups; BENCH/STRESS_10M.md). Width
-        # must scale with the DATA: provision one shuffle partition per
-        # byte-bounded input split (so each join task holds one split's
-        # worth of html) and let AQE coalesce small corpora back down.
-        # Restored after the tokenize write — only this stage moves html
-        # bytes through a shuffle. The conf.set happens inside that write's
-        # try/finally (everything in between is lazy, so the join binds the
-        # shuffle width at ACTION time): an exception anywhere earlier —
-        # e.g. a bad anchors frame — must not leak a thousands-wide shuffle
-        # setting into the rest of the session.
-        _sp_key = "spark.sql.shuffle.partitions"
-        _old_sp = spark.conf.get(_sp_key)
-        _widened_sp = (str(max(par, en_pages.rdd.getNumPartitions(),
-                               int(_old_sp)))
-                       if not bcast_ids else _old_sp)
+        if bcast_ids:
+            with_ids = en_pages.join(F.broadcast(docids), "url")
+        else:
+            # Above the cap the join is a sort-merge shuffle of the FULL
+            # html corpus, so its width must scale with the DATA: at the
+            # session's fixed 32 shuffle partitions the first 10M-page build
+            # held ~350 MB of html per join task and OOM'd the 8 GB heap
+            # (BENCH/STRESS_10M.md). One partition per input split keeps
+            # each join task at one split's worth of html; the docids side
+            # (and an unbroadcast anchors join) shuffles to the same width.
+            width = max(par, en_pages.rdd.getNumPartitions(),
+                        int(spark.conf.get("spark.sql.shuffle.partitions")))
+            with_ids = en_pages.repartition(width, "url").join(docids, "url")
         if anchors is not None:
             # semi-join to the indexed urls FIRST: anchor targets include
             # off-corpus urls (external links), so the raw table can exceed
@@ -594,24 +581,22 @@ def build_index(
 
             shutil.rmtree(os.path.join(index_dir, "anchor_state"),
                           ignore_errors=True)
-        if en_pages.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+        if bcast_ids and (en_pages.rdd.getNumPartitions()
+                          < spark.sparkContext.defaultParallelism):
             # tiny test corpora scan into a couple of input splits, which
             # would serialize the tokenize kernel. Only then is the
             # repartition worth it: it is a full shuffle of the html bytes,
             # so when the scan already supplies >= one split per core the
             # kernel reads parquet splits directly and no page bytes move.
+            # (The sort-merge join's output is already >= par wide.)
             with_ids = with_ids.repartition(par)
         tokenized_path = os.path.join(index_dir, "tokenized")
         # ONE write, partitioned by post (0 = doclen sentinel rows, 1 = real
         # postings). doc_terms IS the post=1 partition directory — the old
         # filter-and-rewrite of the biggest intermediate is gone.
-        try:
-            spark.conf.set(_sp_key, _widened_sp)
-            pages_to_tokenized(with_ids, stemmer=stemmer).withColumn(
-                "post", (F.col("term") != "").cast("int")
-            ).write.mode("overwrite").partitionBy("post").parquet(tokenized_path)
-        finally:
-            spark.conf.set(_sp_key, _old_sp)
+        pages_to_tokenized(with_ids, stemmer=stemmer).withColumn(
+            "post", (F.col("term") != "").cast("int")
+        ).write.mode("overwrite").partitionBy("post").parquet(tokenized_path)
         spark.read.parquet(os.path.join(tokenized_path, "post=0")).select(
             "docid", "field", F.col("doclen").cast("int").alias("len")
         ).write.mode("overwrite").parquet(doc_lens_path)
@@ -884,24 +869,18 @@ class IndexReader:
         read doclens from (blocks no longer carry them)."""
         return os.path.join(self.index_dir, "doc_lens_wide")
 
-    def segment_cuts(self) -> list[int] | None:
+    def segment_cuts(self) -> list[int]:
         """Docid cut points of the url-rank SEGMENTS: [0, lo_1, lo_2, ...]
-        where lo_i is the first docid of the i-th append. WITHIN a segment,
-        docid order == url order (build docids are ranks of the sorted
-        urls; each append's delta docids are ranks of the delta's sorted
-        urls, offset past the old max) — the invariant serving tie-breaks
-        lean on. Across segments it does not hold, so exact reference
-        tie-breaks need a per-segment cut (the stripe task's top-k per
-        segment, query/wand.py _segment_cut). Returns None when the history
-        is unusable (a legacy append entry without extents) — the stripe
-        task then keeps every candidate."""
-        appends = self.manifest.get("appends", [])
-        cuts = [0]
-        for e in appends:
-            if "docid_lo" not in e:
-                return None
-            cuts.append(int(e["docid_lo"]))
-        return sorted(set(cuts))
+        where lo_i is the first docid of the i-th append (its manifest
+        entry's ``docid_lo``). WITHIN a segment, docid order == url order
+        (build docids are ranks of the sorted urls; each append's delta
+        docids are ranks of the delta's sorted urls, offset past the old
+        max) — the invariant serving tie-breaks lean on. Across segments it
+        does not hold, so exact reference tie-breaks need a per-segment cut
+        (the stripe task's top-k per segment, query/wand.py
+        _segment_cut)."""
+        return sorted({0, *(int(e["docid_lo"])
+                            for e in self.manifest.get("appends", []))})
 
     def avg_doclen(self, field: str) -> float:
         c, s = self.field_stats[field]
@@ -1032,7 +1011,10 @@ class IndexReader:
         on disk) plus one empty skeleton row per stripe, hash-partitioned
         by salt. A query then filters its terms out of the cached
         partitions and groupBy(salt) reuses the partitioning — the warm
-        stripe job is ONE no-shuffle stage, no per-query block scan.
+        stripe job is ONE no-shuffle stage, no per-query block scan. The
+        explicit repartition gives the cached plan that partitioning under
+        the session's conf as it is (AQE on or off); the fill sets no conf
+        key, so concurrent callers on the session are unaffected.
 
         This is the Spark analog of an IR shard's in-memory posting cache
         (Lucene's page-cache-resident segments): the cluster's executor
@@ -1072,25 +1054,13 @@ class IndexReader:
                 for fn in fns if fn.endswith(".parquet"))
             n_part = max(1, min(self.n_stripes,
                                 -(-blocks_bytes // SERVE_TASK_BYTES)))
-            # Plan + persist + materialize with AQE OFF: an AQE-wrapped
-            # cached plan reports UNKNOWN output partitioning, so every
-            # query's groupBy(salt) would re-Exchange the filtered rows (a
-            # small shuffle, but a whole extra stage of task dispatch per
-            # query). A non-adaptive cached plan exposes
-            # HashPartitioning(salt, n) and the per-query stripe job runs
-            # as ONE stage. AQE adds nothing here anyway — the layout is
-            # an explicit fixed-width repartition.
-            spark, aqe_key = self.spark, "spark.sql.adaptive.enabled"
-            old_aqe = spark.conf.get(aqe_key)
-            try:
-                spark.conf.set(aqe_key, "false")
-                hot = (self._blocks.filter(F.col("striped")).select(*sel)
-                       .unionByName(skeleton)
-                       .repartition(n_part, "salt")
-                       .persist(StorageLevel.MEMORY_AND_DISK))
-                hot.count()  # materialize under the non-adaptive plan
-            finally:
-                spark.conf.set(aqe_key, old_aqe)
+            # the explicit repartition(n_part, "salt") is what keeps each
+            # query's groupBy("salt") over the cached rows free of an exchange
+            hot = (self._blocks.filter(F.col("striped")).select(*sel)
+                   .unionByName(skeleton)
+                   .repartition(n_part, "salt")
+                   .persist(StorageLevel.MEMORY_AND_DISK))
+            hot.count()
             # registry upkeep: a prior reader's cache for the SAME dir is
             # superseded (readers are per-version) — release it; evict the
             # oldest entry past the cap
@@ -1124,19 +1094,6 @@ class IndexReader:
     def doc_lens(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.index_dir, "doc_lens"))
 
-    def doc_lens_wide(self) -> DataFrame:
-        """(docid, len_<field>...) — one row per doc. Built at index time;
-        derived on the fly for indexes predating the artifact."""
-        p = os.path.join(self.index_dir, "doc_lens_wide")
-        if os.path.exists(p):
-            return self.spark.read.parquet(p)
-        from ..corpus import FIELDS
-
-        wide = self.doc_lens().groupBy("docid").pivot("field", FIELDS).agg(F.first("len"))
-        for f in FIELDS:
-            wide = wide.withColumnRenamed(f, f"len_{f}")
-        return wide
-
     def _deletes_dir(self) -> str | None:
         """The deletes/ table, or None when the index has no tombstones.
         Bounded by deletes since the last compaction — compaction removes
@@ -1167,9 +1124,6 @@ class IndexReader:
 
     def attrs(self) -> DataFrame:
         """(docid, raw_url, spam_score, page_rank) — stored fused in the
-        docids table; a standalone attrs/ dir (older layout) wins if present."""
-        legacy = os.path.join(self.index_dir, "attrs")
-        if os.path.exists(legacy):
-            return self.spark.read.parquet(legacy)
+        docids table."""
         return self.spark.read.parquet(os.path.join(self.index_dir, "docids")).select(
             "docid", F.col("url").alias("raw_url"), "spam_score", "page_rank")

@@ -25,7 +25,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..corpus import assign_docids, pages_to_tokenized
+from ..corpus import FIELDS, assign_docids, pages_to_tokenized
 from .build import (SEGMENTS_SCHEMA, IndexReader, doc_terms_dir, encode_blocks,
                     term_bucket_col)
 
@@ -44,7 +44,6 @@ def _invalidate_path_caches(spark: SparkSession, index_dir: str) -> None:
 
 
 def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
-                 n_salts_hint: int | None = None,
                  anchors: DataFrame | None = None,
                  page_ranks: DataFrame | None = None) -> dict:
     """Append a batch of pages to an existing index. Returns metrics
@@ -118,16 +117,6 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     if n_new == 0:
         return {"appended": 0, "secs": time.time() - t0}
 
-    if os.path.exists(os.path.join(index_dir, "attrs")):  # older split layout
-        new_ids.select(
-            "docid",
-            F.col("url").alias("raw_url"),
-            (F.conv(F.substring(F.md5("url"), 1, 4), 16, 10).cast("long") % 100)
-            .cast("double").alias("spam_score"),
-            ((F.conv(F.substring(F.md5("url"), 5, 4), 16, 10).cast("long") % 10000) / 100.0)
-            .alias("page_rank"),
-        ).write.mode("append").parquet(os.path.join(index_dir, "attrs"))
-
     # IMPORTANT: do not reuse `fresh` here — its anti-join against the docids
     # directory re-lists files lazily and now sees the ids we just appended,
     # evaluating empty. new_ids (docid > max_docid) already names exactly the
@@ -165,18 +154,15 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     tokenized.filter(F.col("term") == "").select(
         "docid", "field", F.col("doclen").cast("int").alias("len")
     ).write.mode("append").parquet(os.path.join(index_dir, "doc_lens"))
-    wide_path = os.path.join(index_dir, "doc_lens_wide")
-    if os.path.exists(wide_path):
-        from ..corpus import FIELDS
-
-        dw = tokenized.filter(F.col("term") == "").groupBy("docid").pivot(
-            "field", FIELDS).agg(F.first(F.col("doclen").cast("int")))
-        for f in FIELDS:
-            dw = dw.withColumnRenamed(f, f"len_{f}")
-        # docid-sorted delta files: appended docids are all > the old max,
-        # so the new files' docid ranges stay disjoint from existing ones
-        # and the norms sidecar's row-group range pruning keeps working
-        dw.sort("docid").write.mode("append").parquet(wide_path)
+    dw = tokenized.filter(F.col("term") == "").groupBy("docid").pivot(
+        "field", FIELDS).agg(F.first(F.col("doclen").cast("int")))
+    for f in FIELDS:
+        dw = dw.withColumnRenamed(f, f"len_{f}")
+    # docid-sorted delta files: appended docids are all > the old max,
+    # so the new files' docid ranges stay disjoint from existing ones
+    # and the norms sidecar's row-group range pruning keeps working
+    dw.sort("docid").write.mode("append").parquet(
+        os.path.join(index_dir, "doc_lens_wide"))
     delta_terms = tokenized.filter(F.col("term") != "")
     delta_terms.write.mode("append").parquet(doc_terms_dir(index_dir))
     _lap("tokenize")
@@ -249,14 +235,9 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     # blocks once, and the ~100x-smaller re-read range-partitions them into
     # O(tasks + buckets) bucket-contiguous files.
     seg_path = os.path.join(index_dir, "blocks_segments")
-    if os.path.isdir(seg_path):
-        blocks.write.mode("append").parquet(seg_path)
-        delta_blocks = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
-            F.col("min_docid") > max_docid)  # new docids start past old max
-    else:  # pre-segments layout: stage the delta in a scratch dir
-        scratch = os.path.join(index_dir, "blocks_delta_tmp")
-        blocks.write.mode("overwrite").parquet(scratch)
-        delta_blocks = spark.read.schema(SEGMENTS_SCHEMA).parquet(scratch)
+    blocks.write.mode("append").parquet(seg_path)
+    delta_blocks = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
+        F.col("min_docid") > max_docid)  # new docids start past old max
     (
         delta_blocks.repartitionByRange(
             max(spark.sparkContext.defaultParallelism, 16),
@@ -265,11 +246,6 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
         .write.mode("append").partitionBy("bucket")
         .parquet(os.path.join(index_dir, "blocks"))
     )
-    if not os.path.isdir(seg_path):
-        import shutil
-
-        shutil.rmtree(os.path.join(index_dir, "blocks_delta_tmp"),
-                      ignore_errors=True)
     _lap("encode")
     tokenized.unpersist()
 
@@ -493,8 +469,7 @@ def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
         _swap(index_dir, "tokenized")
         # anchor_state rides the same purge: superseded upsert rows are
         # live-filtered at read time, but only compaction reclaims them
-        for tbl in ("doc_lens", "doc_lens_wide", "docids", "attrs",
-                    "anchor_state"):
+        for tbl in ("doc_lens", "doc_lens_wide", "docids", "anchor_state"):
             p = os.path.join(index_dir, tbl)
             if not os.path.exists(p):
                 continue
@@ -661,15 +636,14 @@ def compact_buckets(spark: SparkSession, index_dir: str,
     # would be bucket-partitioned too and take the same dynamic-overwrite
     # path; here the rewrite is IO-only over ~100x-compressed blocks.
     seg_path = os.path.join(index_dir, "blocks_segments")
-    if os.path.isdir(seg_path):
-        keep = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
-            ~F.col("bucket").isin(buckets))
-        keep.unionByName(blocks).write.mode("overwrite").parquet(seg_path + "_new")
-        _swap(index_dir, "blocks_segments")
-        shutil.rmtree(os.path.join(index_dir, "blocks_segments_old"),
-                      ignore_errors=True)
-        blocks = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
-            F.col("bucket").isin(buckets))
+    keep = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
+        ~F.col("bucket").isin(buckets))
+    keep.unionByName(blocks).write.mode("overwrite").parquet(seg_path + "_new")
+    _swap(index_dir, "blocks_segments")
+    shutil.rmtree(os.path.join(index_dir, "blocks_segments_old"),
+                  ignore_errors=True)
+    blocks = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
+        F.col("bucket").isin(buckets))
 
     # serving layout: dynamic partition overwrite swaps ONLY the bucket
     # directories present in `blocks`; untouched bucket dirs keep their files

@@ -37,7 +37,6 @@ import time
 # never reads it (it is the pre-merge scratch the next compaction rewrites).
 _TABLES = (
     "docids",
-    "attrs",  # legacy split layout only
     "tokenized",  # forward table; post=1 is doc_terms (PRF/LTR/compact input)
     "doc_lens",
     "doc_lens_wide",

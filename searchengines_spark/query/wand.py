@@ -66,7 +66,7 @@ def _ship(sc, value, nbytes: int, threshold: int = 1 << 20):
 
 
 def _segment_cut(docids: np.ndarray, scores: np.ndarray, k: int,
-                 cuts) -> np.ndarray:
+                 cuts: list[int]) -> np.ndarray:
     """Indices of the top k of every url-rank segment, by (score desc,
     docid asc), returned in (score desc, docid asc) order.
 
@@ -74,10 +74,7 @@ def _segment_cut(docids: np.ndarray, scores: np.ndarray, k: int,
     Docids are url ranks only WITHIN a segment — the base build and each
     append delta (IndexReader.segment_cuts) — so a stripe that spans a
     segment cut must keep k winners per segment; the caller's final (score
-    desc, url asc) merge then restores the exact reference order. cuts
-    None (unknown history): every candidate is kept."""
-    if cuts is None:
-        return np.lexsort((docids, -scores))
+    desc, url asc) merge then restores the exact reference order."""
     seg = np.searchsorted(np.asarray(cuts, np.int64), docids, side="right")
     order = np.lexsort((docids, -scores, seg))
     s = seg[order]

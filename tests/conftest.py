@@ -1,7 +1,9 @@
+import contextlib
 import os
 import sys
 
 import pytest
+from pyspark.sql.conf import RuntimeConfig
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -18,6 +20,28 @@ def spark():
     s = get_spark("tests", cores=int(os.environ.get("TEST_CORES", "8")), shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def conf_spy():
+    """``with conf_spy() as keys:`` records every session-conf key set
+    inside the block (the engine sets none: concurrent callers on one
+    SparkSession must not see each other's conf)."""
+
+    @contextlib.contextmanager
+    def spy():
+        keys = []
+        real = RuntimeConfig.set
+
+        def record(self, key, value):
+            keys.append(key)
+            return real(self, key, value)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(RuntimeConfig, "set", record)
+            yield keys
+
+    return spy
 
 
 @pytest.fixture(scope="session")

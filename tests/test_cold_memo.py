@@ -250,6 +250,28 @@ def test_close_keeps_newer_readers_serve_cache(spark, cold_index):
     assert b_df.storageLevel == StorageLevel.NONE
 
 
+def test_serve_layout_keeps_salt_partitioning(spark, cold_index, monkeypatch):
+    """With one task per stripe (n_part > 1) the layout, filled under the
+    session's AQE, keeps its salt partitioning for the queries that read
+    it: a warm query's groupBy(salt) adds no exchange (under AQE an
+    exchange would run as its own job), so it is one stripe job."""
+    from searchengines_spark.index import build
+
+    monkeypatch.setattr(build, "SERVE_TASK_BYTES", 1)
+    reader = IndexReader(spark, cold_index)
+    assert reader.n_stripes > 1
+    eng = Engine(reader)
+    first = eng.search("hotone coldtail", "bm25", 10)
+    rows = first.collect()
+    plan = first._jdf.queryExecution().executedPlan().toString()
+    query_plan = plan.split("InMemoryRelation")[0]
+    assert "Exchange" not in query_plan, plan
+    assert "hashpartitioning(salt#" in plan and f", {reader.n_stripes})" in plan
+    again, n = _jobs(spark, lambda: eng.search("hotone coldtail", "bm25", 10).collect())
+    assert again == rows and n == 1
+    reader.close()
+
+
 def test_segment_tie_rule_across_append(spark, tmp_path):
     """Docids are url ranks only within a segment. Stripe 3 of this index
     spans docids 9-11 across the append's cut at 10, so a per-stripe
@@ -325,26 +347,29 @@ def test_reader_open_starts_no_job(spark, tiny_index):
 
 
 def test_first_touch_query_forms_start_one_stripe_job(spark, tiny_index,
-                                                      tiny_oracle):
+                                                      tiny_oracle, conf_spy):
     """A fresh reader's term stats and cold blocks are read on the driver,
     so the first query of every benchmark form, with terms this reader
     never saw, starts only its stripe job — two when a #NEAR/#WINDOW list
-    feeds BM25 idf — and ranks like the oracle."""
+    feeds BM25 idf — and ranks like the oracle. Neither the serve-cache
+    fill nor a search sets a session-conf key."""
     from searchengines_spark.corpus import VOCAB
 
     forms, indri_kw = _forms()
     reader = IndexReader(spark, tiny_index.index_dir)
-    reader.serve_blocks()
-    eng = Engine(reader)
-    for i, (text, model) in enumerate(forms):
-        q = text.format(*VOCAB[30 + 3 * i:33 + 3 * i], w=0.3, v=0.7)
-        kw = indri_kw if model == "indri" else {}
-        got, n = _jobs(spark, lambda: eng.search(q, model, 10, **kw).collect())
-        derived = model in ("bm25", "indri") and ("#NEAR" in q or "#WINDOW" in q
-                                                  or "#SYN" in q)
-        assert n == (2 if derived else 1), (q, model, n)
-        want = oracle_search(tiny_oracle, q, model, 10, **kw)
-        _assert_same([(r["url"], r["score"]) for r in got], want)
+    with conf_spy() as keys:
+        reader.serve_blocks()
+        eng = Engine(reader)
+        for i, (text, model) in enumerate(forms):
+            q = text.format(*VOCAB[30 + 3 * i:33 + 3 * i], w=0.3, v=0.7)
+            kw = indri_kw if model == "indri" else {}
+            got, n = _jobs(spark, lambda: eng.search(q, model, 10, **kw).collect())
+            derived = model in ("bm25", "indri") and (
+                "#NEAR" in q or "#WINDOW" in q or "#SYN" in q)
+            assert n == (2 if derived else 1), (q, model, n)
+            want = oracle_search(tiny_oracle, q, model, 10, **kw)
+            _assert_same([(r["url"], r["score"]) for r in got], want)
+    assert keys == []
 
 
 def test_deleted_set_starts_no_job(spark, tmp_path):

@@ -22,7 +22,6 @@ import shutil
 
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql.conf import RuntimeConfig
 
 from searchengines_spark.corpus import generate_pages
 from searchengines_spark.engine import Engine
@@ -63,19 +62,6 @@ def _bucket_digest(index_dir, bucket):
     return h.hexdigest()
 
 
-def _spy_conf_set(mp):
-    """Record every session-conf key set while ``mp`` is active."""
-    keys = []
-    real = RuntimeConfig.set
-
-    def spy(self, key, value):
-        keys.append(key)
-        return real(self, key, value)
-
-    mp.setattr(RuntimeConfig, "set", spy)
-    return keys
-
-
 def _present_buckets(index_dir):
     root = os.path.join(index_dir, "blocks")
     return sorted(
@@ -84,26 +70,25 @@ def _present_buckets(index_dir):
 
 
 @pytest.fixture(scope="module")
-def partial_vs_full(spark, tmp_path_factory):
+def partial_vs_full(spark, tmp_path_factory, conf_spy):
     root = tmp_path_factory.mktemp("cbkt")
     pages = generate_pages(spark, 200, seed=7, partitions=4)
     d = str(root / "idx")
-    build_index(spark, pages, d, n_salts=4)
-    append_pages(spark, d, _delta_pages(spark))
+    with conf_spy() as conf_keys:
+        build_index(spark, pages, d, n_salts=4)
+        append_pages(spark, d, _delta_pages(spark))
 
-    with open(os.path.join(d, "MANIFEST.json")) as f:
-        man = json.load(f)
-    touched = man["uncompacted_buckets"]
-    present = _present_buckets(d)
-    untouched = [b for b in present if b not in touched]
-    pre_digests = {b: _bucket_digest(d, b) for b in untouched}
+        with open(os.path.join(d, "MANIFEST.json")) as f:
+            man = json.load(f)
+        touched = man["uncompacted_buckets"]
+        present = _present_buckets(d)
+        untouched = [b for b in present if b not in touched]
+        pre_digests = {b: _bucket_digest(d, b) for b in untouched}
 
-    d_full = str(root / "idx_full")
-    shutil.copytree(d, d_full)
-    compact(spark, d_full, salt_range=int(man["salt_range"]))
+        d_full = str(root / "idx_full")
+        shutil.copytree(d, d_full)
+        compact(spark, d_full, salt_range=int(man["salt_range"]))
 
-    with pytest.MonkeyPatch.context() as mp:
-        conf_keys = _spy_conf_set(mp)
         res = compact_buckets(spark, d)
     return d, d_full, touched, untouched, pre_digests, {**res, "conf_keys": conf_keys}
 
@@ -117,8 +102,9 @@ def test_touched_is_strict_subset(partial_vs_full):
 
 def test_untouched_bucket_files_byte_identical(partial_vs_full):
     d, _, _, untouched, pre_digests, res = partial_vs_full
-    # dynamic overwrite is a per-write option, never a session-wide toggle
-    assert not any("partitionOverwriteMode" in k for k in res["conf_keys"])
+    # dynamic overwrite is a per-write option, never a session-wide toggle;
+    # build, append and compact set no session conf either
+    assert res["conf_keys"] == []
     for b in untouched:
         assert _bucket_digest(d, b) == pre_digests[b], f"bucket={b} rewritten"
 

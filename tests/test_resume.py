@@ -3,6 +3,7 @@ resume=True must produce a logically identical index (content, not bytes)."""
 
 import json
 import os
+import re
 import shutil
 
 import pytest
@@ -228,15 +229,18 @@ def test_resume_identical(spark, tmp_path):
     assert m["postings"] > 0 and m["docs_per_sec"] > 0
 
 
-def test_smj_join_regime_identical_and_conf_restored(spark, tmp_path, monkeypatch):
+def test_smj_join_regime_identical_and_conf_restored(spark, tmp_path, monkeypatch,
+                                                     conf_spy):
     """Above SE_BROADCAST_CAP_BYTES the docids join falls back from
     broadcast to a sort-merge shuffle of the html corpus, and build_index
-    widens spark.sql.shuffle.partitions for that one stage so join-task
+    repartitions the pages side by url to a data-scaled width so join-task
     input stays bounded (the 10M-page heap-OOM fix — BENCH/STRESS_10M.md).
-    Gate both halves: the SMJ-regime index is content-identical to the
-    broadcast-regime one, and the session's shuffle setting is restored
-    afterward."""
+    Gate it: the SMJ-regime index is content-identical to the
+    broadcast-regime one, the join shuffles both sides once at that width,
+    and neither build sets a session conf key (the width is the join's
+    own, so the session's shuffle setting is unchanged afterward)."""
     from searchengines_spark.corpus import generate_pages
+    from searchengines_spark.index import build as build_mod
     from searchengines_spark.index import build_index
 
     pages = generate_pages(spark, 800, seed=42, partitions=4)
@@ -244,9 +248,30 @@ def test_smj_join_regime_identical_and_conf_restored(spark, tmp_path, monkeypatc
     p = spark.read.parquet(str(tmp_path / "pages"))
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    build_index(spark, p, str(tmp_path / "bcast"), n_salts=4)
+    with conf_spy() as bcast_keys:
+        build_index(spark, p, str(tmp_path / "bcast"), n_salts=4)
+    joined = []
+    real_tokenize = build_mod.pages_to_tokenized
+    monkeypatch.setattr(build_mod, "pages_to_tokenized",
+                        lambda df, **kw: joined.append(df) or real_tokenize(df, **kw))
     monkeypatch.setenv("SE_BROADCAST_CAP_BYTES", "1")
-    build_index(spark, p, str(tmp_path / "smj"), n_salts=4)
+    # this docids table is far below Spark's own size-based broadcast
+    # threshold; switch that off so the join really sort-merges
+    bcast_key = "spark.sql.autoBroadcastJoinThreshold"
+    old_threshold = spark.conf.get(bcast_key)
+    spark.conf.set(bcast_key, "-1")
+    try:
+        with conf_spy() as smj_keys:
+            build_index(spark, p, str(tmp_path / "smj"), n_salts=4)
+        plan = joined[-1]._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(bcast_key, old_threshold)
+    assert bcast_keys == [] and smj_keys == []
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
+    # the pages side and the docids side, no third exchange
+    widths = re.findall(r"Exchange \w+\((?:[^()]*, )?(\d+)\)", plan)
+    assert len(widths) == 2 and widths[0] == widths[1], plan
+    assert int(widths[0]) >= 2 * spark.sparkContext.defaultParallelism
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert (index_fingerprint(spark, str(tmp_path / "bcast"))
             == index_fingerprint(spark, str(tmp_path / "smj")))

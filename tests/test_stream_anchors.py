@@ -11,7 +11,6 @@ import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
-from pyspark.sql.conf import RuntimeConfig
 
 from searchengines_spark.streaming import stream_anchor_votes
 
@@ -36,44 +35,37 @@ def _latest_deltas(out: str) -> dict[str, str]:
     return dict(zip(allr["url"], allr["inlink"]))  # last epoch wins
 
 
-def test_stream_anchor_votes(spark, tmp_path, monkeypatch):
-    conf_keys = []
-    real_set = RuntimeConfig.set
+def test_stream_anchor_votes(spark, tmp_path, conf_spy):
+    with conf_spy() as conf_keys:
+        src = str(tmp_path / "links_in")
+        out = str(tmp_path / "deltas")
+        ck = str(tmp_path / "ck")
+        st = str(tmp_path / "state")
+        os.makedirs(src)
 
-    def spy(self, key, value):
-        conf_keys.append(key)
-        return real_set(self, key, value)
+        spark.createDataFrame(B1, ["src", "dst", "anchor"]).coalesce(1) \
+            .write.mode("append").parquet(src)
+        q = stream_anchor_votes(spark, src, out, ck, st)
+        q.awaitTermination(180)
 
-    monkeypatch.setattr(RuntimeConfig, "set", spy)
-    src = str(tmp_path / "links_in")
-    out = str(tmp_path / "deltas")
-    ck = str(tmp_path / "ck")
-    st = str(tmp_path / "state")
-    os.makedirs(src)
+        d1 = _latest_deltas(out)
+        # both targets affected in epoch 1; aggregates match the batch rule
+        assert d1 == {"https://t.example/x": "alpha beta",
+                      "https://t.example/y": "gamma"}
 
-    spark.createDataFrame(B1, ["src", "dst", "anchor"]).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q = stream_anchor_votes(spark, src, out, ck, st)
-    q.awaitTermination(180)
+        # batch 2: one genuinely new host vote for x, one pure replay
+        spark.createDataFrame(B2, ["src", "dst", "anchor"]).coalesce(1) \
+            .write.mode("append").parquet(src)
+        q2 = stream_anchor_votes(spark, src, out, ck, st)
+        q2.awaitTermination(180)
 
-    d1 = _latest_deltas(out)
-    # both targets affected in epoch 1; aggregates match the batch rule
-    assert d1 == {"https://t.example/x": "alpha beta",
-                  "https://t.example/y": "gamma"}
-
-    # batch 2: one genuinely new host vote for x, one pure replay
-    spark.createDataFrame(B2, ["src", "dst", "anchor"]).coalesce(1) \
-        .write.mode("append").parquet(src)
-    q2 = stream_anchor_votes(spark, src, out, ck, st)
-    q2.awaitTermination(180)
-
-    # only x recomputes (y's votes unchanged -> absent from the new delta)
-    files2 = glob.glob(out + "/epoch=*")
-    assert len(files2) == 2
-    last = max(files2, key=lambda p: int(p.split("epoch=")[1]))
-    pdf = pd.read_parquet(glob.glob(last + "/*.parquet")[0])
-    assert list(pdf["url"]) == ["https://t.example/x"]
-    assert list(pdf["inlink"]) == ["alpha beta"]  # 3 hosts, same top anchor
+        # only x recomputes (y's votes unchanged -> absent from the new delta)
+        files2 = glob.glob(out + "/epoch=*")
+        assert len(files2) == 2
+        last = max(files2, key=lambda p: int(p.split("epoch=")[1]))
+        pdf = pd.read_parquet(glob.glob(last + "/*.parquet")[0])
+        assert list(pdf["url"]) == ["https://t.example/x"]
+        assert list(pdf["inlink"]) == ["alpha beta"]  # 3 hosts, same top anchor
 
     # vote store: the replayed vote did NOT duplicate
     votes = spark.read.parquet(st + "/votes")
