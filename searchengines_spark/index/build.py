@@ -1,5 +1,8 @@
 """Inverted-index build: pages -> term-partitioned, docid-sorted,
-delta+varint-compressed posting blocks.
+delta-coded posting blocks (pfor by default, varint optional).
+
+Every table below has its one writer here, shared by build_index and the
+incremental operations (index/incremental.py).
 
 This is the capability the reference *lacks* (it reads a prebuilt Lucene
 index, /root/reference/QryEval/Idx.java:236-259); the north rule mandates we
@@ -76,6 +79,21 @@ BLOCKS_SCHEMA = T.StructType([
 # columns older indexes still carry in their segment files.
 SEGMENTS_SCHEMA = T.StructType(
     [*BLOCKS_SCHEMA.fields, T.StructField("bucket", T.IntegerType())])
+# docids/ and term_stats/ rows, passed to their re-reads for the same
+# reason: a read without a schema starts a schema-inference Spark job
+DOCIDS_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("docid", T.LongType()),
+    T.StructField("spam_score", T.DoubleType()),
+    T.StructField("page_rank", T.DoubleType()),
+])
+TERM_STATS_SCHEMA = T.StructType([
+    T.StructField("field", T.StringType()),
+    T.StructField("term", T.StringType()),
+    T.StructField("df", T.LongType()),
+    T.StructField("ctf", T.LongType()),
+    T.StructField("bucket", T.IntegerType()),
+])
 
 
 def term_bucket_col(term_col):
@@ -131,6 +149,74 @@ def read_field_stats(index_dir: str) -> dict[str, tuple[int, int]]:
     return {r["field"]: (int(r["doc_count"]), int(r["sum_len"])) for r in rows}
 
 
+def _broadcast_cap() -> int:
+    """Byte cap of the url-keyed joins' broadcast hints (docids, anchors);
+    above it AQE still broadcasts if runtime stats say the side is small."""
+    return int(os.environ.get("SE_BROADCAST_CAP_BYTES", 256 << 20))
+
+
+def write_docids(ids: DataFrame, path: str, mode: str,
+                 page_ranks: DataFrame | None) -> None:
+    """docids/ rows for ``ids`` (url, docid) with the per-doc attrs
+    (reference: Idx.getAttribute, Idx.java:47-52) fused in: pure functions
+    of url, so one table, one job. spam/pagerank are md5 stand-ins (the
+    synthetic corpus has no crawl metadata); page_ranks, a real
+    crawl-graph prior, replaces the stand-in for the urls it covers."""
+    rows = ids.select(
+        "url", "docid",
+        (F.conv(F.substring(F.md5("url"), 1, 4), 16, 10).cast("long") % 100)
+        .cast("double").alias("spam_score"),
+        ((F.conv(F.substring(F.md5("url"), 5, 4), 16, 10).cast("long") % 10000) / 100.0)
+        .alias("page_rank"),
+    )
+    if page_ranks is not None:
+        pr = page_ranks.select("url", F.col("page_rank").alias("pr_in"))
+        rows = (rows.join(pr, "url", "left")
+                .select("url", "docid", "spam_score",
+                        F.coalesce("pr_in", "page_rank").alias("page_rank")))
+    rows.write.mode(mode).parquet(path)
+
+
+def read_docids(spark: SparkSession, index_dir: str) -> DataFrame:
+    return spark.read.schema(DOCIDS_SCHEMA).parquet(
+        os.path.join(index_dir, "docids"))
+
+
+def join_anchors(spark: SparkSession, index_dir: str, with_ids: DataFrame,
+                 anchors: DataFrame, ids: DataFrame, n_rows: int, mode: str,
+                 after_docid: int | None = None) -> DataFrame:
+    """Left-join inbound anchor text onto ``with_ids`` as inlink_override.
+    The anchor state of ``ids``' urls is written to ``anchor_state/``
+    (keyed by docid, so live-filtering survives upserts; refresh_anchors
+    diffs against it) and read BACK as the join source: one evaluation of
+    the anchor lineage. Joining to ids first drops off-corpus targets, so
+    ``n_rows`` bounds the side for the broadcast gate (~1KB/row).
+    after_docid: an append's old max docid; only later rows are read."""
+    from ..links import one_anchor_row_per_url
+
+    state_path = os.path.join(index_dir, "anchor_state")
+    # defensively reduce to one row per url (latest epoch wins for a
+    # multi-epoch streaming delta read) — a duplicate url here would
+    # duplicate page rows and inflate tf/df silently
+    one_anchor_row_per_url(anchors).join(ids, "url").select(
+        "docid", "url", "inlink"
+    ).write.mode(mode).parquet(state_path)
+    anc = spark.read.parquet(state_path)
+    if after_docid is not None:
+        anc = anc.filter(F.col("docid") > after_docid)
+    anc = anc.select("url", F.col("inlink").alias("inlink_override"))
+    anc = F.broadcast(anc) if n_rows * 1024 <= _broadcast_cap() else anc
+    return with_ids.join(anc, "url", "left")
+
+
+def term_stats_of(doc_terms: DataFrame) -> DataFrame:
+    """(field, term, df, ctf, bucket) of a doc_terms frame."""
+    return doc_terms.groupBy("field", "term").agg(
+        F.count(F.lit(1)).cast("long").alias("df"),
+        F.sum("tf").cast("long").alias("ctf"),
+    ).withColumn("bucket", term_bucket_col(F.col("term")))
+
+
 def write_term_stats(term_stats: DataFrame, path: str) -> None:
     """Lookup-optimized layout for the vocab table: hash-repartition on the
     term bucket (every bucket's rows land in ONE task regardless of session
@@ -149,27 +235,128 @@ def write_term_stats(term_stats: DataFrame, path: str) -> None:
      .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
 
+def read_term_stats(spark: SparkSession, index_dir: str) -> DataFrame:
+    return spark.read.schema(TERM_STATS_SCHEMA).parquet(
+        os.path.join(index_dir, "term_stats"))
+
+
+def field_stats_of(doc_lens: DataFrame) -> DataFrame:
+    """(field, doc_count, sum_len) of (docid, field, len) rows; a doc
+    counts toward a field only when that field is non-empty."""
+    return doc_lens.filter(F.col("len") > 0).groupBy("field").agg(
+        F.count(F.lit(1)).cast("long").alias("doc_count"),
+        F.sum("len").cast("long").alias("sum_len"),
+    )
+
+
+def write_field_stats(spark: SparkSession, field_stats: DataFrame,
+                      n_docs: int, path: str) -> None:
+    """field_stats/: the per-field rows plus one ``__docs__`` row carrying
+    the global doc count N (Idx.getNumDocs analog)."""
+    meta_row = spark.createDataFrame(
+        [("__docs__", int(n_docs), 0)], ["field", "doc_count", "sum_len"])
+    field_stats.unionByName(meta_row).write.mode("overwrite").parquet(path)
+
+
+def norms_of(doc_lens: DataFrame) -> DataFrame:
+    """One row per doc with ``len_<field>`` columns (the wide doc_lens):
+    Indri's default scores need per-field doclens for every candidate doc;
+    pivoting once at write time beats a scan+pivot per query."""
+    from ..corpus import FIELDS
+
+    wide = doc_lens.groupBy("docid").pivot("field", FIELDS).agg(F.first("len"))
+    for f in FIELDS:
+        wide = wide.withColumnRenamed(f, f"len_{f}")
+    return wide
+
+
+def write_norms(spark: SparkSession, wide: DataFrame, path: str,
+                mode: str) -> None:
+    """doc_lens_wide/, the norms sidecar (index/norms.py): the serve
+    kernels range-read a docid stripe, and parquet row-group min/max stats
+    prune that read only if files are docid-clustered — so every write is
+    docid-range partitioned and sorted. A full write gets one range per
+    core; an append's ranges are left to AQE to coalesce, so a small delta
+    adds few files. Appended docids are all past the old max, so the new
+    files' ranges stay disjoint from the existing ones."""
+    width = [] if mode == "append" else [
+        max(spark.sparkContext.defaultParallelism, 8)]
+    (wide.repartitionByRange(*width, "docid")
+     .sortWithinPartitions("docid")
+     .write.mode(mode).parquet(path))
+
+
+def write_segments(spark: SparkSession, doc_terms: DataFrame,
+                   term_stats: DataFrame, path: str, mode: str,
+                   params: dict, keep: DataFrame | None = None) -> None:
+    """Encode ``doc_terms`` into the flat ``blocks_segments/`` table
+    (encode_blocks with the index's encode ``params``, see index_params);
+    ``keep``: existing segment rows written back alongside."""
+    blocks = encode_blocks(spark, doc_terms, term_stats,
+                           params["salt_range"], params["salt_min_df"],
+                           params["payload_codec"], params["store_positions"])
+    if keep is not None:
+        blocks = keep.unionByName(blocks)
+    blocks.write.mode(mode).parquet(path)
+
+
+def write_blocks(spark: SparkSession, segments: DataFrame, path: str,
+                 mode: str, **options) -> None:
+    """Merge segment rows into the serving layout ``blocks/``.
+
+    Range-partition the COMPRESSED blocks (~100x smaller than raw
+    postings) on (bucket, field, term, salt): equal keys land in one
+    partition, each merge task owns a contiguous bucket range, so
+    partitionBy("bucket") emits ~1-2 directories per task — file count
+    O(tasks + buckets) — with term-contiguous row groups so parquet
+    min/max stats prune term IN() scans. Stripes are docid-range
+    disjoint, so merge is layout-only, never a re-sort of postings.
+    (A direct partitionBy("bucket") write of the encode output would emit
+    one file per (encode task, bucket): measured 8k+ tiny files and 4x
+    the append wall clock on a 27k-doc delta.) ``options``: per-write
+    options, e.g. compact_buckets' dynamic partitionOverwriteMode."""
+    (segments.repartitionByRange(
+        max(spark.sparkContext.defaultParallelism, 16),
+        "bucket", "field", "term", "salt")
+     .sortWithinPartitions("bucket", "field", "term", "salt", "min_docid")
+     .write.mode(mode).options(**options).partitionBy("bucket").parquet(path))
+
+
 def doc_terms_dir(index_dir: str) -> str:
     """Postings long table location: the tokenized table's post=1
     partition."""
     return os.path.join(index_dir, "tokenized", "post=1")
 
 
-def _write_doc_lens_wide(spark: SparkSession, index_dir: str) -> None:
-    from ..corpus import FIELDS
+def deletes_dir(index_dir: str) -> str | None:
+    """The deletes/ table, or None when the index has no tombstones.
+    Bounded by deletes since the last compaction — compaction removes
+    tombstoned docs physically and clears this table."""
+    p = os.path.join(index_dir, "deletes")
+    if os.path.isdir(p) and any(f.endswith(".parquet") for f in os.listdir(p)):
+        return p
+    return None
 
-    narrow = spark.read.parquet(os.path.join(index_dir, "doc_lens"))
-    wide = narrow.groupBy("docid").pivot("field", FIELDS).agg(F.first("len"))
-    for f in FIELDS:
-        wide = wide.withColumnRenamed(f, f"len_{f}")
-    # docid-range sorted files: this table doubles as the norms sidecar
-    # (index/norms.py) — the serve kernels range-read a docid stripe, and
-    # parquet row-group min/max stats prune that read only if files are
-    # docid-clustered
-    (wide.repartitionByRange(
-        max(spark.sparkContext.defaultParallelism, 8), "docid")
-     .sortWithinPartitions("docid")
-     .write.mode("overwrite").parquet(os.path.join(index_dir, "doc_lens_wide")))
+
+def read_deletes(spark: SparkSession, index_dir: str) -> DataFrame | None:
+    """Tombstoned docids (merge-on-read deletes), or None when the index
+    has none."""
+    p = deletes_dir(index_dir)
+    return spark.read.parquet(p).select("docid").distinct() if p else None
+
+
+class StageTimer:
+    """Per-stage wall seconds for the ``stage_secs`` metrics: ``lap(name)``
+    records the time since the previous lap (or since construction)."""
+
+    def __init__(self) -> None:
+        self.t0 = self._last = time.time()
+        self.secs: dict[str, float] = {}
+
+    def lap(self, name: str) -> None:
+        now = time.time()
+        self.secs[name] = round(now - self._last, 2)
+        self._last = now
 
 
 def _stage_done(index_dir: str, stage: str) -> bool:
@@ -203,6 +390,46 @@ def _pinned_meta(index_dir: str, stage: str, manifest: dict,
     return {**marker, **manifest}
 
 
+def _manifest_path(index_dir: str) -> str:
+    return os.path.join(index_dir, "MANIFEST.json")
+
+
+def read_manifest(index_dir: str, missing_ok: bool = False) -> dict:
+    """The index's manifest; ``{}`` for a missing one when ``missing_ok``
+    (a build that crashed before its final manifest write)."""
+    try:
+        with open(_manifest_path(index_dir)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        if missing_ok:
+            return {}
+        raise
+
+
+def write_manifest(index_dir: str, manifest: dict) -> None:
+    with open(_manifest_path(index_dir), "w") as f:
+        json.dump(manifest, f, indent=2)
+
+
+def commit(spark: SparkSession, index_dir: str, operation: str) -> int:
+    """Commit the index's current tables and manifest as the next snapshot
+    and return its version.
+
+    Then drop/refresh any cached plan fragment that scans this index's
+    files: serving layers cache decoded-postings and stats frames, and
+    Spark's CacheManager keys them by the scan's root PATH. Every writer
+    rewrites files under the SAME paths (overwrite, _swap, dynamic
+    partition overwrite), so without an explicit refresh a post-mutation
+    read silently serves the pre-mutation cache (e.g. postings of purged
+    docs after compact). refreshByPath invalidates by path prefix,
+    covering blocks/, term_stats/, doc_lens_wide/, docids/ in one call."""
+    from .snapshots import commit_snapshot
+
+    snap = commit_snapshot(index_dir, operation)
+    spark.catalog.refreshByPath(index_dir)
+    return snap
+
+
 SALT_MIN_DF = 8 * codec.BLOCK_SIZE  # only terms with df >= this get striped
 # cold-block memo bound: entries are <= SALT_MIN_DF compressed postings
 # with their position payloads (positions are about half of block bytes,
@@ -212,13 +439,29 @@ COLD_MEMO_CAP = 16384
 SERVE_TASK_BYTES = 2 << 20
 
 
+def index_params(manifest: dict, n_docs: int) -> dict:
+    """The encode and tokenize parameters an index was built with
+    (salt_range, salt_min_df, payload_codec, store_positions, stemmer),
+    from its manifest, with the defaults for keys older builds did not
+    write. Returns a new dict and leaves ``manifest`` as it is: append and
+    compact persist the manifest they read, and a default written back
+    into it would, for one, claim a salt_min_df the blocks may not have
+    been encoded with (IndexReader.salt_min_df_known)."""
+    return {
+        "salt_range": int(manifest.get("salt_range")
+                          or max(1, -(-int(n_docs) // 32))),
+        "salt_min_df": int(manifest.get("salt_min_df", SALT_MIN_DF)),
+        "payload_codec": manifest.get("payload_codec", "varint"),
+        "store_positions": bool(manifest.get("store_positions", True)),
+        "stemmer": str(manifest.get("stemmer", "s")),
+    }
+
+
 def encode_blocks(spark, doc_terms: DataFrame, term_stats: DataFrame,
-                  salt_range: int,
-                  salt_min_df: int = SALT_MIN_DF,
-                  payload_codec: str = "varint",
-                  store_positions: bool = True) -> DataFrame:
-    """Salted block-encode kernel, shared by the batch build and incremental
-    append.
+                  salt_range: int, salt_min_df: int, payload_codec: str,
+                  store_positions: bool) -> DataFrame:
+    """Salted block-encode kernel, shared (through write_segments) by
+    build_index, append_pages, compact and compact_buckets.
 
     Shape: repartition by (field, term, salt) hash + sortWithinPartitions
     (field, term, salt, docid) — the classic
@@ -428,7 +671,7 @@ def build_index(
     page_ranks: DataFrame | None = None,
 ) -> dict:
     """Build (or resume) the full index. Returns build metrics.
-    payload_codec: block payload compression for docids/tfs/doclens —
+    payload_codec: block payload compression for docids/tfs —
     "pfor" (patched frame-of-reference, default: ~24%% smaller blocks than
     varint at equal build/serve speed) or "varint" (LEB128); positions are
     always varint (pre-encoded per posting by the tokenize kernel).
@@ -453,53 +696,25 @@ def build_index(
         raise ValueError(f"unknown payload_codec {payload_codec!r}")
     get_stemmer(stemmer)  # fail on the driver, not inside the tokenize job
     os.makedirs(index_dir, exist_ok=True)
-    t0 = time.time()
+    timer = StageTimer()
     metrics: dict = {}
-    stage_secs: dict[str, float] = {}
-    _last = [t0]
-
-    def _lap(name: str) -> None:
-        now = time.time()
-        stage_secs[name] = round(now - _last[0], 2)
-        _last[0] = now
 
     # -- stage 1: deterministic docids (+ per-doc attrs, fused) -------------
-    # attrs (reference: spamScore/rawUrl/PageRank via Idx.getAttribute,
-    # Idx.java:47-52; QryEval.java:822-829) are pure functions of url, so
-    # they ride along in the docids write — one table, one job; readers
-    # column-prune whichever half they need. The synthetic corpus has no
-    # crawl-time metadata, so spam/pagerank are deterministic md5 stand-ins.
     docids_path = os.path.join(index_dir, "docids")
     if not (resume and _stage_done(index_dir, "docids")):
-        base = assign_docids(pages.filter(F.col("lang") == "en")).select(
-            "url", "docid",
-            (F.conv(F.substring(F.md5("url"), 1, 4), 16, 10).cast("long") % 100)
-            .cast("double").alias("spam_score"),
-            ((F.conv(F.substring(F.md5("url"), 5, 4), 16, 10).cast("long") % 10000) / 100.0)
-            .alias("page_rank"),
-        )
-        if page_ranks is not None:
-            # real crawl-graph prior (e.g. links.pagerank over the host
-            # graph, mapped to urls) replaces the stand-in; urls missing
-            # from the frame keep it. Narrow (url, double) join — same
-            # cluster answer as every url-keyed join here.
-            pr = page_ranks.select("url", F.col("page_rank").alias("pr_in"))
-            base = (base.join(pr, "url", "left")
-                    .select("url", "docid", "spam_score",
-                            F.coalesce("pr_in", "page_rank")
-                            .alias("page_rank")))
-        base.write.mode("overwrite").parquet(docids_path)
+        write_docids(assign_docids(pages.filter(F.col("lang") == "en")),
+                     docids_path, "overwrite", page_ranks)
         _mark_stage(index_dir, "docids")
-        _lap("docids")
+        timer.lap("docids")
     elif page_ranks is not None:
         # the docids stage (where attrs live) was resumed as-is; a newly
         # supplied priors frame cannot take effect without a rebuild —
         # surface that instead of silently ignoring it
         metrics["page_ranks_ignored_on_resume"] = True
-    docids = spark.read.parquet(docids_path).select("url", "docid")
+    docids = read_docids(spark, index_dir).select("url", "docid")
 
     n_docs = docids.count()
-    _lap("count_docs")
+    timer.lap("count_docs")
     salt_range = max(1, math.ceil(n_docs / n_salts))
     metrics["n_docs"] = n_docs
     metrics["docid_space"] = n_docs  # dense build: space == count
@@ -527,12 +742,8 @@ def build_index(
         par = spark.sparkContext.defaultParallelism * 2
         en_pages = pages.filter(F.col("lang") == "en")
         # gate the explicit broadcast hint on estimated bytes, not a bare row
-        # count: a (url, docid) row is ~100B serialized, and the driver plus
-        # every executor must materialize the whole table. Cap configurable
-        # for small-memory cluster configs; above the cap, AQE still
-        # broadcasts if runtime stats say it's genuinely small.
-        bcast_cap = int(os.environ.get("SE_BROADCAST_CAP_BYTES", 256 << 20))
-        bcast_ids = n_docs * 100 <= bcast_cap
+        # count: a (url, docid) row is ~100B serialized
+        bcast_ids = n_docs * 100 <= _broadcast_cap()
         if bcast_ids:
             with_ids = en_pages.join(F.broadcast(docids), "url")
         else:
@@ -547,31 +758,8 @@ def build_index(
                         int(spark.conf.get("spark.sql.shuffle.partitions")))
             with_ids = en_pages.repartition(width, "url").join(docids, "url")
         if anchors is not None:
-            # semi-join to the indexed urls FIRST: anchor targets include
-            # off-corpus urls (external links), so the raw table can exceed
-            # n_docs many-fold; after the semi-join rows <= n_docs and the
-            # broadcast gate's n_docs proxy is sound. ~1KB/row (up to 32
-            # concatenated anchors); above the cap, plain shuffle join
-            # (co-partitioned storage on url at cluster scale).
-            # persist the per-docid anchor state actually indexed, then
-            # read it BACK as the join source — one evaluation of the
-            # (expensive) anchor aggregation lineage instead of two, and
-            # the incremental refresh (incremental.refresh_anchors) diffs
-            # future anchor tables against exactly these rows. Keyed by
-            # docid (minted once) so live-filtering survives upserts.
-            state_path = os.path.join(index_dir, "anchor_state")
-            from ..links import one_anchor_row_per_url
-
-            # defensively reduce to one row per url (latest epoch wins for
-            # a multi-epoch streaming delta read) — a duplicate url here
-            # would duplicate page rows and inflate tf/df silently
-            one_anchor_row_per_url(anchors).join(docids, "url").select(
-                "docid", "url", "inlink"
-            ).write.mode("overwrite").parquet(state_path)
-            anc = spark.read.parquet(state_path).select(
-                "url", F.col("inlink").alias("inlink_override"))
-            anc = F.broadcast(anc) if n_docs * 1024 <= bcast_cap else anc
-            with_ids = with_ids.join(anc, "url", "left")
+            with_ids = join_anchors(spark, index_dir, with_ids, anchors,
+                                    docids, n_docs, "overwrite")
             metrics["anchor_inlinks"] = True
         else:
             # a fresh un-anchored build into a previously anchored dir must
@@ -600,12 +788,10 @@ def build_index(
         spark.read.parquet(os.path.join(tokenized_path, "post=0")).select(
             "docid", "field", F.col("doclen").cast("int").alias("len")
         ).write.mode("overwrite").parquet(doc_lens_path)
-        # wide variant (one row per doc, len_<field> columns): Indri's
-        # default scores need per-field doclens for every candidate doc;
-        # pivoting once at build time beats a scan+pivot per query
-        _write_doc_lens_wide(spark, index_dir)
+        write_norms(spark, norms_of(spark.read.parquet(doc_lens_path)),
+                    os.path.join(index_dir, "doc_lens_wide"), "overwrite")
         _mark_stage(index_dir, "doc_terms", stemmer=stemmer)
-        _lap("doc_terms")
+        timer.lap("doc_terms")
     else:
         if anchors is not None:
             # the tokenize stage (where anchors index into the inlink field)
@@ -617,16 +803,12 @@ def build_index(
         # keep the stemmer they were actually stemmed with (same discipline
         # as salt_min_df for resumed segments) — recording this call's value
         # would make the query side stem differently from the documents
-        man_path = os.path.join(index_dir, "MANIFEST.json")
-        man = {}
-        if os.path.exists(man_path):
-            with open(man_path) as f:
-                man = json.load(f)
-        pinned = _pinned_meta(index_dir, "doc_terms", man, man_path)
-        if "stemmer" in pinned:
-            old_stemmer = pinned["stemmer"]
-        elif man:
-            old_stemmer = "s"  # pre-kstem manifest: 's' was the only spec
+        man = read_manifest(index_dir, missing_ok=True)
+        pinned = _pinned_meta(index_dir, "doc_terms", man,
+                              _manifest_path(index_dir))
+        if "stemmer" in pinned or man:
+            # a manifest without the key predates kstem: 's' was the only spec
+            old_stemmer = index_params(pinned, n_docs)["stemmer"]
         else:
             # crashed before any MANIFEST and the marker predates stemmer
             # stamping: the re-run's own value is the best available guess
@@ -638,47 +820,32 @@ def build_index(
     doc_terms = spark.read.parquet(doc_terms_dir(index_dir))
 
     # -- stage 3: stats tables ----------------------------------------------
-    term_stats_path = os.path.join(index_dir, "term_stats")
-    field_stats_path = os.path.join(index_dir, "field_stats")
     if not (resume and _stage_done(index_dir, "stats")):
-        term_stats = doc_terms.groupBy("field", "term").agg(
-            F.count(F.lit(1)).cast("long").alias("df"),
-            F.sum("tf").cast("long").alias("ctf"),
-        ).withColumn("bucket", term_bucket_col(F.col("term")))
-        write_term_stats(term_stats, term_stats_path)
-
-        doc_lens = spark.read.parquet(doc_lens_path)
-        field_stats = doc_lens.filter(F.col("len") > 0).groupBy("field").agg(
-            F.count(F.lit(1)).cast("long").alias("doc_count"),
-            F.sum("len").cast("long").alias("sum_len"),
-        )
-        meta_row = spark.createDataFrame(
-            [("__docs__", int(n_docs), 0)], ["field", "doc_count", "sum_len"]
-        )
-        field_stats.unionByName(meta_row).write.mode("overwrite").parquet(field_stats_path)
+        write_term_stats(term_stats_of(doc_terms),
+                         os.path.join(index_dir, "term_stats"))
+        write_field_stats(spark, field_stats_of(spark.read.parquet(doc_lens_path)),
+                          n_docs, os.path.join(index_dir, "field_stats"))
         _mark_stage(index_dir, "stats")
-        _lap("stats")
+        timer.lap("stats")
 
-    term_stats = spark.read.parquet(term_stats_path)
+    term_stats = read_term_stats(spark, index_dir)
 
     # -- stage 4: salted block encode -> partial segments --------------------
     segments_path = os.path.join(index_dir, "blocks_segments")
     if resume and _stage_done(index_dir, "segments"):
         # blocks were NOT re-encoded: the manifest must keep the params the
-        # blocks were actually encoded with
-        man_path = os.path.join(index_dir, "MANIFEST.json")
-        old_man = {}
-        if os.path.exists(man_path):
-            with open(man_path) as f:
-                old_man = json.load(f)
-        # the segments marker stamps the encode params at encode time, so a
-        # build that crashed before its final MANIFEST write still pins
-        # them; a manifest rewritten later (append/compact) wins on recency
-        pinned = _pinned_meta(index_dir, "segments", old_man, man_path)
+        # blocks were actually encoded with. The segments marker stamps the
+        # encode params at encode time, so a build that crashed before its
+        # final MANIFEST write still pins them; a manifest rewritten later
+        # (append/compact) wins on recency
+        pinned = _pinned_meta(index_dir, "segments",
+                              read_manifest(index_dir, missing_ok=True),
+                              _manifest_path(index_dir))
         # same rule for the payload codec: blocks keep the codec they were
         # actually encoded with
-        metrics["payload_codec"] = pinned.get("payload_codec", "varint")
-        metrics["store_positions"] = pinned.get("store_positions", True)
+        params = index_params(pinned, n_docs)
+        metrics["payload_codec"] = params["payload_codec"]
+        metrics["store_positions"] = params["store_positions"]
         # stripe geometry: the reader derives each stripe's docid window
         # from manifest salt_range — recording this call's value (line
         # `salt_range = ceil(n_docs / n_salts)` above) for blocks encoded
@@ -708,38 +875,20 @@ def build_index(
             if k in pinned:
                 metrics[k] = pinned[k]
     else:
-        blocks = encode_blocks(spark, doc_terms, term_stats,
-                               salt_range, salt_min_df,
-                               payload_codec=payload_codec,
-                               store_positions=store_positions)
-        blocks.write.mode("overwrite").parquet(segments_path)
+        write_segments(spark, doc_terms, term_stats, segments_path,
+                       "overwrite", metrics)
         _mark_stage(index_dir, "segments", salt_range=int(salt_range),
                     n_salts=int(n_salts), salt_min_df=int(salt_min_df),
                     payload_codec=payload_codec,
                     store_positions=bool(store_positions))
-        _lap("segments")
+        timer.lap("segments")
 
     # -- stage 5: merge segments into the serving layout ---------------------
-    # Range-partition the COMPRESSED blocks (~100x smaller than raw postings)
-    # on (bucket, field, term, salt): equal keys land in one partition, each
-    # merge task owns a contiguous bucket range, so partitionBy("bucket")
-    # emits ~1-2 directories per task — file count O(tasks + buckets) — with
-    # term-contiguous row groups so parquet min/max stats prune term IN()
-    # scans. This is the "merge partial segment indexes" step: stripes are
-    # docid-range disjoint, so merge is layout-only, never a re-sort of
-    # postings.
-    blocks_path = os.path.join(index_dir, "blocks")
     if not (resume and _stage_done(index_dir, "blocks")):
-        seg = spark.read.schema(SEGMENTS_SCHEMA).parquet(segments_path)
-        (
-            seg.repartitionByRange(
-                max(spark.sparkContext.defaultParallelism, 16),
-                "bucket", "field", "term", "salt")
-            .sortWithinPartitions("bucket", "field", "term", "salt", "min_docid")
-            .write.mode("overwrite").partitionBy("bucket").parquet(blocks_path)
-        )
+        write_blocks(spark, spark.read.schema(SEGMENTS_SCHEMA).parquet(segments_path),
+                     os.path.join(index_dir, "blocks"), "overwrite")
         _mark_stage(index_dir, "blocks")
-        _lap("merge")
+        timer.lap("merge")
 
     # -- stage 6: lineage / metrics ------------------------------------------
     lineage_path = os.path.join(index_dir, "lineage")
@@ -756,13 +905,13 @@ def build_index(
         )
         lineage.write.mode("overwrite").parquet(lineage_path)
         _mark_stage(index_dir, "lineage")
-        _lap("lineage")
+        timer.lap("lineage")
 
-    elapsed = time.time() - t0
+    elapsed = time.time() - timer.t0
     lineage_rows = spark.read.parquet(lineage_path).agg(
         F.sum("n_postings").alias("p"), F.sum("bytes_compressed").alias("b")
     ).collect()[0]
-    metrics["stage_secs"] = stage_secs
+    metrics["stage_secs"] = timer.secs
     metrics.update(
         build_secs=elapsed,
         docs_per_sec=(n_docs / elapsed if elapsed > 0 else 0.0),
@@ -770,11 +919,8 @@ def build_index(
         postings_per_sec=(int(lineage_rows["p"] or 0) / elapsed if elapsed > 0 else 0.0),
         bytes_compressed=int(lineage_rows["b"] or 0),
     )
-    with open(os.path.join(index_dir, "MANIFEST.json"), "w") as f:
-        json.dump(metrics, f, indent=2)
-    from .snapshots import commit_snapshot
-
-    metrics["snapshot"] = commit_snapshot(index_dir, "build")
+    write_manifest(index_dir, metrics)
+    metrics["snapshot"] = commit(spark, index_dir, "build")
     return metrics
 
 
@@ -817,16 +963,13 @@ class IndexReader:
         self.n_docs = self.field_stats.pop("__docs__")[0]
         self._docids = None
         self._serve_blocks = None
-        try:
-            with open(os.path.join(index_dir, "MANIFEST.json")) as f:
-                self.manifest = json.load(f)
-        except FileNotFoundError:
-            self.manifest = {}
-        self.salt_range = int(self.manifest.get("salt_range") or max(1, -(-self.n_docs // 32)))
+        self.manifest = read_manifest(index_dir, missing_ok=True)
+        params = index_params(self.manifest, self.n_docs)
+        self.salt_range = params["salt_range"]
         # docid-space extent (max docid + 1). Equals n_docs for a dense
         # build; exceeds it after a physical purge leaves docid holes.
         self.docid_space = int(self.manifest.get("docid_space") or self.n_docs)
-        self.salt_min_df = int(self.manifest.get("salt_min_df") or SALT_MIN_DF)
+        self.salt_min_df = params["salt_min_df"]
         # cold_blocks may only SKIP scanning a term (df >= salt_min_df =>
         # "all its blocks are striped") when the manifest actually records
         # the threshold the blocks were encoded with; a legacy manifest
@@ -834,13 +977,13 @@ class IndexReader:
         # path: scan every pair with postings, like the appends case.
         self.salt_min_df_known = ("salt_min_df" in self.manifest
                                   and not self.manifest.get("salt_min_df_unknown"))
-        self.payload_codec = self.manifest.get("payload_codec", "varint")
+        self.payload_codec = params["payload_codec"]
         # the stemmer documents were tokenized with; every query-side
         # tokenization (parser, LTR query vectors, snippets) must use it
-        self.stemmer = str(self.manifest.get("stemmer", "s"))
+        self.stemmer = params["stemmer"]
         # False for DOCS_AND_FREQS-style indexes (blocks carry no position
         # payloads; positional operators raise at plan time)
-        self.store_positions = bool(self.manifest.get("store_positions", True))
+        self.store_positions = params["store_positions"]
         # (field, term) -> (df, ctf) or None for known-absent; the reference's
         # ctf memoization across queries (QryEval.java:644-651). Readers are
         # per-index-version objects, so no staleness across appends.
@@ -861,7 +1004,7 @@ class IndexReader:
     @cached_property
     def _term_stats(self) -> DataFrame:
         """Spark frame over term_stats/: the append stats merge."""
-        return self.spark.read.parquet(os.path.join(self.index_dir, "term_stats"))
+        return read_term_stats(self.spark, self.index_dir)
 
     @property
     def norms_dir(self) -> str:
@@ -1094,20 +1237,10 @@ class IndexReader:
     def doc_lens(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.index_dir, "doc_lens"))
 
-    def _deletes_dir(self) -> str | None:
-        """The deletes/ table, or None when the index has no tombstones.
-        Bounded by deletes since the last compaction — compaction removes
-        tombstoned docs physically and clears this table."""
-        p = os.path.join(self.index_dir, "deletes")
-        if os.path.isdir(p) and any(f.endswith(".parquet") for f in os.listdir(p)):
-            return p
-        return None
-
     def deletes_df(self) -> DataFrame | None:
         """Tombstoned docids (merge-on-read deletes), or None when the index
         has none."""
-        p = self._deletes_dir()
-        return self.spark.read.parquet(p).select("docid").distinct() if p else None
+        return read_deletes(self.spark, self.index_dir)
 
     def deleted_set(self) -> frozenset | None:
         """Tombstones as a driver-side frozenset for the stripe job's
@@ -1116,7 +1249,7 @@ class IndexReader:
         if not hasattr(self, "_deleted_set"):
             import pyarrow.parquet as pq
 
-            p = self._deletes_dir()
+            p = deletes_dir(self.index_dir)
             self._deleted_set = (
                 frozenset(pq.read_table(p, columns=["docid"]).column("docid").to_pylist())
                 if p is not None else None)

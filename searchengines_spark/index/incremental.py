@@ -17,7 +17,6 @@ IndexReader.segment_cuts / query/wand.py _segment_cut).
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import time
@@ -25,22 +24,20 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..corpus import FIELDS, assign_docids, pages_to_tokenized
-from .build import (SEGMENTS_SCHEMA, IndexReader, doc_terms_dir, encode_blocks,
-                    term_bucket_col)
+from ..corpus import assign_docids, pages_to_tokenized
+from .build import (SEGMENTS_SCHEMA, IndexReader, StageTimer, commit,
+                    doc_terms_dir, deletes_dir, field_stats_of, index_params,
+                    join_anchors, norms_of, read_deletes, read_docids,
+                    read_manifest, read_term_stats, term_bucket_col,
+                    term_stats_of, write_blocks, write_docids,
+                    write_field_stats, write_manifest, write_norms,
+                    write_segments, write_term_stats)
 
 
-
-def _invalidate_path_caches(spark: SparkSession, index_dir: str) -> None:
-    """Drop/refresh any cached plan fragment that scans this index's files.
-    Serving layers cache decoded-postings and stats frames, and Spark's
-    CacheManager keys them by the scan's root PATH — every mutator here
-    rewrites files under the SAME paths (_swap, dynamic partition
-    overwrite), so without an explicit refresh a post-mutation read
-    silently serves the pre-mutation cache (e.g. postings of purged docs
-    after compact). refreshByPath invalidates by path prefix, covering
-    blocks/, term_stats/, doc_lens_wide/, docids/ in one call."""
-    spark.catalog.refreshByPath(index_dir)
+def _merge_stats(old: DataFrame, delta: DataFrame, keys: list[str]) -> DataFrame:
+    """Per-key sums of an index's stats rows and an append's delta."""
+    sums = [F.sum(c).cast("long").alias(c) for c in delta.columns if c not in keys]
+    return old.unionByName(delta).groupBy(*keys).agg(*sums)
 
 
 def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
@@ -56,20 +53,12 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     page_ranks: optional (url, page_rank) graph-prior frame (same contract
     as build_index) — pass the current priors on every incremental op of a
     prior-built index or the new docids revert to the stand-in attribute."""
-    t0 = time.time()
-    stage_secs: dict[str, float] = {}
-    _last = [t0]
-
-    def _lap(name: str) -> None:
-        now = time.time()
-        stage_secs[name] = round(now - _last[0], 2)
-        _last[0] = now
-
+    timer = StageTimer()
     reader = IndexReader(spark, index_dir)
     old_docids = reader.docid_url_map()
     max_docid = old_docids.agg(F.max("docid")).collect()[0][0]
-    with open(os.path.join(index_dir, "MANIFEST.json")) as f:
-        manifest = json.load(f)
+    manifest = read_manifest(index_dir)
+    params = index_params(manifest, int(manifest["n_docs"]))
 
     # new docids: offset dense rank over NEW urls. The anti-join is against
     # LIVE docids only (tombstoned urls can be re-added — that's how
@@ -91,31 +80,17 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     new_ids = assign_docids(fresh).withColumn(
         "docid", F.col("docid") + F.lit(int(max_docid) + 1)
     )
-    # match the fused docids+attrs layout (build.py stage 1)
-    base_rows = new_ids.select(
-        "url", "docid",
-        (F.conv(F.substring(F.md5("url"), 1, 4), 16, 10).cast("long") % 100)
-        .cast("double").alias("spam_score"),
-        ((F.conv(F.substring(F.md5("url"), 5, 4), 16, 10).cast("long") % 10000) / 100.0)
-        .alias("page_rank"),
-    )
-    if page_ranks is not None:
-        # same graph-prior override as build.py stage 1 — without it every
-        # append/upsert would silently revert a page's PageRank attribute
-        # (LTR f4) to the stand-in
-        pr = page_ranks.select("url", F.col("page_rank").alias("pr_in"))
-        base_rows = (base_rows.join(pr, "url", "left")
-                     .select("url", "docid", "spam_score",
-                             F.coalesce("pr_in", "page_rank")
-                             .alias("page_rank")))
-    base_rows.write.mode("append").parquet(os.path.join(index_dir, "docids"))
-    new_ids = spark.read.parquet(os.path.join(index_dir, "docids")).select("url", "docid").filter(
+    # without page_ranks every append/upsert would silently revert a
+    # page's PageRank attribute (LTR f4) to the stand-in
+    write_docids(new_ids, os.path.join(index_dir, "docids"), "append",
+                 page_ranks)
+    new_ids = read_docids(spark, index_dir).select("url", "docid").filter(
         F.col("docid") > max_docid
     )
     n_new = new_ids.count()
-    _lap("docids")
+    timer.lap("docids")
     if n_new == 0:
-        return {"appended": 0, "secs": time.time() - t0}
+        return {"appended": 0, "secs": time.time() - timer.t0}
 
     # IMPORTANT: do not reuse `fresh` here — its anti-join against the docids
     # directory re-lists files lazily and now sees the ids we just appended,
@@ -124,129 +99,62 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     new_en = new_pages.filter(F.col("lang") == "en").select("url", "html")
     with_ids = new_en.join(new_ids, "url")
     if anchors is not None:
-        # same discipline as build_index: restrict to THIS batch's urls
-        # before the broadcast gate (the global anchor table can be
-        # corpus-sized; the batch slice is n_new-bounded)
-        bcast_cap = int(os.environ.get("SE_BROADCAST_CAP_BYTES", 256 << 20))
-        # extend the per-docid anchor state for refresh diffs, then read
-        # the new slice back as the join source (one evaluation of the
-        # anchor lineage; build.py does the same). Appended docids are
-        # fresh, so append-mode rows never collide — live-filtering on
-        # docid resolves upserted urls.
-        state_path = os.path.join(index_dir, "anchor_state")
-        from ..links import one_anchor_row_per_url
-
-        # one row per url (latest epoch wins on a streaming delta read):
-        # a duplicate url would duplicate page rows in the join below and
-        # silently index inflated tf/df postings
-        one_anchor_row_per_url(anchors).join(new_ids, "url").select(
-            "docid", "url", "inlink"
-        ).write.mode("append").parquet(state_path)
-        anc = (spark.read.parquet(state_path)
-               .filter(F.col("docid") > max_docid)
-               .select("url", F.col("inlink").alias("inlink_override")))
-        anc = F.broadcast(anc) if n_new * 1024 <= bcast_cap else anc
-        with_ids = with_ids.join(anc, "url", "left")
+        # restricted to THIS batch's urls before the broadcast gate (the
+        # global anchor table can be corpus-sized; the batch slice is
+        # n_new-bounded). Appended docids are fresh, so the anchor_state
+        # rows appended here never collide
+        with_ids = join_anchors(spark, index_dir, with_ids, anchors, new_ids,
+                                n_new, "append", after_docid=max_docid)
     # stem NEW pages with the stemmer this index's docs were built with —
     # a mismatch would silently split one term's postings across two stems
-    tokenized = pages_to_tokenized(
-        with_ids, stemmer=manifest.get("stemmer", "s")).cache()
-    tokenized.filter(F.col("term") == "").select(
-        "docid", "field", F.col("doclen").cast("int").alias("len")
-    ).write.mode("append").parquet(os.path.join(index_dir, "doc_lens"))
-    dw = tokenized.filter(F.col("term") == "").groupBy("docid").pivot(
-        "field", FIELDS).agg(F.first(F.col("doclen").cast("int")))
-    for f in FIELDS:
-        dw = dw.withColumnRenamed(f, f"len_{f}")
-    # docid-sorted delta files: appended docids are all > the old max,
-    # so the new files' docid ranges stay disjoint from existing ones
-    # and the norms sidecar's row-group range pruning keeps working
-    dw.sort("docid").write.mode("append").parquet(
-        os.path.join(index_dir, "doc_lens_wide"))
+    tokenized = pages_to_tokenized(with_ids, stemmer=params["stemmer"]).cache()
+    delta_lens = tokenized.filter(F.col("term") == "").select(
+        "docid", "field", F.col("doclen").cast("int").alias("len"))
+    delta_lens.write.mode("append").parquet(os.path.join(index_dir, "doc_lens"))
+    write_norms(spark, norms_of(delta_lens),
+                os.path.join(index_dir, "doc_lens_wide"), "append")
     delta_terms = tokenized.filter(F.col("term") != "")
     delta_terms.write.mode("append").parquet(doc_terms_dir(index_dir))
-    _lap("tokenize")
+    timer.lap("tokenize")
 
     # merged stats (old + delta)
-    delta_stats = delta_terms.groupBy("field", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("df"), F.sum("tf").cast("long").alias("ctf")
-    )
-    merged_ts = (
-        reader._term_stats.select("field", "term", "df", "ctf")
-        .unionByName(delta_stats)
-        .groupBy("field", "term")
-        .agg(F.sum("df").cast("long").alias("df"), F.sum("ctf").cast("long").alias("ctf"))
-        .withColumn("bucket", term_bucket_col(F.col("term")))
-    )
-    ts_tmp = os.path.join(index_dir, "term_stats_new")
-    from .build import write_term_stats
-
-    write_term_stats(merged_ts, ts_tmp)
+    delta_stats = term_stats_of(delta_terms)
+    write_term_stats(
+        _merge_stats(reader._term_stats, delta_stats, ["field", "term", "bucket"]),
+        os.path.join(index_dir, "term_stats_new"))
     _swap(index_dir, "term_stats")
     # Which term buckets did this delta touch? Bounded by N_BUCKETS (64)
     # rows; computed from the delta's own vocab (cached `tokenized` lineage),
     # never a rescan of the index. compact_buckets() uses this to re-encode
     # only the fragmented buckets instead of the whole posting store.
     touched_buckets = sorted(
-        int(r["b"]) for r in delta_stats.select(
-            term_bucket_col(F.col("term")).alias("b")).distinct().collect()
-    )
-    _lap("stats_merge")
+        int(r["bucket"]) for r in delta_stats.select("bucket").distinct().collect())
+    timer.lap("stats_merge")
 
     # field_stats: old + DELTA (never a rescan of the full doc_lens table —
     # that would make append cost O(index size) instead of O(batch)). The
-    # delta aggregates ≤ |fields| rows from the already-cached tokenized
-    # batch; the merge adds it to the reader's stats in plain Python.
+    # delta aggregates <= |fields| rows from the already-cached tokenized
+    # batch; the old rows come from the reader's driver-side stats.
     n_docs = int(manifest["n_docs"]) + n_new
-    delta_fs = {
-        r["field"]: (int(r["doc_count"]), int(r["sum_len"]))
-        for r in tokenized.filter(F.col("term") == "")
-        .filter(F.col("doclen") > 0).groupBy("field").agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum(F.col("doclen").cast("long")).alias("sum_len")).collect()
-    }
-    merged_fs = [
-        (f,
-         reader.field_stats.get(f, (0, 0))[0] + delta_fs.get(f, (0, 0))[0],
-         reader.field_stats.get(f, (0, 0))[1] + delta_fs.get(f, (0, 0))[1])
-        for f in sorted(set(reader.field_stats) | set(delta_fs))
-    ] + [("__docs__", int(n_docs), 0)]
-    spark.createDataFrame(
-        merged_fs, ["field", "doc_count", "sum_len"]
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "field_stats_new")
-    )
+    old_fs = spark.createDataFrame(
+        [(f, c, s) for f, (c, s) in reader.field_stats.items()],
+        "field string, doc_count long, sum_len long")
+    write_field_stats(spark, _merge_stats(old_fs, field_stats_of(delta_lens), ["field"]),
+                      n_docs, os.path.join(index_dir, "field_stats_new"))
     _swap(index_dir, "field_stats")
 
     # encode ONLY the delta postings; new docids >= max+1 land in new salt
-    # stripes, so appended block files are docid-range disjoint from old ones
-    salt_range = manifest.get("salt_range") or max(1, math.ceil(int(manifest["n_docs"]) / 32))
-    new_ts = spark.read.parquet(os.path.join(index_dir, "term_stats"))
-    from .build import SALT_MIN_DF
-
-    blocks = encode_blocks(spark, delta_terms, new_ts, salt_range,
-                           salt_min_df=int(manifest.get("salt_min_df", SALT_MIN_DF)),
-                           payload_codec=manifest.get("payload_codec", "varint"),
-                           store_positions=manifest.get("store_positions", True))
-    # Two-step layout, same as the build's segments->merge: a DIRECT
-    # partitionBy("bucket") write here would emit one file per (encode task,
-    # bucket) — measured 8k+ tiny files and 4x the append wall clock on a
-    # 27k-doc delta. Instead the flat segment write lands the compressed
-    # blocks once, and the ~100x-smaller re-read range-partitions them into
-    # O(tasks + buckets) bucket-contiguous files.
+    # stripes, so appended block files are docid-range disjoint from old ones.
+    # Two-step layout, same as the build's segments->merge: the flat
+    # segment write lands the compressed blocks once, and the ~100x-smaller
+    # re-read is merged into bucket-contiguous files (write_blocks).
     seg_path = os.path.join(index_dir, "blocks_segments")
-    blocks.write.mode("append").parquet(seg_path)
+    write_segments(spark, delta_terms, read_term_stats(spark, index_dir),
+                   seg_path, "append", params)
     delta_blocks = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
         F.col("min_docid") > max_docid)  # new docids start past old max
-    (
-        delta_blocks.repartitionByRange(
-            max(spark.sparkContext.defaultParallelism, 16),
-            "bucket", "field", "term", "salt")
-        .sortWithinPartitions("bucket", "field", "term", "salt", "min_docid")
-        .write.mode("append").partitionBy("bucket")
-        .parquet(os.path.join(index_dir, "blocks"))
-    )
-    _lap("encode")
+    write_blocks(spark, delta_blocks, os.path.join(index_dir, "blocks"), "append")
+    timer.lap("encode")
     tokenized.unpersist()
 
     manifest["n_docs"] = n_docs
@@ -254,7 +162,7 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     # exactly n_new on top of the old extent
     manifest["docid_space"] = int(max_docid) + 1 + int(n_new)
     manifest.setdefault("appends", []).append(
-        {"n_new": int(n_new), "ts": time.time(), "secs": time.time() - t0,
+        {"n_new": int(n_new), "ts": time.time(), "secs": time.time() - timer.t0,
          "buckets": touched_buckets,
          # docid extent of this append SEGMENT. Within a segment docid
          # order == url order (delta docids are ranks of the delta's sorted
@@ -265,15 +173,11 @@ def append_pages(spark: SparkSession, index_dir: str, new_pages: DataFrame,
     )
     manifest["uncompacted_buckets"] = sorted(
         set(manifest.get("uncompacted_buckets", [])) | set(touched_buckets))
-    with open(os.path.join(index_dir, "MANIFEST.json"), "w") as f:
-        json.dump(manifest, f, indent=2)
-    from .snapshots import commit_snapshot
-
-    snap = commit_snapshot(index_dir, "append")
-    _invalidate_path_caches(spark, index_dir)
-    _lap("snapshot")
-    return {"appended": int(n_new), "secs": time.time() - t0, "n_docs": n_docs,
-            "snapshot": snap, "stage_secs": stage_secs}
+    write_manifest(index_dir, manifest)
+    snap = commit(spark, index_dir, "append")
+    timer.lap("snapshot")
+    return {"appended": int(n_new), "secs": time.time() - timer.t0, "n_docs": n_docs,
+            "snapshot": snap, "stage_secs": timer.secs}
 
 
 def upsert_pages(spark: SparkSession, index_dir: str,
@@ -395,17 +299,24 @@ def delete_pages(spark: SparkSession, index_dir: str, urls: DataFrame) -> dict:
                 "secs": time.time() - t0, "snapshot": None}
     ids.write.mode("append").parquet(os.path.join(index_dir, "deletes"))
     n_del = len(IndexReader(spark, index_dir).deleted_set())
-    with open(os.path.join(index_dir, "MANIFEST.json")) as f:
-        manifest = json.load(f)
+    manifest = read_manifest(index_dir)
     manifest["n_deleted"] = int(n_del)
-    with open(os.path.join(index_dir, "MANIFEST.json"), "w") as f:
-        json.dump(manifest, f, indent=2)
-    from .snapshots import commit_snapshot
-
-    snap = commit_snapshot(index_dir, "delete")
-    _invalidate_path_caches(spark, index_dir)
+    write_manifest(index_dir, manifest)
+    snap = commit(spark, index_dir, "delete")
     return {"n_deleted_total": int(n_del), "secs": time.time() - t0,
             "snapshot": snap}
+
+
+def _begin_compaction(index_dir: str) -> str:
+    """Write the COMPACTING marker and return its path. It brackets the
+    whole rewrite: while it exists (in progress or crashed), IndexReader
+    serves the last COMMITTED snapshot instead of the half-rewritten live
+    tree (Iceberg read-committed behavior), and only a completed re-run
+    removes it."""
+    marker = os.path.join(index_dir, "COMPACTING")
+    with open(marker, "w") as f:
+        f.write(str(time.time()))
+    return marker
 
 
 def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
@@ -428,35 +339,24 @@ def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
     The docid assignment is preserved (url -> docid is append-stable)."""
     import shutil
 
-    from .build import SALT_MIN_DF, doc_terms_dir, encode_blocks
-
     t0 = time.time()
-    with open(os.path.join(index_dir, "MANIFEST.json")) as f:
-        manifest = json.load(f)
+    manifest = read_manifest(index_dir)
     n_docs = int(manifest["n_docs"])
     n_salts = n_salts or int(manifest.get("n_salts") or 32)
-    salt_min_df = int(manifest.get("salt_min_df", SALT_MIN_DF))
+    params = index_params(manifest, n_docs)
 
-    # Crash-safety contract: a COMPACTING marker brackets the whole run.
-    # While it exists (in-progress or crashed), IndexReader serves the last
-    # COMMITTED snapshot instead of the half-rewritten live tree (Iceberg
-    # read-committed behavior), and re-running compact() repairs: every
-    # purge step below is an idempotent anti-join, tombstones survive until
-    # the very last step, and n_docs is re-derived by counting tables —
-    # never by manifest arithmetic that a restart would double-apply.
-    marker = os.path.join(index_dir, "COMPACTING")
-    with open(marker, "w") as f:
-        f.write(str(t0))
+    # Crash-safety contract: re-running compact() after a crash repairs
+    # the live tree — every purge step below is an idempotent anti-join,
+    # tombstones survive until the very last step, and n_docs is re-derived
+    # by counting tables, never by manifest arithmetic that a restart
+    # would double-apply.
+    marker = _begin_compaction(index_dir)
 
     # ---- physical delete (copy-on-write leg of merge-on-read deletes) ----
     # Tombstoned docs leave every table; term/field stats are recomputed, so
     # post-compact results are bit-identical to a fresh build over the
     # surviving corpus (docid holes don't matter: ranking keys on url).
-    del_path = os.path.join(index_dir, "deletes")
-    dels = None
-    if os.path.isdir(del_path) and any(
-            f.endswith(".parquet") for f in os.listdir(del_path)):
-        dels = spark.read.parquet(del_path).select("docid").distinct()
+    dels = read_deletes(spark, index_dir)
     if dels is not None:
         n_del = dels.count()
         tok_path = os.path.join(index_dir, "tokenized")
@@ -476,34 +376,17 @@ def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
             purged = spark.read.parquet(p).join(
                 F.broadcast(dels), "docid", "left_anti")
             if tbl == "doc_lens_wide":
-                # keep the norms sidecar docid-clustered so stripe range
-                # reads stay row-group-pruned after the purge
-                purged = purged.repartitionByRange(
-                    max(spark.sparkContext.defaultParallelism, 8), "docid"
-                ).sortWithinPartitions("docid")
-            purged.write.mode("overwrite").parquet(p + "_new")
+                write_norms(spark, purged, p + "_new", "overwrite")
+            else:
+                purged.write.mode("overwrite").parquet(p + "_new")
             _swap(index_dir, tbl)
-        doc_terms_purged = spark.read.parquet(doc_terms_dir(index_dir))
-        from .build import write_term_stats
-
-        write_term_stats(
-            doc_terms_purged.groupBy("field", "term").agg(
-                F.count(F.lit(1)).cast("long").alias("df"),
-                F.sum("tf").cast("long").alias("ctf"))
-            .withColumn("bucket", term_bucket_col(F.col("term"))),
-            os.path.join(index_dir, "term_stats_new"),
-        )
+        write_term_stats(term_stats_of(spark.read.parquet(doc_terms_dir(index_dir))),
+                         os.path.join(index_dir, "term_stats_new"))
         _swap(index_dir, "term_stats")
-        n_docs = spark.read.parquet(
-            os.path.join(index_dir, "docids")).count()
-        doc_lens = spark.read.parquet(os.path.join(index_dir, "doc_lens"))
-        field_stats = doc_lens.filter(F.col("len") > 0).groupBy("field").agg(
-            F.count(F.lit(1)).cast("long").alias("doc_count"),
-            F.sum("len").cast("long").alias("sum_len"))
-        meta_row = spark.createDataFrame(
-            [("__docs__", int(n_docs), 0)], ["field", "doc_count", "sum_len"])
-        field_stats.unionByName(meta_row).write.mode("overwrite").parquet(
-            os.path.join(index_dir, "field_stats_new"))
+        n_docs = read_docids(spark, index_dir).count()
+        write_field_stats(
+            spark, field_stats_of(spark.read.parquet(os.path.join(index_dir, "doc_lens"))),
+            n_docs, os.path.join(index_dir, "field_stats_new"))
         _swap(index_dir, "field_stats")
         manifest["n_docs"] = n_docs
         manifest["n_deleted"] = 0
@@ -512,35 +395,23 @@ def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
 
     # docid SPACE (max docid + 1) can exceed n_docs once a purge left holes;
     # stripes are cut over the space so every surviving docid stays covered
-    mx = spark.read.parquet(os.path.join(index_dir, "docids")).agg(
-        F.max("docid")).collect()[0][0]
+    mx = read_docids(spark, index_dir).agg(F.max("docid")).collect()[0][0]
     docid_space = int(mx) + 1 if mx is not None else n_docs
     manifest["docid_space"] = docid_space
     if salt_range is None:  # explicit override keeps existing stripe cuts
         salt_range = max(1, math.ceil(docid_space / n_salts))
-    doc_terms = spark.read.parquet(doc_terms_dir(index_dir))
-    term_stats = spark.read.parquet(os.path.join(index_dir, "term_stats"))
-
     if store_positions is None:
-        store_positions = manifest.get("store_positions", True)
-    blocks = encode_blocks(spark, doc_terms, term_stats,
-                           salt_range, salt_min_df,
-                           payload_codec=manifest.get("payload_codec", "varint"),
-                           store_positions=store_positions)
-    seg_tmp = os.path.join(index_dir, "blocks_segments_new")
-    blocks.write.mode("overwrite").parquet(seg_tmp)
-    _swap(index_dir, "blocks_segments")
+        store_positions = params["store_positions"]
+    params.update(salt_range=salt_range, store_positions=store_positions)
 
-    seg = spark.read.schema(SEGMENTS_SCHEMA).parquet(
-        os.path.join(index_dir, "blocks_segments"))
-    blocks_tmp = os.path.join(index_dir, "blocks_new")
-    (
-        seg.repartitionByRange(
-            max(spark.sparkContext.defaultParallelism, 16),
-            "bucket", "field", "term", "salt")
-        .sortWithinPartitions("bucket", "field", "term", "salt", "min_docid")
-        .write.mode("overwrite").partitionBy("bucket").parquet(blocks_tmp)
-    )
+    write_segments(spark, spark.read.parquet(doc_terms_dir(index_dir)),
+                   read_term_stats(spark, index_dir),
+                   os.path.join(index_dir, "blocks_segments_new"),
+                   "overwrite", params)
+    _swap(index_dir, "blocks_segments")
+    write_blocks(spark, spark.read.schema(SEGMENTS_SCHEMA).parquet(
+        os.path.join(index_dir, "blocks_segments")),
+        os.path.join(index_dir, "blocks_new"), "overwrite")
     _swap(index_dir, "blocks")
     for name in ("blocks_segments_old", "blocks_old"):
         shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
@@ -549,22 +420,18 @@ def compact(spark: SparkSession, index_dir: str, n_salts: int | None = None,
     manifest["n_salts"] = n_salts
     # compact re-encoded EVERY block at this threshold, so the manifest can
     # (re)assert it even if the pre-compact value was unknown
-    manifest["salt_min_df"] = salt_min_df
+    manifest["salt_min_df"] = params["salt_min_df"]
     manifest.pop("salt_min_df_unknown", None)
     manifest["store_positions"] = bool(store_positions)
     manifest["uncompacted_buckets"] = []
     manifest.setdefault("compactions", []).append(
         {"ts": time.time(), "secs": round(time.time() - t0, 2)})
-    with open(os.path.join(index_dir, "MANIFEST.json"), "w") as f:
-        json.dump(manifest, f, indent=2)
+    write_manifest(index_dir, manifest)
     # tombstones die LAST: any crash above leaves them in place, so
     # merge-on-read filtering keeps serving correctly and a compact() re-run
     # repairs (every purge step is an idempotent anti-join)
     shutil.rmtree(os.path.join(index_dir, "deletes"), ignore_errors=True)
-    from .snapshots import commit_snapshot
-
-    snap = commit_snapshot(index_dir, "compact")
-    _invalidate_path_caches(spark, index_dir)
+    snap = commit(spark, index_dir, "compact")
     os.remove(marker)
     return {"secs": time.time() - t0, "n_docs": n_docs,
             "salt_range": salt_range, "snapshot": snap}
@@ -598,13 +465,9 @@ def compact_buckets(spark: SparkSession, index_dir: str,
     (recorded per-append)."""
     import shutil
 
-    from .build import SALT_MIN_DF, doc_terms_dir, encode_blocks
-
     t0 = time.time()
-    with open(os.path.join(index_dir, "MANIFEST.json")) as f:
-        manifest = json.load(f)
-    reader = IndexReader(spark, index_dir)
-    if reader.deletes_df() is not None:
+    manifest = read_manifest(index_dir)
+    if deletes_dir(index_dir) is not None:
         raise ValueError(
             "pending tombstones: physical delete touches every bucket — "
             "run the full compact()")
@@ -614,59 +477,38 @@ def compact_buckets(spark: SparkSession, index_dir: str,
     if not buckets:
         return {"secs": time.time() - t0, "buckets": [], "noop": True}
 
-    n_docs = int(manifest["n_docs"])
-    salt_range = int(manifest.get("salt_range") or max(1, -(-n_docs // 32)))
+    params = index_params(manifest, int(manifest["n_docs"]))
+    marker = _begin_compaction(index_dir)
 
-    marker = os.path.join(index_dir, "COMPACTING")
-    with open(marker, "w") as f:
-        f.write(str(t0))
-
-    bucket_filter = term_bucket_col(F.col("term")).isin(buckets)
-    doc_terms = spark.read.parquet(doc_terms_dir(index_dir)).filter(bucket_filter)
-    term_stats = spark.read.parquet(
-        os.path.join(index_dir, "term_stats")).filter(F.col("bucket").isin(buckets))
-    blocks = encode_blocks(
-        spark, doc_terms, term_stats, salt_range,
-        salt_min_df=int(manifest.get("salt_min_df", SALT_MIN_DF)),
-        payload_codec=manifest.get("payload_codec", "varint"),
-        store_positions=manifest.get("store_positions", True))
-
+    in_buckets = F.col("bucket").isin(buckets)
+    doc_terms = spark.read.parquet(doc_terms_dir(index_dir)).filter(
+        term_bucket_col(F.col("term")).isin(buckets))
     # keep the segments store (flat staging copy of the serving rows) in
     # sync: replace the touched buckets' rows. At 100 TB the segments store
     # would be bucket-partitioned too and take the same dynamic-overwrite
     # path; here the rewrite is IO-only over ~100x-compressed blocks.
     seg_path = os.path.join(index_dir, "blocks_segments")
-    keep = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
-        ~F.col("bucket").isin(buckets))
-    keep.unionByName(blocks).write.mode("overwrite").parquet(seg_path + "_new")
+    keep = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(~in_buckets)
+    write_segments(spark, doc_terms, read_term_stats(spark, index_dir).filter(in_buckets),
+                   seg_path + "_new", "overwrite", params, keep=keep)
     _swap(index_dir, "blocks_segments")
     shutil.rmtree(os.path.join(index_dir, "blocks_segments_old"),
                   ignore_errors=True)
-    blocks = spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(
-        F.col("bucket").isin(buckets))
 
     # serving layout: dynamic partition overwrite swaps ONLY the bucket
-    # directories present in `blocks`; untouched bucket dirs keep their files
-    (
-        blocks.repartitionByRange(
-            max(spark.sparkContext.defaultParallelism, 16),
-            "bucket", "field", "term", "salt")
-        .sortWithinPartitions("bucket", "field", "term", "salt", "min_docid")
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(os.path.join(index_dir, "blocks"))
-    )
+    # directories present in the touched rows; untouched bucket dirs keep
+    # their files
+    write_blocks(spark, spark.read.schema(SEGMENTS_SCHEMA).parquet(seg_path).filter(in_buckets),
+                 os.path.join(index_dir, "blocks"), "overwrite",
+                 partitionOverwriteMode="dynamic")
 
     manifest["uncompacted_buckets"] = sorted(
         set(manifest.get("uncompacted_buckets", [])) - set(buckets))
     manifest.setdefault("partial_compactions", []).append(
         {"ts": time.time(), "secs": round(time.time() - t0, 2),
          "buckets": buckets})
-    with open(os.path.join(index_dir, "MANIFEST.json"), "w") as f:
-        json.dump(manifest, f, indent=2)
-    from .snapshots import commit_snapshot
-
-    snap = commit_snapshot(index_dir, "compact_buckets")
-    _invalidate_path_caches(spark, index_dir)
+    write_manifest(index_dir, manifest)
+    snap = commit(spark, index_dir, "compact_buckets")
     os.remove(marker)
     return {"secs": time.time() - t0, "buckets": buckets, "snapshot": snap}
 

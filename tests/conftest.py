@@ -44,6 +44,41 @@ def conf_spy():
     return spy
 
 
+# table -> the columns its content fingerprint hashes
+FINGERPRINT_TABLES = {
+    "blocks": ["field", "term", "salt", "blk", "n", "min_docid", "max_docid",
+               "docids_z", "tfs_z", "positions_z"],
+    "term_stats": ["field", "term", "df", "ctf"],
+    "field_stats": ["field", "doc_count", "sum_len"],
+    "doc_lens": ["docid", "field", "len"],
+    "doc_lens_wide": ["docid", "len_body", "len_title", "len_url",
+                      "len_keywords", "len_inlink"],
+    "docids": ["url", "docid", "spam_score", "page_rank"],
+    "anchor_state": ["docid", "url", "inlink"],
+}
+
+
+def index_fingerprint(spark, d, tables=FINGERPRINT_TABLES):
+    """Order-insensitive content hash of an index's tables: a list of
+    (table, sum of per-row md5 prefixes, rows). A table absent from ``d``
+    (anchor_state of an index built without anchors) is left out."""
+    import pyspark.sql.functions as F
+
+    parts = []
+    for tbl, cols in tables.items():
+        path = os.path.join(d, tbl)
+        if not os.path.isdir(path):
+            continue
+        # a null column hashes apart from an empty one
+        vals = [F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in cols]
+        h = spark.read.parquet(path).select(
+            F.md5(F.concat_ws("\x01", *vals)).alias("h"))
+        agg = h.agg(F.sum(F.conv(F.substring("h", 1, 8), 16, 10).cast("long")).alias("s"),
+                    F.count(F.lit(1)).alias("n")).collect()[0]
+        parts.append((tbl, int(agg["s"] or 0), int(agg["n"])))
+    return parts
+
+
 @pytest.fixture(scope="session")
 def tiny_index(spark, tmp_path_factory):
     """Build a small deterministic index once per test session."""

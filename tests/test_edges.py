@@ -9,9 +9,9 @@ from searchengines_spark.index import IndexReader, build_index
 
 
 def test_absent_term_in_bow_query(tiny_index, tiny_oracle):
-    """A term missing from the index contributes nothing — the flat WAND
-    kernel and Engine.search must agree with the query without it, and
-    with the oracle."""
+    """A term missing from the index contributes nothing — wand_topk (the
+    compiled stripe program) and Engine.search must agree with the query
+    without it, and with the oracle."""
     from searchengines_spark.oracle import search as oracle_search
     from searchengines_spark.query.wand import wand_topk
 

@@ -76,6 +76,20 @@ def test_manifest_tracks_appends(spark, appended_and_full):
     _assert_current_format(d_inc)
 
 
+def test_append_stats_match_full_rebuild(appended_and_full):
+    """The append's stats merge (old + delta) yields exactly the full
+    build's term_stats and field_stats rows, __docs__ row included."""
+    def rows(d, table, cols):
+        t = pq.read_table(os.path.join(d, table), columns=cols)
+        return sorted(zip(*(t.column(c).to_pylist() for c in cols)))
+
+    d_inc, d_full = appended_and_full
+    for table, cols in [("term_stats", ["field", "term", "df", "ctf"]),
+                        ("field_stats", ["field", "doc_count", "sum_len"])]:
+        got, want = rows(d_inc, table, cols), rows(d_full, table, cols)
+        assert want and got == want, table
+
+
 def test_append_docid_assignment_parallel(spark):
     """The append path's docid assignment must be the two-pass
     range-partitioned rank — dense, offset-correct, and with NO global-sort

@@ -8,29 +8,9 @@ import shutil
 
 import pytest
 
+from conftest import index_fingerprint
 from searchengines_spark.corpus import generate_pages
 from searchengines_spark.index import IndexReader, build_index
-
-
-def index_fingerprint(spark, d):
-    """Order-insensitive content hash of the queryable index tables."""
-    import pyspark.sql.functions as F
-
-    parts = []
-    for tbl, cols in [
-        ("blocks", ["field", "term", "salt", "blk", "n", "min_docid", "max_docid",
-                    "docids_z", "tfs_z", "positions_z"]),
-        ("term_stats", ["field", "term", "df", "ctf"]),
-        ("field_stats", ["field", "doc_count", "sum_len"]),
-        ("doc_lens", ["docid", "field", "len"]),
-        ("docids", ["url", "docid"]),
-    ]:
-        df = spark.read.parquet(os.path.join(d, tbl)).select(*cols)
-        h = df.select(F.md5(F.concat_ws("\x01", *[F.col(c).cast("string") for c in cols])).alias("h"))
-        agg = h.agg(F.sum(F.conv(F.substring("h", 1, 8), 16, 10).cast("long")).alias("s"),
-                    F.count(F.lit(1)).alias("n")).collect()[0]
-        parts.append((tbl, int(agg["s"] or 0), int(agg["n"])))
-    return parts
 
 
 @pytest.mark.slow
@@ -211,7 +191,8 @@ def test_resume_identical(spark, tmp_path):
     d_part = str(tmp_path / "partial")
     os.makedirs(os.path.join(d_part, "_stages"))
     for stage, artifacts in [("docids", ["docids"]),
-                             ("doc_terms", ["tokenized", "doc_lens"])]:
+                             ("doc_terms", ["tokenized", "doc_lens",
+                                            "doc_lens_wide"])]:
         for a in artifacts:
             shutil.copytree(os.path.join(d_full, a), os.path.join(d_part, a))
         shutil.copy(os.path.join(d_full, "_stages", stage + ".json"),
